@@ -2148,26 +2148,23 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, in
     """Train the first {_BPE_ROUNDS} BPE merges (see corpus_bpe_merges
     for the algorithm and scale notes); shared by the merge-table query
     and the tokenize-apply query so train and apply cannot drift. The
-    merge list is memoized per source-data fingerprint — a trained
-    tokenizer is an artifact, retraining it per query would be like
-    refitting a model per inference batch."""
-    from pyspark_xgboost_spark.sources.formats import (
-        memo_key_lock,
-        src_fingerprint,
+    merge list is memoized per source-data fingerprint
+    (memo_by_fingerprint) — a trained tokenizer is an artifact,
+    retraining it per query would be like refitting a model per
+    inference batch."""
+    from pyspark_xgboost_spark.sources.formats import memo_by_fingerprint
+
+    return memo_by_fingerprint(
+        _BPE_CACHE,
+        spark,
+        sf_dir,
+        "documents",
+        lambda: _bpe_train_uncached(spark, sf_dir),
     )
-
-    cache_key = f"{sf_dir}:{src_fingerprint(sf_dir, 'documents')}"
-    if cache_key in _BPE_CACHE:
-        return _BPE_CACHE[cache_key]
-
-    with memo_key_lock(_BPE_CACHE, cache_key):
-        if cache_key in _BPE_CACHE:  # built while we waited
-            return _BPE_CACHE[cache_key]
-        return _bpe_train_uncached(spark, sf_dir, cache_key)
 
 
 def _bpe_train_uncached(
-    spark: SparkSession, sf_dir: str, cache_key: str
+    spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, int]]:
     import pandas as pd
 
@@ -2223,7 +2220,6 @@ def _bpe_train_uncached(
         vocab = vocab.mapInPandas(
             apply_merge, "freq long, syms array<string>"
         ).localCheckpoint(eager=True)
-    _BPE_CACHE[cache_key] = out_rows
     return out_rows
 
 

@@ -1100,25 +1100,15 @@ def _km_final_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the FINAL assignment (vec_id, q, cid, d) plus the final
     centroids as a second return; shared by the k-means report, the
     SemDeDup query, and the IVF router so cluster geometry cannot
-    drift between them. Memoized per (session, source fingerprint) —
-    the _BPE_CACHE discipline: a trained clustering is an ARTIFACT;
+    drift between them. Memoized per (session, source fingerprint)
+    with memo_by_fingerprint: a trained clustering is an ARTIFACT;
     retraining it per consuming query would be refitting a model per
     inference batch (the cached frames hold localCheckpointed RDDs,
-    hence the session key: they die with the SparkContext)."""
-    from pyspark_xgboost_spark.sources.formats import (
-        memo_key_lock,
-        src_fingerprint,
-    )
+    hence the session key: they die with the SparkContext), and a
+    superseded fingerprint's frames are evicted, not pinned."""
+    from pyspark_xgboost_spark.sources.formats import memo_by_fingerprint
 
-    key = (
-        f"{spark.sparkContext.applicationId}:{sf_dir}:"
-        f"{src_fingerprint(sf_dir, 'embeddings')}"
-    )
-    if key in _KM_CACHE:
-        return _KM_CACHE[key]
-    with memo_key_lock(_KM_CACHE, key):
-        if key in _KM_CACHE:  # trained while we waited on the lock
-            return _KM_CACHE[key]
+    def build() -> tuple[DataFrame, DataFrame]:
         xq = _km_xq(spark, sf_dir)
         cents = xq.filter(F.col("vec_id") < _KM_K).select(
             F.col("vec_id").alias("cid"), F.col("q").alias("cq")
@@ -1137,8 +1127,9 @@ def _km_final_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = _km_assign(xq, _km_cent_row(cents)).localCheckpoint(
             eager=True
         )
-        _KM_CACHE[key] = (final, cents)
         return final, cents
+
+    return memo_by_fingerprint(_KM_CACHE, spark, sf_dir, "embeddings", build)
 
 
 def _km_oracle_ctes() -> str:

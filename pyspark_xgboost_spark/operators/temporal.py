@@ -710,23 +710,18 @@ def _skew_fact_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition can only be subdivided along MAPPER ranges, so the scan
     needs genuine multi-mapper layout — which the single-row-group sf
     files lack — for OptimizeSkewedJoin to have anything to cut."""
-    import os
+    from pyspark_xgboost_spark.sources.formats import staged
 
-    from pyspark_xgboost_spark.sources.formats import (
-        _SCRATCH,
-        gc_stale_siblings,
-        src_fingerprint,
+    out = staged(
+        sf_dir,
+        "lineitem",
+        f"lineitem_skewrg{_SKEW_FACT_FILES}",
+        lambda out: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_linenumber")
+        .repartition(_SKEW_FACT_FILES)
+        .write.mode("overwrite")
+        .parquet(out),
     )
-
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"lineitem_skewrg{_SKEW_FACT_FILES}_{src_fingerprint(sf_dir, 'lineitem')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, f"lineitem_skewrg{_SKEW_FACT_FILES}_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber"
-        ).repartition(_SKEW_FACT_FILES).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
 

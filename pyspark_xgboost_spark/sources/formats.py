@@ -2,11 +2,19 @@
 
 The reference touches parquet only, and only for 1-row model blobs
 (SURVEY.md §2.1 scans/sinks note). A real data engine ingests more:
-these operators stage a table copy in the target format once (under a
-deterministic /tmp scratch dir), then run the query against the staged
-copy — so the scan path (schema application, type coercion, projection
-pushdown where the format supports it) is genuinely exercised and the
-DuckDB oracle still runs against the original parquet.
+these operators stage a table copy in the target format once, then run
+the query against the staged copy — so the scan path (schema
+application, type coercion, projection pushdown where the format
+supports it) is genuinely exercised and the DuckDB oracle still runs
+against the original parquet.
+
+Every derived scratch artifact in the repo — staged copies here, the
+streaming fixtures and version chains in ``streaming.stream``, the
+skew fact in ``operators.temporal`` — goes through ONE staging path:
+``staged(sf_dir, table, name, build)``, i.e. ``build_once`` on the
+fingerprint-keyed ``staged_path``. The scratch layout (root, sf_dir
+key, fingerprint leaf, stale-sibling GC, completion marker) is decided
+in this module only.
 
 Scale notes: CSV/JSON scans are line-splittable, so a 100 TB landing
 zone parallelizes by file block exactly like parquet; the difference is
@@ -22,6 +30,7 @@ import contextlib as _contextlib
 import fcntl as _fcntl
 import itertools
 import os
+import re
 import shutil
 import threading as _threading
 import pandas as pd
@@ -57,11 +66,10 @@ _MEMO_GUARD = _threading.Lock()
 _MEMO_KEY_LOCKS: dict[tuple[int, str], object] = {}
 
 
-def memo_key_lock(cache, key: str):
+def _memo_key_lock(cache, key: str):
     """A threading.Lock unique to (cache, key) — lets concurrent
     consumers of ONE artifact serialize on its build while different
-    artifacts build in parallel (used by every memo cache; also
-    available to the hand-rolled _BPE_CACHE/_KM_CACHE memos)."""
+    artifacts build in parallel."""
     with _MEMO_GUARD:
         return _MEMO_KEY_LOCKS.setdefault(
             (id(cache), key), _threading.Lock()
@@ -70,19 +78,20 @@ def memo_key_lock(cache, key: str):
 
 def memo_by_fingerprint(cache, spark, sf_dir, table, build):
     """Session-lifetime memo for a derived ARTIFACT (LSH pair table,
-    trained model, inverted index, ...) keyed by (applicationId,
-    sf_dir, source fingerprint) — the one implementation behind every
-    per-session cache in the repo (round-10 review: six hand-rolled
-    copies drifted, one dropped its fallback). Falls back to an
-    UNCACHED build when the source has no stable fingerprint
-    (synthetic test corpora monkeypatch load_table and have no parquet
-    to stat), and EVICTS superseded fingerprints of the same (session,
-    sf_dir) so regenerating the dataset in place cannot pin dead
-    localCheckpointed blocks for the rest of the session. Entries from
-    OTHER applicationIds are dropped too: they belong to stopped
-    sessions and can never be hit again, so a long-lived process that
-    restarts Spark sessions would otherwise accumulate dead cache
-    entries holding unusable checkpointed DataFrames (r10 advice)."""
+    trained model, inverted index, footer schema, ...) keyed by
+    (applicationId, sf_dir, source fingerprint) — the one
+    implementation behind every in-memory cache in the repo (round-10
+    review: six hand-rolled copies drifted, one dropped its fallback).
+    Falls back to an UNCACHED build when the source has no stable
+    fingerprint (synthetic test corpora monkeypatch load_table and
+    have no parquet to stat), and EVICTS superseded fingerprints of
+    the same (session, sf_dir) so regenerating the dataset in place
+    cannot pin dead localCheckpointed blocks for the rest of the
+    session. Entries from OTHER applicationIds are dropped too: they
+    belong to stopped sessions and can never be hit again, so a
+    long-lived process that restarts Spark sessions would otherwise
+    accumulate dead cache entries holding unusable checkpointed
+    DataFrames (r10 advice). Evicted keys drop their build lock."""
     try:
         fp = src_fingerprint(sf_dir, table)
     except OSError:
@@ -95,7 +104,7 @@ def memo_by_fingerprint(cache, spark, sf_dir, table, build):
     # double-checked per-(cache, key) lock: a wide thread pool (the
     # smoke sweep) otherwise launches the expensive build N times in
     # parallel — every consumer pays the build instead of one
-    with memo_key_lock(cache, key):
+    with _memo_key_lock(cache, key):
         if key not in cache:
             for stale in [
                 k
@@ -103,23 +112,23 @@ def memo_by_fingerprint(cache, spark, sf_dir, table, build):
                 if k.startswith(prefix) or not k.startswith(f"{app}:")
             ]:
                 del cache[stale]
+                with _MEMO_GUARD:
+                    _MEMO_KEY_LOCKS.pop((id(cache), stale), None)
             cache[key] = build()
     return cache[key]
 
 
 @_contextlib.contextmanager
 def build_lock(path: str):
-    """Exclusive flock for a check-marker-then-build staging section.
+    """Exclusive flock serializing ``build_once`` on one artifact.
 
-    The staging protocol everywhere in this repo is 'if marker missing:
-    rmtree + rebuild + write marker'. That is idempotent but NOT safe
-    to race: two threads (a wide smoke pool) or two processes (pytest
-    next to a bench run) building the SAME artifact can interleave the
-    rmtree with the other's read. Callers take this lock around the
-    whole section and RE-CHECK the marker inside, so the loser of the
-    race finds the artifact built and just reads it. The lock file is
-    a SIBLING of the artifact dir (never inside it — the build rmtrees
-    the dir), and flock gives both thread- and process-scope on Linux."""
+    Two threads (a wide smoke pool) or two processes (pytest next to a
+    bench run) building the SAME artifact would otherwise interleave
+    one's rmtree with the other's read. The lock file is a SIBLING of
+    the artifact dir (never inside it — the build clears the dir), and
+    flock gives both thread- and process-scope on Linux. Lock files
+    are left in place: removing one a process still holds would split
+    later lockers onto a fresh inode."""
     parent = os.path.dirname(path.rstrip("/")) or "."
     os.makedirs(parent, exist_ok=True)
     lf = open(f"{path.rstrip('/')}.lock", "a")
@@ -129,6 +138,77 @@ def build_lock(path: str):
     finally:
         _fcntl.flock(lf, _fcntl.LOCK_UN)
         lf.close()
+
+
+_FINGERPRINT = re.compile(r"\d+_\d+")
+
+
+def gc_stale_siblings(parent: str, prefix: str, keep: str) -> None:
+    """Best-effort removal of the sibling scratch dirs ``prefix +
+    <fingerprint>`` (older fingerprints of the same derived artifact)
+    other than ``keep`` — without this, /tmp grows monotonically every
+    time the source data is replaced (round-2 verdict item). Only a
+    fingerprint may follow the prefix, so an artifact whose name
+    extends another's (``x`` and ``x_ckpt``) is never collected with it."""
+    try:
+        entries = os.listdir(parent)
+    except OSError:
+        return
+    for name in entries:
+        if (
+            name != keep
+            and name.startswith(prefix)
+            and _FINGERPRINT.fullmatch(name[len(prefix):])
+        ):
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+
+
+# Completion marker of build_once. The leading underscore makes Spark's
+# file index (and the docbin reader, which lists *.docbin only) skip it.
+_BUILT = "_BUILT"
+
+
+def build_once(path: str, build) -> str:
+    """Build the artifact directory ``path`` at most once — the one
+    staging protocol in this repo. If the marker is missing, take
+    ``build_lock(path)``, re-check it (the loser of a race finds the
+    artifact built and just reads it), clear ``path`` to an empty
+    directory, run ``build(path)`` and only then write the marker, so
+    a build that raises leaves none and the next call rebuilds.
+
+    The marker keeps ``build``'s return value (a version chain's final
+    directory, say); the call returns it, or ``path`` when the build
+    returned nothing."""
+    marker = os.path.join(path, _BUILT)
+    if not os.path.exists(marker):
+        with build_lock(path):
+            if not os.path.exists(marker):
+                shutil.rmtree(path, ignore_errors=True)
+                os.makedirs(path)
+                value = build(path)
+                tmp = f"{marker}.tmp"
+                with open(tmp, "w") as fh:
+                    fh.write(path if value is None else value)
+                os.replace(tmp, marker)  # readers never see a partial value
+    with open(marker) as fh:
+        return fh.read()
+
+
+def staged_path(sf_dir: str, table: str, name: str) -> str:
+    """Scratch directory of the artifact ``name`` derived from
+    ``table`` of ``sf_dir``: ``<scratch root>/<sf_dir key>/<name>_<source
+    fingerprint>``. Replacing the source in place therefore yields a
+    fresh path, and older-fingerprint siblings of ``name`` are deleted
+    here so the scratch tree stays bounded."""
+    parent = os.path.join(_SCRATCH, sf_dir.strip("/").replace("/", "_"))
+    leaf = f"{name}_{src_fingerprint(sf_dir, table)}"
+    gc_stale_siblings(parent, f"{name}_", leaf)
+    return os.path.join(parent, leaf)
+
+
+def staged(sf_dir: str, table: str, name: str, build) -> str:
+    """``build_once(staged_path(sf_dir, table, name), build)``."""
+    return build_once(staged_path(sf_dir, table, name), build)
 
 
 # Python DataSource registration is NOT safe to repeat concurrently:
@@ -196,36 +276,19 @@ def _register_docbin(spark: SparkSession) -> None:
     _pin(spark)
 
 
-def gc_stale_siblings(parent: str, prefix: str, keep: str) -> None:
-    """Best-effort removal of sibling scratch dirs sharing ``prefix``
-    (i.e. older fingerprints of the same derived artifact) other than
-    ``keep`` — without this, /tmp grows monotonically every time the
-    source data is replaced (round-2 verdict item)."""
-    try:
-        entries = os.listdir(parent)
-    except OSError:
-        return
-    for name in entries:
-        if name.startswith(prefix) and name != keep:
-            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-
-
 def _stage(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
     """Write {table} from parquet into {fmt} once per (sf_dir, table,
     source-content fingerprint); return the staged directory. Stale
     fingerprints of the same (table, fmt) are garbage-collected."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"{table}_{fmt}_{src_fingerprint(sf_dir, table)}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, f"{table}_{fmt}_", leaf)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                df = load_table(spark, sf_dir, table)
-                df.write.mode("overwrite").format(fmt).save(out)
-    return out
+    return staged(
+        sf_dir,
+        table,
+        f"{table}_{fmt}",
+        lambda out: load_table(spark, sf_dir, table)
+        .write.mode("overwrite")
+        .format(fmt)
+        .save(out),
+    )
 
 
 @register(
@@ -290,18 +353,16 @@ def _stage_lineitem_by_flag(spark: SparkSession, sf_dir: str) -> str:
     """Stage lineitem as partitionBy(l_returnflag) parquet in scratch
     (idempotent, fingerprint-keyed); return the staged directory.
     Shared by the sink round-trip query and the partition-pruned scan."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"lineitem_by_flag_{src_fingerprint(sf_dir, 'lineitem')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "lineitem_by_flag_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                li = load_table(spark, sf_dir, "lineitem").select(
-                    "l_orderkey", "l_extendedprice", "l_returnflag"
-                )
-                li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    return out
+    return staged(
+        sf_dir,
+        "lineitem",
+        "lineitem_by_flag",
+        lambda out: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_returnflag")
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag")
+        .parquet(out),
+    )
 
 
 @register(
@@ -489,17 +550,16 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate: the shuffle carries one partial row per partition
     whatever the corpus size. Staged copy is fingerprint-keyed and
     GC'd like every other derived format."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"documents_text_{src_fingerprint(sf_dir, 'documents')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "documents_text_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                load_table(spark, sf_dir, "documents").select("text").write.mode(
-                    "overwrite"
-                ).format("text").save(out)
+    out = staged(
+        sf_dir,
+        "documents",
+        "documents_text",
+        lambda out: load_table(spark, sf_dir, "documents")
+        .select("text")
+        .write.mode("overwrite")
+        .format("text")
+        .save(out),
+    )
     lines = spark.read.text(out)
     toks = F.expr(r"filter(split(lower(value), '[ \\t\\n\\f\\r]+'), x -> x != '')")
     return lines.agg(
@@ -539,33 +599,25 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     would delete every other partition first. The conf is set
     query-local and restored. The oracle encodes the expected final
     table state: non-R partitions intact, R filtered."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"lineitem_dpo_{src_fingerprint(sf_dir, 'lineitem')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "lineitem_dpo_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_returnflag"
-    )
-    marker = os.path.join(out, "_DPO_DONE")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-                prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
-                    # backfill: replace ONLY the R partition (even orderkeys)
-                    (
-                        li.filter((F.col("l_returnflag") == "R") & (F.col("l_orderkey") % 2 == 0))
-                        .write.mode("overwrite")
-                        .partitionBy("l_returnflag")
-                        .parquet(out)
-                    )
-                finally:
-                    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-                with open(marker, "w") as fh:
-                    fh.write("ok")
-    back = spark.read.parquet(out)
+    def build(out: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_returnflag"
+        )
+        li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            # backfill: replace ONLY the R partition (even orderkeys)
+            (
+                li.filter((F.col("l_returnflag") == "R") & (F.col("l_orderkey") % 2 == 0))
+                .write.mode("overwrite")
+                .partitionBy("l_returnflag")
+                .parquet(out)
+            )
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+    back = spark.read.parquet(staged(sf_dir, "lineitem", "lineitem_dpo", build))
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
@@ -612,35 +664,30 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real table format would also rewrite (file-level granularity is
     the format's job, not the engine's). The version directory is
     fingerprint-keyed like every staged artifact."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"docs_merge_v2_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "docs_merge_v2_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                base = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-                changes = (
-                    base.filter(F.col("doc_id") % 10 == 0)
-                    .select("doc_id", F.lit("patched").alias("source"))
-                    .unionByName(
-                        base.filter(F.col("doc_id") % 97 == 0).select(
-                            (F.col("doc_id") + 1000000).alias("doc_id"),
-                            F.lit("inserted").alias("source"),
-                        )
-                    )
+    def build(out: str) -> None:
+        base = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+        changes = (
+            base.filter(F.col("doc_id") % 10 == 0)
+            .select("doc_id", F.lit("patched").alias("source"))
+            .unionByName(
+                base.filter(F.col("doc_id") % 97 == 0).select(
+                    (F.col("doc_id") + 1000000).alias("doc_id"),
+                    F.lit("inserted").alias("source"),
                 )
-                merged = (
-                    base.alias("b")
-                    .join(changes.alias("c"), "doc_id", "full_outer")
-                    .select(
-                        "doc_id",
-                        F.coalesce(F.col("c.source"), F.col("b.source")).alias("source"),
-                        F.when(F.col("c.source").isNull(), 0).otherwise(1).alias("was_changed"),
-                    )
-                )
-                merged.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
+            )
+        )
+        merged = (
+            base.alias("b")
+            .join(changes.alias("c"), "doc_id", "full_outer")
+            .select(
+                "doc_id",
+                F.coalesce(F.col("c.source"), F.col("b.source")).alias("source"),
+                F.when(F.col("c.source").isNull(), 0).otherwise(1).alias("was_changed"),
+            )
+        )
+        merged.write.mode("overwrite").parquet(out)
+
+    back = spark.read.parquet(staged(sf_dir, "documents", "docs_merge_v2", build))
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("was_changed").cast("bigint").alias("n_changed"),
@@ -670,23 +717,17 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay countable (auditable) but excluded from the data aggregate.
     Corruption is injected deterministically (doc_id % 13), so the
     oracle states the expected split from the clean table."""
-    key = sf_dir.strip("/").replace("/", "_")
-    fp = src_fingerprint(sf_dir, "documents")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"docs_corrupt_{fp}"
-    gc_stale_siblings(parent, "docs_corrupt_", leaf)
-    d = os.path.join(parent, leaf)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        with build_lock(d):
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-                line = F.to_json(F.struct("doc_id", "n_chars"))
-                # corrupt = truncate the JSON object halfway: unparseable, but
-                # still exactly one line so the record count is preserved
-                payload = F.when(
-                    F.col("doc_id") % 13 == 0, F.substring(line, 1, 9)
-                ).otherwise(line)
-                docs.select(payload.alias("value")).write.mode("overwrite").text(d)
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+        line = F.to_json(F.struct("doc_id", "n_chars"))
+        # corrupt = truncate the JSON object halfway: unparseable, but
+        # still exactly one line so the record count is preserved
+        payload = F.when(
+            F.col("doc_id") % 13 == 0, F.substring(line, 1, 9)
+        ).otherwise(line)
+        docs.select(payload.alias("value")).write.mode("overwrite").text(d)
+
+    d = staged(sf_dir, "documents", "docs_corrupt", build)
     back = spark.read.schema(
         "doc_id long, n_chars long, _corrupt_record string"
     ).option("mode", "PERMISSIVE").option(
@@ -704,18 +745,15 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_gzip_csv(spark: SparkSession, sf_dir: str, table: str) -> str:
     """Stage {table} as GZIP-compressed CSV (one .csv.gz per input
     partition), fingerprint-keyed like _stage."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"{table}_csvgz_{src_fingerprint(sf_dir, table)}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, f"{table}_csvgz_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                load_table(spark, sf_dir, table).write.mode("overwrite").option(
-                    "compression", "gzip"
-                ).csv(out)
-    return out
+    return staged(
+        sf_dir,
+        table,
+        f"{table}_csvgz",
+        lambda out: load_table(spark, sf_dir, table)
+        .write.mode("overwrite")
+        .option("compression", "gzip")
+        .csv(out),
+    )
 
 
 @register(
@@ -1005,35 +1043,25 @@ def _stage_docbin(sf_dir: str) -> str:
 
     import pyarrow.parquet as pq
 
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"documents_docbin_{src_fingerprint(sf_dir, 'documents')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "documents_docbin_", leaf)
-    marker = os.path.join(out, "_DONE")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                os.makedirs(out, exist_ok=True)
-                tbl = pq.read_table(
-                    os.path.join(sf_dir, "documents.parquet"),
-                    columns=["doc_id", "source", "n_chars"],
-                )
-                shards = [bytearray() for _ in range(_DOCBIN_SHARDS)]
-                for doc_id, source, n_chars in zip(
-                    tbl.column("doc_id").to_pylist(),
-                    tbl.column("source").to_pylist(),
-                    tbl.column("n_chars").to_pylist(),
-                ):
-                    raw = source.encode("utf-8")
-                    rec = _struct.pack("<qqH", doc_id, n_chars, len(raw)) + raw
-                    shards[doc_id % _DOCBIN_SHARDS].extend(rec)
-                for i, payload in enumerate(shards):
-                    with open(os.path.join(out, f"part-{i:04d}.docbin"), "wb") as fh:
-                        fh.write(payload)
-                with open(marker, "w") as fh:
-                    fh.write("ok")
-    return out
+    def build(out: str) -> None:
+        tbl = pq.read_table(
+            os.path.join(sf_dir, "documents.parquet"),
+            columns=["doc_id", "source", "n_chars"],
+        )
+        shards = [bytearray() for _ in range(_DOCBIN_SHARDS)]
+        for doc_id, source, n_chars in zip(
+            tbl.column("doc_id").to_pylist(),
+            tbl.column("source").to_pylist(),
+            tbl.column("n_chars").to_pylist(),
+        ):
+            raw = source.encode("utf-8")
+            rec = _struct.pack("<qqH", doc_id, n_chars, len(raw)) + raw
+            shards[doc_id % _DOCBIN_SHARDS].extend(rec)
+        for i, payload in enumerate(shards):
+            with open(os.path.join(out, f"part-{i:04d}.docbin"), "wb") as fh:
+                fh.write(payload)
+
+    return staged(sf_dir, "documents", "documents_docbin", build)
 
 
 @register(
@@ -1177,30 +1205,25 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the knob a real job derives from target-file-size /
     observed-file-size. The file counts before/after are asserted in
     tests; the oracle pins that compaction is content-neutral."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "lineitem")
-    frag_leaf, comp_leaf = f"li_frag_{fp}", f"li_compact_{fp}"
-    gc_stale_siblings(parent, "li_frag_", frag_leaf)
-    gc_stale_siblings(parent, "li_compact_", comp_leaf)
-    frag = os.path.join(parent, frag_leaf)
-    compact = os.path.join(parent, comp_leaf)
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_returnflag"
+    frag = staged(
+        sf_dir,
+        "lineitem",
+        "li_frag",
+        lambda out: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_returnflag")
+        .repartition(64)
+        .write.mode("overwrite")
+        .parquet(out),
     )
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        with build_lock(frag):
-            if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-                li.repartition(64).write.mode("overwrite").parquet(frag)
-    if not os.path.exists(os.path.join(compact, "_SUCCESS")):
-        with build_lock(compact):
-            if not os.path.exists(os.path.join(compact, "_SUCCESS")):
-                (
-                    spark.read.parquet(frag)
-                    .repartition(_COMPACT_TARGET)
-                    .write.mode("overwrite")
-                    .parquet(compact)
-                )
+    compact = staged(
+        sf_dir,
+        "lineitem",
+        "li_compact",
+        lambda out: spark.read.parquet(frag)
+        .repartition(_COMPACT_TARGET)
+        .write.mode("overwrite")
+        .parquet(out),
+    )
     back = spark.read.parquet(compact)
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
@@ -1239,34 +1262,26 @@ def scan_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     production form, with per-file reconciliation as the fallback
     exercised here. The oracle computes the same conditional aggregate
     from the evolved source table."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "orders")
-    leaf = f"orders_evo_{fp}"
-    gc_stale_siblings(parent, "orders_evo_", leaf)
-    root = os.path.join(parent, leaf)
-    orders = load_table(spark, sf_dir, "orders")
-    cutoff = F.lit("1998-01-01").cast("timestamp")
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        with build_lock(root):
-            if not os.path.exists(os.path.join(root, "_DONE")):
-                (
-                    orders.filter(F.col("o_orderdate") < cutoff)
-                    .select("o_orderkey", "o_orderstatus", "o_orderdate")
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(root, "v1"))
-                )
-                (
-                    orders.filter(F.col("o_orderdate") >= cutoff)
-                    .select(
-                        "o_orderkey", "o_orderstatus", "o_orderdate",
-                        "o_totalprice", "o_orderpriority",
-                    )
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(root, "v2"))
-                )
-                with open(os.path.join(root, "_DONE"), "w") as fh:
-                    fh.write("ok")
+    def build(root: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cutoff = F.lit("1998-01-01").cast("timestamp")
+        (
+            orders.filter(F.col("o_orderdate") < cutoff)
+            .select("o_orderkey", "o_orderstatus", "o_orderdate")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "v1"))
+        )
+        (
+            orders.filter(F.col("o_orderdate") >= cutoff)
+            .select(
+                "o_orderkey", "o_orderstatus", "o_orderdate",
+                "o_totalprice", "o_orderpriority",
+            )
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "v2"))
+        )
+
+    root = staged(sf_dir, "orders", "orders_evo", build)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "v1"), os.path.join(root, "v2")
     )
@@ -1349,41 +1364,36 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by 8 buckets (at 100 TB the bucket count scales with target
     file size), and the stats read-back aggregates the CLUSTERED
     files."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"orders_zorder_{src_fingerprint(sf_dir, 'orders')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "orders_zorder_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                orders = load_table(spark, sf_dir, "orders")
-                raw = orders.select(
-                    "o_orderkey",
-                    F.col("o_custkey").alias("c"),
-                    F.datediff(
-                        F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
-                    ).alias("d"),
-                )
-                b = raw.agg(
-                    F.min("c").alias("cmin"),
-                    F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias("cspan"),
-                    F.min("d").alias("dmin"),
-                    F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias("dspan"),
-                )
-                dims = raw.crossJoin(F.broadcast(b)).select(
-                    "o_orderkey",
-                    "c",
-                    "d",
-                    F.expr("((c - cmin) * 65535) div cspan").alias("x"),
-                    F.expr("((d - dmin) * 65535) div dspan").alias("y"),
-                )
-                z = dims.withColumn(
-                    "zval", F.expr(_z_interleave_sql("x", "y", div="div")).cast("bigint")
-                ).withColumn(
-                    "zbucket", (F.col("zval") / (2 ** (2 * _Z_BITS - 3))).cast("bigint")
-                )
-                z.write.mode("overwrite").partitionBy("zbucket").parquet(out)
-    back = spark.read.parquet(out)
+    def build(out: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        raw = orders.select(
+            "o_orderkey",
+            F.col("o_custkey").alias("c"),
+            F.datediff(
+                F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
+            ).alias("d"),
+        )
+        b = raw.agg(
+            F.min("c").alias("cmin"),
+            F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias("cspan"),
+            F.min("d").alias("dmin"),
+            F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias("dspan"),
+        )
+        dims = raw.crossJoin(F.broadcast(b)).select(
+            "o_orderkey",
+            "c",
+            "d",
+            F.expr("((c - cmin) * 65535) div cspan").alias("x"),
+            F.expr("((d - dmin) * 65535) div dspan").alias("y"),
+        )
+        z = dims.withColumn(
+            "zval", F.expr(_z_interleave_sql("x", "y", div="div")).cast("bigint")
+        ).withColumn(
+            "zbucket", (F.col("zval") / (2 ** (2 * _Z_BITS - 3))).cast("bigint")
+        )
+        z.write.mode("overwrite").partitionBy("zbucket").parquet(out)
+
+    back = spark.read.parquet(staged(sf_dir, "orders", "orders_zorder", build))
     return back.groupBy(F.col("zbucket").cast("bigint").alias("zbucket")).agg(
         F.count("*").alias("n"),
         F.min("c").cast("bigint").alias("min_custkey"),
@@ -1416,23 +1426,19 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the XML reader is a file-per-task scan like any text
     source; rowTag streaming means elements parse incrementally, not
     DOM-load the file. The staged landing dir is fingerprint-keyed."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"docs_xml_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "docs_xml_", leaf)
-    d = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        with build_lock(d):
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                docs = load_table(spark, sf_dir, "documents").select(
-                    "doc_id", "source", "n_chars", "text"
-                )
-                (
-                    docs.repartition(4)
-                    .write.mode("overwrite")
-                    .format("xml")
-                    .option("rowTag", "doc")
-                    .save(d)
-                )
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "n_chars", "text"
+        )
+        (
+            docs.repartition(4)
+            .write.mode("overwrite")
+            .format("xml")
+            .option("rowTag", "doc")
+            .save(d)
+        )
+
+    d = staged(sf_dir, "documents", "docs_xml", build)
     back = (
         spark.read.format("xml")
         .option("rowTag", "doc")
@@ -1473,35 +1479,31 @@ def scan_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     task — the same land-many-medium-files rule as gzip; fix at first
     hop by rewriting to parquet. The n_with_newlines column keeps the
     injected population visible in the contract."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"docs_mlcsv_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "docs_mlcsv_", leaf)
-    d = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        with build_lock(d):
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                docs = load_table(spark, sf_dir, "documents").select(
-                    "doc_id",
-                    "source",
-                    "n_chars",
-                    F.when(
-                        F.col("n_chars") % 7 == 0,
-                        F.concat(
-                            F.substring("text", 1, 20),
-                            F.lit("\n"),
-                            F.substring("text", 21, 20),
-                        ),
-                    )
-                    .otherwise(F.substring("text", 1, 40))
-                    .alias("snippet"),
-                )
-                (
-                    docs.repartition(4)
-                    .write.mode("overwrite")
-                    .option("header", "true")
-                    .option("quoteAll", "true")
-                    .csv(d)
-                )
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            "source",
+            "n_chars",
+            F.when(
+                F.col("n_chars") % 7 == 0,
+                F.concat(
+                    F.substring("text", 1, 20),
+                    F.lit("\n"),
+                    F.substring("text", 21, 20),
+                ),
+            )
+            .otherwise(F.substring("text", 1, 40))
+            .alias("snippet"),
+        )
+        (
+            docs.repartition(4)
+            .write.mode("overwrite")
+            .option("header", "true")
+            .option("quoteAll", "true")
+            .csv(d)
+        )
+
+    d = staged(sf_dir, "documents", "docs_mlcsv", build)
     back = (
         spark.read.option("header", "true")
         .option("multiLine", "true")
@@ -1526,28 +1528,18 @@ def _stage_doc_binfiles(spark: SparkSession, sf_dir: str) -> str:
     """Stage every doc_id % 5 == 0 document as an individual
     ``doc_{id}.txt`` file (fingerprint-keyed, idempotent) — the shape
     of a raw multimodal landing zone: one opaque file per asset."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"documents_binfiles_{src_fingerprint(sf_dir, 'documents')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "documents_binfiles_", leaf)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                os.makedirs(out, exist_ok=True)
-                rows = (
-                    load_table(spark, sf_dir, "documents")
-                    .filter(F.col("doc_id") % 5 == 0)
-                    .select("doc_id", "text")
-                    .toLocalIterator()  # staging fixture: bounded subset, driver-side write
-                )
-                for r in rows:
-                    with open(os.path.join(out, f"doc_{r.doc_id}.txt"), "wb") as f:
-                        f.write(r.text.encode("utf-8"))
-                with open(marker, "w"):
-                    pass
-    return out
+    def build(out: str) -> None:
+        rows = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 5 == 0)
+            .select("doc_id", "text")
+            .toLocalIterator()  # staging fixture: bounded subset, driver-side write
+        )
+        for r in rows:
+            with open(os.path.join(out, f"doc_{r.doc_id}.txt"), "wb") as f:
+                f.write(r.text.encode("utf-8"))
+
+    return staged(sf_dir, "documents", "documents_binfiles", build)
 
 
 @register(
@@ -1685,25 +1677,18 @@ def sink_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stage_lineitem_bloom(spark: SparkSession, sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"lineitem_bloomcol_{src_fingerprint(sf_dir, 'lineitem')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "lineitem_bloomcol_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                li = load_table(spark, sf_dir, "lineitem").select(
-                    "l_orderkey", "l_partkey", "l_quantity"
-                )
-                (
-                    li.repartition(4)
-                    .write.mode("overwrite")
-                    .option("parquet.bloom.filter.enabled#l_partkey", "true")
-                    .option("parquet.bloom.filter.expected.ndv#l_partkey", "20000")
-                    .parquet(out)
-                )
-    return out
+    return staged(
+        sf_dir,
+        "lineitem",
+        "lineitem_bloomcol",
+        lambda out: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_quantity")
+        .repartition(4)
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#l_partkey", "true")
+        .option("parquet.bloom.filter.expected.ndv#l_partkey", "20000")
+        .parquet(out),
+    )
 
 
 @register(
@@ -1752,23 +1737,22 @@ def _stage_events_eu_csv(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as CSV with a European day-first timestamp format
     (fingerprint-keyed) — the landing-zone reality: upstream exports
     are rarely ISO-8601."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"events_eucsv_{src_fingerprint(sf_dir, 'events')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "events_eucsv_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                ev = load_table(spark, sf_dir, "events").select(
-                    "event_id",
-                    F.date_format("ts", _EU_TS_FMT).alias("ts_eu"),
-                    "user_id",
-                    "event_type",
-                    "value",
-                )
-                ev.write.mode("overwrite").option("header", "true").csv(out)
-    return out
+    return staged(
+        sf_dir,
+        "events",
+        "events_eucsv",
+        lambda out: load_table(spark, sf_dir, "events")
+        .select(
+            "event_id",
+            F.date_format("ts", _EU_TS_FMT).alias("ts_eu"),
+            "user_id",
+            "event_type",
+            "value",
+        )
+        .write.mode("overwrite")
+        .option("header", "true")
+        .csv(out),
+    )
 
 
 @register(
@@ -1873,19 +1857,11 @@ def sink_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     cleaned = _delete_cascade_frames(cust, orders, li)
 
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "orders")
-    leaf = f"gdpr_clean_{fp}"
-    gc_stale_siblings(parent, "gdpr_clean_", leaf)
-    out = os.path.join(parent, leaf)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_DONE")):
-                for name, df in cleaned.items():
-                    df.write.mode("overwrite").parquet(os.path.join(out, name))
-                with open(os.path.join(out, "_DONE"), "w") as fh:
-                    fh.write("ok")
+    def build(out: str) -> None:
+        for name, df in cleaned.items():
+            df.write.mode("overwrite").parquet(os.path.join(out, name))
+
+    out = staged(sf_dir, "orders", "gdpr_clean", build)
 
     def row(name: str, src: DataFrame) -> DataFrame:
         after = spark.read.parquet(os.path.join(out, name))
@@ -1931,23 +1907,19 @@ def sink_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise NotImplementedError("requires Spark 4 Python DataSource API")
     _register_docbin(spark)
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"docbin_written_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(parent, "docbin_written_", leaf)
-    out = os.path.join(parent, leaf)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_DONE")):
-                (
-                    load_table(spark, sf_dir, "documents")
-                    .select("doc_id", "source", "n_chars")
-                    .repartition(6)  # >1 writer task: the commit protocol is the point
-                    .write.format("docbin")
-                    .mode("overwrite")
-                    .option("path", out)
-                    .save()
-                )
+
+    def build(out: str) -> None:
+        (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "source", "n_chars")
+            .repartition(6)  # >1 writer task: the commit protocol is the point
+            .write.format("docbin")
+            .mode("overwrite")
+            .option("path", out)
+            .save()
+        )
+
+    out = staged(sf_dir, "documents", "docbin_written", build)
     back = spark.read.format("docbin").option("path", out).load()
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -2062,26 +2034,18 @@ def scan_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     size so a silently-empty sidecar can't pass. A real table
     eventually compacts (sink_compact_small_files) to fold vectors into
     the base — the read path is what this query pins."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "orders")
-    leaf = f"mor_orders_{fp}"
-    gc_stale_siblings(parent, "mor_orders_", leaf)
-    root = os.path.join(parent, leaf)
-    orders = load_table(spark, sf_dir, "orders")
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        with build_lock(root):
-            if not os.path.exists(os.path.join(root, "_DONE")):
-                orders.write.mode("overwrite").parquet(os.path.join(root, "base"))
-                (
-                    orders.filter(F.col("o_orderkey") % 131 == 5)
-                    .select("o_orderkey")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(root, "deletes"))
-                )
-                with open(os.path.join(root, "_DONE"), "w") as fh:
-                    fh.write("ok")
+    def build(root: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        orders.write.mode("overwrite").parquet(os.path.join(root, "base"))
+        (
+            orders.filter(F.col("o_orderkey") % 131 == 5)
+            .select("o_orderkey")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "deletes"))
+        )
+
+    root = staged(sf_dir, "orders", "mor_orders", build)
     base = spark.read.parquet(os.path.join(root, "base"))
     dv = spark.read.parquet(os.path.join(root, "deletes"))
     live = base.join(F.broadcast(dv), "o_orderkey", "left_anti")
@@ -2320,60 +2284,46 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(batch), not O(table)); publish is a metadata operation (marker
     write / rename) regardless of data size — exactly why WAP is
     viable at 100 TB where rewrite-on-validate is not."""
-    import shutil
+    def build(root: str) -> None:
+        good = load_table(spark, sf_dir, "documents").groupBy("source").agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_chars").cast("bigint").alias("sum_chars"),
+        )
+        bad = good.select(
+            F.when(F.substring(F.col("source"), -1, 1) == "0", None)
+            .otherwise(F.col("source"))
+            .alias("source"),
+            "n_docs",
+            "sum_chars",
+        )
+        for name, df in (("good", good), ("bad", bad)):
+            df.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(root, "staging", name)
+            )
+        for name in ("good", "bad"):
+            cand = spark.read.parquet(os.path.join(root, "staging", name))
+            audit = cand.agg(
+                F.count("*").alias("n_rows"),
+                (F.count("*") - F.count("source")).alias("n_null_keys"),
+            ).first()
+            if audit["n_null_keys"] == 0 and audit["n_rows"] > 0:
+                pub = os.path.join(root, "published", name)
+                shutil.copytree(os.path.join(root, "staging", name), pub)
+                with open(os.path.join(root, f"_PUBLISHED_{name}"), "w") as fh:
+                    fh.write(pub)
 
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "documents")
-    leaf = f"wap_{fp}"
-    gc_stale_siblings(parent, "wap_", leaf)
-    root = os.path.join(parent, leaf)
-    docs = load_table(spark, sf_dir, "documents")
-    good = docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("sum_chars"),
-    )
-    bad = good.select(
-        F.when(F.substring(F.col("source"), -1, 1) == "0", None)
-        .otherwise(F.col("source"))
-        .alias("source"),
-        "n_docs",
-        "sum_chars",
-    )
-    done = os.path.join(root, "_WAP_DONE")
-    if not os.path.exists(done):
-        with build_lock(root):
-            if not os.path.exists(done):
-                shutil.rmtree(root, ignore_errors=True)
-                for name, df in (("good", good), ("bad", bad)):
-                    df.coalesce(1).write.mode("overwrite").parquet(
-                        os.path.join(root, "staging", name)
-                    )
-                for name in ("good", "bad"):
-                    staged = spark.read.parquet(os.path.join(root, "staging", name))
-                    audit = staged.agg(
-                        F.count("*").alias("n_rows"),
-                        (F.count("*") - F.count("source")).alias("n_null_keys"),
-                    ).first()
-                    if audit["n_null_keys"] == 0 and audit["n_rows"] > 0:
-                        pub = os.path.join(root, "published", name)
-                        shutil.copytree(os.path.join(root, "staging", name), pub)
-                        with open(os.path.join(root, f"_PUBLISHED_{name}"), "w") as fh:
-                            fh.write(pub)
-                with open(done, "w") as fh:
-                    fh.write("ok")
-
+    root = staged(sf_dir, "documents", "wap", build)
     rows = []
     for name in ("good", "bad"):
-        staged = spark.read.parquet(os.path.join(root, "staging", name))
+        cand = spark.read.parquet(os.path.join(root, "staging", name))
         published = os.path.exists(os.path.join(root, f"_PUBLISHED_{name}"))
         src_df = (
             spark.read.parquet(os.path.join(root, "published", name))
             if published
-            else staged
+            else cand
         )
         rows.append(
-            staged.agg(
+            cand.agg(
                 F.lit(name).alias("candidate"),
                 F.count("*").cast("bigint").alias("n_rows"),
                 (F.count("*") - F.count("source"))
@@ -2419,43 +2369,32 @@ def _stage_prune_file(spark: SparkSession, sf_dir: str) -> str:
     """lineitem sorted by l_orderkey, ONE file, ~256 KB row groups —
     a key-clustered layout whose per-row-group min/max ranges are
     disjoint, the precondition for stats-based pruning to bite.
-    Re-staged when the source fingerprint changes (fixed path +
-    fingerprint marker: the round-1 stale-scratch advice, inverted)."""
+    Staged once per source fingerprint like every artifact, then
+    hard-linked onto the fixed path the oracle names whenever that path
+    is not already this staging's file (fresh host, new fingerprint, a
+    stand-in). The link is renamed into place, so a reader of the
+    previous file never sees a partial one."""
     import glob
-    import shutil
 
     path = _prune_staged_path(sf_dir)
-    d = os.path.dirname(path)
-    fp = src_fingerprint(sf_dir, "lineitem")
-    marker = os.path.join(d, "_PRUNE_FP")
-
-    def fresh() -> bool:
-        if not os.path.exists(marker):
-            return False
-        with open(marker) as fh:
-            return fh.read() == fp and os.path.exists(path)
-
-    if fresh():
-        return path
-    with build_lock(d):
-        if fresh():  # rebuilt while we waited on the lock
-            return path
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, "tmp")
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_quantity", "l_extendedprice")
-            .orderBy("l_orderkey")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("parquet.block.size", 262144)
-            .parquet(tmp)
-        )
-        os.rename(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as fh:
-            fh.write(fp)
+    out = staged(
+        sf_dir,
+        "lineitem",
+        "prune_li",
+        lambda out: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_quantity", "l_extendedprice")
+        .orderBy("l_orderkey")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("parquet.block.size", 262144)
+        .parquet(out),
+    )
+    src = glob.glob(os.path.join(out, "part-*.parquet"))[0]
+    if not (os.path.exists(path) and os.path.samefile(src, path)):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.{os.getpid()}.{_threading.get_ident()}"
+        os.link(src, tmp)
+        os.replace(tmp, path)
     return path
 
 
@@ -2700,49 +2639,43 @@ def sink_hilbert_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             s >>= 1
         return pd.Series(dd)
 
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"orders_hilbert{_HB}_{src_fingerprint(sf_dir, 'orders')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "orders_hilbert_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                orders = load_table(spark, sf_dir, "orders")
-                raw = orders.select(
-                    "o_orderkey",
-                    F.col("o_custkey").alias("c"),
-                    F.datediff(
-                        F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
-                    ).alias("d"),
-                )
-                b = raw.agg(
-                    F.min("c").alias("cmin"),
-                    F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias(
-                        "cspan"
-                    ),
-                    F.min("d").alias("dmin"),
-                    F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias(
-                        "dspan"
-                    ),
-                )
-                dims = raw.crossJoin(F.broadcast(b)).select(
-                    "o_orderkey",
-                    F.expr(
-                        f"((c - cmin) * {2 ** _HB - 1}) div cspan"
-                    ).alias("xr"),
-                    F.expr(
-                        f"((d - dmin) * {2 ** _HB - 1}) div dspan"
-                    ).alias("yr"),
-                )
-                keyed = dims.withColumn(
-                    "hkey", hkey_udf(F.col("xr"), F.col("yr"))
-                ).withColumn(
-                    "hbucket",
-                    F.expr(f"hkey div {2 ** (2 * _HB - 3)}").cast("bigint"),
-                )
-                keyed.write.mode("overwrite").partitionBy("hbucket").parquet(
-                    out
-                )
+    def build(out: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        raw = orders.select(
+            "o_orderkey",
+            F.col("o_custkey").alias("c"),
+            F.datediff(
+                F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
+            ).alias("d"),
+        )
+        b = raw.agg(
+            F.min("c").alias("cmin"),
+            F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias(
+                "cspan"
+            ),
+            F.min("d").alias("dmin"),
+            F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias(
+                "dspan"
+            ),
+        )
+        dims = raw.crossJoin(F.broadcast(b)).select(
+            "o_orderkey",
+            F.expr(
+                f"((c - cmin) * {2 ** _HB - 1}) div cspan"
+            ).alias("xr"),
+            F.expr(
+                f"((d - dmin) * {2 ** _HB - 1}) div dspan"
+            ).alias("yr"),
+        )
+        keyed = dims.withColumn(
+            "hkey", hkey_udf(F.col("xr"), F.col("yr"))
+        ).withColumn(
+            "hbucket",
+            F.expr(f"hkey div {2 ** (2 * _HB - 3)}").cast("bigint"),
+        )
+        keyed.write.mode("overwrite").partitionBy("hbucket").parquet(out)
+
+    out = staged(sf_dir, "orders", f"orders_hilbert{_HB}", build)
     back = spark.read.parquet(out).withColumn(
         "zkey", F.expr(_z8_sql("xr", "yr", div="div")).cast("bigint")
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 from collections.abc import Iterator
 from typing import Any
 
@@ -28,7 +29,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pyspark_xgboost_spark.registry import register
-from pyspark_xgboost_spark.sources.formats import TMP_NS, build_lock
+from pyspark_xgboost_spark.sources.formats import (
+    build_once,
+    memo_by_fingerprint,
+    staged,
+    staged_path,
+)
 from pyspark_xgboost_spark.sources import normalize_event_ts
 from pyspark_xgboost_spark.streaming.windows import session_agg, tumbling_agg
 
@@ -38,17 +44,16 @@ _counter = itertools.count()
 def _events_stream_dir(sf_dir: str) -> str:
     """The file stream source requires a DIRECTORY of files (it models a
     landing zone receiving new files); stage one containing a symlink to
-    the single events.parquet. Idempotent per sf_dir."""
-    key = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join("/tmp", f"spark_stream_src{TMP_NS}", key)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.islink(link):
-        os.makedirs(d, exist_ok=True)
-        try:
-            os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-        except FileExistsError:
-            pass  # concurrent stager won the race — same target
-    return d
+    the single events.parquet. Staged once per source fingerprint."""
+    return staged(
+        sf_dir,
+        "events",
+        "stream_src",
+        lambda d: os.symlink(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(d, "events.parquet"),
+        ),
+    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,38 +77,34 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the legacy conf lets the probe surface an int64-nanos file at all;
     # harmless for µs encodings
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = _probe_parquet_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
+    physical = _probe_events_schema(spark, sf_dir)
     _record_stream_input_bytes(spark, os.path.join(sf_dir, "events.parquet"))
     raw = spark.readStream.schema(physical).parquet(_events_stream_dir(sf_dir))
     return normalize_event_ts(raw)
 
 
 _STREAM_INPUT_BYTES_CONF = "spark_graft.stream.input_bytes"
+_NO_DATA_BATCH_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 _STATE_PARTITION_TARGET_BYTES = 64 << 20  # ~64 MB of source per store
 
-# (path, mtime_ns, size) -> StructType. The footer probe is METADATA
-# (never query results): every streaming query over the same immutable
-# file re-reads the identical footer, and the mtime/size key drops the
-# entry the moment the file is regenerated — so memoizing it is pure
-# I/O dedup, ~0.1s of driver-side listing + footer parse per streaming
-# query removed (r15, guide §1: the cost showed up as setup time
-# outside every micro-batch trigger).
-_SCHEMA_PROBE_MEMO: dict = {}
+# The footer probe is METADATA (never query results): every streaming
+# query over the same immutable file re-reads the identical footer, and
+# the fingerprint key drops the entry the moment the file is
+# regenerated — so memoizing it is pure I/O dedup, ~0.1s of
+# driver-side listing + footer parse per streaming query removed (r15,
+# guide §1: the cost showed up as setup time outside every micro-batch
+# trigger).
+_EVENTS_SCHEMA: dict = {}
 
 
-def _probe_parquet_schema(spark: SparkSession, path: str):
-    try:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    except OSError:
-        return spark.read.parquet(path).schema
-    hit = _SCHEMA_PROBE_MEMO.get(key)
-    if hit is None:
-        hit = spark.read.parquet(path).schema
-        _SCHEMA_PROBE_MEMO[key] = hit
-    return hit
+def _probe_events_schema(spark: SparkSession, sf_dir: str):
+    return memo_by_fingerprint(
+        _EVENTS_SCHEMA,
+        spark,
+        sf_dir,
+        "events",
+        lambda: spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema,
+    )
 
 
 def _state_partitions(spark: SparkSession) -> int:
@@ -184,13 +185,12 @@ def _run_to_memory(
     ON for outer joins (unmatched rows emit AT watermark advance) and
     append-mode aggregations (windows emit at watermark advance) —
     turning it off there would LOSE rows, which the stream oracles
-    catch."""
+    catch. On exit the conf is restored to its entry state — unset
+    again if it was unset."""
     name = f"stream_sink_{next(_counter)}"
     spark = out.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
+    prev_ndb = spark.conf.get(_NO_DATA_BATCH_CONF, None)
     # min_parts: compute-bound Python state kernels
     # (applyInPandasWithState) want one slot per store regardless of
     # input volume — their cost is the kernel, not the store commit
@@ -201,9 +201,7 @@ def _run_to_memory(
         parts = max(parts, min_parts)
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     if not no_data_batch:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
+        spark.conf.set(_NO_DATA_BATCH_CONF, "false")
     try:
         q = (
             out.writeStream.outputMode(mode)
@@ -215,9 +213,10 @@ def _run_to_memory(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
+        if prev_ndb is None:
+            spark.conf.unset(_NO_DATA_BATCH_CONF)
+        else:
+            spark.conf.set(_NO_DATA_BATCH_CONF, prev_ndb)
         # clear the recorded source size: a later streaming op that
         # runs without recording its own source must fall back to the
         # cores/4 default, not inherit THIS query's input size
@@ -415,25 +414,20 @@ def events_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     encodes precisely that: window end <= max(ts) - 2h. (This is the
     real append-mode contract; complete mode, used by
     events_stream_tumbling_window, emits everything.)"""
-    from pyspark_xgboost_spark.sources.formats import gc_stale_siblings, src_fingerprint
-
-    # checkpoint keyed by source-content fingerprint AND pipeline
-    # version: replacing events.parquet in place must not let the old
-    # checkpoint skip reprocessing and serve a stale sink (round-1
-    # advice), and a reader-contract/query change must equally
+    # sink + checkpoint keyed by source-content fingerprint AND
+    # pipeline version: replacing events.parquet in place must not let
+    # the old checkpoint skip reprocessing and serve a stale sink
+    # (round-1 advice), and a reader-contract/query change must equally
     # invalidate it — round 3's broken reader left a checkpoint that
     # marked every file processed, so the FIXED query replayed nothing
     # and served the broken run's empty sink. Bump _PIPELINE_V whenever
-    # the upstream logic changes. Stale fingerprints are
-    # garbage-collected so /tmp stays bounded.
+    # the upstream logic changes. The streaming checkpoint is its own
+    # completion marker, so only the path (and its stale-fingerprint
+    # GC) comes from the staging helpers.
     _PIPELINE_V = "v2"
-    key = sf_dir.strip("/").replace("/", "_")
-    fp = f"{src_fingerprint(sf_dir, 'events')}_{_PIPELINE_V}"
-    parent = os.path.join("/tmp", f"spark_stream_sink{TMP_NS}", key)
-    gc_stale_siblings(parent, "tumbling_", f"tumbling_{fp}")
-    gc_stale_siblings(parent, "ckpt_", f"ckpt_{fp}")
-    out_dir = os.path.join(parent, f"tumbling_{fp}")
-    ckpt_dir = os.path.join(parent, f"ckpt_{fp}")
+    root = staged_path(sf_dir, "events", f"stream_tumbling_{_PIPELINE_V}")
+    out_dir = os.path.join(root, "sink")
+    ckpt_dir = os.path.join(root, "ckpt")
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
@@ -526,13 +520,10 @@ def events_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch idempotent-friendly across retries. The oracle proves
     partials re-aggregate to exactly the batch answer regardless of how
     the input was micro-batched."""
-    import shutil as _shutil
     import tempfile
 
-    key = sf_dir.strip("/").replace("/", "_")
-    out_dir = os.path.join("/tmp", f"spark_stream_sink{TMP_NS}", key, "foreach_parts")
-    if os.path.exists(out_dir):
-        _shutil.rmtree(out_dir)
+    out_dir = staged_path(sf_dir, "events", "stream_foreach_parts")
+    shutil.rmtree(out_dir, ignore_errors=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -626,29 +617,23 @@ def _events_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     value payload a Kafka producer would publish. Fingerprint-keyed and
     GC'd like every other staged artifact."""
     from pyspark_xgboost_spark.sources import load_table
-    from pyspark_xgboost_spark.sources.formats import gc_stale_siblings, src_fingerprint
 
-    key = sf_dir.strip("/").replace("/", "_")
-    fp = src_fingerprint(sf_dir, "events")
-    parent = os.path.join("/tmp", f"spark_stream_src_jsonl{TMP_NS}", key)
-    d = os.path.join(parent, f"jsonl_{fp}")
-    gc_stale_siblings(parent, "jsonl_", f"jsonl_{fp}")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        with build_lock(d):
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                ev = load_table(spark, sf_dir, "events")
-                payload = F.to_json(
-                    F.struct(
-                        "event_id",
-                        F.unix_micros("ts").alias("ts_us"),
-                        "user_id",
-                        "event_type",
-                        "value",
-                        "props",
-                    )
-                )
-                ev.select(payload.alias("value")).write.mode("overwrite").text(d)
-    return d
+    def build(d: str) -> None:
+        payload = F.to_json(
+            F.struct(
+                "event_id",
+                F.unix_micros("ts").alias("ts_us"),
+                "user_id",
+                "event_type",
+                "value",
+                "props",
+            )
+        )
+        load_table(spark, sf_dir, "events").select(
+            payload.alias("value")
+        ).write.mode("overwrite").text(d)
+
+    return staged(sf_dir, "events", "stream_src_jsonl", build)
 
 
 def read_events_stream_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -864,86 +849,59 @@ def _stage_late_batches(spark: SparkSession, sf_dir: str) -> str:
     OLD odd rows — every one targeting a window that b1's cycle already
     emitted and evicted, i.e. genuinely late data. Fingerprint-keyed
     like every staged source."""
-    from pyspark_xgboost_spark.sources import load_table
-    from pyspark_xgboost_spark.sources.formats import (
-        _SCRATCH,
-        gc_stale_siblings,
-        src_fingerprint,
+    import datetime as _dt
+
+    parts: list[DataFrame] = []
+
+    def make_batch(ev: DataFrame, seq: int) -> DataFrame:
+        if not parts:
+            mx = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+            aid = (
+                ev.filter(F.col("ts") == mx)
+                .agg(F.min("event_id").alias("a"))
+                .collect()[0]["a"]
+            )
+            recent = mx - _dt.timedelta(hours=1)
+            horizon = mx - _dt.timedelta(hours=2)
+            win_end = F.date_trunc("hour", F.col("ts")) + F.expr("INTERVAL 1 HOUR")
+            base0 = ev.filter(
+                (F.col("event_id") % 2 == 0) | (F.col("event_id") == aid)
+            )
+            # state groups batch 0 creates — a late row only hits the
+            # DROP path if its (window, type) group was created AND
+            # evicted; a late row for a never-seen group builds fresh
+            # state instead (observed Spark behavior, pinned in tests)
+            g0 = base0.select(
+                F.date_trunc("hour", F.col("ts")).alias("g_w"),
+                F.col("event_type").alias("g_t"),
+            ).distinct()
+            odd = ev.filter(
+                (F.col("event_id") % 2 == 1) & (F.col("event_id") != aid)
+            )
+            late = (
+                odd.filter(win_end <= F.lit(horizon))
+                .join(
+                    g0,
+                    (F.date_trunc("hour", F.col("ts")) == F.col("g_w"))
+                    & (F.col("event_type") == F.col("g_t")),
+                    "left_semi",
+                )
+            )
+            recent_odds = odd.filter(F.col("ts") > F.lit(recent))
+            cols = ev.columns
+            rest = odd.exceptAll(late.select(*cols)).exceptAll(
+                recent_odds.select(*cols)
+            )
+            parts.extend([
+                base0.select(*cols).unionByName(rest.select(*cols)),
+                recent_odds.select(*cols),
+                late.select(*cols),
+            ])
+        return parts[seq]
+
+    return _stage_seq_batches(
+        spark, sf_dir, "events_late3", make_batch, table="events"
     )
-
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"events_late3_{src_fingerprint(sf_dir, 'events')}"
-    gc_stale_siblings(parent, "events_late3_", leaf)
-    root = os.path.join(parent, leaf)
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        with build_lock(root):
-            if not os.path.exists(os.path.join(root, "_DONE")):
-                import glob
-                import shutil
-                import time as _time
-
-                shutil.rmtree(root, ignore_errors=True)
-                os.makedirs(os.path.join(root, "in"))
-                ev = load_table(spark, sf_dir, "events")
-                mx = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-                aid = (
-                    ev.filter(F.col("ts") == mx)
-                    .agg(F.min("event_id").alias("a"))
-                    .collect()[0]["a"]
-                )
-                import datetime as _dt
-
-                recent = mx - _dt.timedelta(hours=1)
-                horizon = mx - _dt.timedelta(hours=2)
-                win_end = F.date_trunc("hour", F.col("ts")) + F.expr("INTERVAL 1 HOUR")
-                base0 = ev.filter(
-                    (F.col("event_id") % 2 == 0) | (F.col("event_id") == aid)
-                )
-                # state groups batch 0 creates — a late row only hits the
-                # DROP path if its (window, type) group was created AND
-                # evicted; a late row for a never-seen group builds fresh
-                # state instead (observed Spark behavior, pinned in tests)
-                g0 = base0.select(
-                    F.date_trunc("hour", F.col("ts")).alias("g_w"),
-                    F.col("event_type").alias("g_t"),
-                ).distinct()
-                odd = ev.filter(
-                    (F.col("event_id") % 2 == 1) & (F.col("event_id") != aid)
-                )
-                late = (
-                    odd.filter(win_end <= F.lit(horizon))
-                    .join(
-                        g0,
-                        (F.date_trunc("hour", F.col("ts")) == F.col("g_w"))
-                        & (F.col("event_type") == F.col("g_t")),
-                        "left_semi",
-                    )
-                )
-                recent_odds = odd.filter(F.col("ts") > F.lit(recent))
-                cols = ev.columns
-                rest = odd.exceptAll(late.select(*cols)).exceptAll(
-                    recent_odds.select(*cols)
-                )
-                parts = [
-                    base0.select(*cols).unionByName(rest.select(*cols)),
-                    recent_odds.select(*cols),
-                    late.select(*cols),
-                ]
-                now = _time.time()
-                for i, part in enumerate(parts):
-                    tmp = os.path.join(root, f"tmp{i}")
-                    part.coalesce(1).write.mode("overwrite").parquet(tmp)
-                    src = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-                    dst = os.path.join(root, "in", f"batch-{i:03d}.parquet")
-                    os.rename(src, dst)
-                    # pin mtimes so the file source's (modTime, path) order IS
-                    # the intended batch order
-                    os.utime(dst, (now - 300 + i * 100, now - 300 + i * 100))
-                    shutil.rmtree(tmp, ignore_errors=True)
-                with open(os.path.join(root, "_DONE"), "w") as fh:
-                    fh.write("ok")
-    return root
 
 
 @register(
@@ -1017,54 +975,34 @@ def events_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stage_seq_batches(
-    spark, sf_dir, leaf_prefix, make_batch, n_batches=3, table="documents"
+    spark, sf_dir, name, make_batch, n_batches=3, table="documents"
 ):
     """Shared staging scaffold for ordered file-stream batches: one
-    parquet file per sequence number, mtime-pinned so the file
-    source's (modTime, path) order IS the batch order, fingerprint-
-    keyed and _DONE-marked (idempotent; stale siblings GC'd).
-    ``make_batch(src, seq)`` returns batch seq's rows over the loaded
-    ``table`` — the only part the fixtures (CDC merge/SCD2, near-dup,
-    decontamination, HLL) differ in."""
+    parquet file per sequence number under ``in/``, mtime-pinned so the
+    file source's (modTime, path) order IS the batch order, staged once
+    per source fingerprint (``formats.staged``). ``make_batch(src,
+    seq)`` returns batch seq's rows over the loaded ``table`` — the
+    only part the fixtures (late data, CDC merge/SCD2, near-dup,
+    decontamination, HLL, ...) differ in."""
     import glob
-    import shutil
     import time as _time
 
     from pyspark_xgboost_spark.sources import load_table
-    from pyspark_xgboost_spark.sources.formats import (
-        _SCRATCH,
-        build_lock,
-        gc_stale_siblings,
-        src_fingerprint,
-    )
 
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"{leaf_prefix}{src_fingerprint(sf_dir, table)}"
-    gc_stale_siblings(parent, leaf_prefix, leaf)
-    root = os.path.join(parent, leaf)
-    done = os.path.join(root, "_DONE")
-    if not os.path.exists(done):
-        with build_lock(root):
-            if not os.path.exists(done):
-                shutil.rmtree(root, ignore_errors=True)
-                os.makedirs(os.path.join(root, "in"))
-                docs = load_table(spark, sf_dir, table)
-                now = _time.time()
-                for i in range(n_batches):
-                    part = make_batch(docs, i)
-                    tmp = os.path.join(root, f"tmp{i}")
-                    part.coalesce(1).write.mode("overwrite").parquet(tmp)
-                    srcf = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-                    dst = os.path.join(root, "in", f"batch-{i:03d}.parquet")
-                    os.rename(srcf, dst)
-                    os.utime(
-                        dst, (now - 300 + i * 100, now - 300 + i * 100)
-                    )
-                    shutil.rmtree(tmp, ignore_errors=True)
-                with open(done, "w") as fh:
-                    fh.write("ok")
-    return root
+    def build(root: str) -> None:
+        os.makedirs(os.path.join(root, "in"))
+        src = load_table(spark, sf_dir, table)
+        now = _time.time()
+        for i in range(n_batches):
+            tmp = os.path.join(root, f"tmp{i}")
+            make_batch(src, i).coalesce(1).write.mode("overwrite").parquet(tmp)
+            srcf = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            dst = os.path.join(root, "in", f"batch-{i:03d}.parquet")
+            os.rename(srcf, dst)
+            os.utime(dst, (now - 300 + i * 100, now - 300 + i * 100))
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    return staged(sf_dir, table, name, build)
 
 
 def _stage_merge_batches(spark: SparkSession, sf_dir: str) -> str:
@@ -1082,7 +1020,7 @@ def _stage_merge_batches(spark: SparkSession, sf_dir: str) -> str:
             "doc_id", F.lit(i).cast("int").alias("seq")
         )
 
-    return _stage_seq_batches(spark, sf_dir, "docs_cdc3_", make_batch)
+    return _stage_seq_batches(spark, sf_dir, "docs_cdc3", make_batch)
 
 
 @register(
@@ -1130,19 +1068,12 @@ def stream_merge_upsert_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     and the checkpoint holds only source offsets. Batch sequence comes
     from the DATA (seq column), not the sink's batch_id."""
     root = _stage_merge_batches(spark, sf_dir)
-    tbl = os.path.join(root, "table")
-    final_marker = os.path.join(tbl, "_FINAL")
-    if not os.path.exists(final_marker):
-        # three queries (merge, CDF, vacuum) ensure this chain — the
-        # lock + re-check makes concurrent ensures build-once (the
-        # build_lock staging discipline)
-        from pyspark_xgboost_spark.sources.formats import build_lock
-
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                _build_merge_chain(spark, root, tbl, final_marker)
-    with open(final_marker) as fh:
-        final_dir = fh.read()
+    # three queries (merge, CDF, vacuum) ensure this chain; build_once
+    # makes concurrent ensures build it once
+    final_dir = build_once(
+        os.path.join(root, "table"),
+        lambda tbl: _build_merge_chain(spark, root, tbl),
+    )
     fin = spark.read.parquet(final_dir)
     return fin.groupBy(
         F.col("last_batch").cast("bigint").alias("last_batch")
@@ -1153,16 +1084,11 @@ def stream_merge_upsert_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _build_merge_chain(
-    spark: SparkSession, root: str, tbl: str, final_marker: str
-) -> None:
-    """Run the 3-batch foreachBatch MERGE and leave the versioned
-    copy-on-write chain under ``tbl`` (marker names the final version)."""
-    import shutil
+def _build_merge_chain(spark: SparkSession, root: str, tbl: str) -> str:
+    """Run the 3-batch foreachBatch MERGE, leave the versioned
+    copy-on-write chain under ``tbl`` and return the final version."""
     import tempfile
 
-    shutil.rmtree(tbl, ignore_errors=True)
-    os.makedirs(tbl)
     state: dict[str, Any] = {"cur": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1207,8 +1133,7 @@ def _build_merge_chain(
         .start()
     )
     q.awaitTermination()
-    with open(final_marker, "w") as fh:
-        fh.write(state["cur"])
+    return state["cur"]
 
 
 @register(
@@ -1257,7 +1182,7 @@ def scan_version_diff_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly what this query's contract documents."""
     import os as _os
 
-    # ensure the version chain exists (idempotent via _FINAL marker)
+    # ensure the version chain exists (built once)
     stream_merge_upsert_incremental(spark, sf_dir).count()
     root = _stage_merge_batches(spark, sf_dir)
     v1 = spark.read.parquet(_os.path.join(root, "table", "v001"))
@@ -1324,9 +1249,16 @@ def sink_vacuum_old_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture-isolation device, not part of the operation's cost)
     stream_merge_upsert_incremental(spark, sf_dir).count()
     root = _stage_merge_batches(spark, sf_dir)
-    vac = _os.path.join(root, "table_vacuum")
-    if not _os.path.isdir(vac):
-        _shutil.copytree(_os.path.join(root, "table"), vac)
+    vac = _os.path.join(root, "vacuum")
+    build_once(
+        vac,
+        lambda vac: _shutil.copytree(
+            _os.path.join(root, "table"),
+            vac,
+            dirs_exist_ok=True,
+            ignore=_shutil.ignore_patterns("_*"),  # data, not markers
+        ),
+    )
     versions = sorted(
         p for p in _glob.glob(_os.path.join(vac, "v*")) if _os.path.isdir(p)
     )
@@ -1692,7 +1624,7 @@ def _stage_neardup_batches(spark: SparkSession, sf_dir: str) -> str:
             "doc_id", "text", F.lit(seq).cast("int").alias("seq")
         )
 
-    return _stage_seq_batches(spark, sf_dir, "docs_nd3_", make_batch)
+    return _stage_seq_batches(spark, sf_dir, "docs_nd3", make_batch)
 
 
 @register(
@@ -1724,82 +1656,77 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Probe-before-append gives strictly-earlier semantics; new<->new
     pairs within a batch are the batch's own (small) dedup problem,
     settled separately, exactly like dedup_incremental_batch."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.dedup import _MH_BUCKET_CAP, _band_rows
 
     root = _stage_neardup_batches(spark, sf_dir)
-    idx_dir = os.path.join(root, "index")
-    pairs_dir = os.path.join(root, "pairs")
-    final_marker = os.path.join(root, "_ND_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(final_marker):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(idx_dir, ignore_errors=True)
-                shutil.rmtree(pairs_dir, ignore_errors=True)
-                state: dict[str, Any] = {"has_index": False, "has_pairs": False}
+    tbl = os.path.join(root, "neardup")
+    idx_dir = os.path.join(tbl, "index")
+    pairs_dir = os.path.join(tbl, "pairs")
 
-                def probe_and_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    bands = _band_rows(batch_df.select("doc_id", "text")).join(
-                        batch_df.select("doc_id", "seq"), "doc_id"
-                    )
-                    # band rows feed a probe AND an append: materialize once
-                    bands = bands.localCheckpoint(eager=True)
-                    if state["has_index"]:
-                        idx = sess.read.parquet(idx_dir)
-                        pairs = (
-                            bands.select(F.col("doc_id").alias("new_doc"), "band", "key")
-                            .join(idx.select(F.col("doc_id").alias("old_doc"), "band", "key"),
-                                  ["band", "key"])
-                            .select("new_doc", "old_doc")
-                            .distinct()
-                        )
-                        pairs.write.mode("append").parquet(pairs_dir)
-                        state["has_pairs"] = True
-                        # materialize BEFORE the index append below: `keep`
-                        # reads idx_dir through `counts` while appending to
-                        # idx_dir — safe today only because InMemoryFileIndex
-                        # snapshots the listing at read time, a fragile
-                        # implicit ordering if the read were ever re-planned
-                        # (r10 advice). The checkpoint pins the pre-append
-                        # contents explicitly; counts is bucket-sized (small).
-                        counts = idx.groupBy("band", "key").agg(
-                            F.count("*").alias("n0")
-                        ).localCheckpoint(eager=True)
-                    else:
-                        counts = None
-                    w = W.partitionBy("band", "key").orderBy("doc_id")
-                    ranked = bands.withColumn("_rn", F.row_number().over(w))
-                    if counts is None:
-                        keep = ranked.filter(F.col("_rn") <= _MH_BUCKET_CAP)
-                    else:
-                        keep = ranked.join(counts, ["band", "key"], "left").filter(
-                            F.col("_rn") + F.coalesce(F.col("n0"), F.lit(0))
-                            <= _MH_BUCKET_CAP
-                        )
-                    keep.select("doc_id", "band", "key", "seq").write.mode(
-                        "append"
-                    ).parquet(idx_dir)
-                    state["has_index"] = True
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"has_index": False, "has_pairs": False}
 
-                q = (
-                    spark.readStream.schema("doc_id long, text string, seq int")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(probe_and_update)
-                    .option("checkpointLocation", tempfile.mkdtemp(prefix="nd_ckpt_"))
-                    .trigger(availableNow=True)
-                    .start()
+        def probe_and_update(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            bands = _band_rows(batch_df.select("doc_id", "text")).join(
+                batch_df.select("doc_id", "seq"), "doc_id"
+            )
+            # band rows feed a probe AND an append: materialize once
+            bands = bands.localCheckpoint(eager=True)
+            if state["has_index"]:
+                idx = sess.read.parquet(idx_dir)
+                pairs = (
+                    bands.select(F.col("doc_id").alias("new_doc"), "band", "key")
+                    .join(idx.select(F.col("doc_id").alias("old_doc"), "band", "key"),
+                          ["band", "key"])
+                    .select("new_doc", "old_doc")
+                    .distinct()
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write("pairs" if state["has_pairs"] else "empty")
-    with open(final_marker) as fh:
-        has_pairs = fh.read() == "pairs"
+                pairs.write.mode("append").parquet(pairs_dir)
+                state["has_pairs"] = True
+                # materialize BEFORE the index append below: `keep`
+                # reads idx_dir through `counts` while appending to
+                # idx_dir — safe today only because InMemoryFileIndex
+                # snapshots the listing at read time, a fragile
+                # implicit ordering if the read were ever re-planned
+                # (r10 advice). The checkpoint pins the pre-append
+                # contents explicitly; counts is bucket-sized (small).
+                counts = idx.groupBy("band", "key").agg(
+                    F.count("*").alias("n0")
+                ).localCheckpoint(eager=True)
+            else:
+                counts = None
+            w = W.partitionBy("band", "key").orderBy("doc_id")
+            ranked = bands.withColumn("_rn", F.row_number().over(w))
+            if counts is None:
+                keep = ranked.filter(F.col("_rn") <= _MH_BUCKET_CAP)
+            else:
+                keep = ranked.join(counts, ["band", "key"], "left").filter(
+                    F.col("_rn") + F.coalesce(F.col("n0"), F.lit(0))
+                    <= _MH_BUCKET_CAP
+                )
+            keep.select("doc_id", "band", "key", "seq").write.mode(
+                "append"
+            ).parquet(idx_dir)
+            state["has_index"] = True
+
+        q = (
+            spark.readStream.schema("doc_id long, text string, seq int")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(probe_and_update)
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="nd_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return "pairs" if state["has_pairs"] else "empty"
+
+    has_pairs = build_once(tbl, build) == "pairs"
     if not has_pairs:
         return spark.createDataFrame([], "new_doc long, old_doc long")
     return spark.read.parquet(pairs_dir).select("new_doc", "old_doc").distinct()
@@ -1894,102 +1821,96 @@ def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately, exactly how a warehouse SCD2 job bounds its working
     set as history accretes for years). The streaming query itself is
     stateless — state lives in the dimension."""
-    import shutil
     import tempfile
 
     root = _stage_merge_batches(spark, sf_dir)
     tbl = os.path.join(root, "scd2")
-    final_marker = os.path.join(tbl, "_SCD2_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"open": None, "closed": []}
 
-                def scd2_merge(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    b = (
-                        batch_df.groupBy("doc_id")
-                        .agg(F.max("seq").alias("seq"))
-                        .select(
-                            "doc_id",
-                            "seq",
-                            ((F.col("doc_id") + 2 * F.col("seq")) % 4).alias("attr"),
-                        )
-                    )
-                    if state["open"] is None:
-                        new_open = b.select(
-                            "doc_id", "attr", F.col("seq").alias("valid_from")
-                        )
-                        newly_closed = None
-                    else:
-                        cur = sess.read.parquet(state["open"])
-                        j = cur.alias("t").join(b.alias("s"), "doc_id", "full_outer")
-                        # change rows: key present on both sides, attr differs
-                        changed = j.filter(
-                            F.col("t.attr").isNotNull()
-                            & F.col("s.attr").isNotNull()
-                            & (F.col("t.attr") != F.col("s.attr"))
-                        )
-                        newly_closed = changed.select(
-                            "doc_id",
-                            F.col("t.attr").alias("attr"),
-                            F.col("t.valid_from").alias("valid_from"),
-                            F.col("s.seq").alias("valid_to"),
-                        )
-                        new_open = (
-                            # unchanged keys + keys absent from the batch keep
-                            # their open version; changed + brand-new keys open
-                            # a version at this batch's seq
-                            j.select(
-                                "doc_id",
-                                F.when(
-                                    F.col("s.attr").isNotNull()
-                                    & (
-                                        F.col("t.attr").isNull()
-                                        | (F.col("t.attr") != F.col("s.attr"))
-                                    ),
-                                    F.col("s.attr"),
-                                )
-                                .otherwise(F.col("t.attr"))
-                                .alias("attr"),
-                                F.when(
-                                    F.col("s.attr").isNotNull()
-                                    & (
-                                        F.col("t.attr").isNull()
-                                        | (F.col("t.attr") != F.col("s.attr"))
-                                    ),
-                                    F.col("s.seq"),
-                                )
-                                .otherwise(F.col("t.valid_from"))
-                                .alias("valid_from"),
-                            )
-                        )
-                    nxt = os.path.join(tbl, f"open_v{batch_id:03d}")
-                    new_open.write.mode("overwrite").parquet(nxt)
-                    state["open"] = nxt
-                    if newly_closed is not None:
-                        cl = os.path.join(tbl, f"closed_v{batch_id:03d}")
-                        newly_closed.write.mode("overwrite").parquet(cl)
-                        state["closed"].append(cl)
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"open": None, "closed": []}
 
-                q = (
-                    spark.readStream.schema("doc_id long, seq int")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(scd2_merge)
-                    .option("checkpointLocation", tempfile.mkdtemp(prefix="scd2_ckpt_"))
-                    .trigger(availableNow=True)
-                    .start()
+        def scd2_merge(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            b = (
+                batch_df.groupBy("doc_id")
+                .agg(F.max("seq").alias("seq"))
+                .select(
+                    "doc_id",
+                    "seq",
+                    ((F.col("doc_id") + 2 * F.col("seq")) % 4).alias("attr"),
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["open"] + "\n" + "\n".join(state["closed"]))
-    with open(final_marker) as fh:
-        open_dir, *closed_dirs = fh.read().splitlines()
+            )
+            if state["open"] is None:
+                new_open = b.select(
+                    "doc_id", "attr", F.col("seq").alias("valid_from")
+                )
+                newly_closed = None
+            else:
+                cur = sess.read.parquet(state["open"])
+                j = cur.alias("t").join(b.alias("s"), "doc_id", "full_outer")
+                # change rows: key present on both sides, attr differs
+                changed = j.filter(
+                    F.col("t.attr").isNotNull()
+                    & F.col("s.attr").isNotNull()
+                    & (F.col("t.attr") != F.col("s.attr"))
+                )
+                newly_closed = changed.select(
+                    "doc_id",
+                    F.col("t.attr").alias("attr"),
+                    F.col("t.valid_from").alias("valid_from"),
+                    F.col("s.seq").alias("valid_to"),
+                )
+                new_open = (
+                    # unchanged keys + keys absent from the batch keep
+                    # their open version; changed + brand-new keys open
+                    # a version at this batch's seq
+                    j.select(
+                        "doc_id",
+                        F.when(
+                            F.col("s.attr").isNotNull()
+                            & (
+                                F.col("t.attr").isNull()
+                                | (F.col("t.attr") != F.col("s.attr"))
+                            ),
+                            F.col("s.attr"),
+                        )
+                        .otherwise(F.col("t.attr"))
+                        .alias("attr"),
+                        F.when(
+                            F.col("s.attr").isNotNull()
+                            & (
+                                F.col("t.attr").isNull()
+                                | (F.col("t.attr") != F.col("s.attr"))
+                            ),
+                            F.col("s.seq"),
+                        )
+                        .otherwise(F.col("t.valid_from"))
+                        .alias("valid_from"),
+                    )
+                )
+            nxt = os.path.join(tbl, f"open_v{batch_id:03d}")
+            new_open.write.mode("overwrite").parquet(nxt)
+            state["open"] = nxt
+            if newly_closed is not None:
+                cl = os.path.join(tbl, f"closed_v{batch_id:03d}")
+                newly_closed.write.mode("overwrite").parquet(cl)
+                state["closed"].append(cl)
+
+        q = (
+            spark.readStream.schema("doc_id long, seq int")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(scd2_merge)
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="scd2_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["open"] + "\n" + "\n".join(state["closed"])
+
+    open_dir, *closed_dirs = build_once(tbl, build).splitlines()
     open_df = spark.read.parquet(open_dir).select(
         "doc_id",
         F.col("attr").cast("bigint").alias("attr"),
@@ -2029,7 +1950,7 @@ def _stage_decon_batches(spark: SparkSession, sf_dir: str) -> str:
             (F.col("doc_id") % 50 != 0) & (F.col("doc_id") % 3 == seq)
         ).select("doc_id", "text", F.lit(seq).cast("int").alias("seq"))
 
-    return _stage_seq_batches(spark, sf_dir, "docs_dc3_", make_batch)
+    return _stage_seq_batches(spark, sf_dir, "docs_dc3", make_batch)
 
 
 @register("stream_decontaminate_incremental", oracle=None)  # set below
@@ -2061,15 +1982,14 @@ def stream_decontaminate_incremental(
     too-big-to-broadcast holdout), one lead() window over MATCHED
     positions only, never a corpus re-scan. The output is append-only
     per batch."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.corpus import _DECON_N, _TOKS
 
     root = _stage_decon_batches(spark, sf_dir)
-    idx_dir = os.path.join(root, "evalidx")
-    out_dir = os.path.join(root, "coverage")
-    final_marker = os.path.join(root, "_DC_FINAL")
+    tbl = os.path.join(root, "decon")
+    idx_dir = os.path.join(tbl, "evalidx")
+    out_dir = os.path.join(tbl, "coverage")
 
     def gram_digests(docs: DataFrame) -> DataFrame:
         t = docs.select("doc_id", F.expr(_TOKS).alias("toks"))
@@ -2093,93 +2013,89 @@ def stream_decontaminate_incremental(
             )
         )
 
-    if not os.path.exists(final_marker):
-        with build_lock(final_marker):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(idx_dir, ignore_errors=True)
-                shutil.rmtree(out_dir, ignore_errors=True)
-                from pyspark_xgboost_spark.sources import load_table
+    def build(tbl: str) -> None:
+        from pyspark_xgboost_spark.sources import load_table
 
-                hold = load_table(spark, sf_dir, "documents").filter(
-                    F.col("doc_id") % 50 == 0
-                )
-                gram_digests(hold).select("digest").distinct().write.mode(
-                    "overwrite"
-                ).parquet(idx_dir)
+        hold = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 50 == 0
+        )
+        gram_digests(hold).select("digest").distinct().write.mode(
+            "overwrite"
+        ).parquet(idx_dir)
 
-                def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    t = batch_df.select(
-                        "doc_id", "seq", F.expr(_TOKS).alias("toks")
-                    )
-                    idx = sess.read.parquet(idx_dir)
-                    matched = (
-                        gram_digests(batch_df)
-                        .join(idx.hint("shuffle_hash"), "digest")
-                        .select("doc_id", "pos")
-                    )
-                    w = W.partitionBy("doc_id").orderBy("pos")
-                    cov = (
-                        matched.withColumn("nxt", F.lead("pos").over(w))
-                        .groupBy("doc_id")
-                        .agg(
-                            F.count("*").cast("bigint").alias("n_hits"),
-                            F.sum(
-                                F.when(
-                                    F.col("nxt").isNull(), F.lit(_DECON_N)
-                                ).otherwise(
-                                    F.least(
-                                        F.lit(_DECON_N), F.col("nxt") - F.col("pos")
-                                    )
-                                )
+        def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            t = batch_df.select(
+                "doc_id", "seq", F.expr(_TOKS).alias("toks")
+            )
+            idx = sess.read.parquet(idx_dir)
+            matched = (
+                gram_digests(batch_df)
+                .join(idx.hint("shuffle_hash"), "digest")
+                .select("doc_id", "pos")
+            )
+            w = W.partitionBy("doc_id").orderBy("pos")
+            cov = (
+                matched.withColumn("nxt", F.lead("pos").over(w))
+                .groupBy("doc_id")
+                .agg(
+                    F.count("*").cast("bigint").alias("n_hits"),
+                    F.sum(
+                        F.when(
+                            F.col("nxt").isNull(), F.lit(_DECON_N)
+                        ).otherwise(
+                            F.least(
+                                F.lit(_DECON_N), F.col("nxt") - F.col("pos")
                             )
-                            .cast("bigint")
-                            .alias("covered_tokens"),
                         )
                     )
-                    (
-                        t.select(
-                            "doc_id",
-                            "seq",
-                            F.size("toks").cast("bigint").alias("n_tokens"),
-                        )
-                        .join(cov, "doc_id", "left")
-                        .select(
-                            "doc_id",
-                            "seq",
-                            "n_tokens",
-                            F.coalesce("n_hits", F.lit(0))
-                            .cast("bigint")
-                            .alias("n_hits"),
-                            F.coalesce("covered_tokens", F.lit(0))
-                            .cast("bigint")
-                            .alias("covered_tokens"),
-                            F.floor(
-                                F.coalesce("covered_tokens", F.lit(0))
-                                * 1000000
-                                / F.col("n_tokens")
-                            )
-                            .cast("bigint")
-                            .alias("dirty_micro"),
-                        )
-                        .write.mode("append")
-                        .parquet(out_dir)
-                    )
-
-                q = (
-                    spark.readStream.schema("doc_id long, text string, seq int")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(probe_batch)
-                    .option("checkpointLocation", tempfile.mkdtemp(prefix="dc_ckpt_"))
-                    .trigger(availableNow=True)
-                    .start()
+                    .cast("bigint")
+                    .alias("covered_tokens"),
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write("ok")
+            )
+            (
+                t.select(
+                    "doc_id",
+                    "seq",
+                    F.size("toks").cast("bigint").alias("n_tokens"),
+                )
+                .join(cov, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    "seq",
+                    "n_tokens",
+                    F.coalesce("n_hits", F.lit(0))
+                    .cast("bigint")
+                    .alias("n_hits"),
+                    F.coalesce("covered_tokens", F.lit(0))
+                    .cast("bigint")
+                    .alias("covered_tokens"),
+                    F.floor(
+                        F.coalesce("covered_tokens", F.lit(0))
+                        * 1000000
+                        / F.col("n_tokens")
+                    )
+                    .cast("bigint")
+                    .alias("dirty_micro"),
+                )
+                .write.mode("append")
+                .parquet(out_dir)
+            )
+
+        q = (
+            spark.readStream.schema("doc_id long, text string, seq int")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(probe_batch)
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="dc_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    build_once(tbl, build)
     return spark.read.parquet(out_dir)
 
 
@@ -2247,7 +2163,7 @@ def _stage_hll_batches(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return _stage_seq_batches(
-        spark, sf_dir, "events_hll3_", make_batch, table="events"
+        spark, sf_dir, "events_hll3", make_batch, table="events"
     )
 
 
@@ -2278,7 +2194,6 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct + groupBy (g, reg) over the BATCH only; the merge joins
     sketch-sized tables (groups x m rows max). The streaming query is
     stateless — state lives in the sketch table."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.sketches import (
@@ -2286,58 +2201,52 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_report,
     )
     from pyspark_xgboost_spark.sources import load_table
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_hll_batches(spark, sf_dir)
     tbl = os.path.join(root, "hll")
-    final_marker = os.path.join(tbl, "_HLL_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"cur": None}
 
-                def merge_regs(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    b = hll_registers(
-                        batch_df.select(
-                            F.col("event_type").alias("g"),
-                            F.col("user_id").alias("id"),
-                        )
-                    )
-                    if state["cur"] is not None:
-                        cur = sess.read.parquet(state["cur"])
-                        b = (
-                            cur.unionByName(b)
-                            .groupBy("g", "reg")
-                            .agg(F.max("m").alias("m"))
-                        )
-                    nxt = os.path.join(tbl, f"v{batch_id:03d}")
-                    b.write.mode("overwrite").parquet(nxt)
-                    state["cur"] = nxt
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"cur": None}
 
-                q = (
-                    spark.readStream.schema(
-                        "event_type string, user_id long, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(merge_regs)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="hll_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+        def merge_regs(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            b = hll_registers(
+                batch_df.select(
+                    F.col("event_type").alias("g"),
+                    F.col("user_id").alias("id"),
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["cur"])
-    with open(final_marker) as fh:
-        regs = spark.read.parquet(fh.read())
+            )
+            if state["cur"] is not None:
+                cur = sess.read.parquet(state["cur"])
+                b = (
+                    cur.unionByName(b)
+                    .groupBy("g", "reg")
+                    .agg(F.max("m").alias("m"))
+                )
+            nxt = os.path.join(tbl, f"v{batch_id:03d}")
+            b.write.mode("overwrite").parquet(nxt)
+            state["cur"] = nxt
+
+        q = (
+            spark.readStream.schema(
+                "event_type string, user_id long, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(merge_regs)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="hll_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["cur"]
+
+    regs = spark.read.parquet(build_once(tbl, build))
     groups = regs.select("g").distinct()
     rep = hll_report(spark, regs, groups)
     ex = (
@@ -2391,7 +2300,7 @@ def _stage_kmeans_batches(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return _stage_seq_batches(
-        spark, sf_dir, "emb_km3_", make_batch, table="embeddings"
+        spark, sf_dir, "emb_km3", make_batch, table="embeddings"
     )
 
 
@@ -2422,7 +2331,6 @@ def stream_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     is copy-on-write versioned like every maintained artifact here.
     The streaming query is stateless — state lives in the centroid
     table."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
@@ -2432,107 +2340,101 @@ def stream_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _km_xq,
         _sign_trunc_div_sql,
     )
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_kmeans_batches(spark, sf_dir)
     tbl = os.path.join(root, "centers")
-    final_marker = os.path.join(tbl, "_KM_FINAL")
     quant = _knng_quant_expr()
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"cur": None}
 
-                def km_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    xq = batch_df.select("vec_id", quant.alias("q"))
-                    if state["cur"] is None:
-                        centers = (
-                            xq.orderBy("vec_id")
-                            .limit(_KM_K)
-                            .select(
-                                F.col("vec_id").alias("cid"),
-                                F.col("q").alias("cq"),
-                                F.lit(0).cast("long").alias("n"),
-                            )
-                        )
-                    else:
-                        centers = sess.read.parquet(state["cur"])
-                    assigned = _km_assign(
-                        xq, _km_cent_row(centers.select("cid", "cq"))
-                    )
-                    sums = (
-                        assigned.select(
-                            "cid", F.posexplode("q").alias("j0", "x")
-                        )
-                        .groupBy("cid", "j0")
-                        .agg(F.sum("x").alias("s"))
-                    )
-                    counts = assigned.groupBy("cid").agg(
-                        F.count("*").alias("m")
-                    )
-                    ex = centers.select(
-                        "cid", "n", F.posexplode("cq").alias("j0", "c")
-                    )
-                    upd = (
-                        ex.join(sums, ["cid", "j0"], "left")
-                        .join(counts, "cid", "left")
-                        .select(
-                            "cid",
-                            "j0",
-                            F.when(
-                                F.col("s").isNull(), F.col("c")
-                            )
-                            .otherwise(
-                                F.expr(
-                                    _sign_trunc_div_sql(
-                                        "c * n + s", "(n + m)"
-                                    )
-                                )
-                            )
-                            .alias("c"),
-                            (F.col("n") + F.coalesce("m", F.lit(0)))
-                            .cast("long")
-                            .alias("n2"),
-                        )
-                    )
-                    nxt_df = (
-                        upd.groupBy("cid")
-                        .agg(
-                            F.expr(
-                                "transform(array_sort(collect_list("
-                                "struct(j0, c))), x -> x.c)"
-                            ).alias("cq"),
-                            F.max("n2").cast("long").alias("n"),
-                        )
-                    )
-                    nxt = os.path.join(tbl, f"v{batch_id:03d}")
-                    nxt_df.write.mode("overwrite").parquet(nxt)
-                    state["cur"] = nxt
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"cur": None}
 
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
+        def km_update(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            xq = batch_df.select("vec_id", quant.alias("q"))
+            if state["cur"] is None:
+                centers = (
+                    xq.orderBy("vec_id")
+                    .limit(_KM_K)
+                    .select(
+                        F.col("vec_id").alias("cid"),
+                        F.col("q").alias("cq"),
+                        F.lit(0).cast("long").alias("n"),
                     )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(km_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="km_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["cur"])
-    with open(final_marker) as fh:
-        centers = spark.read.parquet(fh.read())
+            else:
+                centers = sess.read.parquet(state["cur"])
+            assigned = _km_assign(
+                xq, _km_cent_row(centers.select("cid", "cq"))
+            )
+            sums = (
+                assigned.select(
+                    "cid", F.posexplode("q").alias("j0", "x")
+                )
+                .groupBy("cid", "j0")
+                .agg(F.sum("x").alias("s"))
+            )
+            counts = assigned.groupBy("cid").agg(
+                F.count("*").alias("m")
+            )
+            ex = centers.select(
+                "cid", "n", F.posexplode("cq").alias("j0", "c")
+            )
+            upd = (
+                ex.join(sums, ["cid", "j0"], "left")
+                .join(counts, "cid", "left")
+                .select(
+                    "cid",
+                    "j0",
+                    F.when(
+                        F.col("s").isNull(), F.col("c")
+                    )
+                    .otherwise(
+                        F.expr(
+                            _sign_trunc_div_sql(
+                                "c * n + s", "(n + m)"
+                            )
+                        )
+                    )
+                    .alias("c"),
+                    (F.col("n") + F.coalesce("m", F.lit(0)))
+                    .cast("long")
+                    .alias("n2"),
+                )
+            )
+            nxt_df = (
+                upd.groupBy("cid")
+                .agg(
+                    F.expr(
+                        "transform(array_sort(collect_list("
+                        "struct(j0, c))), x -> x.c)"
+                    ).alias("cq"),
+                    F.max("n2").cast("long").alias("n"),
+                )
+            )
+            nxt = os.path.join(tbl, f"v{batch_id:03d}")
+            nxt_df.write.mode("overwrite").parquet(nxt)
+            state["cur"] = nxt
+
+        q = (
+            spark.readStream.schema(
+                "vec_id long, embedding array<double>, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(km_update)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="km_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["cur"]
+
+    centers = spark.read.parquet(build_once(tbl, build))
     fa = _km_assign(
         _km_xq(spark, sf_dir), _km_cent_row(centers.select("cid", "cq"))
     )
@@ -2684,7 +2586,7 @@ def _stage_wrsi_batches(spark: SparkSession, sf_dir: str) -> str:
             F.lit(seq).cast("int").alias("seq"),
         )
 
-    return _stage_seq_batches(spark, sf_dir, "docs_wrsi3_", make_batch)
+    return _stage_seq_batches(spark, sf_dir, "docs_wrsi3", make_batch)
 
 
 def _wrsi_key_cols(df: DataFrame) -> DataFrame:
@@ -2740,56 +2642,48 @@ def stream_reservoir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge shape); the merge unions two reservoir-sized tables
     (sources x {_WRSI_K} rows each) and re-ranks. The streaming query
     is stateless — state lives in the reservoir table."""
-    import shutil
     import tempfile
-
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_wrsi_batches(spark, sf_dir)
     tbl = os.path.join(root, "wrs")
-    final_marker = os.path.join(tbl, "_WRS_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"cur": None}
 
-                def merge_sample(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    cand = _wrsi_topk(
-                        _wrsi_key_cols(
-                            batch_df.select("doc_id", "source", "n_chars")
-                        )
-                    )
-                    if state["cur"] is not None:
-                        cur = sess.read.parquet(state["cur"])
-                        cand = _wrsi_topk(cur.unionByName(cand))
-                    nxt = os.path.join(tbl, f"v{batch_id:03d}")
-                    cand.write.mode("overwrite").parquet(nxt)
-                    state["cur"] = nxt
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"cur": None}
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_id long, source string, n_chars long, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(merge_sample)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="wrsi_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+        def merge_sample(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            cand = _wrsi_topk(
+                _wrsi_key_cols(
+                    batch_df.select("doc_id", "source", "n_chars")
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["cur"])
-    with open(final_marker) as fh:
-        res = spark.read.parquet(fh.read())
+            )
+            if state["cur"] is not None:
+                cur = sess.read.parquet(state["cur"])
+                cand = _wrsi_topk(cur.unionByName(cand))
+            nxt = os.path.join(tbl, f"v{batch_id:03d}")
+            cand.write.mode("overwrite").parquet(nxt)
+            state["cur"] = nxt
+
+        q = (
+            spark.readStream.schema(
+                "doc_id long, source string, n_chars long, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(merge_sample)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="wrsi_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["cur"]
+
+    res = spark.read.parquet(build_once(tbl, build))
     w = W.partitionBy("source").orderBy(
         ((-F.col("lnu_micro")).cast("double") / F.col("n_chars")).asc(),
         F.col("doc_id").asc(),
@@ -2851,7 +2745,7 @@ def _stage_dds_batches(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return _stage_seq_batches(
-        spark, sf_dir, "events_dds3_", make_batch, table="events"
+        spark, sf_dir, "events_dds3", make_batch, table="events"
     )
 
 
@@ -2892,60 +2786,53 @@ def stream_ddsketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (groups x ~550 buckets max); the streaming query is stateless —
     state lives in the sketch table, O(KB) per group forever, and
     reading "p99 so far" never rescans history."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.sketches import (
         _DD_INV_ALPHA,
         _DD_QS,
     )
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_dds_batches(spark, sf_dir)
     tbl = os.path.join(root, "dds")
-    final_marker = os.path.join(tbl, "_DDS_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"cur": None}
 
-                def merge_counters(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    b = _dds_bucketize(batch_df)
-                    if state["cur"] is not None:
-                        cur = sess.read.parquet(state["cur"])
-                        b = (
-                            cur.unionByName(b)
-                            .groupBy("event_type", "b")
-                            .agg(F.sum("c").cast("bigint").alias("c"))
-                        )
-                    nxt = os.path.join(tbl, f"v{batch_id:03d}")
-                    b.write.mode("overwrite").parquet(nxt)
-                    state["cur"] = nxt
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"cur": None}
 
-                q = (
-                    spark.readStream.schema(
-                        "event_type string, value double, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(merge_counters)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="dds_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+        def merge_counters(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            b = _dds_bucketize(batch_df)
+            if state["cur"] is not None:
+                cur = sess.read.parquet(state["cur"])
+                b = (
+                    cur.unionByName(b)
+                    .groupBy("event_type", "b")
+                    .agg(F.sum("c").cast("bigint").alias("c"))
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["cur"])
-    with open(final_marker) as fh:
-        bkt = spark.read.parquet(fh.read())
+            nxt = os.path.join(tbl, f"v{batch_id:03d}")
+            b.write.mode("overwrite").parquet(nxt)
+            state["cur"] = nxt
+
+        q = (
+            spark.readStream.schema(
+                "event_type string, value double, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(merge_counters)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="dds_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["cur"]
+
+    bkt = spark.read.parquet(build_once(tbl, build))
     n = bkt.groupBy("event_type").agg(
         F.sum("c").cast("bigint").alias("n_pos"),
         F.count("*").cast("bigint").alias("n_buckets"),
@@ -3091,7 +2978,6 @@ def stream_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale so probes are partition-pruned I/O). The final serving
     read broadcasts the tiny (queries x nprobe) probe set into a hash
     join against the cell-keyed postings."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
@@ -3103,62 +2989,56 @@ def stream_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _km_assign_topn,
         _km_cent_row,
     )
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_kmeans_batches(spark, sf_dir)
     tbl = os.path.join(root, "ivf")
     post_dir = os.path.join(tbl, "post")
     cent_dir = os.path.join(tbl, "cents")
-    final_marker = os.path.join(tbl, "_IVF_FINAL")
     quant = _knng_quant_expr()
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
 
-                def ivf_append(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    xq = batch_df.select("vec_id", quant.alias("q"))
-                    if not os.path.exists(cent_dir):
-                        # freeze the coarse codebook off the first batch
-                        (
-                            xq.orderBy("vec_id")
-                            .limit(_KM_K)
-                            .select(
-                                F.col("vec_id").alias("cid"),
-                                F.col("q").alias("cq"),
-                            )
-                            .write.mode("overwrite")
-                            .parquet(cent_dir)
-                        )
-                    cents = sess.read.parquet(cent_dir)
-                    assigned = _km_assign(xq, _km_cent_row(cents))
-                    (
-                        assigned.select("vec_id", "cid", "q")
-                        .write.mode("append")
-                        .parquet(post_dir)
+    def build(tbl: str) -> None:
+        def ivf_append(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            xq = batch_df.select("vec_id", quant.alias("q"))
+            if not os.path.exists(cent_dir):
+                # freeze the coarse codebook off the first batch
+                (
+                    xq.orderBy("vec_id")
+                    .limit(_KM_K)
+                    .select(
+                        F.col("vec_id").alias("cid"),
+                        F.col("q").alias("cq"),
                     )
-
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(ivf_append)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="ivfp_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                    .write.mode("overwrite")
+                    .parquet(cent_dir)
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write("ok")
+            cents = sess.read.parquet(cent_dir)
+            assigned = _km_assign(xq, _km_cent_row(cents))
+            (
+                assigned.select("vec_id", "cid", "q")
+                .write.mode("append")
+                .parquet(post_dir)
+            )
+
+        q = (
+            spark.readStream.schema(
+                "vec_id long, embedding array<double>, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(ivf_append)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="ivfp_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    build_once(tbl, build)
     postings = spark.read.parquet(post_dir)
     cents = spark.read.parquet(cent_dir)
     corpus = postings.select(
@@ -3320,7 +3200,7 @@ def _stage_cc_batches(spark: SparkSession, sf_dir: str) -> str:
             (F.col("doc_a") + F.col("doc_b")) % 3 == seq
         ).select("doc_a", "doc_b", F.lit(seq).cast("int").alias("seq"))
 
-    return _stage_seq_batches(spark, sf_dir, "docs_cc3_", make_batch)
+    return _stage_seq_batches(spark, sf_dir, "docs_cc3", make_batch)
 
 
 @register("stream_cc_incremental", oracle=None)  # set below
@@ -3355,105 +3235,98 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a label-partitioned table, touching only merged partitions).
     The streaming query is stateless — state lives in the label
     table."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.dedup import (
         _min_label_components,
     )
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_cc_batches(spark, sf_dir)
     tbl = os.path.join(root, "cc")
-    final_marker = os.path.join(tbl, "_CC_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"cur": None}
 
-                def cc_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    e = batch_df.select("doc_a", "doc_b")
-                    nodes = (
-                        e.select(F.col("doc_a").alias("doc_id"))
-                        .union(e.select(F.col("doc_b").alias("doc_id")))
-                        .distinct()
-                    )
-                    if state["cur"] is None:
-                        labels = nodes.withColumn(
-                            "label", F.col("doc_id")
-                        ).limit(0)
-                    else:
-                        labels = sess.read.parquet(state["cur"])
-                    fresh = nodes.join(
-                        labels, "doc_id", "left_anti"
-                    ).withColumn("label", F.col("doc_id"))
-                    all_labels = labels.unionByName(fresh)
-                    # contract: batch edges in current-label space
-                    la = all_labels.select(
-                        F.col("doc_id").alias("doc_a"),
-                        F.col("label").alias("la"),
-                    )
-                    lb = all_labels.select(
-                        F.col("doc_id").alias("doc_b"),
-                        F.col("label").alias("lb"),
-                    )
-                    contracted = (
-                        e.join(la, "doc_a")
-                        .join(lb, "doc_b")
-                        .filter(F.col("la") != F.col("lb"))
-                        .select(
-                            F.least("la", "lb").alias("doc_a"),
-                            F.greatest("la", "lb").alias("doc_b"),
-                        )
-                        .distinct()
-                    )
-                    merge = _min_label_components(contracted).filter(
-                        F.col("label") < F.col("doc_id")
-                    )
-                    relabeled = (
-                        all_labels.join(
-                            F.broadcast(
-                                merge.select(
-                                    F.col("doc_id").alias("label"),
-                                    F.col("label").alias("merged"),
-                                )
-                            ),
-                            "label",
-                            "left",
-                        )
-                        .select(
-                            "doc_id",
-                            F.coalesce("merged", "label").alias("label"),
-                        )
-                    )
-                    nxt = os.path.join(tbl, f"v{batch_id:03d}")
-                    relabeled.write.mode("overwrite").parquet(nxt)
-                    state["cur"] = nxt
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"cur": None}
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_a long, doc_b long, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(cc_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="cc_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+        def cc_update(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            e = batch_df.select("doc_a", "doc_b")
+            nodes = (
+                e.select(F.col("doc_a").alias("doc_id"))
+                .union(e.select(F.col("doc_b").alias("doc_id")))
+                .distinct()
+            )
+            if state["cur"] is None:
+                labels = nodes.withColumn(
+                    "label", F.col("doc_id")
+                ).limit(0)
+            else:
+                labels = sess.read.parquet(state["cur"])
+            fresh = nodes.join(
+                labels, "doc_id", "left_anti"
+            ).withColumn("label", F.col("doc_id"))
+            all_labels = labels.unionByName(fresh)
+            # contract: batch edges in current-label space
+            la = all_labels.select(
+                F.col("doc_id").alias("doc_a"),
+                F.col("label").alias("la"),
+            )
+            lb = all_labels.select(
+                F.col("doc_id").alias("doc_b"),
+                F.col("label").alias("lb"),
+            )
+            contracted = (
+                e.join(la, "doc_a")
+                .join(lb, "doc_b")
+                .filter(F.col("la") != F.col("lb"))
+                .select(
+                    F.least("la", "lb").alias("doc_a"),
+                    F.greatest("la", "lb").alias("doc_b"),
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["cur"])
-    with open(final_marker) as fh:
-        labels = spark.read.parquet(fh.read())
+                .distinct()
+            )
+            merge = _min_label_components(contracted).filter(
+                F.col("label") < F.col("doc_id")
+            )
+            relabeled = (
+                all_labels.join(
+                    F.broadcast(
+                        merge.select(
+                            F.col("doc_id").alias("label"),
+                            F.col("label").alias("merged"),
+                        )
+                    ),
+                    "label",
+                    "left",
+                )
+                .select(
+                    "doc_id",
+                    F.coalesce("merged", "label").alias("label"),
+                )
+            )
+            nxt = os.path.join(tbl, f"v{batch_id:03d}")
+            relabeled.write.mode("overwrite").parquet(nxt)
+            state["cur"] = nxt
+
+        q = (
+            spark.readStream.schema(
+                "doc_a long, doc_b long, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(cc_update)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="cc_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["cur"]
+
+    labels = spark.read.parquet(build_once(tbl, build))
     return labels.groupBy(F.col("label").alias("group_id")).agg(
         F.count("*").alias("n_docs"), F.max("doc_id").alias("max_doc_id")
     )
@@ -3503,7 +3376,7 @@ def _stage_mg_batches(spark: SparkSession, sf_dir: str) -> str:
             "doc_id", "text", F.lit(seq).cast("int").alias("seq")
         )
 
-    return _stage_seq_batches(spark, sf_dir, "docs_mg3_", make_batch)
+    return _stage_seq_batches(spark, sf_dir, "docs_mg3", make_batch)
 
 
 def _mg_summarize(counts: DataFrame, k: int) -> DataFrame:
@@ -3559,66 +3432,59 @@ def stream_mg_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining work — threshold, merge — happens on (k + batch-vocab)
     rows shrinking to k; the streaming query is stateless (state lives
     in the k-row summary table, copy-on-write versioned)."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.corpus import _TOKS
     from pyspark_xgboost_spark.sources import load_table
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_mg_batches(spark, sf_dir)
     tbl = os.path.join(root, "mg")
-    final_marker = os.path.join(tbl, "_MG_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"cur": None}
 
-                def mg_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    b = (
-                        batch_df.select(
-                            F.explode(F.expr(_TOKS)).alias("token")
-                        )
-                        .groupBy("token")
-                        .agg(F.count("*").cast("long").alias("c"))
-                    )
-                    if state["cur"] is not None:
-                        cur = sess.read.parquet(state["cur"])
-                        b = (
-                            cur.unionByName(b)
-                            .groupBy("token")
-                            .agg(F.sum("c").cast("long").alias("c"))
-                        )
-                    nxt = os.path.join(tbl, f"v{batch_id:03d}")
-                    _mg_summarize(b, _MG_K).write.mode(
-                        "overwrite"
-                    ).parquet(nxt)
-                    state["cur"] = nxt
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"cur": None}
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_id long, text string, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(mg_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="mg_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+        def mg_update(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            b = (
+                batch_df.select(
+                    F.explode(F.expr(_TOKS)).alias("token")
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["cur"])
-    with open(final_marker) as fh:
-        summary = spark.read.parquet(fh.read())
+                .groupBy("token")
+                .agg(F.count("*").cast("long").alias("c"))
+            )
+            if state["cur"] is not None:
+                cur = sess.read.parquet(state["cur"])
+                b = (
+                    cur.unionByName(b)
+                    .groupBy("token")
+                    .agg(F.sum("c").cast("long").alias("c"))
+                )
+            nxt = os.path.join(tbl, f"v{batch_id:03d}")
+            _mg_summarize(b, _MG_K).write.mode(
+                "overwrite"
+            ).parquet(nxt)
+            state["cur"] = nxt
+
+        q = (
+            spark.readStream.schema(
+                "doc_id long, text string, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(mg_update)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="mg_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["cur"]
+
+    summary = spark.read.parquet(build_once(tbl, build))
     exact = (
         load_table(spark, sf_dir, "documents")
         .select(F.explode(F.expr(_TOKS)).alias("token"))
@@ -3743,63 +3609,56 @@ def stream_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BATCH only, explode to <= {_BLOOM_K} x batch positions,
     union-distinct against the <= m-row state; the streaming query is
     stateless (state lives in the positions table)."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.sources import load_table
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     root = _stage_mg_batches(spark, sf_dir)  # same doc_id%3 batches
     tbl = os.path.join(root, "bloom")
-    final_marker = os.path.join(tbl, "_BLOOM_FINAL")
     pos_expr = (
         f"explode(transform(sequence(1, {_BLOOM_K}),"
         f" i -> cast(conv(substring(md5(concat(cast(i as string), ':',"
         f" digest)), 1, 4), 16, 10) as int) % {_BLOOM_M}))"
     )
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
-                state: dict[str, Any] = {"cur": None}
 
-                def bloom_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    b = (
-                        batch_df.select(F.md5("text").alias("digest"))
-                        .distinct()
-                        .select(F.expr(pos_expr).alias("pos"))
-                        .distinct()
-                    )
-                    if state["cur"] is not None:
-                        cur = sess.read.parquet(state["cur"])
-                        b = cur.unionByName(b).distinct()
-                    nxt = os.path.join(tbl, f"v{batch_id:03d}")
-                    b.write.mode("overwrite").parquet(nxt)
-                    state["cur"] = nxt
+    def build(tbl: str) -> str:
+        state: dict[str, Any] = {"cur": None}
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_id long, text string, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(bloom_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="bloom_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write(state["cur"])
-    with open(final_marker) as fh:
-        bits = spark.read.parquet(fh.read())
+        def bloom_update(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            b = (
+                batch_df.select(F.md5("text").alias("digest"))
+                .distinct()
+                .select(F.expr(pos_expr).alias("pos"))
+                .distinct()
+            )
+            if state["cur"] is not None:
+                cur = sess.read.parquet(state["cur"])
+                b = cur.unionByName(b).distinct()
+            nxt = os.path.join(tbl, f"v{batch_id:03d}")
+            b.write.mode("overwrite").parquet(nxt)
+            state["cur"] = nxt
+
+        q = (
+            spark.readStream.schema(
+                "doc_id long, text string, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(bloom_update)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="bloom_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return state["cur"]
+
+    bits = spark.read.parquet(build_once(tbl, build))
     bits = bits.withColumnRenamed("pos", "bpos")
     docs = load_table(spark, sf_dir, "documents")
     member_pos = docs.select(F.md5("text").alias("digest")).distinct().select(
@@ -4011,7 +3870,6 @@ def stream_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC scans affordable). The serving read joins the code table to a
     broadcast (panel x M x K)-row LUT and partially aggregates —
     shuffling O(N) (id, long) pairs, never a float vector."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
@@ -4027,53 +3885,48 @@ def stream_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = os.path.join(root, "pq")
     codes_dir = os.path.join(tbl, "codes")
     cb_dir = os.path.join(tbl, "cb")
-    final_marker = os.path.join(tbl, "_PQ_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
 
-                def pq_append(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    if not os.path.exists(cb_dir):
-                        # freeze the codebook off the first batch
-                        (
-                            batch_df.orderBy("vec_id")
-                            .limit(_PQ_K)
-                            .select(
-                                F.col("vec_id").alias("cid"),
-                                F.col("embedding").alias("v"),
-                            )
-                            .write.mode("overwrite")
-                            .parquet(cb_dir)
-                        )
-                    cb_rows = sess.read.parquet(cb_dir).collect()
-                    (
-                        _pq_encode_batch(batch_df, cb_rows)
-                        .write.mode("append")
-                        .parquet(codes_dir)
+    def build(tbl: str) -> None:
+        def pq_append(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            if not os.path.exists(cb_dir):
+                # freeze the codebook off the first batch
+                (
+                    batch_df.orderBy("vec_id")
+                    .limit(_PQ_K)
+                    .select(
+                        F.col("vec_id").alias("cid"),
+                        F.col("embedding").alias("v"),
                     )
-
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(pq_append)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="pqinc_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                    .write.mode("overwrite")
+                    .parquet(cb_dir)
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write("ok")
+            cb_rows = sess.read.parquet(cb_dir).collect()
+            (
+                _pq_encode_batch(batch_df, cb_rows)
+                .write.mode("append")
+                .parquet(codes_dir)
+            )
+
+        q = (
+            spark.readStream.schema(
+                "vec_id long, embedding array<double>, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(pq_append)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="pqinc_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    build_once(tbl, build)
     codes = spark.read.parquet(codes_dir)
     cb_rows = spark.read.parquet(cb_dir).collect()
     # query-side LUT: panel x M x K term_nano rows, built driver-side
@@ -4338,7 +4191,6 @@ def _knng_ensure_state(spark: SparkSession, sf_dir: str) -> str:
     """Build (idempotent, lock+marker guarded) the maintained layer-0
     kNN-graph state under root/knng: frozen first-batch centroid seeds,
     cell-partitioned adjacency, appended members. Returns root."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
@@ -4352,54 +4204,49 @@ def _knng_ensure_state(spark: SparkSession, sf_dir: str) -> str:
     mem_dir = os.path.join(tbl, "members")
     adj_dir = os.path.join(tbl, "adj")
     cent_dir = os.path.join(tbl, "cents")
-    final_marker = os.path.join(tbl, "_KNNG_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
 
-                def knng_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    xq = batch_df.select(
-                        "vec_id", _knng_quant_expr().alias("q")
+    def build(tbl: str) -> None:
+        def knng_update(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            xq = batch_df.select(
+                "vec_id", _knng_quant_expr().alias("q")
+            )
+            if not os.path.exists(cent_dir):
+                (
+                    xq.orderBy("vec_id")
+                    .limit(_KM_K)
+                    .select(
+                        F.col("vec_id").alias("cid"),
+                        F.col("q").alias("cq"),
                     )
-                    if not os.path.exists(cent_dir):
-                        (
-                            xq.orderBy("vec_id")
-                            .limit(_KM_K)
-                            .select(
-                                F.col("vec_id").alias("cid"),
-                                F.col("q").alias("cq"),
-                            )
-                            .write.mode("overwrite")
-                            .parquet(cent_dir)
-                        )
-                    cents = sess.read.parquet(cent_dir)
-                    new_mem = _km_assign(xq, _km_cent_row(cents)).select(
-                        "vec_id", "q", "cid", F.lit(1).alias("is_new")
-                    )
-                    _knng_apply_batch(sess, new_mem, mem_dir, adj_dir)
-
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(knng_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="knng_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                    .write.mode("overwrite")
+                    .parquet(cent_dir)
                 )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write("ok")
+            cents = sess.read.parquet(cent_dir)
+            new_mem = _km_assign(xq, _km_cent_row(cents)).select(
+                "vec_id", "q", "cid", F.lit(1).alias("is_new")
+            )
+            _knng_apply_batch(sess, new_mem, mem_dir, adj_dir)
+
+        q = (
+            spark.readStream.schema(
+                "vec_id long, embedding array<double>, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(knng_update)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="knng_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    build_once(tbl, build)
     return root
 
 
@@ -4580,7 +4427,6 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     production HNSW serves upper layers from RAM and layer 0 from
     SSD. Reference scope: no ANN surface in the reference (SURVEY.md
     §2.2) — mandated training-data-pipeline extension."""
-    import shutil
     import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
@@ -4600,44 +4446,39 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = os.path.join(root, "hnsw1")
     mem1_dir = os.path.join(tbl, "members")
     adj1_dir = os.path.join(tbl, "adj")
-    final_marker = os.path.join(tbl, "_HNSW1_FINAL")
-    if not os.path.exists(final_marker):
-        with build_lock(tbl):
-            if not os.path.exists(final_marker):
-                shutil.rmtree(tbl, ignore_errors=True)
-                os.makedirs(tbl)
 
-                def hnsw1_update(batch_df: DataFrame, batch_id: int) -> None:
-                    sub = batch_df.filter(
-                        F.col("vec_id") % _HNSW_L1_MOD == 0
-                    )
-                    if sub.isEmpty():
-                        return
-                    sess = batch_df.sparkSession
-                    xq = sub.select("vec_id", _knng_quant_expr().alias("q"))
-                    cents = sess.read.parquet(cent_dir)
-                    new_mem = _km_assign(xq, _km_cent_row(cents)).select(
-                        "vec_id", "q", "cid", F.lit(1).alias("is_new")
-                    )
-                    _knng_apply_batch(sess, new_mem, mem1_dir, adj1_dir)
+    def build(tbl: str) -> None:
+        def hnsw1_update(batch_df: DataFrame, batch_id: int) -> None:
+            sub = batch_df.filter(
+                F.col("vec_id") % _HNSW_L1_MOD == 0
+            )
+            if sub.isEmpty():
+                return
+            sess = batch_df.sparkSession
+            xq = sub.select("vec_id", _knng_quant_expr().alias("q"))
+            cents = sess.read.parquet(cent_dir)
+            new_mem = _km_assign(xq, _km_cent_row(cents)).select(
+                "vec_id", "q", "cid", F.lit(1).alias("is_new")
+            )
+            _knng_apply_batch(sess, new_mem, mem1_dir, adj1_dir)
 
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(hnsw1_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="hnsw1_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                with open(final_marker, "w") as fh:
-                    fh.write("ok")
+        q = (
+            spark.readStream.schema(
+                "vec_id long, embedding array<double>, seq int"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(root, "in"))
+            .writeStream.foreachBatch(hnsw1_update)
+            .option(
+                "checkpointLocation",
+                tempfile.mkdtemp(prefix="hnsw1_ckpt_"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    build_once(tbl, build)
 
     members = spark.read.parquet(os.path.join(root, "knng", "members"))
     adj0 = spark.read.parquet(os.path.join(root, "knng", "adj"))

@@ -172,41 +172,43 @@ def test_blocked_er_vocab_pull_is_bounded(spark):
     assert out.count() > 0
 
 
-def test_stream_inner_join_identical_without_no_data_batch(spark):
+def test_stream_inner_join_identical_without_no_data_batch(spark, monkeypatch):
     """The inner stream-stream join emits every match in its data
     batch: eliding the trailing no-data batch (r15) must not change
-    the emitted row multiset."""
-    from pyspark_xgboost_spark.streaming.stream import (
-        events_stream_stream_join,
-    )
+    the emitted row multiset, and the conf it flips must be left as it
+    was found (unset stays unset)."""
+    from pyspark_xgboost_spark.streaming import stream as S
 
-    fast = _rows(
-        events_stream_stream_join(spark, SF_DIR),
-        "click_id",
-        "purchase_id",
-        "user_id",
-    )
-    prev = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    real = S._run_to_memory
+    seen = {}
+
+    def spy(out, mode, **kw):
+        seen["out"], seen["mode"], seen["kw"] = out, mode, kw
+        return real(out, mode, **kw)
+
+    monkeypatch.setattr(S, "_run_to_memory", spy)
+    prev = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
     try:
-        # force the legacy no-data batch back ON around the query: the
-        # query-local override must still win (it pins the conf around
-        # start()), and the result must be identical either way
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+        fast = _rows(
+            S.events_stream_stream_join(spark, SF_DIR),
+            "click_id",
+            "purchase_id",
+            "user_id",
         )
-        again = _rows(
-            events_stream_stream_join(spark, SF_DIR),
+        assert seen["kw"].get("no_data_batch") is False
+        assert spark.conf.get(conf, None) is None  # restored to unset
+        slow = _rows(
+            real(seen["out"], seen["mode"], no_data_batch=True),
             "click_id",
             "purchase_id",
             "user_id",
         )
     finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev
-        )
-    assert fast == again
+        if prev is not None:
+            spark.conf.set(conf, prev)
+    assert fast == slow
 
 
 def test_stream_input_bytes_recursive_hadoop_fs(spark, tmp_path):
@@ -233,23 +235,27 @@ def test_stream_input_bytes_recursive_hadoop_fs(spark, tmp_path):
 
 
 def test_schema_probe_memo_invalidates_on_mtime(spark, tmp_path):
-    """The parquet footer-probe memo is keyed on (path, mtime, size):
-    rewriting the file with a different schema must repopulate it."""
+    """The events footer-probe memo is keyed on the source fingerprint
+    (size + mtime): rewriting events.parquet with a different schema
+    must repopulate it, and the superseded entry is evicted."""
     from pyspark_xgboost_spark.streaming.stream import (
-        _probe_parquet_schema,
+        _EVENTS_SCHEMA,
+        _probe_events_schema,
     )
 
-    p = str(tmp_path / "t.parquet")
+    sf_dir = str(tmp_path)
+    p = str(tmp_path / "events.parquet")
     spark.range(3).select(F.col("id").alias("a")).coalesce(
         1
     ).write.mode("overwrite").parquet(p)
-    s1 = _probe_parquet_schema(spark, p)
-    assert _probe_parquet_schema(spark, p) is s1  # memo hit
+    s1 = _probe_events_schema(spark, sf_dir)
+    assert _probe_events_schema(spark, sf_dir) is s1  # memo hit
     import time
 
     time.sleep(0.05)
     spark.range(3).select(
         F.col("id").alias("a"), F.col("id").alias("b")
     ).coalesce(1).write.mode("overwrite").parquet(p)
-    s2 = _probe_parquet_schema(spark, p)
+    s2 = _probe_events_schema(spark, sf_dir)
     assert [f.name for f in s2.fields] == ["a", "b"]
+    assert sum(k.split(":")[1] == sf_dir for k in _EVENTS_SCHEMA) == 1

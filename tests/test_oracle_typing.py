@@ -51,12 +51,12 @@ def _stage_tmp_standins(oracles) -> None:
     (today: scan_rowgroup_pruning_sim's parquet_metadata() input). The
     Spark query stages it lazily, so on a fresh host this sweep —
     which only PLANS the SQL — would fail on the missing file. Write a
-    minimal schema-bearing stand-in (no fingerprint marker, so the
-    real builder still re-stages the proper layout before any query
-    reads it), under the same build lock the builders use."""
+    minimal schema-bearing stand-in beside it and hard-link it into
+    place only if the path is still free: a builder that staged the
+    real file first is never clobbered, and one that finishes later
+    replaces the stand-in (it records no build, so the real builder
+    still stages the proper layout before any query reads it)."""
     import re
-
-    from pyspark_xgboost_spark.sources.formats import build_lock
 
     paths = set()
     for sql in oracles.values():
@@ -64,20 +64,23 @@ def _stage_tmp_standins(oracles) -> None:
     for p in paths:
         if os.path.exists(p):
             continue
-        d = os.path.dirname(p)
-        with build_lock(d):
-            if os.path.exists(p):
-                continue
-            os.makedirs(d, exist_ok=True)
-            try:
-                duckdb.sql(
-                    "COPY (SELECT CAST(1 AS BIGINT) AS l_orderkey,"
-                    " CAST(1 AS BIGINT) AS l_quantity,"
-                    " CAST(1 AS BIGINT) AS l_extendedprice)"
-                    f" TO '{p}' (FORMAT PARQUET)"
-                )
-            except Exception as exc:  # pragma: no cover — lost race
-                print(f"stand-in staging for {p} failed: {exc}")
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        tmp = f"{p}.standin-{os.getpid()}"
+        try:
+            duckdb.sql(
+                "COPY (SELECT CAST(1 AS BIGINT) AS l_orderkey,"
+                " CAST(1 AS BIGINT) AS l_quantity,"
+                " CAST(1 AS BIGINT) AS l_extendedprice)"
+                f" TO '{tmp}' (FORMAT PARQUET)"
+            )
+            os.link(tmp, p)
+        except FileExistsError:
+            pass  # the real file (or another stand-in) got there first
+        except Exception as exc:  # pragma: no cover — lost race
+            print(f"stand-in staging for {p} failed: {exc}")
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
 
 def _run_typing_sweep() -> int:

@@ -32,7 +32,7 @@ def _chk_stream_incremental_neardup_shapes(spark):
 
     # (a) the probe join shape, exactly as foreachBatch builds it
     root = _stage_neardup_batches(spark, SF_DIR)
-    idx = spark.read.parquet(os.path.join(root, "index"))
+    idx = spark.read.parquet(os.path.join(root, "neardup", "index"))
     batch = spark.read.parquet(os.path.join(root, "in", "batch-002.parquet"))
     probe = (
         _band_rows(batch.select("doc_id", "text"))

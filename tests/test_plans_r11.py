@@ -37,7 +37,7 @@ def _chk_stream_decontaminate_incremental_shapes(spark):
 
     # (b) the probe join shape, exactly as foreachBatch builds it
     root = _stage_decon_batches(spark, SF_DIR)
-    idx = spark.read.parquet(os.path.join(root, "evalidx"))
+    idx = spark.read.parquet(os.path.join(root, "decon", "evalidx"))
     batch = spark.read.parquet(os.path.join(root, "in", "batch-002.parquet"))
     toks = batch.select(
         "doc_id",

@@ -16,42 +16,40 @@ def _chk_wap_bad_candidate_never_published(spark):
     FAIL its audit, and be absent from the published directory — the
     whole point of write-audit-publish."""
     from pyspark_xgboost_spark.sources.formats import (
-        _SCRATCH,
         sink_wap_publish,
-        src_fingerprint,
+        staged_path,
     )
 
     out = {r["candidate"]: r for r in sink_wap_publish(spark, SF_DIR).collect()}
     assert out["good"]["audit_passed"] == 1 and out["good"]["published"] == 1
     assert out["bad"]["audit_passed"] == 0 and out["bad"]["published"] == 0
-    root = os.path.join(
-        _SCRATCH,
-        SF_DIR.strip("/").replace("/", "_"),
-        f"wap_{src_fingerprint(SF_DIR, 'documents')}",
-    )
+    root = staged_path(SF_DIR, "documents", "wap")
     assert os.path.exists(os.path.join(root, "staging", "bad"))
     assert not os.path.exists(os.path.join(root, "published", "bad"))
     assert os.path.exists(os.path.join(root, "published", "good"))
 
 
 def _chk_prune_stage_restages_on_fingerprint_change(spark):
-    """The pruning file re-stages when its fingerprint marker disagrees
-    with the source — replacing the dataset cannot serve stale layout."""
+    """The pruning file re-stages when no build is recorded for the
+    source's current fingerprint (the state right after the dataset is
+    replaced) — replacing the dataset cannot serve stale layout."""
+    import shutil
+
     from pyspark_xgboost_spark.sources.formats import (
         _prune_staged_path,
         _stage_prune_file,
+        staged_path,
     )
 
     path = _stage_prune_file(spark, SF_DIR)
-    marker = os.path.join(os.path.dirname(path), "_PRUNE_FP")
-    with open(marker, "w") as fh:
-        fh.write("stale")
-    mtime = os.path.getmtime(path)
+    stamp = staged_path(SF_DIR, "lineitem", "prune_li")
+    assert os.path.isdir(stamp)
+    shutil.rmtree(stamp)
+    inode = os.stat(path).st_ino
     path2 = _stage_prune_file(spark, SF_DIR)
     assert path2 == path == _prune_staged_path(SF_DIR)
-    assert os.path.getmtime(path2) >= mtime  # rewritten
-    with open(marker) as fh:
-        assert fh.read() != "stale"
+    assert os.stat(path2).st_ino != inode  # rewritten
+    assert os.path.isdir(stamp)
 
 
 def _chk_rbo_terms_match_reference_arithmetic(spark):

@@ -7,12 +7,13 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 
 from tests.conftest import SF_DIR
 
 
 def test_stage_gc_keeps_one_copy_per_table(spark, tmp_path):
-    from pyspark_xgboost_spark.sources.formats import _SCRATCH, _stage
+    from pyspark_xgboost_spark.sources.formats import _stage
 
     data_dir = tmp_path / "data"
     data_dir.mkdir()
@@ -28,7 +29,7 @@ def test_stage_gc_keeps_one_copy_per_table(spark, tmp_path):
 
     assert second != first  # new fingerprint → new staged dir
     assert not os.path.exists(first)  # stale sibling collected
-    parent = os.path.join(_SCRATCH, str(data_dir).strip("/").replace("/", "_"))
+    parent = os.path.dirname(second)
     siblings = [
         n
         for n in os.listdir(parent)
@@ -53,6 +54,190 @@ def test_stage_gc_leaves_other_tables_alone(spark, tmp_path):
     # re-staging region (unchanged) must not disturb either copy
     assert _stage(spark, str(data_dir), "region", "csv") == region
     assert os.path.exists(os.path.join(nation, "_SUCCESS"))
+
+
+def _scratch_source(tmp_path, table="t"):
+    """Ensure a source file to fingerprint exists; return its sf_dir and
+    the scratch directory the helpers derive for it (to clean up)."""
+    from pyspark_xgboost_spark.sources.formats import staged_path
+
+    src = tmp_path / f"{table}.parquet"
+    if not src.exists():
+        src.write_bytes(b"x")
+    return str(tmp_path), os.path.dirname(staged_path(str(tmp_path), table, "probe"))
+
+
+def test_staged_builds_once_across_threads(tmp_path):
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark_xgboost_spark.sources.formats import staged
+
+    sf_dir, scratch = _scratch_source(tmp_path)
+    calls = []
+    guard = threading.Lock()
+
+    def build(out):
+        with guard:
+            calls.append(out)
+        time.sleep(0.2)  # widen the race window
+        with open(os.path.join(out, "data"), "w") as fh:
+            fh.write("ok")
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(
+                pool.map(lambda _: staged(sf_dir, "t", "art", build), range(8))
+            )
+        assert len(calls) == 1
+        assert set(got) == {calls[0]}
+        with open(os.path.join(got[0], "data")) as fh:
+            assert fh.read() == "ok"
+    finally:
+        sys.setswitchinterval(switch)
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_failed_build_leaves_no_marker_and_next_call_rebuilds(tmp_path):
+    import pytest
+
+    from pyspark_xgboost_spark.sources.formats import _BUILT, staged, staged_path
+
+    sf_dir, scratch = _scratch_source(tmp_path)
+    path = staged_path(sf_dir, "t", "art")
+
+    def boom(out):
+        open(os.path.join(out, "partial"), "w").close()
+        raise RuntimeError("build failed")
+
+    def good(out):
+        open(os.path.join(out, "data"), "w").close()
+        return "recorded-value"
+
+    try:
+        with pytest.raises(RuntimeError):
+            staged(sf_dir, "t", "art", boom)
+        assert not os.path.exists(os.path.join(path, _BUILT))
+        assert staged(sf_dir, "t", "art", good) == "recorded-value"
+        assert not os.path.exists(os.path.join(path, "partial"))
+        assert os.path.exists(os.path.join(path, "data"))
+        # built: later calls return the recorded value without building
+        assert staged(sf_dir, "t", "art", boom) == "recorded-value"
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_staged_path_gc_spares_artifacts_with_longer_names(tmp_path):
+    """A new fingerprint collects the old leaf of the SAME artifact
+    only — never one whose name merely extends it."""
+    from pyspark_xgboost_spark.sources.formats import staged_path
+
+    sf_dir, scratch = _scratch_source(tmp_path)
+    try:
+        old, old_ckpt = (staged_path(sf_dir, "t", n) for n in ("x", "x_ckpt"))
+        for d in (old, old_ckpt):
+            os.makedirs(d)
+        src = tmp_path / "t.parquet"
+        st = os.stat(src)
+        os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+        new = staged_path(sf_dir, "t", "x")
+        assert new != old
+        assert not os.path.exists(old)
+        assert os.path.exists(old_ckpt)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_skew_fact_stages_once_under_concurrency(spark, tmp_path, monkeypatch):
+    """_skew_fact_staged stages under the build lock: concurrent first
+    callers load and write the source exactly once."""
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark_xgboost_spark.operators import temporal
+
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    shutil.copy(os.path.join(SF_DIR, "lineitem.parquet"), data_dir / "lineitem.parquet")
+    sf_dir, scratch = _scratch_source(data_dir, "lineitem")
+    real = temporal.load_table
+    calls = []
+    guard = threading.Lock()
+
+    def counting_load(spark_, sf, table):
+        with guard:
+            calls.append(table)
+        time.sleep(0.3)  # widen the race window
+        return real(spark_, sf, table)
+
+    monkeypatch.setattr(temporal, "load_table", counting_load)
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            counts = list(
+                pool.map(
+                    lambda _: temporal._skew_fact_staged(spark, sf_dir).count(),
+                    range(4),
+                )
+            )
+        assert calls == ["lineitem"]
+        assert set(counts) == {real(spark, sf_dir, "lineitem").count()}
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_scratch_layout_is_decided_in_formats_only():
+    """Tripwire: the staging protocol lives in sources/formats.py.
+    build_lock is taken only by build_once, stale-sibling GC runs only
+    in staged_path (and the warehouse-side sink_bucketed_join), no
+    other module imports the scratch root or those two primitives, and
+    the sf_dir scratch key is derived in one place."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "pyspark_xgboost_spark"
+    formats = pkg / "sources" / "formats.py"
+    private = {"_SCRATCH", "build_lock", "gc_stale_siblings"}
+    allowed_callers = {
+        "build_lock": {"build_once"},
+        "gc_stale_siblings": {"staged_path", "sink_bucketed_join"},
+    }
+    offenders = []
+    files = sorted(pkg.rglob("*.py")) + sorted((root / "tests").glob("*.py"))
+    key_copies = 0
+    for path in files:
+        src = path.read_text()
+        if path != pathlib.Path(__file__).resolve():  # names it below
+            key_copies += src.count('.strip("/").replace("/", "_")')
+        tree = ast.parse(src)
+
+        def visit(node, stack):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                stack = stack + [node.name]
+            if isinstance(node, ast.ImportFrom) and path != formats:
+                for alias in node.names:
+                    if alias.name in private:
+                        offenders.append(f"{path.name}: imports {alias.name}")
+            if isinstance(node, ast.Attribute) and node.attr in private and path != formats:
+                offenders.append(f"{path.name}: uses .{node.attr}")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id in allowed_callers
+                and path.is_relative_to(pkg)
+                and not allowed_callers[node.func.id] & set(stack)
+            ):
+                offenders.append(f"{path.name}: {node.func.id}() in {stack}")
+            for child in ast.iter_child_nodes(node):
+                visit(child, stack)
+
+        visit(tree, [])
+    assert offenders == []
+    assert key_copies == 1  # staged_path's own derivation
 
 
 def _chk_scan_text_profile_matches_batch(spark):
@@ -154,23 +339,20 @@ def _chk_compaction_shrinks_file_count_content_neutral(spark):
 
     from pyspark_xgboost_spark.sources.formats import (
         _COMPACT_TARGET,
-        _SCRATCH,
         sink_compact_small_files,
-        src_fingerprint,
+        staged_path,
     )
     from pyspark_xgboost_spark.sources import load_table
     from tests.conftest import SF_DIR
 
     rows = sink_compact_small_files(spark, SF_DIR).collect()
-    key = SF_DIR.strip("/").replace("/", "_")
-    fp = src_fingerprint(SF_DIR, "lineitem")
 
-    def n_parquet(leaf):
-        d = os.path.join(_SCRATCH, key, leaf)
+    def n_parquet(name):
+        d = staged_path(SF_DIR, "lineitem", name)
         return sum(f.endswith(".parquet") for f in os.listdir(d))
 
-    assert n_parquet(f"li_frag_{fp}") == 64
-    assert n_parquet(f"li_compact_{fp}") == _COMPACT_TARGET
+    assert n_parquet("li_frag") == 64
+    assert n_parquet("li_compact") == _COMPACT_TARGET
     assert sum(r["n"] for r in rows) == load_table(spark, SF_DIR, "lineitem").count()
 
 
@@ -179,8 +361,7 @@ def _chk_schema_evolution_nulls_only_in_legacy_files(spark):
 
     from pyspark_xgboost_spark.sources.formats import (
         scan_schema_evolution_merge,
-        _SCRATCH,
-        src_fingerprint,
+        staged_path,
     )
     from pyspark_xgboost_spark.sources import load_table
     from tests.conftest import SF_DIR
@@ -190,10 +371,7 @@ def _chk_schema_evolution_nulls_only_in_legacy_files(spark):
     rows = scan_schema_evolution_merge(spark, SF_DIR).collect()
     orders = load_table(spark, SF_DIR, "orders")
     assert sum(r["n"] for r in rows) == orders.count()
-    key = SF_DIR.strip("/").replace("/", "_")
-    root = os.path.join(
-        _SCRATCH, key, f"orders_evo_{src_fingerprint(SF_DIR, 'orders')}"
-    )
+    root = staged_path(SF_DIR, "orders", "orders_evo")
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "v1"), os.path.join(root, "v2")
     )
@@ -218,19 +396,13 @@ def _chk_metadata_hidden_column_counts_staged_files(spark):
     from pyspark.sql import functions as F
 
     from pyspark_xgboost_spark.sources.formats import (
-        _SCRATCH,
         sink_compact_small_files,
-        src_fingerprint,
+        staged_path,
     )
     from tests.conftest import SF_DIR
 
-    import os
-
     sink_compact_small_files(spark, SF_DIR)  # ensures both stagings exist
-    key = SF_DIR.strip("/").replace("/", "_")
-    frag = os.path.join(
-        _SCRATCH, key, f"li_frag_{src_fingerprint(SF_DIR, 'lineitem')}"
-    )
+    frag = staged_path(SF_DIR, "lineitem", "li_frag")
     per_file = (
         spark.read.parquet(frag)
         .groupBy(F.col("_metadata.file_path").alias("f"))

@@ -239,7 +239,7 @@ def test_late_data_drop_really_drops(spark, tmp_path):
 def _chk_stream_merge_upsert_incremental_chain(spark):
     """The CDC merge must build one table version per staged batch
     (v000..v002 — copy-on-write chain), compute last-writer-wins state,
-    and be idempotent on re-run (the _FINAL marker short-circuits)."""
+    and be idempotent on re-run (build_once short-circuits)."""
     import glob
     import os
 
