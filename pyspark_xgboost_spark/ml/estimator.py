@@ -62,6 +62,7 @@ from pyspark_xgboost_spark.ml.params import (
     _RegressorColumnParams,
     convert_scalar,
 )
+from pyspark_xgboost_spark.sources import read_parquet
 
 _logger = logging.getLogger("pyspark_xgboost_spark.ml")
 
@@ -641,7 +642,7 @@ def _restore_shared_metadata(instance, metadata: dict, spark, path: str) -> None
         except Exception as e:  # noqa: BLE001 — best-effort by contract
             _logger.warning("fails to load the callbacks param due to %s", e)
     if "init_booster" in metadata:
-        row = spark.read.parquet(f"{path}/{metadata['init_booster']}").collect()[0]
+        row = read_parquet(spark, f"{path}/{metadata['init_booster']}").collect()[0]
         instance._set(xgb_model=kernel.Booster.load_json(row["init_booster"]))
 
 
@@ -691,7 +692,7 @@ class _ModelReader(MLReader):
     def load(self, path: str):
         metadata = DefaultParamsReader.loadMetadata(path, self.sc)
         _check_saved_class(metadata, self.cls)
-        row = self.sparkSession.read.parquet(f"{path}/model").collect()[0]
+        row = read_parquet(self.sparkSession, f"{path}/model").collect()[0]
         instance = self.cls(kernel.Booster.load_json(row["model_json"]))
         DefaultParamsReader.getAndSetParams(instance, metadata)
         _restore_shared_metadata(instance, metadata, self.sparkSession, path)

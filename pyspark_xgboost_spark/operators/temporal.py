@@ -23,7 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from pyspark_xgboost_spark.registry import register
-from pyspark_xgboost_spark.sources import load_table
+from pyspark_xgboost_spark.sources import load_table, read_parquet
 
 
 @register(
@@ -722,7 +722,7 @@ def _skew_fact_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out),
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 @register(

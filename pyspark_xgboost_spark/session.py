@@ -14,6 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else a third of physical memory,
+    at most 32g. A fixed 32g heap cap let one driver JVM grow past what a
+    16 GB host holds, and the kernel OOM killer took it (or a neighbour);
+    two drivers side by side (a test run beside its smoke sweep) must
+    both fit."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, min(32, ram_gb // 3))}g"
+
+
 def get_spark(
     app_name: str = "pyspark_xgboost_spark",
     cpus: int | None = None,
@@ -30,7 +40,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # The generated-class cache defaults to 100 entries; a session
         # that runs the full query surface compiles several codegen

@@ -32,6 +32,7 @@ import itertools
 import os
 import re
 import shutil
+import stat as _stat
 import threading as _threading
 import pandas as pd
 
@@ -40,7 +41,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from pyspark_xgboost_spark.registry import register
-from pyspark_xgboost_spark.sources import load_table
+from pyspark_xgboost_spark.sources import load_table, read_parquet
 
 _SINK_COUNTER = itertools.count()
 
@@ -57,9 +58,24 @@ def src_fingerprint(sf_dir: str, table: str) -> str:
     """Content fingerprint (size + mtime_ns) of the source parquet.
     Staged copies / checkpoints are keyed by it, so replacing the
     dataset in place invalidates every derived scratch dir instead of
-    silently serving stale staged data (round-1 advice)."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{st.st_size}_{st.st_mtime_ns}"
+    silently serving stale staged data (round-1 advice). A directory's
+    own stat misses a part file rewritten in place, so a directory-shaped
+    source also folds in its newest non-hidden file's size + mtime_ns."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    st = os.stat(path)
+    fp = f"{st.st_size}_{st.st_mtime_ns}"
+    if _stat.S_ISDIR(st.st_mode):
+        newest = None
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for n in names:
+                if not n.startswith(("_", ".")):
+                    s = os.stat(os.path.join(root, n))
+                    if newest is None or s.st_mtime_ns > newest.st_mtime_ns:
+                        newest = s
+        if newest is not None:
+            fp += f"_{newest.st_size}_{newest.st_mtime_ns}"
+    return fp
 
 
 _MEMO_GUARD = _threading.Lock()
@@ -78,7 +94,7 @@ def _memo_key_lock(cache, key: str):
 
 def memo_by_fingerprint(cache, spark, sf_dir, table, build):
     """Session-lifetime memo for a derived ARTIFACT (LSH pair table,
-    trained model, inverted index, footer schema, ...) keyed by
+    trained model, inverted index, ...) keyed by
     (applicationId, sf_dir, source fingerprint) — the one
     implementation behind every in-memory cache in the repo (round-10
     review: six hand-rolled copies drifted, one dropped its fallback).
@@ -382,7 +398,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition value. At scale the partition column is the pruning key —
     a downstream filter on l_returnflag reads 1/3 of the files. The
     oracle checks the round trip loses nothing."""
-    back = spark.read.parquet(_stage_lineitem_by_flag(spark, sf_dir))
+    back = read_parquet(spark, _stage_lineitem_by_flag(spark, sf_dir))
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
@@ -417,7 +433,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     remains. The oracle runs the same aggregate over the unpartitioned
     source table — pinning that pruning is purely an access-path
     optimization, never a semantic one."""
-    back = spark.read.parquet(_stage_lineitem_by_flag(spark, sf_dir))
+    back = read_parquet(spark, _stage_lineitem_by_flag(spark, sf_dir))
     return (
         back.filter(F.col("l_returnflag") == "R")
         .groupBy("l_orderkey")
@@ -617,7 +633,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    back = spark.read.parquet(staged(sf_dir, "lineitem", "lineitem_dpo", build))
+    back = read_parquet(spark, staged(sf_dir, "lineitem", "lineitem_dpo", build))
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
@@ -687,7 +703,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged.write.mode("overwrite").parquet(out)
 
-    back = spark.read.parquet(staged(sf_dir, "documents", "docs_merge_v2", build))
+    back = read_parquet(spark, staged(sf_dir, "documents", "docs_merge_v2", build))
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("was_changed").cast("bigint").alias("n_changed"),
@@ -1219,12 +1235,12 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "lineitem",
         "li_compact",
-        lambda out: spark.read.parquet(frag)
+        lambda out: read_parquet(spark, frag)
         .repartition(_COMPACT_TARGET)
         .write.mode("overwrite")
         .parquet(out),
     )
-    back = spark.read.parquet(compact)
+    back = read_parquet(spark, compact)
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")).alias(
@@ -1393,7 +1409,7 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         z.write.mode("overwrite").partitionBy("zbucket").parquet(out)
 
-    back = spark.read.parquet(staged(sf_dir, "orders", "orders_zorder", build))
+    back = read_parquet(spark, staged(sf_dir, "orders", "orders_zorder", build))
     return back.groupBy(F.col("zbucket").cast("bigint").alias("zbucket")).agg(
         F.count("*").alias("n"),
         F.min("c").cast("bigint").alias("min_custkey"),
@@ -1603,7 +1619,7 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at 100 TB this is the difference between scanning one partition
     and scanning the table. test_plans asserts ``dynamicpruning``
     appears in the physical plan."""
-    fact = spark.read.parquet(_stage_lineitem_by_flag(spark, sf_dir))
+    fact = read_parquet(spark, _stage_lineitem_by_flag(spark, sf_dir))
     dim = (
         load_table(spark, sf_dir, "region")
         .filter(F.col("r_regionkey") == 0)
@@ -1713,7 +1729,7 @@ def scan_parquet_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays on the scan (PushedFilters), so row-group skipping happens
     inside the parquet reader; content equality is oracle-pinned."""
     path = _stage_lineitem_bloom(spark, sf_dir)
-    li = spark.read.parquet(path)
+    li = read_parquet(spark, path)
     return (
         li.filter(F.col("l_partkey") % 1000 == 7)
         .groupBy("l_partkey")
@@ -1864,7 +1880,7 @@ def sink_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = staged(sf_dir, "orders", "gdpr_clean", build)
 
     def row(name: str, src: DataFrame) -> DataFrame:
-        after = spark.read.parquet(os.path.join(out, name))
+        after = read_parquet(spark, os.path.join(out, name))
         return (
             src.agg(F.count("*").alias("n_before"))
             .crossJoin(F.broadcast(after.agg(F.count("*").alias("n_after"))))
@@ -2046,8 +2062,8 @@ def scan_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     root = staged(sf_dir, "orders", "mor_orders", build)
-    base = spark.read.parquet(os.path.join(root, "base"))
-    dv = spark.read.parquet(os.path.join(root, "deletes"))
+    base = read_parquet(spark, os.path.join(root, "base"))
+    dv = read_parquet(spark, os.path.join(root, "deletes"))
     live = base.join(F.broadcast(dv), "o_orderkey", "left_anti")
     n_del = dv.agg(F.count("*").alias("n_deleted_total"))
     return (
@@ -2301,7 +2317,7 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(root, "staging", name)
             )
         for name in ("good", "bad"):
-            cand = spark.read.parquet(os.path.join(root, "staging", name))
+            cand = read_parquet(spark, os.path.join(root, "staging", name))
             audit = cand.agg(
                 F.count("*").alias("n_rows"),
                 (F.count("*") - F.count("source")).alias("n_null_keys"),
@@ -2315,10 +2331,10 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = staged(sf_dir, "documents", "wap", build)
     rows = []
     for name in ("good", "bad"):
-        cand = spark.read.parquet(os.path.join(root, "staging", name))
+        cand = read_parquet(spark, os.path.join(root, "staging", name))
         published = os.path.exists(os.path.join(root, f"_PUBLISHED_{name}"))
         src_df = (
-            spark.read.parquet(os.path.join(root, "published", name))
+            read_parquet(spark, os.path.join(root, "published", name))
             if published
             else cand
         )
@@ -2676,7 +2692,7 @@ def sink_hilbert_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed.write.mode("overwrite").partitionBy("hbucket").parquet(out)
 
     out = staged(sf_dir, "orders", f"orders_hilbert{_HB}", build)
-    back = spark.read.parquet(out).withColumn(
+    back = read_parquet(spark, out).withColumn(
         "zkey", F.expr(_z8_sql("xr", "yr", div="div")).cast("bigint")
     )
     rects = spark.createDataFrame(

@@ -31,11 +31,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark_xgboost_spark.registry import register
 from pyspark_xgboost_spark.sources.formats import (
     build_once,
-    memo_by_fingerprint,
     staged,
     staged_path,
 )
-from pyspark_xgboost_spark.sources import normalize_event_ts
+from pyspark_xgboost_spark.sources import normalize_event_ts, read_parquet
 from pyspark_xgboost_spark.streaming.windows import session_agg, tumbling_agg
 
 _counter = itertools.count()
@@ -62,23 +61,22 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-timezone TIMESTAMP whatever the file's physical encoding.
 
     The file source needs an explicit schema, which MUST match the
-    file's physical types — so the schema is probed from the actual
-    parquet footer via a throwaway batch read (the round-3 regression
-    was exactly a hard-coded int64-nanos schema applied to a
-    regenerated µs file, silently compressing every timestamp 1000×).
-    ``normalize_event_ts`` then applies the shared post-read contract.
+    file's physical types — so the schema is the one ``read_parquet``
+    resolves from the actual parquet footer (the round-3 regression was
+    exactly a hard-coded int64-nanos schema applied to a regenerated µs
+    file, silently compressing every timestamp 1000×); a NANOS file
+    surfaces as bigint there. ``normalize_event_ts`` then applies the
+    shared post-read contract.
 
     This split — source-specific read producing the physical schema,
     shared normalization producing the canonical one — is the seam a
     Kafka source plugs into: ``readStream.format("kafka")`` +
-    ``from_json`` replaces the probe/read lines; everything after
+    ``from_json`` replaces the schema/read lines; everything after
     ``normalize_event_ts`` is source-agnostic.
     """
-    # the legacy conf lets the probe surface an int64-nanos file at all;
-    # harmless for µs encodings
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = _probe_events_schema(spark, sf_dir)
-    _record_stream_input_bytes(spark, os.path.join(sf_dir, "events.parquet"))
+    src = os.path.join(sf_dir, "events.parquet")
+    physical = read_parquet(spark, src).schema
+    _record_stream_input_bytes(spark, src)
     raw = spark.readStream.schema(physical).parquet(_events_stream_dir(sf_dir))
     return normalize_event_ts(raw)
 
@@ -86,25 +84,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_INPUT_BYTES_CONF = "spark_graft.stream.input_bytes"
 _NO_DATA_BATCH_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 _STATE_PARTITION_TARGET_BYTES = 64 << 20  # ~64 MB of source per store
-
-# The footer probe is METADATA (never query results): every streaming
-# query over the same immutable file re-reads the identical footer, and
-# the fingerprint key drops the entry the moment the file is
-# regenerated — so memoizing it is pure I/O dedup, ~0.1s of
-# driver-side listing + footer parse per streaming query removed (r15,
-# guide §1: the cost showed up as setup time outside every micro-batch
-# trigger).
-_EVENTS_SCHEMA: dict = {}
-
-
-def _probe_events_schema(spark: SparkSession, sf_dir: str):
-    return memo_by_fingerprint(
-        _EVENTS_SCHEMA,
-        spark,
-        sf_dir,
-        "events",
-        lambda: spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema,
-    )
 
 
 def _state_partitions(spark: SparkSession) -> int:
@@ -448,7 +427,7 @@ def events_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
         except Exception:  # pragma: no cover — advisory cleanup only
             pass
-    return spark.read.parquet(out_dir)
+    return read_parquet(spark, out_dir)
 
 
 @register(
@@ -553,7 +532,7 @@ def events_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
         except Exception:  # pragma: no cover — advisory cleanup only
             pass
-    back = spark.read.parquet(out_dir)
+    back = read_parquet(spark, out_dir)
     return back.groupBy("event_type").agg(
         F.sum("n").alias("n"), F.sum("sum_cents").alias("sum_cents")
     )
@@ -950,9 +929,7 @@ def events_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee that a replayed/backfilled partition of stale events
     cannot corrupt already-published windows."""
     root = _stage_late_batches(spark, sf_dir)
-    physical = spark.read.parquet(
-        os.path.join(root, "in", "batch-000.parquet")
-    ).schema
+    physical = read_parquet(spark, os.path.join(root, "in", "batch-000.parquet")).schema
     _record_stream_input_bytes(spark, os.path.join(root, "in"))
     raw = (
         spark.readStream.schema(physical)
@@ -1074,7 +1051,7 @@ def stream_merge_upsert_incremental(spark: SparkSession, sf_dir: str) -> DataFra
         os.path.join(root, "table"),
         lambda tbl: _build_merge_chain(spark, root, tbl),
     )
-    fin = spark.read.parquet(final_dir)
+    fin = read_parquet(spark, final_dir)
     return fin.groupBy(
         F.col("last_batch").cast("bigint").alias("last_batch")
     ).agg(
@@ -1104,7 +1081,7 @@ def _build_merge_chain(spark: SparkSession, root: str, tbl: str) -> str:
                 F.lit(1).alias("times_written"),
             )
         else:
-            cur = batch_df.sparkSession.read.parquet(state["cur"])
+            cur = read_parquet(batch_df.sparkSession, state["cur"])
             merged = (
                 cur.alias("t")
                 .join(b.alias("s"), "doc_id", "full_outer")
@@ -1185,8 +1162,8 @@ def scan_version_diff_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ensure the version chain exists (built once)
     stream_merge_upsert_incremental(spark, sf_dir).count()
     root = _stage_merge_batches(spark, sf_dir)
-    v1 = spark.read.parquet(_os.path.join(root, "table", "v001"))
-    v2 = spark.read.parquet(_os.path.join(root, "table", "v002"))
+    v1 = read_parquet(spark, _os.path.join(root, "table", "v001"))
+    v2 = read_parquet(spark, _os.path.join(root, "table", "v002"))
     j = v2.alias("v2").join(
         v1.alias("v1"), F.col("v2.doc_id") == F.col("v1.doc_id"), "left"
     )
@@ -1267,7 +1244,7 @@ def sink_vacuum_old_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = sorted(
         p for p in _glob.glob(_os.path.join(vac, "v*")) if _os.path.isdir(p)
     )
-    cur = spark.read.parquet(survivors[-1])
+    cur = read_parquet(spark, survivors[-1])
     return cur.agg(
         F.lit(len(survivors)).cast("bigint").alias("n_versions_kept"),
         F.count("*").cast("bigint").alias("current_rows"),
@@ -1678,7 +1655,7 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # band rows feed a probe AND an append: materialize once
             bands = bands.localCheckpoint(eager=True)
             if state["has_index"]:
-                idx = sess.read.parquet(idx_dir)
+                idx = read_parquet(sess, idx_dir)
                 pairs = (
                     bands.select(F.col("doc_id").alias("new_doc"), "band", "key")
                     .join(idx.select(F.col("doc_id").alias("old_doc"), "band", "key"),
@@ -1729,7 +1706,7 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     has_pairs = build_once(tbl, build) == "pairs"
     if not has_pairs:
         return spark.createDataFrame([], "new_doc long, old_doc long")
-    return spark.read.parquet(pairs_dir).select("new_doc", "old_doc").distinct()
+    return read_parquet(spark, pairs_dir).select("new_doc", "old_doc").distinct()
 
 
 def _neardup_oracle() -> str:
@@ -1848,7 +1825,7 @@ def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 newly_closed = None
             else:
-                cur = sess.read.parquet(state["open"])
+                cur = read_parquet(sess, state["open"])
                 j = cur.alias("t").join(b.alias("s"), "doc_id", "full_outer")
                 # change rows: key present on both sides, attr differs
                 changed = j.filter(
@@ -1911,7 +1888,7 @@ def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         return state["open"] + "\n" + "\n".join(state["closed"])
 
     open_dir, *closed_dirs = build_once(tbl, build).splitlines()
-    open_df = spark.read.parquet(open_dir).select(
+    open_df = read_parquet(spark, open_dir).select(
         "doc_id",
         F.col("attr").cast("bigint").alias("attr"),
         F.col("valid_from").cast("bigint").alias("valid_from"),
@@ -1919,7 +1896,7 @@ def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).cast("bigint").alias("is_current"),
     )
     if closed_dirs:
-        closed_df = spark.read.parquet(*closed_dirs).select(
+        closed_df = read_parquet(spark, *closed_dirs).select(
             "doc_id",
             F.col("attr").cast("bigint").alias("attr"),
             F.col("valid_from").cast("bigint").alias("valid_from"),
@@ -2030,7 +2007,7 @@ def stream_decontaminate_incremental(
             t = batch_df.select(
                 "doc_id", "seq", F.expr(_TOKS).alias("toks")
             )
-            idx = sess.read.parquet(idx_dir)
+            idx = read_parquet(sess, idx_dir)
             matched = (
                 gram_digests(batch_df)
                 .join(idx.hint("shuffle_hash"), "digest")
@@ -2096,7 +2073,7 @@ def stream_decontaminate_incremental(
         q.awaitTermination()
 
     build_once(tbl, build)
-    return spark.read.parquet(out_dir)
+    return read_parquet(spark, out_dir)
 
 
 def _decon_incremental_oracle() -> str:
@@ -2219,7 +2196,7 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if state["cur"] is not None:
-                cur = sess.read.parquet(state["cur"])
+                cur = read_parquet(sess, state["cur"])
                 b = (
                     cur.unionByName(b)
                     .groupBy("g", "reg")
@@ -2246,7 +2223,7 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return state["cur"]
 
-    regs = spark.read.parquet(build_once(tbl, build))
+    regs = read_parquet(spark, build_once(tbl, build))
     groups = regs.select("g").distinct()
     rep = hll_report(spark, regs, groups)
     ex = (
@@ -2364,7 +2341,7 @@ def stream_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 )
             else:
-                centers = sess.read.parquet(state["cur"])
+                centers = read_parquet(sess, state["cur"])
             assigned = _km_assign(
                 xq, _km_cent_row(centers.select("cid", "cq"))
             )
@@ -2434,7 +2411,7 @@ def stream_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return state["cur"]
 
-    centers = spark.read.parquet(build_once(tbl, build))
+    centers = read_parquet(spark, build_once(tbl, build))
     fa = _km_assign(
         _km_xq(spark, sf_dir), _km_cent_row(centers.select("cid", "cq"))
     )
@@ -2660,7 +2637,7 @@ def stream_reservoir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if state["cur"] is not None:
-                cur = sess.read.parquet(state["cur"])
+                cur = read_parquet(sess, state["cur"])
                 cand = _wrsi_topk(cur.unionByName(cand))
             nxt = os.path.join(tbl, f"v{batch_id:03d}")
             cand.write.mode("overwrite").parquet(nxt)
@@ -2683,7 +2660,7 @@ def stream_reservoir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return state["cur"]
 
-    res = spark.read.parquet(build_once(tbl, build))
+    res = read_parquet(spark, build_once(tbl, build))
     w = W.partitionBy("source").orderBy(
         ((-F.col("lnu_micro")).cast("double") / F.col("n_chars")).asc(),
         F.col("doc_id").asc(),
@@ -2805,7 +2782,7 @@ def stream_ddsketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             sess = batch_df.sparkSession
             b = _dds_bucketize(batch_df)
             if state["cur"] is not None:
-                cur = sess.read.parquet(state["cur"])
+                cur = read_parquet(sess, state["cur"])
                 b = (
                     cur.unionByName(b)
                     .groupBy("event_type", "b")
@@ -2832,7 +2809,7 @@ def stream_ddsketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return state["cur"]
 
-    bkt = spark.read.parquet(build_once(tbl, build))
+    bkt = read_parquet(spark, build_once(tbl, build))
     n = bkt.groupBy("event_type").agg(
         F.sum("c").cast("bigint").alias("n_pos"),
         F.count("*").cast("bigint").alias("n_buckets"),
@@ -3014,7 +2991,7 @@ def stream_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .write.mode("overwrite")
                     .parquet(cent_dir)
                 )
-            cents = sess.read.parquet(cent_dir)
+            cents = read_parquet(sess, cent_dir)
             assigned = _km_assign(xq, _km_cent_row(cents))
             (
                 assigned.select("vec_id", "cid", "q")
@@ -3039,8 +3016,8 @@ def stream_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
     build_once(tbl, build)
-    postings = spark.read.parquet(post_dir)
-    cents = spark.read.parquet(cent_dir)
+    postings = read_parquet(spark, post_dir)
+    cents = read_parquet(spark, cent_dir)
     corpus = postings.select(
         "vec_id",
         "cid",
@@ -3262,7 +3239,7 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "label", F.col("doc_id")
                 ).limit(0)
             else:
-                labels = sess.read.parquet(state["cur"])
+                labels = read_parquet(sess, state["cur"])
             fresh = nodes.join(
                 labels, "doc_id", "left_anti"
             ).withColumn("label", F.col("doc_id"))
@@ -3326,7 +3303,7 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return state["cur"]
 
-    labels = spark.read.parquet(build_once(tbl, build))
+    labels = read_parquet(spark, build_once(tbl, build))
     return labels.groupBy(F.col("label").alias("group_id")).agg(
         F.count("*").alias("n_docs"), F.max("doc_id").alias("max_doc_id")
     )
@@ -3455,7 +3432,7 @@ def stream_mg_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").cast("long").alias("c"))
             )
             if state["cur"] is not None:
-                cur = sess.read.parquet(state["cur"])
+                cur = read_parquet(sess, state["cur"])
                 b = (
                     cur.unionByName(b)
                     .groupBy("token")
@@ -3484,7 +3461,7 @@ def stream_mg_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return state["cur"]
 
-    summary = spark.read.parquet(build_once(tbl, build))
+    summary = read_parquet(spark, build_once(tbl, build))
     exact = (
         load_table(spark, sf_dir, "documents")
         .select(F.explode(F.expr(_TOKS)).alias("token"))
@@ -3635,7 +3612,7 @@ def stream_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .distinct()
             )
             if state["cur"] is not None:
-                cur = sess.read.parquet(state["cur"])
+                cur = read_parquet(sess, state["cur"])
                 b = cur.unionByName(b).distinct()
             nxt = os.path.join(tbl, f"v{batch_id:03d}")
             b.write.mode("overwrite").parquet(nxt)
@@ -3658,7 +3635,7 @@ def stream_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return state["cur"]
 
-    bits = spark.read.parquet(build_once(tbl, build))
+    bits = read_parquet(spark, build_once(tbl, build))
     bits = bits.withColumnRenamed("pos", "bpos")
     docs = load_table(spark, sf_dir, "documents")
     member_pos = docs.select(F.md5("text").alias("digest")).distinct().select(
@@ -3903,7 +3880,7 @@ def stream_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .write.mode("overwrite")
                     .parquet(cb_dir)
                 )
-            cb_rows = sess.read.parquet(cb_dir).collect()
+            cb_rows = read_parquet(sess, cb_dir).collect()
             (
                 _pq_encode_batch(batch_df, cb_rows)
                 .write.mode("append")
@@ -3927,8 +3904,8 @@ def stream_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
     build_once(tbl, build)
-    codes = spark.read.parquet(codes_dir)
-    cb_rows = spark.read.parquet(cb_dir).collect()
+    codes = read_parquet(spark, codes_dir)
+    cb_rows = read_parquet(spark, cb_dir).collect()
     # query-side LUT: panel x M x K term_nano rows, built driver-side
     # from the panel's float sub-vectors (queries arrive with floats at
     # serve time; only the CORPUS is code-only) — the same fold + floor
@@ -4132,7 +4109,7 @@ def _knng_apply_batch(
     from pyspark_xgboost_spark.operators.similarity import _GG_KNN
 
     if os.path.exists(mem_dir):
-        old_mem = sess.read.parquet(mem_dir).select(
+        old_mem = read_parquet(sess, mem_dir).select(
             "vec_id", "q", "cid", F.lit(0).alias("is_new")
         )
     else:
@@ -4155,7 +4132,7 @@ def _knng_apply_batch(
     )
     if os.path.exists(adj_dir):
         adj_old = (
-            sess.read.parquet(adj_dir)
+            read_parquet(sess, adj_dir)
             .join(F.broadcast(affected), "cid")
             .select("cid", "src", "dst", "d")
         )
@@ -4224,7 +4201,7 @@ def _knng_ensure_state(spark: SparkSession, sf_dir: str) -> str:
                     .write.mode("overwrite")
                     .parquet(cent_dir)
                 )
-            cents = sess.read.parquet(cent_dir)
+            cents = read_parquet(sess, cent_dir)
             new_mem = _km_assign(xq, _km_cent_row(cents)).select(
                 "vec_id", "q", "cid", F.lit(1).alias("is_new")
             )
@@ -4288,8 +4265,8 @@ def stream_knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = _knng_ensure_state(spark, sf_dir)
-    members = spark.read.parquet(os.path.join(root, "knng", "members"))
-    adj = spark.read.parquet(os.path.join(root, "knng", "adj"))
+    members = read_parquet(spark, os.path.join(root, "knng", "members"))
+    adj = read_parquet(spark, os.path.join(root, "knng", "adj"))
     corpus = members.select(
         F.col("vec_id").alias("cand_id"), F.col("q").alias("cq2")
     )
@@ -4456,7 +4433,7 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return
             sess = batch_df.sparkSession
             xq = sub.select("vec_id", _knng_quant_expr().alias("q"))
-            cents = sess.read.parquet(cent_dir)
+            cents = read_parquet(sess, cent_dir)
             new_mem = _km_assign(xq, _km_cent_row(cents)).select(
                 "vec_id", "q", "cid", F.lit(1).alias("is_new")
             )
@@ -4480,9 +4457,9 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     build_once(tbl, build)
 
-    members = spark.read.parquet(os.path.join(root, "knng", "members"))
-    adj0 = spark.read.parquet(os.path.join(root, "knng", "adj"))
-    adj1 = spark.read.parquet(adj1_dir)
+    members = read_parquet(spark, os.path.join(root, "knng", "members"))
+    adj0 = read_parquet(spark, os.path.join(root, "knng", "adj"))
+    adj1 = read_parquet(spark, adj1_dir)
     corpus = members.select(
         F.col("vec_id").alias("cand_id"), F.col("q").alias("cq2")
     )
@@ -4505,7 +4482,7 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus,
         )
         edges0, edges1 = f0.result(), f1.result()
-    entry1 = spark.read.parquet(mem1_dir).agg(F.min("vec_id").alias("e"))
+    entry1 = read_parquet(spark, mem1_dir).agg(F.min("vec_id").alias("e"))
     frontier = (
         members.filter(F.col("vec_id") < _N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("q").alias("qq"))

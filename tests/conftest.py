@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 
 import pytest
@@ -9,14 +8,6 @@ sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# A full run holds two get_spark driver JVMs at once (the fixture
-# session and the overlapped smoke sweep) beside the local-cluster
-# test's JVMs. At the session's default 32g heap cap the sweep's JVM
-# grew to 9-14 GB on a 16 GB host and the kernel OOM killer took it, or
-# the fixture JVM, failing every later test. Cap each at a third of
-# physical memory unless the caller chose a size; subprocesses inherit it.
-_RAM_GB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(32, _RAM_GB // 3))}g")
 
 def _script_lc():
     from tests.test_local_cluster import _SCRIPT

@@ -234,28 +234,29 @@ def test_stream_input_bytes_recursive_hadoop_fs(spark, tmp_path):
             spark.conf.set(_STREAM_INPUT_BYTES_CONF, prev)
 
 
-def test_schema_probe_memo_invalidates_on_mtime(spark, tmp_path):
-    """The events footer-probe memo is keyed on the source fingerprint
-    (size + mtime): rewriting events.parquet with a different schema
-    must repopulate it, and the superseded entry is evicted."""
-    from pyspark_xgboost_spark.streaming.stream import (
-        _EVENTS_SCHEMA,
-        _probe_events_schema,
-    )
+def test_events_stream_schema_follows_rewritten_file(spark, tmp_path):
+    """The stream reader resolves events.parquet's schema from its footer
+    on every call: rewriting the file with a new column gives the new
+    schema on the next read."""
+    import shutil
+
+    from pyspark_xgboost_spark.sources.formats import staged_path
+    from pyspark_xgboost_spark.streaming.stream import read_events_stream
 
     sf_dir = str(tmp_path)
     p = str(tmp_path / "events.parquet")
-    spark.range(3).select(F.col("id").alias("a")).coalesce(
-        1
-    ).write.mode("overwrite").parquet(p)
-    s1 = _probe_events_schema(spark, sf_dir)
-    assert _probe_events_schema(spark, sf_dir) is s1  # memo hit
-    import time
-
-    time.sleep(0.05)
-    spark.range(3).select(
-        F.col("id").alias("a"), F.col("id").alias("b")
-    ).coalesce(1).write.mode("overwrite").parquet(p)
-    s2 = _probe_events_schema(spark, sf_dir)
-    assert [f.name for f in s2.fields] == ["a", "b"]
-    assert sum(k.split(":")[1] == sf_dir for k in _EVENTS_SCHEMA) == 1
+    sess = spark.newSession()  # the reader records input bytes on its session
+    try:
+        spark.range(3).select(F.col("id").alias("a")).coalesce(
+            1
+        ).write.mode("overwrite").parquet(p)
+        assert read_events_stream(sess, sf_dir).columns == ["a"]
+        spark.range(3).select(
+            F.col("id").alias("a"), F.col("id").alias("b")
+        ).coalesce(1).write.mode("overwrite").parquet(p)
+        assert read_events_stream(sess, sf_dir).columns == ["a", "b"]
+    finally:
+        shutil.rmtree(
+            os.path.dirname(staged_path(sf_dir, "events", "stream_src")),
+            ignore_errors=True,
+        )

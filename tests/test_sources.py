@@ -1,4 +1,5 @@
-"""Staged-copy lifecycle for the multi-format scan operators
+"""Parquet schema resolution (``sources.read_parquet``) and the
+staged-copy lifecycle for the multi-format scan operators
 (sources/formats.py): fingerprint keying plus garbage collection of
 stale fingerprints, so a data swap invalidates derived scratch dirs
 without letting /tmp grow without bound."""
@@ -556,6 +557,180 @@ def test_python_datasource_writer_two_phase_commit(spark, tmp_path):
 
     back = spark.read.format("docbin").option("path", out).load().collect()
     assert sorted(map(tuple, back)) == sorted(map(tuple, src.collect()))
+
+
+def test_read_parquet_schema_matches_spark_inference_on_committed_data(spark):
+    import glob
+    import pathlib
+
+    from pyspark_xgboost_spark.sources import read_parquet
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = sorted(glob.glob(str(root / "perfbench" / "data" / "*" / "*.parquet")))
+    files += sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*", "*.parquet")))
+    assert len(files) >= 20
+    for p in files:
+        assert read_parquet(spark, p).schema == spark.read.parquet(p).schema, p
+
+
+def test_read_parquet_matches_spark_on_spark_written_multipart_dir(spark, tmp_path):
+    """Spark-written footers carry the schema as JSON: types with no
+    plain Arrow equivalent (decimal, binary, map, struct, a UDT) and both
+    timestamp kinds resolve to exactly what Spark infers, rows too."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql import types as T
+
+    from pyspark_xgboost_spark.sources import read_parquet
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("dec", T.DecimalType(18, 4)),
+            T.StructField("bin", T.BinaryType()),
+            T.StructField("ltz", T.TimestampType()),
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("d", T.DateType()),
+            T.StructField("arr", T.ArrayType(T.DoubleType())),
+            T.StructField("m", T.MapType(T.StringType(), T.IntegerType())),
+            T.StructField(
+                "st",
+                T.StructType(
+                    [T.StructField("x", T.IntegerType()), T.StructField("y", T.StringType())]
+                ),
+            ),
+            T.StructField("vec", VectorUDT()),
+        ]
+    )
+    rows = [
+        (
+            i,
+            Decimal(f"{i}.1234"),
+            bytes([i, 7]),
+            dt.datetime(2024, 1, 1, i % 24, i),
+            dt.datetime(2024, 1, 2, i % 24, i),
+            dt.date(2024, 1, 1) + dt.timedelta(days=i),
+            [float(i), 0.5],
+            {"k": i},
+            (i, str(i)),
+            Vectors.dense([float(i), 1.0]),
+        )
+        for i in range(40)
+    ]
+    out = str(tmp_path / "mixed")
+    spark.createDataFrame(rows, schema).repartition(3).write.parquet(out)
+    assert len([n for n in os.listdir(out) if n.endswith(".parquet")]) > 1
+
+    got, want = read_parquet(spark, out), spark.read.parquet(out)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=lambda r: r.id) == sorted(
+        want.collect(), key=lambda r: r.id
+    )
+
+
+def test_read_parquet_falls_back_to_spark_inference(spark, tmp_path):
+    """Hive partitions keep their partition column, a TIMESTAMP(NANOS)
+    file reads as bigint under nanosAsLong as before, and an empty
+    directory raises what Spark raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from pyspark_xgboost_spark.sources import read_parquet
+
+    part = str(tmp_path / "by_k")
+    spark.range(6).selectExpr("id", "id % 2 AS k").write.partitionBy("k").parquet(part)
+    got = read_parquet(spark, part)
+    assert "k" in got.columns
+    assert got.schema == spark.read.parquet(part).schema
+    assert sorted(got.collect()) == sorted(spark.read.parquet(part).collect())
+
+    sess = spark.newSession()
+    nanos = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_700_000_000_123_456_789, 5], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), nanos, version="2.6")
+    got = read_parquet(sess, nanos)
+    assert sess.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert got.dtypes == [("ts", "bigint")]
+    assert got.collect() == sess.read.parquet(nanos).collect()
+    assert sorted(r.ts for r in got.collect()) == [5, 1_700_000_000_123_456_789]
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(Exception) as spark_err:
+        spark.read.parquet(str(empty))
+    with pytest.raises(Exception) as ours:
+        read_parquet(spark, str(empty))
+    assert type(ours.value) is type(spark_err.value)
+
+
+def test_load_table_runs_no_spark_job(spark, tmp_path):
+    """The schema comes from the footer on the driver: loading a copy
+    Spark has never seen launches no inference job."""
+    from pyspark_xgboost_spark.sources import load_table
+
+    for t in ("lineitem", "events"):
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    sc = spark.sparkContext
+    group = f"load_table_probe_{os.getpid()}"
+    sc.setJobGroup(group, "load_table job count")
+    try:
+        for t in ("lineitem", "events"):
+            assert load_table(spark, str(tmp_path), t).columns
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_events_reads_leave_nanos_as_long_unset(spark):
+    """Neither the batch nor the stream events reader sets
+    spark.sql.legacy.parquet.nanosAsLong for the committed µs file."""
+    from pyspark_xgboost_spark.sources import load_table
+    from pyspark_xgboost_spark.streaming.stream import read_events_stream
+
+    sess = spark.newSession()
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert sess.conf.get(key, None) is None
+    assert dict(load_table(sess, SF_DIR, "events").dtypes)["ts"] == "timestamp"
+    assert dict(read_events_stream(sess, SF_DIR).dtypes)["ts"] == "timestamp"
+    assert sess.conf.get(key, None) is None
+
+
+def test_src_fingerprint_sees_part_file_rewritten_in_place(tmp_path):
+    """A directory-shaped source whose part file is rewritten in place
+    (the directory's own stat unchanged) gets a new fingerprint."""
+    from pyspark_xgboost_spark.sources.formats import src_fingerprint
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    part = d / "part-00000.parquet"
+    part.write_bytes(b"a" * 10)
+    (d / "_SUCCESS").write_bytes(b"")
+    before = src_fingerprint(str(tmp_path), "t")
+    dst = os.stat(d)
+    part.write_bytes(b"b" * 12)
+    os.utime(d, ns=(dst.st_atime_ns, dst.st_mtime_ns))
+    assert src_fingerprint(str(tmp_path), "t") != before
+
+
+def test_parquet_reads_go_through_read_parquet_only():
+    """Tripwire: sources/__init__.py is the one module that calls
+    Spark's parquet reader, so no read re-infers a schema."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pyspark_xgboost_spark"
+    resolver = pkg / "sources" / "__init__.py"
+    offenders = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != resolver
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if ".read.parquet(" in line or 'read.format("parquet")' in line
+    ]
+    assert offenders == []
 
 
 # Pooled contract sweep (smoke-sweep discipline; see test_plans_r11).
