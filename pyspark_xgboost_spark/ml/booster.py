@@ -22,6 +22,22 @@ aggregation pattern XGBoost runs over Rabit; here the reduction is a
 a few MB — regardless of shard row count, which is what makes the
 pattern viable at 100 TB.
 
+Data layout, chosen so that training and prediction are array passes
+rather than per-node or per-tree Python loops:
+
+* ``bin_matrix`` returns feature-major ``(f, n)`` codes. Tree growth
+  keeps every row in place and carries a per-row slot; rows that reached
+  a leaf go to an extra histogram slot that is dropped, instead of
+  copying the live rows out at every level. A row's split code is one
+  flat ``take``.
+* A ``Booster`` packs its trees once into flat arrays with per-tree
+  roots; leaves are self-loops. ``_walk`` moves every (tree, row) pair
+  one level at a time, and margins are still summed tree by tree in
+  ensemble order, so outputs are the same floats as a per-tree walk.
+* Histogram subtraction (build the smaller child, derive its sibling)
+  is left out: parent minus child rounds differently from a direct sum,
+  so trees would no longer match the direct-sum kernel bit for bit.
+
 If a real ``xgboost`` package is importable, the estimator layer uses
 it instead (see estimator.py); this module is the self-contained
 fallback kernel.
@@ -33,6 +49,8 @@ import json
 import math
 import os
 import tempfile
+from functools import cached_property
+from typing import NamedTuple
 
 import numpy as np
 
@@ -219,10 +237,16 @@ def n_bins_p1(edges: list[np.ndarray]) -> int:
 
 
 def bin_matrix(X: np.ndarray, edges: list[np.ndarray], missing: float) -> np.ndarray:
-    """float matrix → uint16 bin codes; global last slot == missing."""
+    """float matrix ``(n, f)`` → feature-major ``(f, n)`` uint16 bin codes;
+    the global last slot == missing.
+
+    Feature-major so that each feature's codes are one contiguous run:
+    the per-feature histogram ``bincount`` reads ``B[j]`` without a
+    stride, and row routing reads every row's split code with one flat
+    ``take`` (``B.ravel()[feature_of_row * n + row]``)."""
     n, f = X.shape
     sentinel = n_bins_p1(edges) - 1
-    B = np.empty((n, f), dtype=np.uint16)
+    B = np.empty((f, n), dtype=np.uint16)
     for j in range(f):
         col = X[:, j].astype(np.float64)
         if not math.isnan(missing):
@@ -230,7 +254,7 @@ def bin_matrix(X: np.ndarray, edges: list[np.ndarray], missing: float) -> np.nda
         nan_mask = np.isnan(col)
         codes = np.searchsorted(edges[j], col, side="right")
         codes[nan_mask] = sentinel
-        B[:, j] = codes
+        B[j] = codes
     return B
 
 
@@ -249,15 +273,6 @@ class _Tree:
         self.right: list[int] = []
         self.value: list[float] = []
         self.default_left: list[bool] = []
-
-    def add_node(self) -> int:
-        self.feature.append(-1)
-        self.threshold.append(0.0)
-        self.left.append(-1)
-        self.right.append(-1)
-        self.value.append(0.0)
-        self.default_left.append(True)
-        return len(self.feature) - 1
 
     def to_dict(self) -> dict:
         return {
@@ -280,28 +295,96 @@ class _Tree:
         t.default_left = list(d["default_left"])
         return t
 
-    def predict_margin(self, X: np.ndarray, missing: float) -> np.ndarray:
-        feat = np.asarray(self.feature, dtype=np.int32)
-        thr = np.asarray(self.threshold, dtype=np.float64)
-        left = np.asarray(self.left, dtype=np.int32)
-        right = np.asarray(self.right, dtype=np.int32)
-        val = np.asarray(self.value, dtype=np.float64)
-        dleft = np.asarray(self.default_left, dtype=bool)
 
-        idx = np.zeros(len(X), dtype=np.int32)
-        while True:
-            internal = feat[idx] >= 0
-            if not internal.any():
-                break
-            rows = np.nonzero(internal)[0]
-            f = feat[idx[rows]]
-            x = X[rows, f].astype(np.float64)
-            if not math.isnan(missing):
-                x = np.where(x == missing, np.nan, x)
-            nan_mask = np.isnan(x)
-            go_left = np.where(nan_mask, dleft[idx[rows]], x < thr[idx[rows]])
-            idx[rows] = np.where(go_left, left[idx[rows]], right[idx[rows]])
-        return val[idx]
+class _Packed(NamedTuple):
+    """Every node of a list of trees in flat arrays with per-tree roots.
+
+    Leaves are self-loops: feature 0, threshold ``+inf``, default-left,
+    and both children pointing back at the leaf. A walk can then move
+    every (tree, row) pair down one level at a time for ``depth``
+    levels with no per-tree mask: pairs that reached a leaf stay put."""
+
+    feature: np.ndarray  # (nodes,) int64
+    threshold: np.ndarray  # (nodes,) float64
+    default_left: np.ndarray  # (nodes,) bool
+    child: np.ndarray  # (2 * nodes,) int64: [2i] left, [2i + 1] right
+    value: np.ndarray  # (nodes,) float64
+    root: np.ndarray  # (trees,) int64
+    depth: int  # levels of the deepest tree
+
+
+def _pack(trees: list[_Tree]) -> _Packed:
+    sizes = np.array([len(t.feature) for t in trees], dtype=np.int64)
+    root = np.cumsum(sizes) - sizes
+    offset = np.repeat(root, sizes)
+
+    def cat(attr, dtype):
+        return np.array([v for t in trees for v in getattr(t, attr)], dtype=dtype)
+
+    feature = cat("feature", np.int64)
+    leaf = feature < 0
+    own = np.arange(len(feature), dtype=np.int64)
+    left = np.where(leaf, own, cat("left", np.int64) + offset)
+    right = np.where(leaf, own, cat("right", np.int64) + offset)
+    depth, frontier = 0, root
+    while True:
+        frontier = frontier[~leaf[frontier]]
+        if not len(frontier):
+            break
+        depth += 1
+        frontier = np.concatenate([left[frontier], right[frontier]])
+    return _Packed(
+        feature=np.where(leaf, 0, feature),
+        threshold=np.where(leaf, np.inf, cat("threshold", np.float64)),
+        default_left=leaf | cat("default_left", bool),
+        child=np.stack([left, right], axis=1).ravel(),
+        value=cat("value", np.float64),
+        root=root,
+        depth=depth,
+    )
+
+
+# rows per walk block are chosen so that a block holds about this many
+# (tree, row) pairs, which bounds the walk's temporaries to a few MB
+_WALK_PAIRS = 1 << 18
+
+
+def _walk(packed: _Packed, X: np.ndarray, missing: float, roots: np.ndarray) -> np.ndarray:
+    """Leaf value of every row in every tree rooted at ``roots``:
+    ``(len(roots), n)``. The one prediction function of this module:
+    ``Booster.raw_margin`` and the eval-set margins in ``train`` both
+    call it.
+
+    Each level takes each pair's split feature, reads the row's value
+    with one flat ``take`` from the row-major float64 block, and moves
+    to ``child[2 * node + go_right]``. A NaN (or a value equal to
+    ``missing``) fails both ``x < thr`` and ``x >= thr``, so it goes
+    right at a default-right node and left at a default-left one; a
+    block without NaN needs only ``x >= thr``."""
+    X = np.ascontiguousarray(X, dtype=np.float32)
+    n, n_feat = X.shape
+    out = np.empty((len(roots), n), dtype=np.float64)
+    step = max(1, _WALK_PAIRS // max(1, len(roots)))
+    for lo in range(0, n, step):
+        block = X[lo : lo + step].astype(np.float64)
+        if not math.isnan(missing):
+            block[block == missing] = np.nan
+        has_nan = bool(np.isnan(block).any())
+        flat = block.ravel()
+        row_start = np.arange(len(block), dtype=np.int64) * n_feat
+        node = np.repeat(roots[:, None], len(block), axis=1)
+        for _level in range(packed.depth):
+            x = flat.take(packed.feature.take(node) + row_start)
+            thr = packed.threshold.take(node)
+            if has_nan:
+                go_right = np.where(packed.default_left.take(node), x >= thr, ~(x < thr))
+            else:
+                go_right = x >= thr
+            node *= 2
+            node += go_right
+            node = packed.child.take(node)
+        out[:, lo : lo + len(block)] = packed.value.take(node)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -309,20 +392,24 @@ class _Tree:
 # ---------------------------------------------------------------------------
 
 
-def _build_histograms(B, g, h, node_of_row, n_nodes, n_bins_p1):
-    """(n_nodes, n_features, max_bin+1) grad/hess sums via bincount."""
-    n, f = B.shape
-    hist_g = np.empty((n_nodes, f, n_bins_p1))
-    hist_h = np.empty((n_nodes, f, n_bins_p1))
-    base = node_of_row.astype(np.int64) * n_bins_p1
-    size = n_nodes * n_bins_p1
+def _build_histograms(B, g, h, slot_of_row, n_slots, n_bins_p1):
+    """(n_slots, n_features, max_bin+1) grad/hess sums via bincount over
+    feature-major codes ``B``. A row whose slot is ``n_slots`` has
+    settled in a leaf: it lands in one extra slot that is dropped, so
+    live rows never need to be copied out."""
+    f = B.shape[0]
+    hist_g = np.empty((n_slots, f, n_bins_p1))
+    hist_h = np.empty((n_slots, f, n_bins_p1))
+    base = slot_of_row * n_bins_p1
+    size = (n_slots + 1) * n_bins_p1
+    kept = n_slots * n_bins_p1
     for j in range(f):
-        idx = base + B[:, j]
-        hist_g[:, j, :] = np.bincount(idx, weights=g, minlength=size).reshape(
-            n_nodes, n_bins_p1
+        idx = base + B[j]
+        hist_g[:, j, :] = np.bincount(idx, weights=g, minlength=size)[:kept].reshape(
+            n_slots, n_bins_p1
         )
-        hist_h[:, j, :] = np.bincount(idx, weights=h, minlength=size).reshape(
-            n_nodes, n_bins_p1
+        hist_h[:, j, :] = np.bincount(idx, weights=h, minlength=size)[:kept].reshape(
+            n_slots, n_bins_p1
         )
     return hist_g, hist_h
 
@@ -424,20 +511,25 @@ class Booster:
     def _group(self) -> int:
         return self.num_class if self.objective == "multi:softprob" else 1
 
+    @cached_property
+    def _packed(self) -> _Packed:
+        return _pack(self.trees)
+
     def raw_margin(self, X: np.ndarray, iteration_range: tuple[int, int] | None = None) -> np.ndarray:
-        X = np.ascontiguousarray(X, dtype=np.float32)
         k = self._group()
         n_rounds = len(self.trees) // k
         lo, hi = (0, n_rounds) if iteration_range is None else iteration_range
+        leaves = _walk(self._packed, X, self.missing, self._packed.root[lo * k : hi * k])
+        # summed tree by tree, in ensemble order, so margins are the same
+        # floats as a one-tree-at-a-time walk would give
         if k == 1:
             m = np.full(len(X), self.base_score, dtype=np.float64)
-            for t in self.trees[lo:hi]:
-                m += t.predict_margin(X, self.missing)
+            for v in leaves:
+                m += v
             return m
         m = np.full((len(X), k), self.base_score, dtype=np.float64)
-        for r in range(lo, hi):
-            for c in range(k):
-                m[:, c] += self.trees[r * k + c].predict_margin(X, self.missing)
+        for i, v in enumerate(leaves):
+            m[:, i % k] += v
         return m
 
     def predict(self, X: np.ndarray, output_margin: bool = False, base_margin=None) -> np.ndarray:
@@ -582,8 +674,8 @@ def _spill_to_memmap(arr: np.ndarray, workdir: str, name: str) -> np.ndarray:
 
 
 def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, lr, comm):
-    """One depth-wise tree over binned data; histograms allreduced so all
-    workers grow the identical tree.
+    """One depth-wise tree over feature-major bin codes ``B`` (f, n);
+    histograms allreduced so all workers grow the identical tree.
 
     Returns ``(tree, delta)`` where ``delta`` is this shard's margin
     update (leaf value of the node each local row lands in). Rows are
@@ -591,121 +683,113 @@ def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, l
     the margin update would otherwise need is free here — and bin-code
     routing (``code <= b``) is exactly the float predicate
     (``x < edges[f][b]``) because codes are searchsorted-right ranks.
+
+    Rows stay in place: ``slot`` holds each row's frontier slot, and a
+    row whose node became a leaf moves to the extra slot ``n_slots``,
+    which the histograms drop. Nodes are numbered level by level, so a
+    level's frontier is the contiguous id range after its parents and
+    the whole level is decided with array ops over its slots.
     """
-    n = len(B)
+    n_feat, n = B.shape
     nbp1 = n_bins_p1(edges)
-    tree = _Tree()
-    root = tree.add_node()
-    node_of_row = np.zeros(n, dtype=np.int64)
-    row_idx = np.arange(n, dtype=np.int64)  # original positions of live rows
+    edge_counts = np.array([len(e) for e in edges], dtype=np.int64)
+    cuts = np.zeros((n_feat, max(1, int(edge_counts.max(initial=0)))))
+    for j, e in enumerate(edges):
+        cuts[j, : len(e)] = e
+    codes = B.ravel()
+    row = np.arange(n, dtype=np.int64)
+    slot = np.zeros(n, dtype=np.int64)
     delta = np.zeros(n, dtype=np.float64)
-    # level-order frontier: node ids whose rows are tagged with slot s
-    frontier = [root]
-    # per-slot grad/hess totals carried from the parent's histograms so
-    # max-depth leaves need no extra histogram pass (or allreduce)
+    # per level, in _Tree.__slots__ order: (feature, threshold, left,
+    # right, value, default_left) of the level's nodes
+    levels: list[tuple[np.ndarray, ...]] = []
+    first_id, n_slots = 0, 1
+    # grad/hess totals of the last frontier, carried from its parents'
+    # histograms so max-depth leaves need no extra histogram pass (or
+    # allreduce)
     node_G: np.ndarray | None = None
     node_H: np.ndarray | None = None
 
-    for _depth in range(max_depth):
-        n_slots = len(frontier)
-        if n_slots == 0:
-            break
-        hist_g, hist_h = _build_histograms(B, g, h, node_of_row, n_slots, nbp1)
+    for depth in range(max_depth):
+        hist_g, hist_h = _build_histograms(B, g, h, slot, n_slots, nbp1)
         # sum shard-local histograms across the cluster — the ONLY
         # cross-worker exchange in the training loop
         stacked = comm.allreduce_sum(np.stack([hist_g, hist_h]))
         hist_g, hist_h = stacked[0], stacked[1]
-        gain, feat, bins, dleft, G_tot, H_tot = _best_splits(
-            hist_g, hist_h, reg_lambda, gamma, min_child_weight,
-            edge_counts=[len(e) for e in edges],
+        gain, feat, bins, dleft, _, _ = _best_splits(
+            hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=edge_counts
         )
-
-        new_frontier: list[int] = []
-        slot_remap = np.full(n_slots * 2, -1, dtype=np.int64)
-        split_feat = np.full(n_slots, -1, dtype=np.int64)
-        split_code = np.zeros(n_slots, dtype=np.int64)
-        split_dl = np.zeros(n_slots, dtype=bool)
-        slot_value = np.zeros(n_slots, dtype=np.float64)
-        child_G = np.zeros(n_slots * 2, dtype=np.float64)
-        child_H = np.zeros(n_slots * 2, dtype=np.float64)
-        for s, node in enumerate(frontier):
-            f = int(feat[s])
-            # node totals: sum any single feature's histogram over its bins
-            Gn = hist_g[s, 0, :].sum()
-            Hn = hist_h[s, 0, :].sum()
-            if not np.isfinite(gain[s]) or gain[s] <= 0 or len(edges[f]) <= bins[s]:
-                # leaf: weight = -G/(H+λ) scaled by lr
-                v = float(-Gn / (Hn + reg_lambda) * lr)
-                tree.value[node] = v
-                slot_value[s] = v
-                continue
-            li = tree.add_node()
-            ri = tree.add_node()
-            tree.feature[node] = f
-            tree.threshold[node] = float(edges[f][int(bins[s])])
-            tree.left[node] = li
-            tree.right[node] = ri
-            tree.default_left[node] = bool(dleft[s])
-            slot_remap[2 * s] = len(new_frontier)
-            slot_remap[2 * s + 1] = len(new_frontier) + 1
-            split_feat[s] = f
-            b = int(bins[s])
-            split_code[s] = b
-            split_dl[s] = bool(dleft[s])
-            # chosen-split child totals (missing bucket goes default side)
-            Gm = hist_g[s, f, -1]
-            Hm = hist_h[s, f, -1]
-            GL = hist_g[s, f, : b + 1].sum() + (Gm if dleft[s] else 0.0)
-            HL = hist_h[s, f, : b + 1].sum() + (Hm if dleft[s] else 0.0)
-            child_G[2 * s] = GL
-            child_G[2 * s + 1] = Gn - GL
-            child_H[2 * s] = HL
-            child_H[2 * s + 1] = Hn - HL
-            new_frontier.extend([li, ri])
+        # node totals: sum any single feature's histogram over its bins
+        Gn = hist_g[:, 0, :].sum(axis=1)
+        Hn = hist_h[:, 0, :].sum(axis=1)
+        split = np.isfinite(gain) & (gain > 0) & (bins < edge_counts[feat])
+        n_split = int(split.sum())
+        rank = np.cumsum(split) - 1
+        left = np.where(split, first_id + n_slots + 2 * rank, -1)
+        # leaf: weight = -G/(H+λ) scaled by lr
+        value = np.where(split, 0.0, -Gn / (Hn + reg_lambda) * lr)
+        levels.append((
+            np.where(split, feat, -1),
+            np.where(split, cuts[feat, bins], 0.0),
+            left,
+            np.where(split, left + 1, -1),
+            value,
+            np.where(split, dleft, True),
+        ))
 
         # rows whose slot became a leaf this level get their margin now
-        leaf_rows = split_feat[node_of_row] < 0
-        if leaf_rows.any():
-            delta[row_idx[leaf_rows]] = slot_value[node_of_row[leaf_rows]]
-        if not new_frontier:
-            return tree, delta
-        # route rows to child slots
-        rows = np.nonzero(~leaf_rows)[0]
-        s_of_rows = node_of_row[rows]
-        codes = B[rows, split_feat[s_of_rows]]
-        # missing is the single GLOBAL sentinel slot (bin_matrix);
-        # len(edges[f]) itself is a real bin (values above the last cut)
-        is_missing = codes == (nbp1 - 1)
-        go_left = np.where(is_missing, split_dl[s_of_rows], codes <= split_code[s_of_rows])
-        child_slot = slot_remap[2 * s_of_rows + np.where(go_left, 0, 1)]
-        # leaf rows drop out of the frontier
-        B = B[rows]
-        g = g[rows]
-        h = h[rows]
-        row_idx = row_idx[rows]
-        node_of_row = child_slot
-        frontier = new_frontier
-        valid = slot_remap >= 0
-        node_G = np.empty(len(new_frontier), dtype=np.float64)
-        node_H = np.empty(len(new_frontier), dtype=np.float64)
-        node_G[slot_remap[valid]] = child_G[valid]
-        node_H[slot_remap[valid]] = child_H[valid]
+        leaf_now = np.append(~split, False)[slot]
+        delta[leaf_now] = value[slot[leaf_now]]
+        if n_split == 0:
+            return _tree_of_levels(levels), delta
+        if depth == max_depth - 1:
+            # chosen-split child totals (missing bucket goes default
+            # side) become the max-depth leaves below
+            node_G = np.empty(2 * n_split)
+            node_H = np.empty(2 * n_split)
+            for c, s in enumerate(np.flatnonzero(split)):
+                f, b = feat[s], bins[s]
+                GL = hist_g[s, f, : b + 1].sum() + (hist_g[s, f, -1] if dleft[s] else 0.0)
+                HL = hist_h[s, f, : b + 1].sum() + (hist_h[s, f, -1] if dleft[s] else 0.0)
+                node_G[2 * c : 2 * c + 2] = GL, Gn[s] - GL
+                node_H[2 * c : 2 * c + 2] = HL, Hn[s] - HL
 
-    # any remaining frontier nodes at max depth become leaves; totals were
-    # carried from the parent split, so no histogram pass is needed
-    if frontier:
-        if node_G is None or node_H is None:
-            # max_depth == 0: no split level ran; fall back to one histogram
-            hist_g, hist_h = _build_histograms(B, g, h, node_of_row, len(frontier), nbp1)
-            stacked = comm.allreduce_sum(np.stack([hist_g, hist_h]))
-            node_G = stacked[0][:, 0, :].sum(axis=1)
-            node_H = stacked[1][:, 0, :].sum(axis=1)
-        vals = -node_G / (node_H + reg_lambda) * lr
-        for s, node in enumerate(frontier):
-            tree.value[node] = float(vals[s])
-        if len(row_idx):
-            delta[row_idx] = vals[node_of_row]
-    return tree, delta
+        # route rows to child slots. Per slot (the extra settled slot
+        # last): the feature to read, the first child slot (settled rows
+        # and new leaves go to the next level's extra slot), and a
+        # go-right table over bin codes. Missing is the single GLOBAL
+        # sentinel code (bin_matrix); len(edges[f]) itself is a real bin
+        # (values above the last cut).
+        read_feat = np.append(np.where(split, feat, 0), 0)
+        first_child = np.append(np.where(split, 2 * rank, 2 * n_split), 2 * n_split)
+        go_right = np.zeros((n_slots + 1, nbp1), dtype=bool)
+        sp = np.flatnonzero(split)
+        go_right[sp, :-1] = np.arange(nbp1 - 1)[None, :] > bins[sp, None]
+        go_right[sp, -1] = ~dleft[sp]
+        code = codes[read_feat[slot] * n + row]
+        slot = first_child[slot] + go_right.ravel()[slot * nbp1 + code]
+        first_id += n_slots
+        n_slots = 2 * n_split
+
+    # any remaining frontier nodes at max depth become leaves
+    if node_G is None or node_H is None:
+        # max_depth == 0: no split level ran; fall back to one histogram
+        hist_g, hist_h = _build_histograms(B, g, h, slot, n_slots, nbp1)
+        stacked = comm.allreduce_sum(np.stack([hist_g, hist_h]))
+        node_G = stacked[0][:, 0, :].sum(axis=1)
+        node_H = stacked[1][:, 0, :].sum(axis=1)
+    vals = -node_G / (node_H + reg_lambda) * lr
+    no_split = np.full(n_slots, -1)
+    levels.append((no_split, np.zeros(n_slots), no_split, no_split, vals, np.ones(n_slots, bool)))
+    live = slot < n_slots
+    delta[live] = vals[slot[live]]
+    return _tree_of_levels(levels), delta
+
+
+def _tree_of_levels(levels: list[tuple[np.ndarray, ...]]) -> _Tree:
+    return _Tree.from_dict(
+        {attr: np.concatenate(col).tolist() for attr, col in zip(_Tree.__slots__, zip(*levels))}
+    )
 
 
 def train(
@@ -842,7 +926,8 @@ def train(
             else:
                 margin += delta
             if has_eval and len(eX):
-                de = tree.predict_margin(eX, missing)
+                one = _pack([tree])
+                de = _walk(one, eX, missing, one.root)[0]
                 if K > 1:
                     e_margin[:, k] += de
                 else:

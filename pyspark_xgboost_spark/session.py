@@ -5,6 +5,18 @@ correct on a real multi-executor cluster: AQE on (runtime re-plan +
 skew-join splitting + partition coalescing), Arrow on (all our Python
 boundaries are pandas-batched), UTC session timezone (parquet timestamps
 compare bit-for-bit against the DuckDB oracle).
+
+Python workers start through ``pyspark_xgboost_spark.worker``
+(``spark.python.worker.module``). On CPython before 3.13, stock
+``pyspark.worker`` re-reads the central directory of ``pyspark.zip``
+(and of every other zip on the path) at the start of every task, which
+cost 0.1-0.4 s a task. ``pyspark.daemon`` imports a worker module only
+if its name starts with ``pyspark``; this one does, so the daemon
+imports it before it forks, and a worker's first task is covered too.
+With ``spark.python.use.daemon=false`` Spark runs the module with
+``python -m``, and it runs ``pyspark.worker`` as ``__main__``. The
+setting is fixed here and is not meant to be tuned. A session built
+without ``get_spark`` keeps the stock worker and pays the re-read.
 """
 
 from __future__ import annotations
@@ -12,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _driver_memory() -> str:
@@ -49,6 +63,15 @@ def get_spark(
         # up as multi-second spikes on giant expression trees). Static
         # conf — takes effect on first session creation in the JVM.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Python workers start through pyspark_xgboost_spark.worker, which
+        # stops each task from re-reading pyspark.zip (0.1-0.4 s a task;
+        # see that module)
+        .config("spark.python.worker.module", "pyspark_xgboost_spark.worker")
+        # The daemon imports that module before it serves any task, so a
+        # worker that cannot import this package fails every Python task,
+        # even a UDF pickled by value: put the package's root on the
+        # workers' path, whatever the driver's cwd
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)

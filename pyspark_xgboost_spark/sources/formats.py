@@ -2374,8 +2374,8 @@ def _prune_staged_path(sf_dir: str) -> str:
     the oracle's literal sf0.01 path is rewritten by check_oracle's
     directory substitution at other SFs — the scan_parquet_footer_stats
     path contract extended to staged artifacts. TMP_NS-namespaced like
-    every staged root (the oracle is only evaluated by check_oracle,
-    which never sets the namespace, so its canonical literal holds)."""
+    every staged root; the oracle names the un-namespaced literal, and
+    check_oracle rewrites it to the run's namespace."""
     return os.path.join(
         f"/tmp/spark_graft_prune{TMP_NS}" + sf_dir, "prune_li.parquet"
     )

@@ -32,6 +32,7 @@ _SCRIPT = textwrap.dedent(
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+             .config("spark.python.worker.module", "pyspark_xgboost_spark.worker")
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

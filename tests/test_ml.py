@@ -5,6 +5,8 @@ xgboost in this environment)."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.ml import Pipeline, PipelineModel
@@ -440,6 +442,120 @@ def test_continuation_num_class_mismatch_raises():
     # objective check fires first and names the mismatch
     with pytest.raises(ValueError, match="objective|num_class"):
         train(X, y3, {"n_estimators": 2}, xgb_model=multi)
+
+
+# sha256 prefixes of ``save_json()`` and of ``predict(...).tobytes()`` (plus
+# best_iteration / iteration-range margins where a case has them), recorded
+# with the per-tree kernel that copied live rows at every level and walked
+# one tree at a time with ``nonzero`` masks. The in-place routing and the
+# packed all-trees walk must reproduce them bit for bit.
+_KERNEL_GOLDENS = {
+    "regression_depth5": {
+        "model": "30e81b7cf1863682",
+        "predict": "7ceae34fb9bf816c",
+    },
+    "multiclass": {
+        "model": "52571ae9bbae8042",
+        "predict": "d5e632258d55783f",
+    },
+    "binary_nan": {
+        "model": "5b25dd8a9b3a40e6",
+        "predict": "705403be97288c4e",
+    },
+    "missing_zero": {
+        "model": "eaae4c22be8310f2",
+        "predict": "a41f889a552b640e",
+    },
+    "max_depth_0": {
+        "model": "8161e3091775da45",
+        "predict": "65e0040db558f35a",
+    },
+    "external_storage": {
+        "model": "18506e0ca2925078",
+        "predict": "7ceae34fb9bf816c",
+    },
+    "eval_early_stop": {
+        "best_iteration": "8",
+        "model": "878ecdda318a8774",
+        "predict": "6dbed0784523e306",
+    },
+    "continuation": {
+        "model": "406d8fbd40b42ac9",
+        "predict": "4bbaec3f1fa22760",
+    },
+    "iteration_range": {
+        "raw_margin_1_4": "b5f4ac697c7532db",
+        "reg_raw_margin_2_6": "2f795aa9bcd31002",
+        "model": "52571ae9bbae8042",
+        "predict": "d5e632258d55783f",
+    },
+}
+
+
+def _sha(b: bytes) -> str:
+    return hashlib.sha256(b).hexdigest()[:16]
+
+
+def _kernel_golden_data(seed: int, n: int = 1500, f: int = 5):
+    rng = np.random.RandomState(seed)
+    X = rng.randn(n, f).astype(np.float32)
+    X[:, 3] = np.round(X[:, 3] * 2)  # a coarse feature: few cut points, exact zeros
+    X[:, 4] = (rng.rand(n) < 0.3).astype(np.float32)  # binary feature
+    score = X[:, 0] - 0.7 * X[:, 1] * X[:, 2] + 0.4 * X[:, 3]
+    return X, score, rng
+
+
+def _kernel_golden_case(name: str) -> dict[str, str]:
+    X, score, rng = _kernel_golden_data(17)
+    reg = {"objective": "reg:squarederror", "n_estimators": 8, "max_depth": 5, "max_bin": 32}
+    y3 = np.digitize(score, np.quantile(score, [1 / 3, 2 / 3])).astype(np.float64)
+    multi = {"objective": "multi:softprob", "num_class": 3, "n_estimators": 5,
+             "max_depth": 4, "max_bin": 16}
+    out: dict[str, str] = {}
+    if name == "regression_depth5":
+        b = kernel.train(X, score, reg)
+    elif name == "multiclass":
+        b = kernel.train(X, y3, multi)
+    elif name == "binary_nan":
+        Xn = X.copy()
+        Xn[rng.rand(*X.shape) < 0.05] = np.nan
+        yb = (score > 0).astype(np.float64)
+        b = kernel.train(Xn, yb, {"objective": "binary:logistic", "n_estimators": 6,
+                           "max_depth": 6, "max_bin": 24})
+        X = Xn
+    elif name == "missing_zero":
+        b = kernel.train(X, score, {**reg, "missing": 0.0})
+    elif name == "max_depth_0":
+        b = kernel.train(X, score, {**reg, "max_depth": 0})
+    elif name == "external_storage":
+        b = kernel.train(X, score, {**reg, "use_external_storage": True})
+    elif name == "eval_early_stop":
+        # NaN and missing=0.0 both route through the eval-set margins
+        yn = score + rng.randn(len(score)) * 0.8
+        X = X.copy()
+        X[rng.rand(*X.shape) < 0.05] = np.nan
+        b = kernel.train(X[:1000], yn[:1000], {**reg, "n_estimators": 60, "learning_rate": 0.5,
+                                        "early_stopping_rounds": 3, "missing": 0.0},
+                  eval_set=(X[1000:], yn[1000:]))
+        out["best_iteration"] = str(b.best_iteration)
+    elif name == "continuation":
+        init = kernel.train(X, y3, {**multi, "n_estimators": 2})
+        b = kernel.train(X, y3, {**multi, "n_estimators": 3, "max_depth": 3}, xgb_model=init)
+    elif name == "iteration_range":
+        b = kernel.train(X, y3, multi)
+        out["raw_margin_1_4"] = _sha(b.raw_margin(X, iteration_range=(1, 4)).tobytes())
+        r = kernel.train(X, score, reg)
+        out["reg_raw_margin_2_6"] = _sha(r.raw_margin(X, iteration_range=(2, 6)).tobytes())
+    else:
+        raise KeyError(name)
+    out["model"] = _sha(b.save_json().encode())
+    out["predict"] = _sha(b.predict(X).tobytes())
+    return out
+
+
+@pytest.mark.parametrize("case", sorted(_KERNEL_GOLDENS))
+def test_kernel_goldens(case):
+    assert _kernel_golden_case(case) == _KERNEL_GOLDENS[case]
 
 
 def _chk_xgb_model_rejects_wrong_type(spark, reg_train):

@@ -96,8 +96,16 @@ def check_one(spark, cursor, name, fn, oracles, sf_dir):
     try:
         # path-dependent oracles (parquet_metadata footer reads)
         # carry the sf0.01 literal the driver grades at; swap in
-        # the directory under check so other SFs verify too
-        osql = oracles[name].replace("/root/testdata/sf0.01", sf_dir)
+        # the directory under check so other SFs verify too, and the
+        # run's SPARK_GRAFT_TMP_NS into staged-file literals, where
+        # formats._prune_staged_path has Spark write them
+        from pyspark_xgboost_spark.sources.formats import TMP_NS
+
+        osql = (
+            oracles[name]
+            .replace("/root/testdata/sf0.01", sf_dir)
+            .replace("/tmp/spark_graft_prune/", f"/tmp/spark_graft_prune{TMP_NS}/")
+        )
         res = cursor.execute(osql)
         dcols = [d[0] for d in res.description]
         drows = res.fetchall()
