@@ -13,8 +13,8 @@ Re-expresses the capabilities of the reference library
 
 Everything is public PySpark DataFrame/SQL API; the only imperative kernel
 is the gradient-boosting math, which runs inside Arrow-batched
-``mapInPandas`` / ``pandas_udf`` boundaries (the same architecture the
-reference uses around the XGBoost C++ core).
+``mapInArrow`` / ``arrow_udf`` boundaries (the architecture the reference
+builds around the XGBoost C++ core with ``mapInPandas`` / ``pandas_udf``).
 """
 
 __version__ = "0.1.0"

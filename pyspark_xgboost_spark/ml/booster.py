@@ -48,6 +48,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import tempfile
 from functools import cached_property
 from typing import NamedTuple
@@ -836,9 +837,14 @@ def train(
         # live in disk-backed memmaps instead of process memory.
         X = _round_sig(X, int(p.get("external_storage_precision") or 5))
         workdir = tempfile.mkdtemp(prefix="gbt_ext_")
-        X = _spill_to_memmap(X, workdir, "features")
-        edges = compute_bin_edges(X, int(p["max_bin"]), comm)
-        B = _spill_to_memmap(bin_matrix(X, edges, missing), workdir, "codes")
+        try:
+            X = _spill_to_memmap(X, workdir, "features")
+            edges = compute_bin_edges(X, int(p["max_bin"]), comm)
+            B = _spill_to_memmap(bin_matrix(X, edges, missing), workdir, "codes")
+        finally:
+            # the maps stay valid once their files are unlinked; the disk
+            # space goes back when training drops the last view of them
+            shutil.rmtree(workdir, ignore_errors=True)
     else:
         edges = compute_bin_edges(X, int(p["max_bin"]), comm)
         B = bin_matrix(X, edges, missing)

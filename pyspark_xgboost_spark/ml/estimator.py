@@ -9,13 +9,19 @@ Re-implements the four public classes of the reference
   or an ``array<numeric>`` column; unwrapped via
   ``pyspark.ml.functions.vector_to_array(..., 'float32')`` exactly as
   the reference does (xgboost_core.py:441),
-* training runs inside ``mapInPandas`` (Arrow batches; reference
-  xgboost_core.py:512-513), single-worker path gathers the partition
-  and calls the kernel (reference O12), multi-worker path uses barrier
-  execution + allGather histogram allreduce (reference O11/O22, see
-  tracker.py),
-* inference is an iterator pandas_udf so the model deserializes once
-  per Python worker, not per batch (reference xgboost_core.py:590-612),
+* training runs inside ``mapInArrow`` on Arrow record batches (the
+  reference uses ``mapInPandas``, xgboost_core.py:512-513),
+  single-worker path gathers the partition and calls the kernel
+  (reference O12), multi-worker path uses barrier execution + socket
+  histogram allreduce (reference O11/O22, see tracker.py),
+* the classifier infers its objective from the label cardinality
+  inside the training task (``data.label_objective``), where the
+  reference runs a driver-side countDistinct job first (O4,
+  xgboost_core.py:328-337),
+* inference is an iterator ``arrow_udf`` so the model deserializes once
+  per Python worker, not per batch (reference xgboost_core.py:590-612,
+  a pandas UDF), and the feature matrix is read from the Arrow list
+  column without per-row arrays (``data.features_matrix``),
 * classifier output math matches the reference: binary margins stacked
   ±m with sigmoid, multiclass softmax, prediction = argmax of
   *probability* (xgboost_core.py:665-679), raw/probability re-wrapped
@@ -34,7 +40,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import cloudpickle, keyword_only
 from pyspark.ml import Estimator, Model
 from pyspark.ml.functions import array_to_vector, vector_to_array
@@ -53,7 +59,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyspark_xgboost_spark.ml import booster as kernel
-from pyspark_xgboost_spark.ml.data import batches_to_matrices
+from pyspark_xgboost_spark.ml.data import (
+    FIT_RESULT_SCHEMA,
+    batches_to_matrices,
+    features_matrix,
+    fit_result,
+    fit_result_json,
+    label_objective,
+)
 from pyspark_xgboost_spark.ml.params import (
     KERNEL_PARAM_DEFAULTS,
     PYSPARK_SPECIFIC_PARAMS,
@@ -245,6 +258,8 @@ def _features_to_array_col(dataset: DataFrame, features_col: str) -> F.Column:
 
 class _XgboostEstimator(Estimator, _XgboostParamsBase, MLReadable, MLWritable):
     _objective_fixed: str | None = None  # regressor pins reg:squarederror
+    # the classifier's training task infers its objective from the labels
+    _infers_labels = False
 
     @keyword_only
     def __init__(self, **kwargs):
@@ -263,7 +278,12 @@ class _XgboostEstimator(Estimator, _XgboostParamsBase, MLReadable, MLWritable):
             _features_to_array_col(dataset, self.getOrDefault(self.featuresCol)),
             F.col(self.getOrDefault(self.labelCol)).cast("double").alias("label"),
         ]
-        flags = dict(has_weight=False, has_base_margin=False, has_validation=False)
+        flags = dict(
+            has_weight=False,
+            has_base_margin=False,
+            has_validation=False,
+            distinct_labels=self._infers_labels,
+        )
         if self.isDefined(self.weightCol) and self.getOrDefault(self.weightCol):
             cols.append(F.col(self.getOrDefault(self.weightCol)).cast("double").alias("weight"))
             flags["has_weight"] = True
@@ -286,9 +306,6 @@ class _XgboostEstimator(Estimator, _XgboostParamsBase, MLReadable, MLWritable):
             flags["has_base_margin"] = True
         return dataset.select(*cols), flags
 
-    def _infer_objective(self, dataset: DataFrame, params: dict) -> dict:
-        return params  # regressor: fixed objective
-
     def _fit(self, dataset: DataFrame):
         self._validate_params()
         narrowed, flags = self._select_training_columns(dataset)
@@ -305,7 +322,6 @@ class _XgboostEstimator(Estimator, _XgboostParamsBase, MLReadable, MLWritable):
                 raise ValueError(
                     f"XgboostRegressor requires a reg:* objective, got {user_obj!r}"
                 )
-        params = self._infer_objective(narrowed, params)
 
         init_model = self.getOrDefault(getattr(self, "xgb_model"))
         init_model_json = init_model.save_json() if init_model is not None else None
@@ -372,15 +388,24 @@ def _fit_single_worker(
     The init booster ships into the task closure as its JSON string;
     callbacks ride Spark's cloudpickle closure serialization."""
 
-    def train_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def train_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         train_b, val_b = batches_to_matrices(batches, **flags)
+        task_params = params
+        if flags["distinct_labels"]:
+            try:
+                task_params = label_objective(
+                    [b.labels for b in (train_b, val_b) if b is not None], params
+                )
+            except ValueError as e:
+                yield fit_result(str(e))
+                return
         if len(train_b.X) == 0:
             return  # empty partition yields nothing; driver takes first row
         eval_set = (val_b.X, val_b.y) if val_b is not None and len(val_b.X) else None
         bst = kernel.train(
             train_b.X,
             train_b.y,
-            params,
+            task_params,
             sample_weight=train_b.w,
             base_margin=train_b.base_margin,
             eval_set=eval_set,
@@ -390,12 +415,10 @@ def _fit_single_worker(
             ),
             callbacks=callbacks,
         )
-        yield pd.DataFrame({"model_json": [bst.save_json()]})
+        yield fit_result(bst.save_json())
 
-    rows = narrowed.repartition(1).mapInPandas(train_fn, "model_json string").collect()
-    if not rows:
-        raise ValueError("cannot fit on an empty dataset")
-    return rows[0][0]
+    rows = narrowed.repartition(1).mapInArrow(train_fn, FIT_RESULT_SCHEMA).collect()
+    return fit_result_json(rows, "cannot fit on an empty dataset")
 
 
 # ---------------------------------------------------------------------------
@@ -446,18 +469,15 @@ class XgboostRegressorModel(_XgboostModelBase, _RegressorColumnParams):
             self.isDefined(self.baseMarginCol) and self.getOrDefault(self.baseMarginCol)
         )
 
-        @F.pandas_udf("double")
-        def predict_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
+        @F.arrow_udf("double")
+        def predict_udf(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
             # deserialize once per python worker (iterator UDF form —
             # reference xgboost_core.py:590-599)
             bst = kernel.Booster.load_json(booster_json)
-            for pdf in it:
-                if len(pdf) == 0:
-                    yield pd.Series(dtype="float64")
-                    continue
-                X = np.stack(pdf["values"].to_numpy())
-                bm = pdf["baseMargin"].to_numpy(np.float64) if has_bm else None
-                yield pd.Series(bst.predict(X, base_margin=bm))
+            for batch in it:
+                X = features_matrix(batch.field("values"))
+                bm = batch.field("baseMargin").to_numpy(zero_copy_only=False) if has_bm else None
+                yield pa.array(bst.predict(X, base_margin=bm))
 
         pred_col = self.getOrDefault(self.predictionCol)
         return dataset.withColumn(pred_col, predict_udf(self._predict_struct_col(dataset)))
@@ -477,20 +497,15 @@ class XgboostClassifierModel(_XgboostModelBase, _ClassifierColumnParams):
             self.isDefined(self.baseMarginCol) and self.getOrDefault(self.baseMarginCol)
         )
 
-        @F.pandas_udf(
+        @F.arrow_udf(
             "rawPrediction array<double>, prediction double, probability array<double>"
         )
-        def predict_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def predict_udf(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
             bst = kernel.Booster.load_json(booster_json)
             binary = bst.objective == "binary:logistic"
-            for pdf in it:
-                if len(pdf) == 0:
-                    yield pd.DataFrame(
-                        {"rawPrediction": [], "prediction": [], "probability": []}
-                    )
-                    continue
-                X = np.stack(pdf["values"].to_numpy())
-                bm = pdf["baseMargin"].to_numpy(np.float64) if has_bm else None
+            for batch in it:
+                X = features_matrix(batch.field("values"))
+                bm = batch.field("baseMargin").to_numpy(zero_copy_only=False) if has_bm else None
                 margins = bst.predict(X, output_margin=True, base_margin=bm)
                 if binary:
                     # reference: stack ±margin, sigmoid → [1-p, p]
@@ -503,12 +518,16 @@ class XgboostClassifierModel(_XgboostModelBase, _ClassifierColumnParams):
                     e = np.exp(margins - margins.max(axis=1, keepdims=True))
                     probs = e / e.sum(axis=1, keepdims=True)
                 preds = probs.argmax(axis=1).astype(np.float64)
-                yield pd.DataFrame(
-                    {
-                        "rawPrediction": list(raw),
-                        "prediction": preds,
-                        "probability": list(probs),
-                    }
+                # every row's vector has the same length: one offsets array
+                k = raw.shape[1]
+                offsets = pa.array(np.arange(0, len(raw) * k + 1, k, dtype=np.int32))
+                yield pa.StructArray.from_arrays(
+                    [
+                        pa.ListArray.from_arrays(offsets, pa.array(raw.ravel())),
+                        pa.array(preds),
+                        pa.ListArray.from_arrays(offsets, pa.array(probs.ravel())),
+                    ],
+                    names=["rawPrediction", "prediction", "probability"],
                 )
 
         struct_col = "_prediction_struct"
@@ -549,36 +568,22 @@ class XgboostRegressor(_XgboostEstimator, _RegressorColumnParams):
 class XgboostClassifier(_XgboostEstimator, _ClassifierColumnParams):
     """GBT classifier Estimator (reference sparkdl/xgboost/xgboost.py:98-189).
 
-    Objective inferred from the label cardinality with a global
-    countDistinct — exactly the reference's O4 (xgboost_core.py:328-337):
-    2 → binary:logistic, >2 → multi:softprob with num_class set.
+    Objective inferred from the label cardinality with the reference's
+    O4 rules (xgboost_core.py:328-337): 2 → binary:logistic,
+    >2 → multi:softprob with num_class set, a user-set objective kept.
+    The labels must be exactly 0..k-1. The reference counts them with a
+    driver-side countDistinct job before training; here the training
+    task does it (``data.label_objective``), distributed through the
+    allgather the ranks already make, so a fit runs one Spark job.
     """
 
     _objective_fixed = None
+    _infers_labels = True
 
     @keyword_only
     def __init__(self, **kwargs):
         super().__init__(**kwargs)
         self._setDefault(rawPredictionCol="rawPrediction", probabilityCol="probability")
-
-    def _infer_objective(self, narrowed: DataFrame, params: dict) -> dict:
-        agg = narrowed.agg(
-            F.countDistinct("label").alias("k"), F.max("label").alias("mx"),
-            F.min("label").alias("mn"),
-        ).collect()[0]
-        k = int(agg["k"])
-        if k < 2:
-            raise ValueError(f"classifier needs >= 2 distinct labels, found {k}")
-        if int(agg["mn"]) != 0 or int(agg["mx"]) != k - 1:
-            raise ValueError(
-                f"labels must be contiguous integers 0..{k - 1}, "
-                f"found range [{agg['mn']}, {agg['mx']}]"
-            )
-        if params.get("objective") in (None, "reg:squarederror"):
-            params["objective"] = "binary:logistic" if k == 2 else "multi:softprob"
-        if params["objective"] == "multi:softprob":
-            params["num_class"] = k
-        return params
 
     def _create_model(self, booster: kernel.Booster) -> XgboostClassifierModel:
         return XgboostClassifierModel(booster)

@@ -3,7 +3,9 @@
 Reference architecture (xgboost_core.py:358-433): gang-schedule
 ``num_workers`` tasks with ``mapInPandas(...).rdd.barrier()``, rendezvous
 via ``BarrierTaskContext``, run an allreduce ring among the workers, and
-only partition 0 returns the fitted model. The reference's ring is
+only partition 0 returns the fitted model. Ours gang-schedules with
+``mapInArrow(..., barrier=True)``: the tasks read Arrow record batches
+and rank 0 yields a one-row batch. The reference's ring is
 Rabit (tracker bootstrapped on partition 0 and broadcast through
 ``allGather`` — utils.py:64-126); ours is the direct-TCP reduce star in
 ``comm.py``, reached with ZERO barrier RPCs (each costs a measured
@@ -23,6 +25,14 @@ Scheduling hazards mirrored from the reference:
 * empty shards: feature dimensionality is agreed via one socket
   allgather before training so zero-row workers participate in every
   reduction with correctly-shaped zero histograms.
+
+A classifier's ranks add their distinct labels to that same allgather
+and resolve the objective from the union (``data.label_objective``;
+the reference runs a driver-side countDistinct job instead, O4). Every
+rank sees the same union, so a label error stops all of them before the
+first allreduce; rank 0 reports it in place of the model and the driver
+raises it, so the barrier stage itself succeeds and is never retried
+for bad input.
 """
 
 from __future__ import annotations
@@ -32,7 +42,7 @@ import logging
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import BarrierTaskContext
 from pyspark.sql import DataFrame
 
@@ -45,7 +55,13 @@ from pyspark_xgboost_spark.ml.comm import (
     connect_rendezvous,
     cookie_magic,
 )
-from pyspark_xgboost_spark.ml.data import batches_to_matrices
+from pyspark_xgboost_spark.ml.data import (
+    FIT_RESULT_SCHEMA,
+    batches_to_matrices,
+    fit_result,
+    fit_result_json,
+    label_objective,
+)
 
 _logger = logging.getLogger("pyspark_xgboost_spark.ml")
 
@@ -162,21 +178,37 @@ def fit_distributed(
 
     has_validation = flags.get("has_validation", False)
     has_weight = flags.get("has_weight", False)
+    infer_labels = flags.get("distinct_labels", False)
     # star | tree | auto (auto = tree beyond _TREE_TOPOLOGY_THRESHOLD
     # workers); read driver-side, closed over into the barrier tasks
     topology = narrowed.sparkSession.conf.get("spark_graft.ml.comm_topology", "auto")
 
-    def train_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def train_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         context = BarrierTaskContext.get()
         train_b, val_b = batches_to_matrices(batches, **flags)
         comm = rendezvous(context, topology=topology)
 
         # agree on feature dimensionality so empty shards build
-        # correctly-shaped (all-zero) histograms
+        # correctly-shaped (all-zero) histograms; a classifier's ranks
+        # add their distinct labels to the same round
         f_local = int(train_b.X.shape[1]) if train_b.X.size else 0
-        f_global = max(
-            int(b.decode() or 0) for b in comm.allgather_bytes(str(f_local).encode())
-        )
+        labels = []
+        if infer_labels:
+            labels = np.concatenate([b.labels for b in (train_b, val_b) if b is not None]).tolist()
+        gathered = [
+            json.loads(b) for b in comm.allgather_bytes(json.dumps([f_local, labels]).encode())
+        ]
+        f_global = max(f for f, _ in gathered)
+        task_params = params
+        if infer_labels:
+            try:
+                task_params = label_objective([ls for _, ls in gathered], params)
+            except ValueError as e:
+                # every rank resolved the same union: all stop here
+                comm.close()
+                if comm.rank == 0:
+                    yield fit_result(str(e))
+                return
         if f_global == 0:
             raise ValueError("cannot fit: all partitions are empty")
 
@@ -194,7 +226,7 @@ def fit_distributed(
         bst = kernel.train(
             train_s.X,
             train_s.y,
-            params,
+            task_params,
             sample_weight=train_s.w if has_weight else None,
             base_margin=None,  # unsupported distributed (reference xgboost.py:50-54)
             eval_set=eval_set,
@@ -213,13 +245,11 @@ def fit_distributed(
         # costs seconds in the Python poll loop.
         comm.close()
         if comm.rank == 0:
-            yield pd.DataFrame({"model_json": [bst.save_json()]})
+            yield fit_result(bst.save_json())
 
-    # Spark >= 3.4 runs the Python runner itself inside a barrier stage
+    # Spark >= 3.5 runs the Python runner itself inside a barrier stage
     # via barrier=True — the modern form of the reference's
     # mapInPandas(...).rdd.barrier().mapPartitions(identity) idiom
     # (xgboost_core.py:427-430).
-    rows = narrowed.mapInPandas(train_fn, "model_json string", barrier=True).collect()
-    if not rows:
-        raise ValueError("distributed training returned no model")
-    return rows[0][0]
+    rows = narrowed.mapInArrow(train_fn, FIT_RESULT_SCHEMA, barrier=True).collect()
+    return fit_result_json(rows, "distributed training returned no model")

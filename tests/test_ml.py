@@ -93,11 +93,22 @@ def _chk_multiclass_classifier(spark):
 
 
 def _chk_label_validation(spark):
-    bad = spark.createDataFrame(
+    """Labels must be exactly 0..k-1. The training task checks them and
+    the driver raises its message, at one worker and at two."""
+    gap = spark.createDataFrame(
         [(Vectors.dense(1.0), 1), (Vectors.dense(2.0), 3)] * 10, ["features", "label"]
     )
-    with pytest.raises(Exception, match="contiguous"):
-        XgboostClassifier(n_estimators=2).fit(bad)
+    # k=3 and max=2, but 1.5 is not a class index
+    fractional = spark.createDataFrame(
+        [(Vectors.dense(float(v)), v) for v in (0.0, 1.5, 2.0)] * 10, ["features", "label"]
+    )
+    one = spark.createDataFrame([(Vectors.dense(1.0), 0)] * 10, ["features", "label"])
+    for workers in (1, 2):
+        for bad in (gap, fractional):
+            with pytest.raises(ValueError, match="contiguous integers 0"):
+                XgboostClassifier(n_estimators=2, num_workers=workers).fit(bad)
+        with pytest.raises(ValueError, match="needs >= 2 distinct labels, found 1"):
+            XgboostClassifier(n_estimators=2, num_workers=workers).fit(one)
 
 
 def _chk_param_system(spark):
@@ -556,6 +567,136 @@ def _kernel_golden_case(name: str) -> dict[str, str]:
 @pytest.mark.parametrize("case", sorted(_KERNEL_GOLDENS))
 def test_kernel_goldens(case):
     assert _kernel_golden_case(case) == _KERNEL_GOLDENS[case]
+
+
+def _record_batches(values, labels, indicator=None):
+    import pyarrow as pa
+
+    cols = {
+        "values": pa.array(values, pa.list_(pa.float32())),
+        "label": pa.array(labels, pa.float64()),
+    }
+    if indicator is not None:
+        cols["validationIndicator"] = pa.array(indicator, pa.bool_())
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def test_batches_to_matrices_reads_arrow_lists():
+    import pyarrow as pa
+
+    from pyspark_xgboost_spark.ml.data import batches_to_matrices, features_matrix
+
+    a = _record_batches([[1, 2], [3, None]], [0.0, 1.0])
+    b = _record_batches([[5, 6]], [None])
+    train, val = batches_to_matrices(iter([a, b]), distinct_labels=True)
+    assert val is None
+    np.testing.assert_array_equal(train.X, np.array([[1, 2], [3, np.nan], [5, 6]], np.float32))
+    assert train.X.dtype == np.float32
+    np.testing.assert_array_equal(train.y, [0.0, 1.0, np.nan])  # a null label reads as NaN
+    np.testing.assert_array_equal(train.labels, [0.0, 1.0])  # ... and is not a label
+
+    # a slice keeps its own rows: offsets move, the child array does not
+    lists = pa.array([[9, 9], [1, 2], [3, 4], [9, 9]], pa.list_(pa.float32()))
+    np.testing.assert_array_equal(features_matrix(lists.slice(1, 2)), [[1, 2], [3, 4]])
+    chunked = pa.chunked_array([lists.slice(0, 1), lists.slice(2, 2)])
+    np.testing.assert_array_equal(features_matrix(chunked), [[9, 9], [3, 4], [9, 9]])
+
+    for ragged in ([[1, 2], [3]], [[1, 2], None], [None]):
+        with pytest.raises(ValueError, match="inconsistent dimensions"):
+            batches_to_matrices(iter([_record_batches(ragged, [0.0] * len(ragged))]))
+
+
+def test_batches_to_matrices_validation_split_and_empty():
+    from pyspark_xgboost_spark.ml.data import batches_to_matrices
+
+    batch = _record_batches(
+        [[0, 0], [1, 1], [2, 2], [3, 3]], [0.0, 1.0, 2.0, 1.0], [False, True, None, True]
+    )
+    train, val = batches_to_matrices(iter([batch]), has_validation=True, distinct_labels=True)
+    # a null indicator is a training row
+    np.testing.assert_array_equal(train.X, [[0, 0], [2, 2]])
+    np.testing.assert_array_equal(train.y, [0.0, 2.0])
+    np.testing.assert_array_equal(val.X, [[1, 1], [3, 3]])
+    np.testing.assert_array_equal(train.labels, [0.0, 2.0])
+    np.testing.assert_array_equal(val.labels, [1.0])
+
+    train, val = batches_to_matrices(iter([]), has_validation=True, distinct_labels=True)
+    assert train.X.shape == (0, 0) and len(train.y) == 0 and len(train.labels) == 0
+    assert val.X.shape == (0, 0)
+    train, val = batches_to_matrices(iter([batch.slice(0, 0)]))
+    assert train.X.shape == (0, 0) and val is None and train.labels is None
+
+
+def test_label_objective_rules():
+    from pyspark_xgboost_spark.ml.data import label_objective
+
+    assert label_objective([[1.0, 0.0]], {})["objective"] == "binary:logistic"
+    multi = label_objective([[0.0], [2.0, 1.0]], {"objective": "reg:squarederror"})
+    assert (multi["objective"], multi["num_class"]) == ("multi:softprob", 3)
+    # a user-set objective is kept
+    assert label_objective([[0.0, 1.0]], {"objective": "multi:softprob"})["num_class"] == 2
+    assert label_objective([[0.0, 1.0, 2.0]], {"objective": "binary:logistic"}) == {
+        "objective": "binary:logistic"
+    }
+    for bad in ([0.0, 1.5, 2.0], [1.0, 2.0], [-1.0, 0.0], [0.0, 1.0, np.nan]):
+        with pytest.raises(ValueError, match="contiguous integers"):
+            label_objective([bad], {})
+    with pytest.raises(ValueError, match="found 0"):
+        label_objective([[], []], {})
+
+
+def test_distributed_label_union(spark):
+    """Each rank holds only some of the classes; the objective comes from
+    the union of every rank's labels. The input's plan ends in
+    coalesce(2), so the fit keeps its two partitions as the two shards."""
+    from pyspark_xgboost_spark.ml.tracker import _plan_tail_is_repartition
+
+    for shard1, k, objective in (([1.0, 2.0], 3, "multi:softprob"), ([1.0], 2, "binary:logistic")):
+        rows = [(Vectors.dense(float(i), float(i % 3)), 0.0) for i in range(60)] + [
+            (Vectors.dense(float(i), float(i % 3)), shard1[i % len(shard1)]) for i in range(60)
+        ]
+        df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2)).toDF(
+            "features", "label"
+        ).coalesce(2)
+        assert _plan_tail_is_repartition(df.select("features", "label"))
+        shards = df.rdd.mapPartitions(lambda it: [sorted({r.label for r in it})]).collect()
+        assert shards == [[0.0], shard1]
+        model = XgboostClassifier(n_estimators=3, max_depth=2, num_workers=2).fit(df)
+        assert model.numClasses == k
+        assert model.get_booster().objective == objective
+
+
+def test_worker_modules_skip_pyspark_ml():
+    """The modules a Python worker loads for training and scoring must not
+    pull in ``pyspark.ml`` (through ``ml.estimator`` or otherwise)."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import pyspark_xgboost_spark.ml.data, pyspark_xgboost_spark.ml.booster\n"
+        "import pyspark_xgboost_spark.ml.tracker\n"
+        "bad = [m for m in sys.modules if m == 'pyspark.ml' or m.startswith('pyspark.ml.')\n"
+        "       or m == 'pyspark_xgboost_spark.ml.estimator']\n"
+        "print(bad)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "[]"
+
+
+def test_external_storage_leaves_no_temp_dir(tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    X, score, _ = _kernel_golden_data(3, n=300)
+    params = {"n_estimators": 3, "max_depth": 3, "use_external_storage": True}
+    kernel.train(X, score, params).predict(X)
+    assert not list(tmp_path.glob("gbt_ext_*"))
 
 
 def _chk_xgb_model_rejects_wrong_type(spark, reg_train):

@@ -20,12 +20,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...] [--serial]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import threading
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
