@@ -13,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 HEADLINE = [
     "agg_group",
@@ -505,11 +506,11 @@ def main() -> None:
         else:
             rounds = [
                 int(m.group(1))
-                for p in _glob.glob("/root/repo/BENCH_r*.json")
+                for p in _glob.glob(os.path.join(_ROOT, "BENCH_r*.json"))
                 if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
             ]
             n = max(rounds, default=0) + 1
-        full_path = f"/root/repo/BENCH_full_r{n:02d}.json"
+        full_path = os.path.join(_ROOT, f"BENCH_full_r{n:02d}.json")
         with open(full_path, "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=True)
         print(f"# full per-query artifact: {full_path}", file=sys.stderr)

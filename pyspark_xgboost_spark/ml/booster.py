@@ -16,11 +16,11 @@ tree-node×feature×bin, and the histograms — NOT the rows — are summed
 across workers. All workers then derive identical splits, so the
 ensemble is bit-identical on every worker. This is the same
 aggregation pattern XGBoost runs over Rabit; here the reduction is a
-``Comm`` abstraction: in-process no-op for single-worker training,
-``BarrierTaskContext.allGather`` for Spark barrier-mode training
-(see tracker.py). Histograms are O(nodes × features × bins) — KBs to
-a few MB — regardless of shard row count, which is what makes the
-pattern viable at 100 TB.
+``Comm`` abstraction: in-process no-op ``LocalComm`` for single-worker
+training, the socket star ``comm.SocketComm`` for Spark barrier-mode
+training (see tracker.py). Histograms are O(nodes × features × bins) —
+KBs to a few MB — regardless of shard row count, which is what makes
+the pattern viable at 100 TB.
 
 Data layout, chosen so that training and prediction are array passes
 rather than per-node or per-tree Python loops:
@@ -71,6 +71,12 @@ class LocalComm:
 
     def allgather_rows(self, arr: np.ndarray) -> np.ndarray:
         return arr
+
+    def allgather_bytes(self, b: bytes) -> list[bytes]:
+        return [b]
+
+    def close(self) -> None:
+        pass
 
 
 # ---------------------------------------------------------------------------

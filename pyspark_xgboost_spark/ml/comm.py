@@ -25,18 +25,12 @@ rank order (G). Every worker issues the same rounds in the same order
 blocks on its response before the next round, so the server can read
 exactly one message per client per round.
 
-Star topology is O(workers × payload) on rank 0 per round; histogram
-payloads are O(nodes × features × bins) ≈ low MB, independent of data
-scale, so this holds up at 100-TB row counts for gangs up to a few
-dozen workers. Beyond that, ``build_tree_comm`` provides a two-level
-tree: workers form √n-sized groups of contiguous ranks, each group
-leader hosts the same ``_ReduceServer`` for its group with a
-``reduce_hook`` that chains the group result into an upper-level
-exchange among leaders (root = rank 0). Per round rank 0 then moves
-O(√n × payload) instead of O(n × payload), members are byte-identical
-to star clients, and both topologies sit behind the same ``SocketComm``
-interface — the kernel cannot tell them apart (property-tested:
-identical reductions).
+One fit task, one star topology: rank 0 moves O(workers × payload) per
+round. Histogram payloads are O(nodes × features × bins), independent
+of data scale; the traced ``gbt`` benchmark moves about 16 KB per
+allreduce call (1.15 MB in 73 calls per benchmark operation), so the
+hub is nowhere near its limit at the gang sizes a fit runs. One-worker
+fits use ``booster.LocalComm`` behind the same interface.
 """
 
 from __future__ import annotations
@@ -161,22 +155,12 @@ def _unpack_list(b: bytes) -> list[bytes]:
 
 
 class _ReduceServer:
-    """Reduction hub (rank 0 of a star, or a group leader in the tree).
-    One thread; one blocking read per client per round (clients are
-    lock-stepped by design).
+    """Reduction hub, rank 0 of the star. One thread; one blocking read
+    per client per round (clients are lock-stepped by design). It binds
+    the first free port of ``ports`` and admits only clients that
+    complete the ``magic`` handshake."""
 
-    ``reduce_hook(op, result) -> bytes`` — if given, called after the
-    local reduction and before replying; the hook's return value is
-    what every client (and the local rank) receives. The tree topology
-    uses it to chain a group's partial result into the upper-level
-    exchange. ``quit_hook()`` — called once when the quit round drains,
-    so a leader propagates shutdown upstream.
-    """
-
-    def __init__(self, n_clients: int, host: str = "", magic: bytes = b"\x00" * _MAGIC_LEN,
-                 ports: list[int] | None = None, reduce_hook=None, quit_hook=None):
-        self._reduce_hook = reduce_hook
-        self._quit_hook = quit_hook
+    def __init__(self, n_clients: int, magic: bytes, ports: list[int], host: str = ""):
         self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         # bind the specific address clients will dial; the wildcard is
@@ -186,39 +170,29 @@ class _ReduceServer:
         # the handshake gates entry either way, but a scoped bind keeps
         # the endpoint off unrelated interfaces.
         bind_hosts = [host] if host else ["0.0.0.0"]
-        if ports:
-            bound = False
-            for bh in bind_hosts:
-                addr_not_local = False
-                for p in ports:
-                    try:
-                        self._srv.bind((bh, p))
-                        bound = True
-                        break
-                    except OSError as e:
-                        if e.errno == errno.EADDRNOTAVAIL:
-                            addr_not_local = True
-                            break
-                        continue
-                if bound:
-                    break
-                if addr_not_local and bh != "0.0.0.0":
-                    bind_hosts.append("0.0.0.0")
-                    continue
-            if not bound:
-                raise OSError(
-                    f"rendezvous: all {len(ports)} candidate ports in use; "
-                    "the barrier stage will retry with a fresh port walk"
-                )
-        else:
-            for bh in bind_hosts:
+        bound = False
+        for bh in bind_hosts:
+            addr_not_local = False
+            for p in ports:
                 try:
-                    self._srv.bind((bh, 0))
+                    self._srv.bind((bh, p))
+                    bound = True
                     break
                 except OSError as e:
-                    if e.errno != errno.EADDRNOTAVAIL or bh == "0.0.0.0":
-                        raise
-                    bind_hosts.append("0.0.0.0")
+                    if e.errno == errno.EADDRNOTAVAIL:
+                        addr_not_local = True
+                        break
+                    continue
+            if bound:
+                break
+            if addr_not_local and bh != "0.0.0.0":
+                bind_hosts.append("0.0.0.0")
+                continue
+        if not bound:
+            raise OSError(
+                f"rendezvous: all {len(ports)} candidate ports in use; "
+                "the barrier stage will retry with a fresh port walk"
+            )
         self._srv.listen(n_clients + 4)
         self.port = self._srv.getsockname()[1]
         self._magic = magic
@@ -284,8 +258,6 @@ class _ReduceServer:
                         c.close()
                     except OSError:
                         pass
-                if self._quit_hook is not None:
-                    self._quit_hook()
                 self._own_result = b""
                 self._own_done.set()
                 break
@@ -300,8 +272,6 @@ class _ReduceServer:
                 result = _np_dumps(total)
             else:  # b"G"
                 result = _pack_list(payloads)
-            if self._reduce_hook is not None:
-                result = self._reduce_hook(op0, result)
             for c in self._conns:
                 _send_msg(c, op0, result)
             self._own_result = result
@@ -356,109 +326,3 @@ class SocketComm:
             except OSError:
                 pass
             self._sock.close()
-
-
-# ---------------------------------------------------------------------------
-# two-level tree topology
-# ---------------------------------------------------------------------------
-
-
-def _upper_chain_hook(upper_round):
-    """reduce_hook chaining a group's partial result into the leaders'
-    upper-level exchange. 'S': the group sum is one leader contribution,
-    the upper sum is global. 'G': the group's packed item list is one
-    leader contribution; flatten the leader-ordered list of packed lists
-    — groups are contiguous rank ranges and leaders exchange in leader
-    order, so the flattening IS global rank order."""
-
-    def hook(op: bytes, result: bytes) -> bytes:
-        if op == b"S":
-            return upper_round(b"S", result)
-        items: list[bytes] = []
-        for blob in _unpack_list(upper_round(b"G", result)):
-            items.extend(_unpack_list(blob))
-        return _pack_list(items)
-
-    return hook
-
-
-def build_tree_comm(
-    rank: int,
-    n_workers: int,
-    hosts: list[str],
-    base_cookie: str,
-    fanout: int,
-    deadline_s: float = 120.0,
-) -> SocketComm:
-    """Two-level tree allreduce behind the plain ``SocketComm`` interface.
-
-    Ranks form ``fanout``-sized groups of contiguous ranks; the first
-    rank of each group leads it, hosting a ``_ReduceServer`` whose
-    reduce_hook chains into the leaders' upper exchange (root = rank 0's
-    second ``_ReduceServer``). Per-group and upper rendezvous derive
-    their own cookie (hence port walk + handshake magic) from
-    ``base_cookie``, so servers never collide even on one host — and a
-    client probing another group's server is rejected by the magic,
-    exactly like the star rendezvous. ``hosts[r]`` is the dialable
-    address of rank r (the barrier task roster).
-
-    Per round, rank 0 moves O(fanout + n/fanout) payloads instead of
-    O(n); fanout ≈ √n balances the two levels. Members run the same
-    client code as the star — the topology is invisible above this
-    function.
-    """
-    leader = (rank // fanout) * fanout
-    group_cookie = f"{base_cookie}|tree-group-{leader}"
-    upper_cookie = f"{base_cookie}|tree-upper"
-
-    if rank != leader:
-        sock = connect_rendezvous(
-            hosts[leader],
-            candidate_ports(group_cookie),
-            cookie_magic(group_cookie),
-            rank - leader,
-            deadline_s=deadline_s,
-        )
-        return SocketComm(rank, n_workers, sock=sock)
-
-    n_leaders = (n_workers + fanout - 1) // fanout
-    if rank == 0:
-        upper_server = _ReduceServer(
-            n_clients=n_leaders - 1,
-            host=hosts[0],
-            magic=cookie_magic(upper_cookie),
-            ports=candidate_ports(upper_cookie),
-        )
-        upper_round = upper_server.local_round
-        quit_hook = lambda: upper_server.local_round(b"Q", b"")  # noqa: E731
-    else:
-        usock = connect_rendezvous(
-            hosts[0],
-            candidate_ports(upper_cookie),
-            cookie_magic(upper_cookie),
-            rank // fanout,
-            deadline_s=deadline_s,
-        )
-
-        def upper_round(op: bytes, payload: bytes) -> bytes:
-            _send_msg(usock, op, payload)
-            return _recv_msg(usock)[1]
-
-        def quit_hook() -> None:
-            try:
-                _send_msg(usock, b"Q", b"")
-                _recv_msg(usock)
-            except OSError:
-                pass
-            usock.close()
-
-    group_n = min(fanout, n_workers - leader)
-    group_server = _ReduceServer(
-        n_clients=group_n - 1,
-        host=hosts[rank],
-        magic=cookie_magic(group_cookie),
-        ports=candidate_ports(group_cookie),
-        reduce_hook=_upper_chain_hook(upper_round),
-        quit_hook=quit_hook,
-    )
-    return SocketComm(rank, n_workers, server=group_server)

@@ -1,20 +1,21 @@
 """Arrow-batch → feature-matrix assembly (reference data.py rewrite), and
 the classifier's label rules.
 
-Both fit paths run inside ``mapInArrow`` and both models score in an
-iterator ``arrow_udf``, so the data model here is Arrow record batches.
-``features_matrix`` turns the ``values`` list column into the dense
-float32 ``(n, f)`` matrix the kernel consumes straight from the list's
-offsets and flat values (one copy, no per-row array objects), enforcing
-uniform feature dimensionality (reference data.py:120-130).
+The one fit task runs inside ``mapInArrow`` at every gang size and both
+models score in an iterator ``arrow_udf``, so the data model here is
+Arrow record batches. ``features_matrix`` turns the ``values`` list
+column into the dense float32 ``(n, f)`` matrix the kernel consumes
+straight from the list's offsets and flat values (one copy, no per-row
+array objects), enforcing uniform feature dimensionality (reference
+data.py:120-130).
 ``batches_to_matrices`` adds the label/weight/margin vectors and splits
 train/validation rows by the boolean indicator inside the task, so the
 split stays partition-local (reference data.py:158-160).
 
 ``label_objective`` is the classifier's objective inference (reference
 O4, xgboost_core.py:328-337). It runs inside the training task, over
-the task's distinct labels or, distributed, over every rank's labels
-gathered in the allgather the ranks already make (tracker.py), so a
+every rank's distinct labels gathered in the allgather the ranks
+already make (``tracker.fit``; one rank at one worker), so a
 classifier fit needs no separate driver-side label job. This module is
 imported by the Python workers and must not import ``ml.estimator`` or
 ``pyspark.ml``: a worker would pay for loading both.

@@ -10,10 +10,11 @@ Re-implements the four public classes of the reference
   ``pyspark.ml.functions.vector_to_array(..., 'float32')`` exactly as
   the reference does (xgboost_core.py:441),
 * training runs inside ``mapInArrow`` on Arrow record batches (the
-  reference uses ``mapInPandas``, xgboost_core.py:512-513),
-  single-worker path gathers the partition and calls the kernel
-  (reference O12), multi-worker path uses barrier execution + socket
-  histogram allreduce (reference O11/O22, see tracker.py),
+  reference uses ``mapInPandas``, xgboost_core.py:512-513): one fit
+  task for every gang size (``tracker.fit``), which runs as a barrier
+  stage with socket histogram allreduce over one star topology above
+  one worker (reference O11/O22) and as a plain one-partition task at
+  one worker (reference O12),
 * the classifier infers its objective from the label cardinality
   inside the training task (``data.label_objective``), where the
   reference runs a driver-side countDistinct job first (O4,
@@ -59,14 +60,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyspark_xgboost_spark.ml import booster as kernel
-from pyspark_xgboost_spark.ml.data import (
-    FIT_RESULT_SCHEMA,
-    batches_to_matrices,
-    features_matrix,
-    fit_result,
-    fit_result_json,
-    label_objective,
-)
+from pyspark_xgboost_spark.ml import tracker
+from pyspark_xgboost_spark.ml.data import features_matrix
 from pyspark_xgboost_spark.ml.params import (
     KERNEL_PARAM_DEFAULTS,
     PYSPARK_SPECIFIC_PARAMS,
@@ -177,7 +172,7 @@ class _XgboostParamsBase:
         ):
             _logger.warning(
                 "force_repartition is set but num_workers is 1 — there is "
-                "no need for a repartition, the parameter will be ignored"
+                "no need for a repartition"
             )
         if self.getOrDefault(getattr(self, "use_gpu")):
             # reference validation (xgboost_core.py:216-238): tree_method
@@ -327,37 +322,15 @@ class _XgboostEstimator(Estimator, _XgboostParamsBase, MLReadable, MLWritable):
         init_model_json = init_model.save_json() if init_model is not None else None
         callbacks = self.getOrDefault(getattr(self, "callbacks"))
 
-        num_workers = int(self.getOrDefault(getattr(self, "num_workers")))
-        if num_workers > 1:
-            from pyspark_xgboost_spark.ml.tracker import fit_distributed
-            from pyspark_xgboost_spark.utils import (
-                FORCE_REPARTITION_CONF,
-                get_conf_boolean,
-            )
-
-            # estimator param OR session conf (O26 get_conf_boolean):
-            # lets an admin force clean repartitioning cluster-wide
-            # without touching every estimator instance
-            force_repart = bool(
-                self.getOrDefault(getattr(self, "force_repartition"))
-            ) or get_conf_boolean(
-                narrowed.sparkSession, FORCE_REPARTITION_CONF, False
-            )
-
-            booster_json = fit_distributed(
-                narrowed,
-                params,
-                flags,
-                num_workers,
-                force_repartition=force_repart,
-                init_model_json=init_model_json,
-                callbacks=callbacks,
-            )
-        else:
-            booster_json = _fit_single_worker(
-                narrowed, params, flags, init_model_json=init_model_json, callbacks=callbacks
-            )
-
+        booster_json = tracker.fit(
+            narrowed,
+            params,
+            flags,
+            int(self.getOrDefault(getattr(self, "num_workers"))),
+            force_repartition=bool(self.getOrDefault(getattr(self, "force_repartition"))),
+            init_model_json=init_model_json,
+            callbacks=callbacks,
+        )
         booster = kernel.Booster.load_json(booster_json)
         model = self._create_model(booster)
         self._copyValues(model)
@@ -373,52 +346,6 @@ class _XgboostEstimator(Estimator, _XgboostParamsBase, MLReadable, MLWritable):
     @classmethod
     def read(cls) -> MLReader:
         return _ParamsOnlyReader(cls)
-
-
-def _fit_single_worker(
-    narrowed: DataFrame,
-    params: dict,
-    flags: dict,
-    init_model_json: str | None = None,
-    callbacks: list | None = None,
-) -> str:
-    """Local-mode training (reference O12, xgboost_core.py:479-518):
-    gather the (already narrowed, float32) rows into one partition and
-    run the kernel there, returning the model JSON from the single task.
-    The init booster ships into the task closure as its JSON string;
-    callbacks ride Spark's cloudpickle closure serialization."""
-
-    def train_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        train_b, val_b = batches_to_matrices(batches, **flags)
-        task_params = params
-        if flags["distinct_labels"]:
-            try:
-                task_params = label_objective(
-                    [b.labels for b in (train_b, val_b) if b is not None], params
-                )
-            except ValueError as e:
-                yield fit_result(str(e))
-                return
-        if len(train_b.X) == 0:
-            return  # empty partition yields nothing; driver takes first row
-        eval_set = (val_b.X, val_b.y) if val_b is not None and len(val_b.X) else None
-        bst = kernel.train(
-            train_b.X,
-            train_b.y,
-            task_params,
-            sample_weight=train_b.w,
-            base_margin=train_b.base_margin,
-            eval_set=eval_set,
-            eval_weight=(val_b.w if val_b is not None else None),
-            xgb_model=(
-                kernel.Booster.load_json(init_model_json) if init_model_json else None
-            ),
-            callbacks=callbacks,
-        )
-        yield fit_result(bst.save_json())
-
-    rows = narrowed.repartition(1).mapInArrow(train_fn, FIT_RESULT_SCHEMA).collect()
-    return fit_result_json(rows, "cannot fit on an empty dataset")
 
 
 # ---------------------------------------------------------------------------

@@ -1,18 +1,21 @@
-"""Distributed barrier-mode training (reference O11/O21/O22).
+"""Spark training for every gang size (reference O11/O12/O21/O22).
 
-Reference architecture (xgboost_core.py:358-433): gang-schedule
-``num_workers`` tasks with ``mapInPandas(...).rdd.barrier()``, rendezvous
-via ``BarrierTaskContext``, run an allreduce ring among the workers, and
-only partition 0 returns the fitted model. Ours gang-schedules with
-``mapInArrow(..., barrier=True)``: the tasks read Arrow record batches
-and rank 0 yields a one-row batch. The reference's ring is
-Rabit (tracker bootstrapped on partition 0 and broadcast through
-``allGather`` — utils.py:64-126); ours is the direct-TCP reduce star in
-``comm.py``, reached with ZERO barrier RPCs (each costs a measured
-~1.0 s — see ``rendezvous``). Histograms are
-O(nodes × features × bins) independent of shard row count, so payloads
-stay in the low MBs at any data scale; at 100 TB the rows never move —
-only histograms do.
+The reference has two training paths, a local one that gathers the rows
+into one partition (xgboost_core.py:479-518) and a barrier one
+(:358-433) that gang-schedules ``num_workers`` tasks with
+``mapInPandas(...).rdd.barrier()``, rendezvouses via
+``BarrierTaskContext`` and runs an allreduce ring among them. Ours is
+one fit task for every gang size: ``fit`` runs ``train_fn`` in
+``mapInArrow`` (``barrier=True`` above one worker), the tasks read Arrow
+record batches, and rank 0 yields a one-row batch. The only difference
+between gang sizes is the comm: ``booster.LocalComm`` for one worker,
+else the direct-TCP reduce star in ``comm.py`` (one star topology; the
+reference's ring is Rabit, tracker bootstrapped on partition 0 and
+broadcast through ``allGather`` — utils.py:64-126), reached with ZERO
+barrier RPCs (each costs a measured ~1.0 s — see ``rendezvous``).
+Histograms are O(nodes × features × bins) independent of shard row
+count, so payloads stay in the low MBs at any data scale; at 100 TB the
+rows never move — only histograms do.
 
 Scheduling hazards mirrored from the reference:
 * barrier deadlock when num_workers exceeds cluster task slots —
@@ -22,17 +25,18 @@ Scheduling hazards mirrored from the reference:
   already matches (cheap-correct version of the reference's
   plan-inspecting elision, xgboost_core.py:291-321, whose own comment
   admits the heuristic is "not fully accurate");
-* empty shards: feature dimensionality is agreed via one socket
-  allgather before training so zero-row workers participate in every
-  reduction with correctly-shaped zero histograms.
+* empty shards: feature dimensionality is agreed via one allgather
+  before training so zero-row workers participate in every reduction
+  with correctly-shaped zero histograms.
 
 A classifier's ranks add their distinct labels to that same allgather
 and resolve the objective from the union (``data.label_objective``;
-the reference runs a driver-side countDistinct job instead, O4). Every
-rank sees the same union, so a label error stops all of them before the
-first allreduce; rank 0 reports it in place of the model and the driver
-raises it, so the barrier stage itself succeeds and is never retried
-for bad input.
+the reference runs a driver-side countDistinct job instead, O4), and
+every rank adds its validation row count. Every rank sees the same
+union, so a label error, or an input without training rows, stops all
+of them before the first allreduce; rank 0 reports a label error in
+place of the model and the driver raises it, so no task raises and the
+barrier stage is never retried for bad input.
 """
 
 from __future__ import annotations
@@ -50,7 +54,6 @@ from pyspark_xgboost_spark.ml import booster as kernel
 from pyspark_xgboost_spark.ml.comm import (
     SocketComm,
     _ReduceServer,
-    build_tree_comm,
     candidate_ports,
     connect_rendezvous,
     cookie_magic,
@@ -66,12 +69,7 @@ from pyspark_xgboost_spark.ml.data import (
 _logger = logging.getLogger("pyspark_xgboost_spark.ml")
 
 
-# above this gang size the star hub's O(n × payload) per round starts to
-# dominate; the two-level tree cuts rank-0 traffic to O(√n × payload)
-_TREE_TOPOLOGY_THRESHOLD = 64
-
-
-def rendezvous(context: BarrierTaskContext, topology: str = "auto") -> SocketComm:
+def rendezvous(context: BarrierTaskContext) -> SocketComm:
     """Zero-RPC rendezvous: every barrier RPC (``allGather``/``barrier``)
     costs a measured ~1.0 s constant, so instead of broadcasting rank-0's
     reduce-server address through one, all ranks derive the same
@@ -92,12 +90,6 @@ def rendezvous(context: BarrierTaskContext, topology: str = "auto") -> SocketCom
     cookie = json.dumps(
         [context.stageId(), context.attemptNumber(), n, [i.address for i in infos]]
     )
-    if topology == "tree" or (topology == "auto" and n > _TREE_TOPOLOGY_THRESHOLD):
-        import math
-
-        hosts = [i.address.split(":")[0] or "127.0.0.1" for i in infos]
-        fanout = max(2, math.isqrt(n))  # √n balances group and upper levels
-        return build_tree_comm(rank, n, hosts, cookie, fanout)
     ports = candidate_ports(cookie)
     magic = cookie_magic(cookie)
     if rank == 0:
@@ -136,7 +128,7 @@ def _plan_tail_is_repartition(df: DataFrame) -> bool:
         return False
 
 
-def fit_distributed(
+def fit(
     narrowed: DataFrame,
     params: dict,
     flags: dict,
@@ -145,7 +137,10 @@ def fit_distributed(
     init_model_json: str | None = None,
     callbacks: list | None = None,
 ) -> str:
-    """Barrier-mode distributed fit; returns the model JSON."""
+    """Fit on ``num_workers`` tasks (a barrier gang above one); returns
+    the model JSON. The init booster ships into the task closure as its
+    JSON string; callbacks ride Spark's cloudpickle closure
+    serialization."""
     sc = narrowed.sparkSession.sparkContext
     try:
         capacity = get_max_concurrent_tasks(sc)
@@ -176,61 +171,62 @@ def fit_distributed(
     ):
         narrowed = narrowed.repartition(num_workers)
 
-    has_validation = flags.get("has_validation", False)
-    has_weight = flags.get("has_weight", False)
     infer_labels = flags.get("distinct_labels", False)
-    # star | tree | auto (auto = tree beyond _TREE_TOPOLOGY_THRESHOLD
-    # workers); read driver-side, closed over into the barrier tasks
-    topology = narrowed.sparkSession.conf.get("spark_graft.ml.comm_topology", "auto")
 
     def train_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        context = BarrierTaskContext.get()
         train_b, val_b = batches_to_matrices(batches, **flags)
-        comm = rendezvous(context, topology=topology)
+        comm = rendezvous(BarrierTaskContext.get()) if num_workers > 1 else kernel.LocalComm()
 
         # agree on feature dimensionality so empty shards build
         # correctly-shaped (all-zero) histograms; a classifier's ranks
-        # add their distinct labels to the same round
+        # add their distinct labels, and every rank its validation row
+        # count, to the same round
         f_local = int(train_b.X.shape[1]) if train_b.X.size else 0
         labels = []
         if infer_labels:
             labels = np.concatenate([b.labels for b in (train_b, val_b) if b is not None]).tolist()
+        n_val = 0 if val_b is None else len(val_b.y)
         gathered = [
-            json.loads(b) for b in comm.allgather_bytes(json.dumps([f_local, labels]).encode())
+            json.loads(b)
+            for b in comm.allgather_bytes(json.dumps([f_local, labels, n_val]).encode())
         ]
-        f_global = max(f for f, _ in gathered)
+        f_global = max(f for f, _, _ in gathered)
         task_params = params
+        error = None
         if infer_labels:
             try:
-                task_params = label_objective([ls for _, ls in gathered], params)
+                task_params = label_objective([ls for _, ls, _ in gathered], params)
             except ValueError as e:
-                # every rank resolved the same union: all stop here
-                comm.close()
-                if comm.rank == 0:
-                    yield fit_result(str(e))
-                return
-        if f_global == 0:
-            raise ValueError("cannot fit: all partitions are empty")
+                error = str(e)
+        if error is not None or f_global == 0:
+            # every rank resolved the same union: all stop here, and an
+            # input without training rows yields no model at all
+            comm.close()
+            if comm.rank == 0 and error is not None:
+                yield fit_result(error)
+            return
 
         def shape(b):
-            if b is None:
-                return None
-            if b.X.size == 0:
+            if b is not None and b.X.size == 0:
                 b.X = np.empty((0, f_global), dtype=np.float32)
             return b
 
         train_s = shape(train_b)
         val_s = shape(val_b)
-        eval_set = (val_s.X, val_s.y) if has_validation else None
+        # evaluate only when some rank holds validation rows: an empty
+        # eval set scores inf every round and would stop training early
+        has_eval = sum(n for _, _, n in gathered) > 0
 
         bst = kernel.train(
             train_s.X,
             train_s.y,
             task_params,
-            sample_weight=train_s.w if has_weight else None,
-            base_margin=None,  # unsupported distributed (reference xgboost.py:50-54)
-            eval_set=eval_set,
-            eval_weight=(val_s.w if (has_validation and has_weight) else None),
+            sample_weight=train_s.w,
+            # None above one worker: the estimator rejects a base margin
+            # there (reference xgboost.py:50-54)
+            base_margin=train_s.base_margin,
+            eval_set=(val_s.X, val_s.y) if has_eval else None,
+            eval_weight=val_s.w if has_eval else None,
             comm=comm,
             # same init model + deterministic callbacks on every rank —
             # margins are shard-local, so no extra exchange is needed
@@ -251,5 +247,5 @@ def fit_distributed(
     # via barrier=True — the modern form of the reference's
     # mapInPandas(...).rdd.barrier().mapPartitions(identity) idiom
     # (xgboost_core.py:427-430).
-    rows = narrowed.mapInArrow(train_fn, FIT_RESULT_SCHEMA, barrier=True).collect()
-    return fit_result_json(rows, "distributed training returned no model")
+    rows = narrowed.mapInArrow(train_fn, FIT_RESULT_SCHEMA, barrier=num_workers > 1).collect()
+    return fit_result_json(rows, "cannot fit on an empty dataset")

@@ -14,12 +14,6 @@ import re
 
 from pyspark.sql import SparkSession
 
-# Session conf that force-enables the pre-training repartition even when
-# the incoming DataFrame already has num_workers partitions — the
-# conf-level override for the estimator's force_repartition param.
-FORCE_REPARTITION_CONF = "spark_graft.ml.force_repartition"
-
-
 def cpu_spread_partitions(spark: SparkSession) -> int:
     """Partition count for a CPU-bound map pass (e.g. an md5-per-
     character rolling-hash scan) that must be spread across the cluster

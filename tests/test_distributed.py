@@ -61,27 +61,55 @@ def test_get_conf_boolean_semantics(spark):
     assert get_conf_boolean(spark, "myConf", True) is True
 
 
-def test_force_repartition_session_conf(spark, reg_df, monkeypatch):
-    """The spark_graft.ml.force_repartition session conf overrides the
-    estimator param: fit_distributed must see force_repartition=True
-    even though the estimator left the param at its False default."""
+def test_force_repartition_param(spark, reg_df, monkeypatch):
+    """The estimator's force_repartition param reaches the fit function,
+    which then repartitions even when the plan tail would allow the
+    shuffle to be skipped."""
     import pyspark_xgboost_spark.ml.tracker as tracker
-    from pyspark_xgboost_spark.utils import FORCE_REPARTITION_CONF
 
     captured = {}
-    real = tracker.fit_distributed
+    real = tracker.fit
 
     def spy(narrowed, params, flags, num_workers, **kw):
         captured["force_repartition"] = kw.get("force_repartition")
         return real(narrowed, params, flags, num_workers, **kw)
 
-    monkeypatch.setattr(tracker, "fit_distributed", spy)
-    spark.conf.set(FORCE_REPARTITION_CONF, "true")
-    try:
-        XgboostRegressor(n_estimators=2, max_depth=2, num_workers=2).fit(reg_df)
-    finally:
-        spark.conf.unset(FORCE_REPARTITION_CONF)
+    monkeypatch.setattr(tracker, "fit", spy)
+    XgboostRegressor(
+        n_estimators=2, max_depth=2, num_workers=2, force_repartition=True
+    ).fit(reg_df.repartition(2))
     assert captured["force_repartition"] is True
+
+
+def test_empty_input_raises_at_every_gang_size(spark, reg_df):
+    """An input without rows gives the same driver-side ValueError at one
+    worker and at two; no training task raises."""
+    empty = reg_df.where("label < 0")
+    for workers in (1, 2):
+        with pytest.raises(ValueError, match="cannot fit on an empty dataset"):
+            XgboostRegressor(n_estimators=2, num_workers=workers).fit(empty)
+        with pytest.raises(ValueError, match="classifier needs >= 2 distinct labels, found 0"):
+            XgboostClassifier(n_estimators=2, num_workers=workers).fit(empty)
+
+
+def test_validation_without_rows_matches_across_gang_sizes(spark, reg_df):
+    """A validation column that marks no rows means no eval set at every
+    gang size, so early stopping never cuts the ensemble short."""
+    df = reg_df.withColumn("isVal", reg_df.label < 0)
+    boosters = [
+        XgboostRegressor(
+            n_estimators=6,
+            max_depth=3,
+            early_stopping_rounds=2,
+            validationIndicatorCol="isVal",
+            num_workers=workers,
+        )
+        .fit(df)
+        .get_booster()
+        for workers in (1, 2)
+    ]
+    assert [len(b.trees) for b in boosters] == [6, 6]
+    assert boosters[0].best_iteration == boosters[1].best_iteration
 
 
 def test_distributed_rejects_base_margin(spark, reg_df):
@@ -184,82 +212,51 @@ def _run_star(n, contribs, gathers):
     return out
 
 
-def _run_tree(n, fanout, contribs, gathers):
-    import threading
-
-    from pyspark_xgboost_spark.ml.comm import build_tree_comm
-
-    out = {}
-
-    def worker(rank):
-        comm = build_tree_comm(
-            rank, n, ["127.0.0.1"] * n, "topology-tree-test", fanout, deadline_s=30
-        )
-        out[rank] = (
-            comm.allreduce_sum(contribs[rank]).tolist(),
-            comm.allgather_bytes(gathers[rank]),
-        )
-        comm.close()
-
-    threads = [threading.Thread(target=worker, args=(r,)) for r in range(1, n)]
-    for t in threads:
-        t.start()
-    worker(0)
-    for t in threads:
-        t.join(timeout=30)
-    return out
-
-
-@pytest.mark.parametrize("n,fanout", [(9, 3), (7, 3), (5, 2)])
-def test_tree_and_star_reductions_identical(n, fanout):
-    """The two-level tree must be invisible above the comm interface:
-    every rank's allreduce_sum and allgather_bytes results equal the
-    star's, including uneven trailing groups (n not divisible by
-    fanout)."""
-    import numpy as np
-
+@pytest.mark.parametrize("n", [9, 7, 5])
+def test_star_reductions_sum_and_gather(n):
+    """Every rank's allreduce_sum is the sum of all contributions and its
+    allgather_bytes lists every rank's payload in rank order."""
     contribs = {r: np.arange(6, dtype=np.float64) * (r + 1) for r in range(n)}
     gathers = {r: f"blob-{r}".encode() for r in range(n)}
     star = _run_star(n, contribs, gathers)
-    tree = _run_tree(n, fanout, contribs, gathers)
-    assert set(star) == set(tree) == set(range(n))
+    assert set(star) == set(range(n))
     expected_sum = sum(contribs.values()).tolist()
     expected_gather = [gathers[r] for r in range(n)]
     for r in range(n):
         assert star[r] == (expected_sum, expected_gather)
-        assert tree[r] == (expected_sum, expected_gather)
-
-
-def test_distributed_tree_topology_matches_local(spark, reg_df):
-    """End-to-end barrier fit over the tree comm (conf-forced; auto only
-    engages beyond 64 workers) must reproduce the single-worker model."""
-    params = dict(n_estimators=6, max_depth=3)
-    local = XgboostRegressor(**params).fit(reg_df)
-    spark.conf.set("spark_graft.ml.comm_topology", "tree")
-    try:
-        dist = XgboostRegressor(**params, num_workers=4).fit(reg_df)
-    finally:
-        spark.conf.unset("spark_graft.ml.comm_topology")
-    p_local = np.array([r.prediction for r in local.transform(reg_df).collect()])
-    p_dist = np.array([r.prediction for r in dist.transform(reg_df).collect()])
-    np.testing.assert_allclose(p_local, p_dist, atol=1e-6)
 
 
 def test_reduce_server_binds_scoped_address_when_local():
     """A local bind host must yield a scoped endpoint — the wildcard is
     reserved for EADDRNOTAVAIL (host not a local interface), never used
     just because it is listed or because a port was busy."""
-    from pyspark_xgboost_spark.ml.comm import _ReduceServer, candidate_ports, cookie_magic
+    import threading
+
+    from pyspark_xgboost_spark.ml.comm import (
+        SocketComm,
+        _ReduceServer,
+        candidate_ports,
+        connect_rendezvous,
+        cookie_magic,
+    )
 
     cookie = "test-bind-scope-attempt-0"
-    ports = candidate_ports(cookie)
-    server = _ReduceServer(
-        n_clients=1, host="127.0.0.1", magic=cookie_magic(cookie), ports=ports
-    )
-    try:
-        assert server._srv.getsockname()[0] == "127.0.0.1"
-    finally:
-        server._srv.close()
+    ports, magic = candidate_ports(cookie), cookie_magic(cookie)
+    server = _ReduceServer(n_clients=1, host="127.0.0.1", magic=magic, ports=ports)
+    bound = server._srv.getsockname()[0]
+
+    # finish the rendezvous and close both sides, so the server's thread
+    # leaves accept() and closes its own listening socket
+    def client():
+        sock = connect_rendezvous("127.0.0.1", ports, magic, 1, deadline_s=10)
+        SocketComm(1, 2, sock=sock).close()
+
+    t = threading.Thread(target=client)
+    t.start()
+    SocketComm(0, 2, server=server).close()
+    t.join(timeout=10)
+    assert not t.is_alive()
+    assert bound == "127.0.0.1"
 
 
 def test_rendezvous_rejects_wrong_magic_and_tolerates_probes():

@@ -34,9 +34,8 @@ import os
 import sys
 import time
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 
 def compare(path_a: str, path_b: str) -> int:
@@ -73,7 +72,7 @@ def main() -> int:
     )
     ap.add_argument(
         "--ref",
-        default="/root/repo/BENCH_r15_baseline.json",
+        default=os.path.join(_ROOT, "BENCH_r15_baseline.json"),
         help="full artifact used to rank queries for --top",
     )
     ap.add_argument("--out", default=None)
@@ -143,7 +142,7 @@ def main() -> int:
             sum(t for t in timings.values() if t is not None), 3
         ),
     }
-    path = args.out or f"/root/repo/BENCH_sweep_sf{sf}_c{cpus}.json"
+    path = args.out or os.path.join(_ROOT, f"BENCH_sweep_sf{sf}_c{cpus}.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print(json.dumps({"artifact": path, "value": out["value"]}))

@@ -31,12 +31,14 @@ reuse fingerprint-keyed scratch state on purpose (idempotent). The
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import threading
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 SKIP: set[str] = set()
 

@@ -27,11 +27,13 @@ Usage: python tools/check_plans.py [sf_dir] [query ...] [--serial]
 from __future__ import annotations
 
 import re
+import os
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 _WORKERS = 8
 

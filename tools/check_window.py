@@ -37,15 +37,17 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 WINDOW = 50
 
 
 def load_history(
-    repo: str = "/root/repo", exclude_newest: bool = False
+    repo: str = _ROOT, exclude_newest: bool = False
 ) -> dict[str, tuple[str, str]]:
     """name -> (latest round with a driver row, status).
 
@@ -142,7 +144,7 @@ def audit() -> list[str]:
         newest = max(
             (
                 p.rsplit("CORRECTNESS_", 1)[-1].removesuffix(".json")
-                for p in glob.glob("/root/repo/CORRECTNESS_r*.json")
+                for p in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))
             ),
             default="r??",
         )
@@ -200,7 +202,7 @@ def next_window() -> list[str]:
     history = load_history()
     rounds = [
         int(p.rsplit("CORRECTNESS_r", 1)[-1].removesuffix(".json"))
-        for p in glob.glob("/root/repo/CORRECTNESS_r*.json")
+        for p in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))
     ]
     nxt = f"r{max(rounds) + 1:02d}" if rounds else "r??"
     simulated = dict(history)

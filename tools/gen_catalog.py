@@ -8,9 +8,11 @@ Usage: python tools/gen_catalog.py [--check]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 HEADER = """# QUERIES — registered operator catalog (generated)
 
@@ -44,7 +46,7 @@ def render() -> str:
 
 def main() -> int:
     text = render()
-    path = "/root/repo/QUERIES.md"
+    path = os.path.join(_ROOT, "QUERIES.md")
     if "--check" in sys.argv:
         with open(path) as fh:
             if fh.read() != text:
