@@ -37,10 +37,6 @@ rather than per-node or per-tree Python loops:
 * Histogram subtraction (build the smaller child, derive its sibling)
   is left out: parent minus child rounds differently from a direct sum,
   so trees would no longer match the direct-sum kernel bit for bit.
-
-If a real ``xgboost`` package is importable, the estimator layer uses
-it instead (see estimator.py); this module is the self-contained
-fallback kernel.
 """
 
 from __future__ import annotations
@@ -551,15 +547,13 @@ class Booster:
     # -- introspection -----------------------------------------------------
     def get_score(self, importance_type: str = "weight") -> dict[str, float]:
         """Feature importances (reference O23, xgboost_core.py:533-560)."""
+        if importance_type != "weight":
+            raise ValueError("only importance_type='weight' supported")
         scores: dict[int, float] = {}
         for t in self.trees:
-            for i, f in enumerate(t.feature):
-                if f < 0:
-                    continue
-                if importance_type == "weight":
+            for f in t.feature:
+                if f >= 0:
                     scores[f] = scores.get(f, 0.0) + 1.0
-                else:
-                    raise ValueError("only importance_type='weight' supported")
         names = self.feature_names or [f"f{i}" for i in range(max(scores, default=-1) + 1)]
         return {names[f]: v for f, v in sorted(scores.items())}
 

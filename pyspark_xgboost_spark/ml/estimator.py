@@ -27,10 +27,6 @@ Re-implements the four public classes of the reference
   ±m with sigmoid, multiclass softmax, prediction = argmax of
   *probability* (xgboost_core.py:665-679), raw/probability re-wrapped
   with ``array_to_vector`` (xgboost_core.py:744-753).
-
-If a real ``xgboost`` package is importable the same estimator surface
-could delegate to it; in this environment the numpy kernel
-(booster.py) is the engine.
 """
 
 from __future__ import annotations

@@ -62,9 +62,8 @@ def fit_regressor(spark: SparkSession, sf_dir: str):
 
 def ml_fit_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predict l_extendedprice from lineitem numerics with the native
-    GBT regressor (distributed barrier training when slots allow — 3×
-    faster than single-worker at sf0.1); returns keys + label +
-    prediction."""
+    GBT regressor (distributed barrier training when slots allow);
+    returns keys + label + prediction."""
     model, assembled = fit_regressor(spark, sf_dir)
     return model.transform(assembled).select(
         "l_orderkey", "l_linenumber", "label", "prediction"

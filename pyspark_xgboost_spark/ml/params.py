@@ -16,8 +16,6 @@ is deliberately NOT replicated; see SURVEY §1.4 note.
 
 from __future__ import annotations
 
-import inspect
-
 import numpy as np
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import (
@@ -35,12 +33,9 @@ __all__ = [
     "HasBaseMarginCol",
     "_RegressorColumnParams",
     "_ClassifierColumnParams",
-    "get_default_params_from_func",
     "KERNEL_PARAM_DEFAULTS",
     "PYSPARK_SPECIFIC_PARAMS",
     "UNSUPPORTED_INIT_PARAMS",
-    "UNSUPPORTED_FIT_PARAMS",
-    "UNSUPPORTED_PREDICT_PARAMS",
 ]
 
 
@@ -97,21 +92,6 @@ class _ClassifierColumnParams(
     pass
 
 
-def get_default_params_from_func(func, unsupported_set) -> dict:
-    """Reflect {param: default} from a callable's signature, skipping
-    unsupported names and defaults that aren't plain values (reference
-    sparkdl/xgboost/utils.py:14-26)."""
-    sig = inspect.signature(func)
-    out = {}
-    for name, p in sig.parameters.items():
-        if p.default is inspect.Parameter.empty:
-            continue
-        if name in unsupported_set:
-            continue
-        out[name] = p.default
-    return out
-
-
 def convert_scalar(value):
     """numpy scalar → python scalar so Param values serialize
     (reference xgboost_core.py:763-772)."""
@@ -149,9 +129,5 @@ PYSPARK_SPECIFIC_PARAMS = frozenset(
     }
 )
 
-# Denylists (reference xgboost_core.py:39-54).
+# Denylist (reference xgboost_core.py:39-54).
 UNSUPPORTED_INIT_PARAMS = frozenset({"gpu_id"})
-UNSUPPORTED_FIT_PARAMS = frozenset(
-    {"sample_weight", "eval_set", "sample_weight_eval_set", "base_margin"}
-)
-UNSUPPORTED_PREDICT_PARAMS = frozenset({"output_margin", "validate_features", "base_margin"})

@@ -4,11 +4,29 @@ Each registered query is a ``(spark, sf_dir) -> DataFrame`` callable; when
 the semantics are ANSI-SQL-expressible an oracle SQL string (DuckDB
 dialect-compatible) is registered alongside, and the driver hash-compares
 the two at sf0.01. Column names/aliases MUST match between both sides.
+
+The driver grades the FIRST 50 registered queries each round, and writes
+one ``CORRECTNESS_r<N>.json`` per round to the checkout root. The
+registry orders itself from that committed history when it loads, by one
+sort key:
+
+1. oracle-backed queries that have no driver row yet, by name;
+2. then oracle-backed queries by (latest round with a driver row, name),
+   so the stalest attestation is graded next;
+3. then the rows-only queries (no oracle, so they can never grade
+   green), by name.
+
+A checkout without artifacts falls back to name order, with the
+rows-only queries still last.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Container, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,111 +48,48 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Priority order for the driver's 50-query grading window (the driver
-# grades the FIRST 50 registered queries). Recomposed each round:
-# never-graded queries first, then this round's new registrations,
-# then the stalest attested rows. See the window comment inside.
-_GRADE_FIRST = [
-    # ROUND-15 WINDOW (slots 1-50), adopted VERBATIM from
-    # `python tools/check_window.py --next` run against the committed
-    # CORRECTNESS history through r14 (the machine-computed recomposition
-    # the check_window audit + pytest tripwire prescribe at round start).
-    # Composition: the 5 round-14 deferred registrations (never driver-
-    # graded, sorted), then the stalest attested oracle rows — the
-    # remaining r06 cohort — sorted by (round, name).
-    "events_conformal_forecast_interval",
-    "events_kalman_smoother_rts",
-    "events_synthetic_control_placebo",
-    "sim_search_ivf_pq_rerank",
-    "stream_hnsw_incremental",
-    "sort_limit_topk",
-    "subquery_exists",
-    "text_langid",
-    "text_quality_score",
-    "text_tfidf_exact",
-    "text_token_stats",
-    "topk_per_group",
-    "train_val_split",
-    "window_frame_agg",
-    "window_lag_lead",
-    "window_ntile",
-    "window_range_frame",
-    "window_rank",
-    "window_rolling_median",
-    "agg_bitmap_distinct",
-    "agg_bitmap_set_ops",
-    "agg_collated_group",
-    "agg_countmin_heavy_hitters",
-    "agg_entropy_by_source",
-    "agg_histogram_fixed_bins",
-    "agg_map_group_counts",
-    "agg_string_concat_ordered",
-    "agg_weighted_percentile",
-    "audit_partition_skew",
-    "corpus_gini_lengths",
-    "corpus_kl_divergence_sources",
-    "dedup_incremental_batch",
-    "dedup_lsh_eval_pr",
-    "dedup_minhash_b128",
-    "dedup_paragraph_exact",
-    "dedup_simhash_bands",
-    "dedup_url_canonical",
-    "doc_chunk_sentences",
-    "embedding_power_iteration",
-    "events_markov_transitions",
-    "events_rfm_segmentation",
-    "events_stream_stream_full_outer_join",
-    "join_bloom_prefilter",
-    "join_interval_overlap",
-    "join_lateral_topk",
-    "join_spatial_grid",
-    "ml_fit_predict_classifier_stats",
-    "ml_fit_predict_stats",
-    "sample_balanced_downsample",
-    "sample_neyman_allocation",
-    # ---- below the 50-slot line ----
-    # r16 window plan: generated, not hand-written — run
-    # `python tools/check_window.py --next` after the r15
-    # CORRECTNESS artifact lands to print the exact 50-name list.
-]
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json$")
 
-# New registrations made THIS round, after the grading window above was
-# frozen: they are never-driver-graded by definition but deliberately
-# wait for the NEXT window (the window executes the plan ratified by
-# the previous round's verdict). tools/check_window.py verifies every
-# name here (a) exists, (b) has an oracle, and (c) truly has no driver
-# row — so deferral can never hide an omission; at the next
-# recomposition this list is emptied into the window head.
-_DEFER_TO_NEXT_WINDOW: list[str] = []
 
-# Rows-only queries (registered without an oracle by design — goldens /
-# property tests carry their correctness): they can never produce a
-# green driver row, so they always cede their window slots and close
-# the registration order.
-_CEDE_WINDOW = [
-    "text_tokenize_tfidf",
-    # dedup_simhash left this list in round 14: the md5 bit math is
-    # SQL-reachable via the hex-nibble histogram, so it is now
-    # oracle-attested like everything else
-    "sim_search_brp_lsh",
-    # multimodal_resize left this list in round 11: its crop is now
-    # oracle-attested positionally via the hex(payload) idiom
-    "ml_fit_predict_regressor",
-    "ml_fit_predict_classifier",
-    "approx_distinct",
-    "approx_distinct_mergeable",
-]
+def correctness_history(root: str = _ROOT) -> dict[str, tuple[int, dict]]:
+    """name -> (latest round with a driver row, that row), read from the
+    ``CORRECTNESS_r<N>.json`` artifacts in ``root``."""
+    rounds = sorted(
+        (int(m.group(1)), path)
+        for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+        if (m := _ARTIFACT.search(path))
+    )
+    history: dict[str, tuple[int, dict]] = {}
+    for rnd, path in rounds:
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                history[name] = (rnd, row)
+    return history
+
+
+def grading_order(
+    names: Iterable[str],
+    oracles: Container[str],
+    history: dict[str, tuple[int, dict]],
+) -> list[str]:
+    """``names`` sorted by the grading key in the module docstring."""
+
+    def key(name: str) -> tuple[int, int, str]:
+        if name not in oracles:
+            return (2, 0, name)
+        if name not in history:
+            return (0, 0, name)
+        return (1, history[name][0], name)
+
+    return sorted(names, key=key)
 
 
 def load_all() -> None:
-    """Import every operator module so its @register calls run.
-
-    Registration order feeds the driver's 50-query grading window:
-    ``_GRADE_FIRST`` is an explicit priority queue (never-green fixes,
-    then new round-5 queries, then oldest-attested greens — see the
-    comment above the list); queries not named fall to module-import
-    order (the round-4 greens, all freshly attested); ``_CEDE_WINDOW``
-    (rows-only, ungradeable by design) closes the order.
+    """Import every operator module so its @register calls run, then
+    put the registry in grading order (module docstring) over the
+    committed CORRECTNESS history. The order is a pure sort, so it does
+    not depend on which operator module was imported first.
     """
     global QUERIES, ORACLES
     import pyspark_xgboost_spark.operators.temporal  # noqa: F401
@@ -157,16 +112,7 @@ def load_all() -> None:
     import pyspark_xgboost_spark.operators.sketches  # noqa: F401
     import pyspark_xgboost_spark.operators.spatial  # noqa: F401
 
-    first = [n for n in _GRADE_FIRST if n in QUERIES]
-    cede = [n for n in _CEDE_WINDOW if n in QUERIES]
-    # sorted, NOT dict-insertion order: a test (or any caller) that
-    # imports an operator module before the first load_all would
-    # otherwise shift these queries' registration order — the grading
-    # order must not depend on who imported what first
-    rest = sorted(
-        n for n in QUERIES if n not in _GRADE_FIRST and n not in _CEDE_WINDOW
-    )
-    order = first + rest + cede
+    order = grading_order(QUERIES, ORACLES, correctness_history())
     QUERIES = {n: QUERIES[n] for n in order}
     ORACLES = {n: ORACLES[n] for n in order if n in ORACLES}
 

@@ -21,17 +21,19 @@ import subprocess
 import sys
 import textwrap
 
+from tests.conftest import ROOT
+
 _SCRIPT = textwrap.dedent(
-    """
+    f"""
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, {ROOT!r})
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master("local-cluster[2,2,4096]")
              .appName("lc-test")
              .config("spark.sql.shuffle.partitions", "4")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+             .config("spark.executorEnv.PYTHONPATH", {ROOT!r})
              .config("spark.python.worker.module", "pyspark_xgboost_spark.worker")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

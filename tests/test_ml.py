@@ -455,6 +455,21 @@ def test_continuation_num_class_mismatch_raises():
         train(X, y3, {"n_estimators": 2}, xgb_model=multi)
 
 
+def test_get_score_rejects_unsupported_type_without_splits():
+    """The importance type is checked before the trees are walked: a
+    booster with no splits must reject "gain" just as one with splits
+    does, not return an empty dict."""
+    rng = np.random.RandomState(5)
+    y = rng.rand(50)
+    flat = kernel.train(np.ones((50, 2), np.float32), y, {"n_estimators": 2})
+    split = kernel.train(rng.rand(50, 2).astype(np.float32), y, {"n_estimators": 2})
+    assert flat.get_score() == {}
+    assert split.get_score()
+    for b in (flat, split):
+        with pytest.raises(ValueError, match="importance_type"):
+            b.get_score("gain")
+
+
 # sha256 prefixes of ``save_json()`` and of ``predict(...).tobytes()`` (plus
 # best_iteration / iteration-range margins where a case has them), recorded
 # with the per-tree kernel that copied live rows at every level and walked

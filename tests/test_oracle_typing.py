@@ -25,7 +25,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.conftest import SF_DIR
+from tests.conftest import ROOT, SF_DIR
 
 _TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -38,9 +38,9 @@ _BANNED = ("HUGEINT", "UHUGEINT")
 # Runnable standalone: the ~18s DuckDB planning sweep needs no Spark,
 # so conftest launches it as a subprocess at COLLECTION time and the
 # test only joins — pure wall-clock overlap with the rest of the suite.
-_TYPING_SCRIPT = r"""
+_TYPING_SCRIPT = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from tests.test_oracle_typing import _run_typing_sweep
 sys.exit(_run_typing_sweep())
 """

@@ -238,20 +238,6 @@ def _chk_kalman_gain_converges_and_tracks(spark):
         assert series[-1]["p_var"] <= _KF_R + _KF_Q
 
 
-def _chk_deferred_registrations_window_consistency(spark):
-    """Round-13's post-freeze registrations sit in
-    _DEFER_TO_NEXT_WINDOW and the machine audit accepts the whole
-    composition (belt to test_grading_window_matches_policy's
-    suspenders — this one runs even when someone targets only the
-    r13 file)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import check_window
-
-    assert check_window.audit() == []
-
-
 _R13_CHECKS = [
     _chk_pq_incremental_codes_match_oneshot_encode,
     _chk_pq_incremental_encode_is_map_side,
@@ -260,7 +246,6 @@ _R13_CHECKS = [
     _chk_hnsw_two_layer_contract,
     _chk_synthetic_control_is_convex_blend,
     _chk_kalman_gain_converges_and_tracks,
-    _chk_deferred_registrations_window_consistency,
 ]
 
 

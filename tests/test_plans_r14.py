@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import ROOT, SF_DIR
 from tests.test_plans import plan_of
 
 
@@ -437,7 +437,7 @@ def _chk_ws_tokenizer_class_is_engine_invariant(spark):
     bs_s = "\\" + "s"  # avoid matching this test's own source scan
     offenders = [
         p
-        for p in glob.glob("/root/repo/pyspark_xgboost_spark/**/*.py", recursive=True)
+        for p in glob.glob(f"{ROOT}/pyspark_xgboost_spark/**/*.py", recursive=True)
         if bs_s in open(p).read() and not p.endswith("utils.py")
     ]
     assert not offenders, f"bare backslash-s regex in: {offenders}"
@@ -453,7 +453,7 @@ def _chk_ws_tokenizer_class_is_engine_invariant(spark):
     ]
     offenders = [
         (p, pat)
-        for p in glob.glob("/root/repo/tests/*.py")
+        for p in glob.glob(f"{ROOT}/tests/*.py")
         if not p.endswith("test_plans_r14.py")
         for pat in replica_pats
         if pat in open(p).read()

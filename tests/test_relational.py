@@ -8,12 +8,13 @@ invariants so a refactor that breaks an operator fails fast.
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pytest
 
 from pyspark_xgboost_spark.registry import all_oracles, all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import ROOT, SF_DIR
 
 
 def test_every_oracle_has_query():
@@ -91,10 +92,9 @@ def _smoke_lanes():
 # queries), launched at pytest COLLECTION time by conftest so its ~30s
 # fully overlap the rest of the suite — the local-cluster test's
 # discipline applied to the smoke sweep.
-_SWEEP_SCRIPT = r"""
-import json, os, sys
+_SWEEP_SCRIPT = f"import sys\nsys.path.insert(0, {ROOT!r})\n" + r"""
+import json, os
 os.environ["SPARK_GRAFT_TMP_NS"] = "_sweep"
-sys.path.insert(0, "/root/repo")
 from concurrent.futures import ThreadPoolExecutor
 from pyspark_xgboost_spark.session import get_spark
 from tests.test_relational import _smoke_lanes, _smoke_one
@@ -458,15 +458,20 @@ def test_bench_headline_names_all_registered():
 
 
 def test_grade_first_names_all_registered():
-    """_GRADE_FIRST entries order the driver's grading window — an
-    unregistered (misspelled) name silently vanishes from the window."""
+    """The grading order holds every registered query exactly once, and
+    no rows-only query (no oracle, so it can never grade green) holds
+    one of the driver's window slots: the rows-only queries close it."""
     from pyspark_xgboost_spark import registry
 
-    qs = set(all_queries())
-    missing = [n for n in registry._GRADE_FIRST if n not in qs]
-    assert not missing, missing
-    cede_overlap = set(registry._GRADE_FIRST) & set(registry._CEDE_WINDOW)
-    assert not cede_overlap  # rows-only queries never hold window slots
+    qs = list(all_queries())
+    oracles = all_oracles()
+    order = registry.grading_order(
+        registry.QUERIES, oracles, registry.correctness_history()
+    )
+    assert order == qs
+    assert len(set(qs)) == len(qs) == len(registry.QUERIES)
+    assert [n for n in qs[:50] if n not in oracles] == []
+    assert all(n not in oracles for n in qs[len(oracles):])
 
 
 def _chk_asof_tolerance_nulls_stale_matches(spark):
@@ -655,23 +660,23 @@ def test_query_catalog_is_current():
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     import gen_catalog
 
-    with open("/root/repo/QUERIES.md") as fh:
+    with open(os.path.join(ROOT, "QUERIES.md")) as fh:
         assert fh.read() == gen_catalog.render()
 
     from pyspark_xgboost_spark.registry import all_oracles, all_queries
 
     n_reg, n_orc = len(all_queries()), len(all_oracles())
-    with open("/root/repo/SURVEY.md") as fh:
+    with open(os.path.join(ROOT, "SURVEY.md")) as fh:
         survey = fh.read()
     m = re.search(r"surface to (\d+) registered queries \((\d+)\n?oracle", survey)
     assert m, "SURVEY.md §2.3 surface-count sentence missing"
     assert (int(m.group(1)), int(m.group(2))) == (n_reg, n_orc), (
         f"SURVEY.md says {m.groups()}, registry has {(n_reg, n_orc)}"
     )
-    with open("/root/repo/README.md") as fh:
+    with open(os.path.join(ROOT, "README.md")) as fh:
         readme = fh.read()
     m = re.search(r"(\d+) of (\d+) registered queries hash-compare", readme)
     assert m, "README.md oracle-count sentence missing"
@@ -690,7 +695,7 @@ def test_no_literal_task_counts_in_operator_code():
     import re
 
     offenders = []
-    for path in glob.glob("/root/repo/pyspark_xgboost_spark/operators/*.py"):
+    for path in glob.glob(f"{ROOT}/pyspark_xgboost_spark/operators/*.py"):
         with open(path) as fh:
             for i, line in enumerate(fh, 1):
                 if re.search(r"\.repartition\(\s*\d", line):
@@ -698,22 +703,53 @@ def test_no_literal_task_counts_in_operator_code():
     assert offenders == [], "\n".join(offenders)
 
 
-def test_grading_window_matches_policy():
-    """The driver's 50-slot grading window is machine-checked, not
-    hand-trusted: tools/check_window.py recomputes the expected window
-    from the committed CORRECTNESS history (never-driver-graded oracle
-    queries first minus the explicit deferral list, then stalest
-    attested rows) and this test reds on ANY divergence. Added after
-    two consecutive rounds in which the hand-written plan comment
-    dropped exactly one query (r11: sample_coreset_dsquared; r12:
-    graph_katz_centrality)."""
-    import sys
+def test_grading_window_matches_policy(tmp_path):
+    """The driver grades the first 50 registered queries, and the
+    registry computes that order from the CORRECTNESS history: oracle
+    queries never graded first, then the stalest driver row first, then
+    the rows-only queries, each tier by name. Two hand-copied windows
+    each dropped one query (r11: sample_coreset_dsquared; r12:
+    graph_katz_centrality); a computed order has nothing to drop."""
+    import json
 
-    sys.path.insert(0, "/root/repo/tools")
-    import check_window
+    from pyspark_xgboost_spark import registry
 
-    problems = check_window.audit()
-    assert problems == [], "\n".join(problems)
+    ok = {"hash_match": True, "err": None}
+    artifacts = {
+        "CORRECTNESS_r01.json": {
+            "b_old": ok, "a_old": ok, "c_regraded": ok,
+            "z_rows": {"err": "no_oracle", "spark_rows": 3},
+        },
+        "CORRECTNESS_r09.json": {"c_regraded": {"hash_match": False}},
+        "CORRECTNESS_r10.json": {"d_newest": ok},
+    }
+    for fname, rows in artifacts.items():
+        (tmp_path / fname).write_text(json.dumps(rows))
+    oracles = {"a_old", "b_old", "c_regraded", "d_newest", "f_never", "e_never"}
+    names = sorted(oracles | {"z_rows", "y_rows_never"}, reverse=True)
+
+    history = registry.correctness_history(str(tmp_path))
+    assert history["c_regraded"][0] == 9
+    assert registry.grading_order(names, oracles, history) == [
+        "e_never", "f_never",  # never graded, by name
+        "a_old", "b_old",  # stalest round, ties by name
+        "c_regraded", "d_newest",
+        "y_rows_never", "z_rows",  # rows-only last, by name
+    ]
+    # a checkout without artifacts: name order, rows-only still last
+    empty = tmp_path / "none"
+    empty.mkdir()
+    assert registry.grading_order(
+        names, oracles, registry.correctness_history(str(empty))
+    ) == sorted(oracles) + ["y_rows_never", "z_rows"]
+
+    # the live registry's window follows the committed history
+    qs = list(all_queries())
+    live_oracles = all_oracles()
+    live = registry.correctness_history()
+    never = sorted(n for n in live_oracles if n not in live)
+    stale = sorted((live[n][0], n) for n in live_oracles if n in live)
+    assert qs[:50] == (never + [n for _, n in stale])[:50]
 
 
 # Pooled contract sweep (smoke-sweep discipline; see test_plans_r11).

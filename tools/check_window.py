@@ -1,42 +1,18 @@
-"""Grading-window audit: verify the driver's 50 correctness slots
-against a MACHINE-COMPUTED expected composition, and print attestation
-history.
+"""List the driver's 50-query grading window and each query's
+attestation history.
 
-The driver grades only the FIRST 50 registered queries each round
-(registry.py controls the order via _GRADE_FIRST / _CEDE_WINDOW). Two
-consecutive rounds (r11, r12) the hand-maintained window plan dropped
-exactly one query (sample_coreset_dsquared, then graph_katz_centrality),
-so the window is no longer trusted as hand-written text: this tool
-recomputes the expected window from the committed CORRECTNESS_r*.json
-history and the policy
-
-    expected = sorted(never-driver-graded oracle queries
-                      - _DEFER_TO_NEXT_WINDOW)
-             + stalest attested oracle rows, sorted by (round, name),
-    truncated to 50,
-
-and `audit()` returns every divergence between that and the registry's
-actual first-50 order. A pytest case (tests/test_relational.py)
-fails the suite on any divergence, so a hand-edit cannot silently
-drop a query a third time.
-
-_DEFER_TO_NEXT_WINDOW (registry.py) holds queries registered AFTER the
-current window was frozen; the audit verifies each deferred name is
-registered, oracle-backed, and truly has no driver row — deferral can
-postpone a query one round but can never hide it.
+The driver grades only the FIRST 50 registered queries each round. The
+registry computes that order when it loads, from the committed
+CORRECTNESS_r*.json history (see the registry module docstring for the
+sort key), so there is no hand-kept list to audit: this tool only shows
+the window and what each slot last scored.
 
 Usage:
-    python tools/check_window.py           # audit + window listing
-    python tools/check_window.py --next    # print the NEXT round's
-                                           # expected 50-name window
-                                           # (assumes the current
-                                           # window all lands green)
+    python tools/check_window.py
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 
@@ -46,184 +22,36 @@ sys.path.insert(0, _ROOT)
 WINDOW = 50
 
 
-def load_history(
-    repo: str = _ROOT, exclude_newest: bool = False
-) -> dict[str, tuple[str, str]]:
-    """name -> (latest round with a driver row, status).
-
-    ``exclude_newest=True`` drops the highest-numbered artifact —
-    i.e. reconstructs the history the PREVIOUS recomposition saw, used
-    by audit() to tell "registry is one artifact behind: recompose now"
-    apart from genuine composition divergence.
-    """
-    paths = sorted(glob.glob(f"{repo}/CORRECTNESS_r*.json"))
-    if exclude_newest and paths:
-        paths = paths[:-1]
-    history: dict[str, tuple[str, str]] = {}
-    for path in paths:
-        rnd = path.rsplit("CORRECTNESS_", 1)[-1].removesuffix(".json")
-        with open(path) as fh:
-            data = json.load(fh)
-        for name, row in data.items():
-            if row.get("err") == "no_oracle":
-                # the driver's rows-only record — its own status
-                # regardless of spark_rows; 'ran' vs 'not run' is
-                # carried by whether the row count was captured
-                status = (
-                    "rows-only-ran"
-                    if row.get("spark_rows") is not None
-                    else "rows-only-norun"
-                )
-            elif row.get("err"):
-                status = "ERR"
-            elif row.get("hash_match") is True:
-                status = "green"
-            elif row.get("hash_match") is False:
-                status = "WRONG"
-            elif row.get("rows_match") is True:
-                status = "rows-only-green"
-            else:
-                status = "?"
-            history[name] = (rnd, status)
-    return history
-
-
-def expected_window(
-    oracle_names: set[str],
-    history: dict[str, tuple[str, str]],
-    deferred: set[str],
-    window: int = WINDOW,
-) -> list[str]:
-    """The policy-computed window: never-graded first, then stalest."""
-    never = sorted(
-        n for n in oracle_names if n not in history and n not in deferred
-    )
-    stale = sorted(
-        (history[n][0], n) for n in oracle_names if n in history
-    )
-    return (never + [n for _, n in stale])[:window]
-
-
-def audit() -> list[str]:
-    """Return a list of problems (empty == the window matches policy)."""
-    from pyspark_xgboost_spark.registry import (
-        _DEFER_TO_NEXT_WINDOW,
-        all_oracles,
-        all_queries,
-    )
-
-    qs = list(all_queries())
-    oracles = set(all_oracles())
-    history = load_history()
-    problems: list[str] = []
-
-    for name in _DEFER_TO_NEXT_WINDOW:
-        if name not in qs:
-            problems.append(f"deferred query {name!r} is not registered")
-        elif name not in oracles:
-            problems.append(
-                f"deferred query {name!r} has no oracle (rows-only queries "
-                "belong in _CEDE_WINDOW, not the deferral list)"
-            )
-        elif name in history:
-            problems.append(
-                f"deferred query {name!r} already has a driver row "
-                f"({history[name][0]}) — deferral is only for this round's "
-                "post-freeze registrations"
-            )
-
-    exp = expected_window(oracles, history, set(_DEFER_TO_NEXT_WINDOW))
-    got = qs[:WINDOW]
-    if exp != got:
-        # Disambiguate the two red causes (r13 verdict item 7): if the
-        # registry's window matches the policy computed WITHOUT the
-        # newest artifact, the registry is simply one recomposition
-        # behind that artifact — the designed "recompose now" signal,
-        # not a composition bug.
-        prev_hist = load_history(exclude_newest=True)
-        newest = max(
-            (
-                p.rsplit("CORRECTNESS_", 1)[-1].removesuffix(".json")
-                for p in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))
-            ),
-            default="r??",
-        )
-        if got == expected_window(
-            oracles, prev_hist, set(_DEFER_TO_NEXT_WINDOW)
-        ):
-            problems.append(
-                f"REGISTRY STALE vs newest artifact CORRECTNESS_{newest}"
-                ".json — the window is still the one composed BEFORE that "
-                "artifact landed (this is the designed start-of-round "
-                "signal, not a composition bug): adopt `python "
-                "tools/check_window.py --next` verbatim into "
-                "registry.py:_GRADE_FIRST and empty _DEFER_TO_NEXT_WINDOW "
-                "of the graded names"
-            )
-            return problems
-        missing = [n for n in exp if n not in got]
-        extra = [n for n in got if n not in exp]
-        if missing:
-            problems.append(f"expected in window but absent: {missing}")
-        if extra:
-            problems.append(f"in window but not expected: {extra}")
-        if not missing and not extra:
-            pairs = [
-                f"slot {i + 1}: expected {e!r} got {g!r}"
-                for i, (e, g) in enumerate(zip(exp, got))
-                if e != g
-            ]
-            problems.append("window order diverges: " + "; ".join(pairs))
-
-    # every never-graded oracle query must be accounted for: in the
-    # window or explicitly deferred (the omission class r11/r12 hit)
-    never = [n for n in oracles if n not in history]
-    lost = [
-        n
-        for n in never
-        if n not in got and n not in _DEFER_TO_NEXT_WINDOW
-    ]
-    if lost:
-        problems.append(
-            f"never-driver-graded queries neither in-window nor deferred: "
-            f"{sorted(lost)}"
-        )
-    return problems
-
-
-def next_window() -> list[str]:
-    """The following round's expected window, assuming the current
-    window all lands green this round (every in-window query's history
-    advances to 'current round + 1')."""
-    from pyspark_xgboost_spark.registry import all_oracles, all_queries
-
-    qs = list(all_queries())
-    oracles = set(all_oracles())
-    history = load_history()
-    rounds = [
-        int(p.rsplit("CORRECTNESS_r", 1)[-1].removesuffix(".json"))
-        for p in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))
-    ]
-    nxt = f"r{max(rounds) + 1:02d}" if rounds else "r??"
-    simulated = dict(history)
-    for name in qs[:WINDOW]:
-        if name in oracles:
-            simulated[name] = (nxt, "green")
-    # deferral empties into the head at recomposition time
-    return expected_window(oracles, simulated, set())
+def row_status(row: dict) -> str:
+    """One word for a driver row."""
+    if row.get("err") == "no_oracle":
+        # the driver's rows-only record: 'ran' vs 'not run' is carried
+        # by whether the row count was captured
+        return "rows-only-ran" if row.get("spark_rows") is not None else "rows-only-norun"
+    if row.get("err"):
+        return "ERR"
+    if row.get("hash_match") is True:
+        return "green"
+    if row.get("hash_match") is False:
+        return "WRONG"
+    if row.get("rows_match") is True:
+        return "rows-only-green"
+    return "?"
 
 
 def main() -> None:
-    if "--next" in sys.argv:
-        for i, name in enumerate(next_window(), 1):
-            print(f"{i:3d}. {name}")
-        return
-
-    from pyspark_xgboost_spark.registry import all_oracles, all_queries
+    from pyspark_xgboost_spark.registry import (
+        all_oracles,
+        all_queries,
+        correctness_history,
+    )
 
     qs = list(all_queries())
     oracles = all_oracles()
-    history = load_history()
+    history = {
+        name: (f"r{rnd:02d}", row_status(row))
+        for name, (rnd, row) in correctness_history().items()
+    }
 
     window, rest = qs[:WINDOW], qs[WINDOW:]
     print(f"== grading window (first {WINDOW} of {len(qs)}) ==")
@@ -232,20 +60,12 @@ def main() -> None:
         orc = "oracle" if name in oracles else "rows-only"
         print(f"{i:3d}. {name:45s} {orc:9s} last: {rnd} {status}")
 
-    ungraded_out = [n for n in rest if n not in history]
+    ungraded_out = [n for n in rest if n in oracles and n not in history]
     red_out = [
         n for n in rest if history.get(n, ("", ""))[1] in ("ERR", "WRONG")
     ]
     print(f"\ndisplaced without ANY driver row ({len(ungraded_out)}): {ungraded_out}")
     print(f"displaced with a RED last row ({len(red_out)}): {red_out}")
-
-    problems = audit()
-    if problems:
-        print("\n== WINDOW POLICY VIOLATIONS ==")
-        for p in problems:
-            print(f"  - {p}")
-        sys.exit(1)
-    print("\nwindow matches the machine-computed policy composition")
 
 
 if __name__ == "__main__":

@@ -16,11 +16,12 @@ sys.path.insert(0, _ROOT)
 
 HEADER = """# QUERIES — registered operator catalog (generated)
 
-One row per `queries()` entry in registration/grading order. Generated
-by `tools/gen_catalog.py` from the registry — regenerate after adding
-an operator (a test pins freshness). `oracle` = hash-compared against
-DuckDB at sf0.01; rows-only queries carry goldens/property tests
-instead.
+One row per `queries()` entry, in name order (the grading order moves
+with every round's CORRECTNESS artifact; `tools/check_window.py` lists
+it). Generated by `tools/gen_catalog.py` from the registry — regenerate
+after adding an operator (a test pins freshness). `oracle` =
+hash-compared against DuckDB at sf0.01; rows-only queries carry
+goldens/property tests instead.
 
 | # | query | check | summary |
 |---|---|---|---|
@@ -33,7 +34,7 @@ def render() -> str:
     qs = registry.all_queries()
     oracles = registry.all_oracles()
     lines = [HEADER]
-    for i, (name, fn) in enumerate(qs.items(), 1):
+    for i, (name, fn) in enumerate(sorted(qs.items()), 1):
         doc = (fn.__doc__ or "").strip().splitlines()
         summary = doc[0].rstrip() if doc else ""
         while summary.endswith(("—", "-", ":")):
