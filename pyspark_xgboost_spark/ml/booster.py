@@ -30,6 +30,9 @@ rather than per-node or per-tree Python loops:
   a leaf go to an extra histogram slot that is dropped, instead of
   copying the live rows out at every level. A row's split code is one
   flat ``take``.
+* A boosting round's class trees (one per class of ``multi:softprob``)
+  grow level by level together: their histograms share one array, one
+  allreduce and one split search per level (``_grow_trees``).
 * A ``Booster`` packs its trees once into flat arrays with per-tree
   roots; leaves are self-loops. ``_walk`` moves every (tree, row) pair
   one level at a time, and margins are still summed tree by tree in
@@ -239,6 +242,19 @@ def n_bins_p1(edges: list[np.ndarray]) -> int:
     return longest + 2
 
 
+# bin codes are uint16 (bin_matrix): max_bin - 1 quantiles give at most
+# max_bin - 1 cuts, so real codes run to max_bin - 1 and the missing
+# sentinel is max_bin at most
+MAX_BIN = int(np.iinfo(np.uint16).max)
+
+
+def check_max_bin(max_bin) -> None:
+    """Reject a ``max_bin`` whose codes would wrap in ``uint16`` (a wrapped
+    missing sentinel lands rows with NaN in a real bin)."""
+    if int(max_bin) > MAX_BIN:
+        raise ValueError(f"max_bin must be <= {MAX_BIN} (bin codes are uint16), got {max_bin}")
+
+
 def bin_matrix(X: np.ndarray, edges: list[np.ndarray], missing: float) -> np.ndarray:
     """float matrix ``(n, f)`` → feature-major ``(f, n)`` uint16 bin codes;
     the global last slot == missing.
@@ -395,26 +411,24 @@ def _walk(packed: _Packed, X: np.ndarray, missing: float, roots: np.ndarray) -> 
 # ---------------------------------------------------------------------------
 
 
-def _build_histograms(B, g, h, slot_of_row, n_slots, n_bins_p1):
-    """(n_slots, n_features, max_bin+1) grad/hess sums via bincount over
+def _build_histograms(B, g, h, slot_of_row, out):
+    """Grad/hess sums of one tree's frontier into ``out``, a
+    ``(2, n_slots, n_features, max_bin+1)`` view, via bincount over
     feature-major codes ``B``. A row whose slot is ``n_slots`` has
     settled in a leaf: it lands in one extra slot that is dropped, so
     live rows never need to be copied out."""
-    f = B.shape[0]
-    hist_g = np.empty((n_slots, f, n_bins_p1))
-    hist_h = np.empty((n_slots, f, n_bins_p1))
+    n_slots, f, n_bins_p1 = out.shape[1:]
     base = slot_of_row * n_bins_p1
     size = (n_slots + 1) * n_bins_p1
     kept = n_slots * n_bins_p1
     for j in range(f):
         idx = base + B[j]
-        hist_g[:, j, :] = np.bincount(idx, weights=g, minlength=size)[:kept].reshape(
+        out[0, :, j, :] = np.bincount(idx, weights=g, minlength=size)[:kept].reshape(
             n_slots, n_bins_p1
         )
-        hist_h[:, j, :] = np.bincount(idx, weights=h, minlength=size)[:kept].reshape(
+        out[1, :, j, :] = np.bincount(idx, weights=h, minlength=size)[:kept].reshape(
             n_slots, n_bins_p1
         )
-    return hist_g, hist_h
 
 
 def _best_splits(hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=None):
@@ -674,24 +688,34 @@ def _spill_to_memmap(arr: np.ndarray, workdir: str, name: str) -> np.ndarray:
     return mm
 
 
-def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, lr, comm):
-    """One depth-wise tree over feature-major bin codes ``B`` (f, n);
-    histograms allreduced so all workers grow the identical tree.
+def _grow_trees(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, lr, comm):
+    """A round's depth-wise trees, one per row of ``g``/``h`` (trees, n),
+    grown level by level together over feature-major bin codes ``B``
+    (f, n). The round's gradients are computed before any of its trees,
+    so the trees do not depend on each other: at each level every live
+    tree builds its own histograms
+    into one array, concatenated along the slot axis; ONE allreduce sums
+    it across the cluster and ONE ``_best_splits`` call searches it, and
+    all workers grow the identical trees. A tree that stops splitting
+    drops out of the later levels. Regression is the one-tree case.
 
-    Returns ``(tree, delta)`` where ``delta`` is this shard's margin
-    update (leaf value of the node each local row lands in). Rows are
-    routed during growth anyway, so the per-round full-data re-traversal
-    the margin update would otherwise need is free here — and bin-code
-    routing (``code <= b``) is exactly the float predicate
-    (``x < edges[f][b]``) because codes are searchsorted-right ranks.
+    Returns ``(trees, delta)``: the trees in row order and each tree's
+    margin update over this shard (leaf value of the node each local row
+    lands in), ``(trees, n)``. Rows are routed during growth anyway, so
+    the per-round full-data re-traversal the margin update would
+    otherwise need is free here — and bin-code routing (``code <= b``)
+    is exactly the float predicate (``x < edges[f][b]``) because codes
+    are searchsorted-right ranks.
 
-    Rows stay in place: ``slot`` holds each row's frontier slot, and a
-    row whose node became a leaf moves to the extra slot ``n_slots``,
-    which the histograms drop. Nodes are numbered level by level, so a
-    level's frontier is the contiguous id range after its parents and
-    the whole level is decided with array ops over its slots.
+    Rows stay in place: ``slot[k]`` holds each row's frontier slot in
+    tree k, and a row whose node became a leaf moves to the extra slot
+    ``n_slots[k]``, which the histograms drop. Nodes are numbered level
+    by level, so a level's frontier is the contiguous id range after its
+    parents and the whole level is decided with array ops over its
+    slots.
     """
     n_feat, n = B.shape
+    K = len(g)
     nbp1 = n_bins_p1(edges)
     edge_counts = np.array([len(e) for e in edges], dtype=np.int64)
     cuts = np.zeros((n_feat, max(1, int(edge_counts.max(initial=0)))))
@@ -699,37 +723,49 @@ def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, l
         cuts[j, : len(e)] = e
     codes = B.ravel()
     row = np.arange(n, dtype=np.int64)
-    slot = np.zeros(n, dtype=np.int64)
-    delta = np.zeros(n, dtype=np.float64)
-    # per level, in _Tree.__slots__ order: (feature, threshold, left,
-    # right, value, default_left) of the level's nodes
-    levels: list[tuple[np.ndarray, ...]] = []
-    first_id, n_slots = 0, 1
-    # grad/hess totals of the last frontier, carried from its parents'
-    # histograms so max-depth leaves need no extra histogram pass (or
-    # allreduce)
-    node_G: np.ndarray | None = None
-    node_H: np.ndarray | None = None
+    delta = np.zeros((K, n), dtype=np.float64)
+    # per tree: each row's slot, the frontier's first node id and size,
+    # and per level, in _Tree.__slots__ order, (feature, threshold,
+    # left, right, value, default_left) of the level's nodes
+    slot = [np.zeros(n, dtype=np.int64) for _ in range(K)]
+    first_id = [0] * K
+    n_slots = [1] * K
+    levels: list[list[tuple[np.ndarray, ...]]] = [[] for _ in range(K)]
+    # per tree: grad/hess totals of the last frontier, carried from its
+    # parents' histograms so max-depth leaves need no extra histogram
+    # pass (or allreduce)
+    node_GH: list[tuple[np.ndarray, np.ndarray]] = [None] * K  # type: ignore[list-item]
+    live = list(range(K))
 
-    for depth in range(max_depth):
-        hist_g, hist_h = _build_histograms(B, g, h, slot, n_slots, nbp1)
-        # sum shard-local histograms across the cluster — the ONLY
-        # cross-worker exchange in the training loop
-        stacked = comm.allreduce_sum(np.stack([hist_g, hist_h]))
-        hist_g, hist_h = stacked[0], stacked[1]
-        gain, feat, bins, dleft, _, _ = _best_splits(
-            hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=edge_counts
-        )
+    def reduced_histograms():
+        """Every live tree's histograms, summed across the cluster in
+        one allreduce — the ONLY cross-worker exchange in the training
+        loop — and the first slot of each tree."""
+        lo = [0]
+        for k in live:
+            lo.append(lo[-1] + n_slots[k])
+        hist = np.empty((2, lo[-1], n_feat, nbp1))
+        for i, k in enumerate(live):
+            _build_histograms(B, g[k], h[k], slot[k], hist[:, lo[i] : lo[i + 1]])
+        hist = comm.allreduce_sum(hist)
+        return hist[0], hist[1], lo
+
+    def advance(k, hist_g, hist_h, gain, feat, bins, dleft, last) -> bool:
+        """Decide tree k's frontier from its reduced histograms and split
+        search: record the level, give rows that landed in a new leaf
+        their margin update, and route the rest to child slots. False
+        once the tree stops splitting. (Its own frame, so the per-row
+        temporaries are freed before the next tree's.)"""
         # node totals: sum any single feature's histogram over its bins
         Gn = hist_g[:, 0, :].sum(axis=1)
         Hn = hist_h[:, 0, :].sum(axis=1)
         split = np.isfinite(gain) & (gain > 0) & (bins < edge_counts[feat])
         n_split = int(split.sum())
         rank = np.cumsum(split) - 1
-        left = np.where(split, first_id + n_slots + 2 * rank, -1)
+        left = np.where(split, first_id[k] + n_slots[k] + 2 * rank, -1)
         # leaf: weight = -G/(H+λ) scaled by lr
         value = np.where(split, 0.0, -Gn / (Hn + reg_lambda) * lr)
-        levels.append((
+        levels[k].append((
             np.where(split, feat, -1),
             np.where(split, cuts[feat, bins], 0.0),
             left,
@@ -739,11 +775,12 @@ def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, l
         ))
 
         # rows whose slot became a leaf this level get their margin now
-        leaf_now = np.append(~split, False)[slot]
-        delta[leaf_now] = value[slot[leaf_now]]
+        s_k = slot[k]
+        leaf_now = np.append(~split, False)[s_k]
+        delta[k][leaf_now] = value[s_k[leaf_now]]
         if n_split == 0:
-            return _tree_of_levels(levels), delta
-        if depth == max_depth - 1:
+            return False
+        if last:
             # chosen-split child totals (missing bucket goes default
             # side) become the max-depth leaves below
             node_G = np.empty(2 * n_split)
@@ -754,6 +791,7 @@ def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, l
                 HL = hist_h[s, f, : b + 1].sum() + (hist_h[s, f, -1] if dleft[s] else 0.0)
                 node_G[2 * c : 2 * c + 2] = GL, Gn[s] - GL
                 node_H[2 * c : 2 * c + 2] = HL, Hn[s] - HL
+            node_GH[k] = node_G, node_H
 
         # route rows to child slots. Per slot (the extra settled slot
         # last): the feature to read, the first child slot (settled rows
@@ -763,28 +801,49 @@ def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, l
         # (values above the last cut).
         read_feat = np.append(np.where(split, feat, 0), 0)
         first_child = np.append(np.where(split, 2 * rank, 2 * n_split), 2 * n_split)
-        go_right = np.zeros((n_slots + 1, nbp1), dtype=bool)
+        go_right = np.zeros((n_slots[k] + 1, nbp1), dtype=bool)
         sp = np.flatnonzero(split)
         go_right[sp, :-1] = np.arange(nbp1 - 1)[None, :] > bins[sp, None]
         go_right[sp, -1] = ~dleft[sp]
-        code = codes[read_feat[slot] * n + row]
-        slot = first_child[slot] + go_right.ravel()[slot * nbp1 + code]
-        first_id += n_slots
-        n_slots = 2 * n_split
+        code = codes[read_feat[s_k] * n + row]
+        slot[k] = first_child[s_k] + go_right.ravel()[s_k * nbp1 + code]
+        first_id[k] += n_slots[k]
+        n_slots[k] = 2 * n_split
+        return True
 
+    for depth in range(max_depth):
+        hist_g, hist_h, lo = reduced_histograms()
+        gain, feat, bins, dleft, _, _ = _best_splits(
+            hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=edge_counts
+        )
+        last = depth == max_depth - 1
+        still = []
+        for i, k in enumerate(live):
+            span = slice(lo[i], lo[i + 1])
+            parts = (a[span] for a in (hist_g, hist_h, gain, feat, bins, dleft))
+            if advance(k, *parts, last):
+                still.append(k)
+        live = still
+        if not live:
+            break
+
+    if live and max_depth == 0:
+        # no split level ran; fall back to one histogram of the roots
+        hist_g, hist_h, lo = reduced_histograms()
+        for i, k in enumerate(live):
+            span = slice(lo[i], lo[i + 1])
+            node_GH[k] = hist_g[span, 0, :].sum(axis=1), hist_h[span, 0, :].sum(axis=1)
     # any remaining frontier nodes at max depth become leaves
-    if node_G is None or node_H is None:
-        # max_depth == 0: no split level ran; fall back to one histogram
-        hist_g, hist_h = _build_histograms(B, g, h, slot, n_slots, nbp1)
-        stacked = comm.allreduce_sum(np.stack([hist_g, hist_h]))
-        node_G = stacked[0][:, 0, :].sum(axis=1)
-        node_H = stacked[1][:, 0, :].sum(axis=1)
-    vals = -node_G / (node_H + reg_lambda) * lr
-    no_split = np.full(n_slots, -1)
-    levels.append((no_split, np.zeros(n_slots), no_split, no_split, vals, np.ones(n_slots, bool)))
-    live = slot < n_slots
-    delta[live] = vals[slot[live]]
-    return _tree_of_levels(levels), delta
+    for k in live:
+        node_G, node_H = node_GH[k]
+        vals = -node_G / (node_H + reg_lambda) * lr
+        no_split = np.full(n_slots[k], -1)
+        levels[k].append(
+            (no_split, np.zeros(n_slots[k]), no_split, no_split, vals, np.ones(n_slots[k], bool))
+        )
+        settled = slot[k] < n_slots[k]
+        delta[k][settled] = vals[slot[k][settled]]
+    return [_tree_of_levels(lv) for lv in levels], delta
 
 
 def _tree_of_levels(levels: list[tuple[np.ndarray, ...]]) -> _Tree:
@@ -819,6 +878,7 @@ def train(
     callbacks so control flow stays lock-stepped."""
     p = dict(DEFAULT_PARAMS)
     p.update({k: v for k, v in (params or {}).items() if v is not None})
+    check_max_bin(p["max_bin"])
     comm = comm or LocalComm()
 
     X = np.ascontiguousarray(X, dtype=np.float32)
@@ -911,33 +971,24 @@ def train(
         if w is not None:
             g = g * (w[:, None] if g.ndim == 2 else w)
             h = h * (w[:, None] if h.ndim == 2 else w)
-        for k in range(K):
-            gk = g[:, k] if K > 1 else g
-            hk = h[:, k] if K > 1 else h
-            tree, delta = _grow_tree(
-                B,
-                edges,
-                np.ascontiguousarray(gk),
-                np.ascontiguousarray(hk),
-                int(p["max_depth"]),
-                float(p["reg_lambda"]),
-                float(p["gamma"]),
-                float(p["min_child_weight"]),
-                lr_rnd,
-                comm,
-            )
-            trees.append(tree)
-            if K > 1:
-                margin[:, k] += delta
-            else:
-                margin += delta
-            if has_eval and len(eX):
-                one = _pack([tree])
-                de = _walk(one, eX, missing, one.root)[0]
-                if K > 1:
-                    e_margin[:, k] += de
-                else:
-                    e_margin += de
+        round_trees, delta = _grow_trees(
+            B,
+            edges,
+            # one row per class tree: (K, n)
+            np.ascontiguousarray(g.reshape(len(g), K).T),
+            np.ascontiguousarray(h.reshape(len(h), K).T),
+            int(p["max_depth"]),
+            float(p["reg_lambda"]),
+            float(p["gamma"]),
+            float(p["min_child_weight"]),
+            lr_rnd,
+            comm,
+        )
+        trees.extend(round_trees)
+        margin += delta.T.reshape(margin.shape)
+        if has_eval and len(eX):
+            packed = _pack(round_trees)
+            e_margin += _walk(packed, eX, missing, packed.root).T.reshape(e_margin.shape)
         # the eval metric feeds BOTH early stopping and user callbacks:
         # with an eval_set, after_iteration must see the score even when
         # early_stopping_rounds is 0 (TrainingCallback contract — score

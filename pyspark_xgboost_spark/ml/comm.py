@@ -15,29 +15,36 @@ candidate, and clients probe the list until the cookie matches — see
 reduction server (star topology) and the other workers hold one
 persistent TCP connection each.
 
-Protocol (client → server, per round):
-    1 byte op ('S' sum | 'G' gather | 'Q' quit), 8-byte big-endian
-    length, payload (``np.save`` bytes for S, raw bytes for G).
-Server responds with one length-prefixed payload: the summed array
-(S) or the length-prefixed concatenation of every worker's payload in
-rank order (G). Every worker issues the same rounds in the same order
-(the kernel's control flow is identical on all workers), and each
-blocks on its response before the next round, so the server can read
-exactly one message per client per round.
+Protocol: every message is one frame, 1 byte op ('S' sum | 'G' gather
+| 'Q' quit), 8-byte big-endian length, payload. An S payload is the
+array's raw bytes (``tobytes()``) with no header: every worker issues
+the same rounds in the same order on arrays of the same dtype and shape
+(the kernel's control flow is identical on all workers), so each
+receiver decodes a frame against its own array, and a frame of another
+length raises instead of being decoded. A G payload is raw bytes. Rank
+0 runs the hub in its own thread, with no handoff to another: per round
+it reads exactly one frame from each client in rank order, and answers
+each with one frame — the sum, a left fold in rank order (rank 0's
+array, then rank 1's, rank 2's, ...; float addition is not associative,
+so the order is fixed and every rank gets the same bits), or the
+length-prefixed concatenation of every worker's payload in rank order.
+Each client blocks on its response before its next round.
 
 One fit task, one star topology: rank 0 moves O(workers × payload) per
 round. Histogram payloads are O(nodes × features × bins), independent
-of data scale; the traced ``gbt`` benchmark moves about 16 KB per
-allreduce call (1.15 MB in 73 calls per benchmark operation), so the
-hub is nowhere near its limit at the gang sizes a fit runs. One-worker
-fits use ``booster.LocalComm`` behind the same interface.
+of data scale. A boosting round grows its class trees together, so each
+tree level is one allreduce for all of them: the traced ``gbt``
+benchmark moves the same 1.15 MB per benchmark operation in 47 calls
+(about 25 KB each) instead of 73, and the hub is nowhere near its limit
+at the gang sizes a fit runs. One-worker fits use ``booster.LocalComm``
+behind the same interface.
 """
 
 from __future__ import annotations
 
 import errno
 import hashlib
-import io
+import math
 import socket
 import struct
 import threading
@@ -110,30 +117,43 @@ def _send_msg(sock: socket.socket, op: bytes, payload: bytes) -> None:
     sock.sendall(op + _LEN.pack(len(payload)) + payload)
 
 
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
+def _recv_exact(sock: socket.socket, n: int) -> bytearray:
+    buf = bytearray(n)
+    view = memoryview(buf)
+    got = 0
+    while got < n:
+        k = sock.recv_into(view[got:])
+        if not k:
             raise ConnectionError("peer closed during reduction")
-        buf.extend(chunk)
-    return bytes(buf)
+        got += k
+    return buf
 
 
-def _recv_msg(sock: socket.socket) -> tuple[bytes, bytes]:
-    op = _recv_exact(sock, 1)
-    (ln,) = _LEN.unpack(_recv_exact(sock, 8))
-    return op, _recv_exact(sock, ln)
+def _recv_msg(sock: socket.socket) -> tuple[bytes, bytearray]:
+    head = _recv_exact(sock, 1 + _LEN.size)
+    (ln,) = _LEN.unpack_from(head, 1)
+    return bytes(head[:1]), _recv_exact(sock, ln)
 
 
-def _np_dumps(arr: np.ndarray) -> bytes:
-    buf = io.BytesIO()
-    np.save(buf, np.ascontiguousarray(arr), allow_pickle=False)
-    return buf.getvalue()
+def _decode(frame: bytearray, like: np.ndarray) -> np.ndarray:
+    """A sum frame read as ``like``'s dtype and shape. Every rank runs
+    the same rounds on arrays of the same dtype and shape, so a frame of
+    any other length means the ranks left lockstep."""
+    if len(frame) != like.nbytes:
+        raise ValueError(
+            f"allreduce frame of {len(frame)} bytes, expected {like.nbytes} "
+            f"for {like.dtype} {like.shape}"
+        )
+    return np.frombuffer(frame, dtype=like.dtype).reshape(like.shape)
 
 
-def _np_loads(b: bytes) -> np.ndarray:
-    return np.load(io.BytesIO(b), allow_pickle=False)
+def _decode_rows(frame: bytes, like: np.ndarray) -> np.ndarray:
+    """A gathered frame read as rows of ``like``'s dtype and row shape
+    (ranks agree on the row width, not on the row count)."""
+    row = like.dtype.itemsize * math.prod(like.shape[1:])
+    if row == 0 or len(frame) % row:
+        raise ValueError(f"gathered frame of {len(frame)} bytes is not whole rows of {row} bytes")
+    return np.frombuffer(frame, dtype=like.dtype).reshape(-1, *like.shape[1:])
 
 
 def _pack_list(items: list[bytes]) -> bytes:
@@ -147,18 +167,23 @@ def _pack_list(items: list[bytes]) -> bytes:
 def _unpack_list(b: bytes) -> list[bytes]:
     items, off = [], 0
     while off < len(b):
-        (ln,) = _LEN.unpack(b[off : off + 8])
-        off += 8
-        items.append(b[off : off + ln])
+        (ln,) = _LEN.unpack_from(b, off)
+        off += _LEN.size
+        items.append(bytes(b[off : off + ln]))
         off += ln
     return items
 
 
 class _ReduceServer:
-    """Reduction hub, rank 0 of the star. One thread; one blocking read
-    per client per round (clients are lock-stepped by design). It binds
-    the first free port of ``ports`` and admits only clients that
-    complete the ``magic`` handshake."""
+    """Reduction hub, rank 0 of the star. Rank 0 runs every round in its
+    own thread: it reads one frame from each client in rank order
+    (clients are lock-stepped by design), combines, and sends the result
+    back, so a round costs no thread handoff. The constructor binds the
+    first free port of ``ports`` and returns at once; one short-lived
+    thread admits the clients that complete the ``magic`` handshake
+    (and drops every other peer) and ends when all ranks are in; rank
+    0's first round joins it. A round that fails closes every client
+    connection, so no client waits on a hub that gave up."""
 
     def __init__(self, n_clients: int, magic: bytes, ports: list[int], host: str = ""):
         self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
@@ -198,25 +223,16 @@ class _ReduceServer:
         self._magic = magic
         self._n = n_clients
         self._conns: list[socket.socket] = []
-        # rank-0's own per-round contribution / result mailboxes
-        self._own_in: "threading.Event" = threading.Event()
-        self._own_payload: tuple[bytes, bytes] | None = None
-        self._own_result: bytes | None = None
-        self._own_done = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
+        self._acceptor: threading.Thread | None = threading.Thread(target=self._accept, daemon=True)
+        self._acceptor.start()
 
-    # rank 0 calls this instead of a socket round-trip
-    def local_round(self, op: bytes, payload: bytes) -> bytes:
-        self._own_payload = (op, payload)
-        self._own_done.clear()
-        self._own_in.set()
-        self._own_done.wait()
-        res = self._own_result
-        assert res is not None
-        return res
+    def _clients(self) -> list[socket.socket]:
+        if self._acceptor is not None:
+            self._acceptor.join()
+            self._acceptor = None
+        return self._conns
 
-    def _run(self) -> None:
+    def _accept(self) -> None:
         # accept clients until all ranks are registered (they connect in
         # any order; after validating our magic they must echo the keyed
         # token back before the 4-byte rank header — see echo_token). A
@@ -242,41 +258,58 @@ class _ReduceServer:
                     conn.close()
                 except OSError:
                     pass
+        self._srv.close()
         self._conns = [by_rank[r] for r in sorted(by_rank)]
 
-        quit_count = 0
-        while quit_count == 0:
-            # wait for rank-0's contribution first — it defines the round
-            self._own_in.wait()
-            self._own_in.clear()
-            op0, payload0 = self._own_payload  # type: ignore[misc]
-            if op0 == b"Q":
-                for c in self._conns:
-                    try:
-                        _, _ = _recv_msg(c)  # their quit
-                        _send_msg(c, b"Q", b"")
-                        c.close()
-                    except OSError:
-                        pass
-                self._own_result = b""
-                self._own_done.set()
-                break
-            payloads = [payload0]
-            for c in self._conns:
-                op, pl = _recv_msg(c)
-                payloads.append(pl)
-            if op0 == b"S":
-                total = _np_loads(payloads[0])
-                for pl in payloads[1:]:
-                    total = total + _np_loads(pl)
-                result = _np_dumps(total)
-            else:  # b"G"
-                result = _pack_list(payloads)
-            for c in self._conns:
-                _send_msg(c, op0, result)
-            self._own_result = result
-            self._own_done.set()
-        self._srv.close()
+    def _read(self, op: bytes) -> list[bytearray]:
+        """One ``op`` frame from each client, in rank order."""
+        frames = []
+        for rank, c in enumerate(self._clients(), start=1):
+            got, frame = _recv_msg(c)
+            if got != op:
+                raise ConnectionError(f"rank {rank} sent op {got!r} in a {op!r} round")
+            frames.append(frame)
+        return frames
+
+    def _reply(self, op: bytes, payload: bytes) -> None:
+        for c in self._clients():
+            _send_msg(c, op, payload)
+
+    def _abort(self) -> None:
+        for c in self._conns:
+            c.close()
+
+    def allreduce_sum(self, arr: np.ndarray) -> np.ndarray:
+        # a left fold in rank order: rank 0's array, then rank 1, ... —
+        # float addition is not associative, so one fixed order gives
+        # every rank the same bits
+        try:
+            total = arr
+            for frame in self._read(b"S"):
+                total = total + _decode(frame, arr)
+            self._reply(b"S", total.tobytes())
+            return total
+        except BaseException:
+            self._abort()
+            raise
+
+    def allgather(self, payload: bytes) -> bytes:
+        try:
+            packed = _pack_list([payload, *self._read(b"G")])
+            self._reply(b"G", packed)
+            return packed
+        except BaseException:
+            self._abort()
+            raise
+
+    def close(self) -> None:
+        for c in self._clients():
+            try:
+                _recv_msg(c)  # their quit
+                _send_msg(c, b"Q", b"")
+                c.close()
+            except OSError:
+                pass
 
 
 class SocketComm:
@@ -294,31 +327,35 @@ class SocketComm:
         self._sock = sock
         assert (server is None) != (sock is None)
 
-    def _round(self, op: bytes, payload: bytes) -> bytes:
-        if self._server is not None:
-            return self._server.local_round(op, payload)
+    def _client_round(self, op: bytes, payload: bytes) -> bytearray:
         assert self._sock is not None
         _send_msg(self._sock, op, payload)
         _, result = _recv_msg(self._sock)
         return result
 
     def allreduce_sum(self, arr: np.ndarray) -> np.ndarray:
-        return _np_loads(self._round(b"S", _np_dumps(arr)))
+        arr = np.ascontiguousarray(arr)
+        if self._server is not None:
+            return self._server.allreduce_sum(arr)
+        return _decode(self._client_round(b"S", arr.tobytes()), arr)
 
     def allgather_rows(self, arr: np.ndarray) -> np.ndarray:
-        mats = [_np_loads(b) for b in _unpack_list(self._round(b"G", _np_dumps(arr)))]
-        widths = {m.shape[1] for m in mats if m.size}
-        if not widths:
-            return mats[0]
-        (w,) = widths
-        return np.concatenate([m.reshape(-1, w) for m in mats if m.size], axis=0)
+        arr = np.ascontiguousarray(arr)
+        return np.concatenate([_decode_rows(f, arr) for f in self._gather(arr.tobytes())])
 
     def allgather_bytes(self, b: bytes) -> list[bytes]:
-        return _unpack_list(self._round(b"G", b))
+        return self._gather(b)
+
+    # one round behind both gathers: each public method is one round,
+    # which is how perfbench's worker hook counts them
+    def _gather(self, b: bytes) -> list[bytes]:
+        if self._server is not None:
+            return _unpack_list(self._server.allgather(b))
+        return _unpack_list(self._client_round(b"G", b))
 
     def close(self) -> None:
         if self._server is not None:
-            self._server.local_round(b"Q", b"")
+            self._server.close()
         elif self._sock is not None:
             try:
                 _send_msg(self._sock, b"Q", b"")

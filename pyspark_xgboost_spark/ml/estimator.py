@@ -154,6 +154,10 @@ class _XgboostParamsBase:
         """Pre-flight checks (reference xgboost_core.py:187-238)."""
         if self.getOrDefault(getattr(self, "num_workers")) < 1:
             raise ValueError("num_workers must be >= 1")
+        # on the driver, so a bad value never reaches a barrier stage
+        max_bin = self._gen_kernel_params_dict().get("max_bin")
+        if max_bin is not None:
+            kernel.check_max_bin(max_bin)
         init_model = self.getOrDefault(getattr(self, "xgb_model"))
         if init_model is not None and not isinstance(init_model, kernel.Booster):
             raise ValueError(

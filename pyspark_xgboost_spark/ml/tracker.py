@@ -12,10 +12,13 @@ between gang sizes is the comm: ``booster.LocalComm`` for one worker,
 else the direct-TCP reduce star in ``comm.py`` (one star topology; the
 reference's ring is Rabit, tracker bootstrapped on partition 0 and
 broadcast through ``allGather`` — utils.py:64-126), reached with ZERO
-barrier RPCs (each costs a measured ~1.0 s — see ``rendezvous``).
-Histograms are O(nodes × features × bins) independent of shard row
-count, so payloads stay in the low MBs at any data scale; at 100 TB the
-rows never move — only histograms do.
+barrier RPCs (each costs a measured ~1.0 s — see ``rendezvous``). Rank
+0's task thread is the hub: it runs every round itself over raw array
+frames, and a boosting round grows all its class trees together, so a
+tree level costs one allreduce whatever the class count. Histograms are
+O(nodes × features × bins) independent of shard row count, so payloads
+stay in the low MBs at any data scale; at 100 TB the rows never move —
+only histograms do.
 
 Scheduling hazards mirrored from the reference:
 * barrier deadlock when num_workers exceeds cluster task slots —

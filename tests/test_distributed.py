@@ -174,7 +174,9 @@ def test_rendezvous_comm_roundtrip():
         assert results[r].tolist() == [3.0, 3.0, 3.0, 3.0]
 
 
-def _run_star(n, contribs, gathers):
+def _run_ranks(n, cookie, body):
+    """``body(comm, rank)`` on ``n`` SocketComm ranks (rank 0 in this
+    thread, the others in threads); returns every rank's result."""
     import threading
 
     from pyspark_xgboost_spark.ml.comm import (
@@ -185,31 +187,39 @@ def _run_star(n, contribs, gathers):
         cookie_magic,
     )
 
-    cookie = "topology-star-test"
     ports, magic = candidate_ports(cookie), cookie_magic(cookie)
     server = _ReduceServer(n_clients=n - 1, magic=magic, ports=ports)
-    out = {}
+    out, errors = {}, []
 
     def worker(rank):
-        if rank == 0:
-            comm = SocketComm(0, n, server=server)
-        else:
-            comm = SocketComm(
-                rank, n, sock=connect_rendezvous("127.0.0.1", ports, magic, rank)
-            )
-        out[rank] = (
-            comm.allreduce_sum(contribs[rank]).tolist(),
-            comm.allgather_bytes(gathers[rank]),
-        )
-        comm.close()
+        try:
+            if rank == 0:
+                comm = SocketComm(0, n, server=server)
+            else:
+                comm = SocketComm(
+                    rank, n, sock=connect_rendezvous("127.0.0.1", ports, magic, rank)
+                )
+            out[rank] = body(comm, rank)
+            comm.close()
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
 
     threads = [threading.Thread(target=worker, args=(r,)) for r in range(1, n)]
     for t in threads:
         t.start()
     worker(0)
     for t in threads:
-        t.join(timeout=30)
+        t.join(timeout=60)
+    assert not errors, errors
     return out
+
+
+def _run_star(n, contribs, gathers):
+    return _run_ranks(
+        n,
+        "topology-star-test",
+        lambda comm, r: (comm.allreduce_sum(contribs[r]).tolist(), comm.allgather_bytes(gathers[r])),
+    )
 
 
 @pytest.mark.parametrize("n", [9, 7, 5])
@@ -224,6 +234,73 @@ def test_star_reductions_sum_and_gather(n):
     expected_gather = [gathers[r] for r in range(n)]
     for r in range(n):
         assert star[r] == (expected_sum, expected_gather)
+
+
+def test_star_sum_is_a_left_fold_in_rank_order():
+    """Float addition is not associative: every rank gets
+    ``(r0 + r1) + r2``, bit for bit, and no other grouping."""
+    contribs = {
+        0: np.array([1e16, 1.0, -1e16, 0.1]),
+        1: np.array([1.0, 1e16, 1e16, 0.2]),
+        2: np.array([-1e16, -1e16, 1.0, 0.3]),
+    }
+    expected = (contribs[0] + contribs[1]) + contribs[2]
+    assert expected.tobytes() != (contribs[0] + (contribs[1] + contribs[2])).tobytes()
+    star = _run_star(3, contribs, {r: b"" for r in range(3)})
+    for r in range(3):
+        assert np.array(star[r][0]).tobytes() == expected.tobytes()
+
+
+def test_star_rejects_a_frame_of_the_wrong_length():
+    """Ranks decode a sum frame against their own array; a rank whose
+    array has another length makes rank 0 raise, and the client is cut
+    off instead of decoding a mismatched result."""
+    import threading
+
+    from pyspark_xgboost_spark.ml.comm import (
+        SocketComm,
+        _ReduceServer,
+        candidate_ports,
+        connect_rendezvous,
+        cookie_magic,
+    )
+
+    cookie = "test-wrong-length-attempt-0"
+    ports, magic = candidate_ports(cookie), cookie_magic(cookie)
+    server = _ReduceServer(n_clients=1, magic=magic, ports=ports)
+    errors = {}
+
+    def client():
+        comm = SocketComm(1, 2, sock=connect_rendezvous("127.0.0.1", ports, magic, 1))
+        try:
+            comm.allreduce_sum(np.zeros(3))
+        except Exception as e:  # noqa: BLE001 — asserted below
+            errors[1] = e
+
+    t = threading.Thread(target=client)
+    t.start()
+    with pytest.raises(ValueError, match="frame of 24 bytes, expected 32"):
+        SocketComm(0, 2, server=server).allreduce_sum(np.zeros(4))
+    t.join(timeout=10)
+    assert not t.is_alive()
+    assert isinstance(errors.get(1), (ConnectionError, OSError))
+
+
+def test_client_connected_before_first_round_is_admitted():
+    """A client that finishes its handshake while rank 0 has not yet
+    entered a round takes part in rank 0's first round."""
+    import threading
+
+    connected = threading.Event()
+
+    def body(comm, r):
+        if r == 0:
+            assert connected.wait(timeout=10)
+            return comm.allreduce_sum(np.array([10.0, 20.0])).tolist()
+        connected.set()
+        return comm.allreduce_sum(np.array([1.0, 2.0])).tolist()
+
+    assert _run_ranks(2, "test-early-client-attempt-0", body) == {0: [11.0, 22.0], 1: [11.0, 22.0]}
 
 
 def test_reduce_server_binds_scoped_address_when_local():
@@ -406,3 +483,59 @@ def test_repartition_elision_plan_check(spark):
     assert _plan_tail_is_repartition(df.repartition(4).filter("v > 1"))
     # an aggregate genuinely replaces the partitioning — must re-shuffle
     assert not _plan_tail_is_repartition(df.repartition(4).groupBy("v").count())
+
+
+# ---------------------------------------------------------------------------
+# 2-rank kernel goldens: booster.train over two SocketComm ranks (threads),
+# rows split r::2. sha256 prefixes of ``save_json()``, recorded with the
+# per-tree kernel behind the threaded reduction server; every rank must
+# return the same model.
+# ---------------------------------------------------------------------------
+
+_TWO_RANK_GOLDENS = {
+    "regression_depth5": "2f1e7a41029c9d98",
+    "multiclass": "5e638a84ed31632e",
+    "multiclass_nan_eval_early_stop": "354f9e069b8707b4",
+}
+
+
+def _two_rank_train(cookie, X, y, params, eval_set=None):
+    from pyspark_xgboost_spark.ml import booster as kernel
+
+    def body(comm, r):
+        shard_eval = None if eval_set is None else (eval_set[0][r::2], eval_set[1][r::2])
+        return kernel.train(X[r::2], y[r::2], params, eval_set=shard_eval, comm=comm).save_json()
+
+    models = _run_ranks(2, cookie, body)
+    assert models[0] == models[1]
+    return models[0]
+
+
+def _two_rank_case(name):
+    from tests.test_ml import _kernel_golden_data, _sha
+
+    X, score, rng = _kernel_golden_data(17)
+    y3 = np.digitize(score, np.quantile(score, [1 / 3, 2 / 3])).astype(np.float64)
+    multi = {"objective": "multi:softprob", "num_class": 3, "n_estimators": 10, "max_depth": 4}
+    if name == "regression_depth5":
+        params = {"objective": "reg:squarederror", "n_estimators": 20, "max_depth": 5,
+                  "learning_rate": 0.3}
+        model = _two_rank_train("golden-reg", X, score, params)
+    elif name == "multiclass":
+        model = _two_rank_train("golden-multi", X, y3, multi)
+    elif name == "multiclass_nan_eval_early_stop":
+        X = X.copy()
+        X[rng.rand(*X.shape) < 0.05] = np.nan
+        params = {**multi, "n_estimators": 40, "learning_rate": 0.8, "gamma": 1.0,
+                  "early_stopping_rounds": 2}
+        model = _two_rank_train(
+            "golden-multi-nan", X[:1000], y3[:1000], params, eval_set=(X[1000:], y3[1000:])
+        )
+    else:
+        raise KeyError(name)
+    return _sha(model.encode())
+
+
+@pytest.mark.parametrize("case", sorted(_TWO_RANK_GOLDENS))
+def test_two_rank_kernel_goldens(case):
+    assert _two_rank_case(case) == _TWO_RANK_GOLDENS[case]

@@ -470,6 +470,30 @@ def test_get_score_rejects_unsupported_type_without_splits():
             b.get_score("gain")
 
 
+def test_max_bin_beyond_uint16_codes_rejected():
+    """Bin codes are uint16: at max_bin=100000 a 70,000-row column with
+    5 % NaN gets 99,956 cuts and a missing sentinel past 65535, which
+    wrapped into a real bin. The kernel and the estimator (on the
+    driver, before any barrier stage) reject it; 65535 still keeps
+    every NaN row in the sentinel."""
+    rng = np.random.RandomState(11)
+    X = rng.rand(70_000, 1).astype(np.float32)
+    nan = rng.rand(70_000) < 0.05
+    X[nan, 0] = np.nan
+    with pytest.raises(ValueError, match="max_bin"):
+        kernel.train(X, X[:, 0] * 0.0, {"max_bin": 100_000, "n_estimators": 1})
+    for est in (XgboostRegressor(max_bin=100_000), XgboostClassifier(max_bin=70_000, num_workers=2)):
+        with pytest.raises(ValueError, match="max_bin"):
+            est._validate_params()
+    XgboostRegressor(max_bin=kernel.MAX_BIN)._validate_params()
+
+    edges = kernel.compute_bin_edges(X, kernel.MAX_BIN)
+    codes = kernel.bin_matrix(X, edges, float("nan"))[0]
+    sentinel = kernel.n_bins_p1(edges) - 1
+    assert (codes[nan] == sentinel).all()
+    assert (codes[~nan] < sentinel).all()
+
+
 # sha256 prefixes of ``save_json()`` and of ``predict(...).tobytes()`` (plus
 # best_iteration / iteration-range margins where a case has them), recorded
 # with the per-tree kernel that copied live rows at every level and walked
