@@ -22,24 +22,36 @@ training (see tracker.py). Histograms are O(nodes × features × bins) —
 KBs to a few MB — regardless of shard row count, which is what makes
 the pattern viable at 100 TB.
 
+Exact sums, quantize first: each round's gradients and hessians are
+rounded to multiples of a power of two sized from their global maxima
+and the global row count (``_fixed_point``), so every partial sum of
+any subset of rows is exact in float64. A model is then a function of
+its rows alone — the same bits at any row order and any gang size —
+and the kernel builds, as XGBoost's ``hist`` does, only the smaller
+child of each split and derives its sibling as parent minus child,
+which is exact too. The bin sketch (``compute_bin_edges``) is every row,
+or above a row budget each feature's distinct values picked by a hash
+of the value with their exact counts, so the edges do not depend on the
+layout either. An eval-set metric is still a float sum whose last bits
+follow the sharding, so early stopping is outside this guarantee.
+
 Data layout, chosen so that training and prediction are array passes
 rather than per-node or per-tree Python loops:
 
 * ``bin_matrix`` returns feature-major ``(f, n)`` codes. Tree growth
-  keeps every row in place and carries a per-row slot; rows that reached
-  a leaf go to an extra histogram slot that is dropped, instead of
-  copying the live rows out at every level. A row's split code is one
-  flat ``take``.
+  keeps every row in place and carries its frontier slot times the
+  histogram width; rows that reached a leaf go to an extra slot that no
+  histogram reads, instead of copying the live rows out at every level.
+  A row's split code is one flat ``take``, its child slot one lookup in
+  a per-level ``(slots + 1, bins)`` table.
 * A boosting round's class trees (one per class of ``multi:softprob``)
   grow level by level together: their histograms share one array, one
-  allreduce and one split search per level (``_grow_trees``).
+  allreduce and one split search per level (``_grow_trees``). Training
+  margins are class-major ``(K, n)``.
 * A ``Booster`` packs its trees once into flat arrays with per-tree
   roots; leaves are self-loops. ``_walk`` moves every (tree, row) pair
   one level at a time, and margins are still summed tree by tree in
   ensemble order, so outputs are the same floats as a per-tree walk.
-* Histogram subtraction (build the smaller child, derive its sibling)
-  is left out: parent minus child rounds differently from a direct sum,
-  so trees would no longer match the direct-sum kernel bit for bit.
 """
 
 from __future__ import annotations
@@ -87,13 +99,22 @@ def _sigmoid(x: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-x))
 
 
-def _softmax(m: np.ndarray) -> np.ndarray:
-    e = np.exp(m - m.max(axis=1, keepdims=True))
-    return e / e.sum(axis=1, keepdims=True)
+def _softmax(m: np.ndarray, axis: int = -1) -> np.ndarray:
+    # in place on one temporary: each fresh (K, n) temporary costs more
+    # in page faults than the arithmetic it holds
+    e = m - m.max(axis=axis, keepdims=True)
+    np.exp(e, out=e)
+    e /= e.sum(axis=axis, keepdims=True)
+    return e
 
 
 class _Objective:
-    """margin layout: (n,) for single-output, (n, K) for multiclass.
+    """Training margins are class-major ``(K, n)``, ``K = 1`` for a
+    single output, so that softmax and its gradients reduce over K rows
+    instead of along the short axis of an ``(n, K)`` array; the
+    single-output objectives are elementwise, so a ``(1, n)`` margin
+    broadcasts against ``(n,)`` labels. ``margin_to_output`` takes a
+    booster's ``(n,)`` or ``(n, K)`` margins.
 
     Regression objectives beyond squared error mirror what reference
     users reached through the kwargs passthrough (O19 — the reference
@@ -139,12 +160,13 @@ class _Objective:
         if self.name == "binary:logistic":
             p = _sigmoid(margin)
             return p - y, np.maximum(p * (1.0 - p), 1e-16)
-        p = _softmax(margin)  # (n, K)
-        onehot = np.zeros_like(p)
-        onehot[np.arange(len(y)), y.astype(np.int64)] = 1.0
-        g = p - onehot
-        h = np.maximum(2.0 * p * (1.0 - p), 1e-16)
-        return g, h
+        p = _softmax(margin, axis=0)  # (K, n)
+        h = 1.0 - p
+        h *= p
+        h *= 2.0
+        np.maximum(h, 1e-16, out=h)
+        np.subtract(p, y.astype(np.int64) == np.arange(len(p))[:, None], out=p)
+        return p, h
 
     def margin_to_output(self, margin: np.ndarray) -> np.ndarray:
         if self.name.startswith("reg:"):
@@ -164,7 +186,8 @@ class _Objective:
 
 
 def _eval_metric_parts(metric, margin, y, w, quantile_alpha: float = 0.5) -> tuple[float, float]:
-    """(weighted loss sum, weight sum) — allreduce-able across workers."""
+    """(weighted loss sum, weight sum) — allreduce-able across workers.
+    ``margin`` is laid out as in training: ``(K, n)``."""
     if len(y) == 0:
         return 0.0, 0.0
     w = np.ones(len(y)) if w is None else w
@@ -182,8 +205,8 @@ def _eval_metric_parts(metric, margin, y, w, quantile_alpha: float = 0.5) -> tup
         p = np.clip(_sigmoid(margin), 1e-15, 1 - 1e-15)
         return float(-(w * (y * np.log(p) + (1 - y) * np.log(1 - p))).sum()), sw
     if metric == "mlogloss":
-        p = np.clip(_softmax(margin), 1e-15, None)
-        return float(-(w * np.log(p[np.arange(len(y)), y.astype(np.int64)])).sum()), sw
+        p = np.clip(_softmax(margin, axis=0), 1e-15, None)
+        return float(-(w * np.log(p[y.astype(np.int64), np.arange(len(y))])).sum()), sw
     raise ValueError(f"unknown metric {metric!r}")
 
 
@@ -203,35 +226,104 @@ def _eval_metric(metric, obj, margin, y, w, comm=None) -> float:
 # ---------------------------------------------------------------------------
 
 
+def _value_hash(v: np.ndarray) -> np.ndarray:
+    """A 64-bit hash (splitmix64) of each float32 value's bits: equal
+    values hash equal wherever they are stored (callers make -0.0 0.0)."""
+    z = v.view(np.uint32).astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)
+    with np.errstate(over="ignore"):
+        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return z ^ (z >> np.uint64(31))
+
+
+def _lowest_hashes(u: np.ndarray, k: int) -> np.ndarray:
+    """The values of ``u`` whose hash is at most the k-th smallest hash
+    (every value when there are at most k): of a subset of a set, this
+    keeps every value the set itself would keep."""
+    if len(u) <= k:
+        return u
+    hashes = _value_hash(u)
+    return u[hashes <= np.partition(hashes, k - 1)[k - 1]]
+
+
+def _weighted_quantiles(values: np.ndarray, counts: np.ndarray, qs: np.ndarray) -> np.ndarray:
+    """``np.quantile(np.repeat(values, counts), qs)`` ("linear" method,
+    ``values`` sorted) without materializing the repeat."""
+    ends = np.cumsum(counts)
+    at = qs * (ends[-1] - 1)
+    lo = np.floor(at)
+    hi = np.minimum(lo + 1, ends[-1] - 1)
+    a, b = (values[np.searchsorted(ends, i, side="right")] for i in (lo, hi))
+    return a + (b - a) * (at - lo)
+
+
 def compute_bin_edges(
     X: np.ndarray, max_bin: int, comm: LocalComm | None = None, sample_rows: int = 65536
 ) -> list[np.ndarray]:
-    """Per-feature quantile cut points shared by all workers.
+    """Per-feature quantile cut points shared by all workers, the same
+    under any sharding and row order.
 
-    Each worker contributes an evenly-strided row sample (bounded, so the
-    gathered payload is O(workers × sample × features) no matter the shard
-    size); quantiles of the union define the global edges. Deterministic:
-    identical inputs → identical edges on every worker.
+    Every rank sends its first ``sample_rows + 1`` rows. While the
+    global row count fits ``sample_rows`` that is every row, and each
+    feature's cuts are quantiles of all its values. Above it, each
+    feature is sketched by its distinct values, so that duplicates cost
+    nothing and keep their weight:
+
+    * each rank sends, per feature, its min, its max and those of its
+      distinct values with the ``sample_rows`` lowest ``_value_hash``es;
+    * the candidates are the union's ``sample_rows`` lowest-hash values
+      and its min and max, which are those of the global set of distinct
+      values, whatever the layout;
+    * one allreduce counts every rank's values, each at the lowest
+      candidate at or above it, and the cuts are the quantiles of those
+      counts.
+
+    A feature with at most ``sample_rows`` distinct values thus gets the
+    quantiles of all its rows; the payloads are about ``sample_rows``
+    rows or values per feature, per rank and in the reduced counts.
     """
     comm = comm or LocalComm()
-    if len(X) > sample_rows:
-        stride = len(X) // sample_rows
-        sample = X[::stride][:sample_rows]
-    else:
-        sample = X
-    gathered = comm.allgather_rows(np.ascontiguousarray(sample, dtype=np.float32))
-    edges: list[np.ndarray] = []
+    X = np.asarray(X, dtype=np.float32)
+    n_feat = X.shape[1]
     qs = np.linspace(0, 1, max_bin + 1)[1:-1]
-    for j in range(X.shape[1]):
-        col = gathered[:, j]
-        col = col[~np.isnan(col)]
-        if len(col) == 0:
+    # at most sample_rows + 1 rows per rank: the gather holds every row
+    # exactly when the global count fits the budget
+    gathered = comm.allgather_rows(np.ascontiguousarray(X[: sample_rows + 1]))
+    if len(gathered) <= sample_rows:
+        columns = [c[~np.isnan(c)] for c in gathered.T]
+        sketches = [(np.quantile(c, qs, method="linear"), c.min()) if len(c) else None
+                    for c in columns]
+    else:
+        # + 0.0 makes -0.0 0.0, so that the two zeros are one value
+        local = [np.unique(c[~np.isnan(c)] + np.float32(0.0), return_counts=True) for c in X.T]
+        sent = [np.concatenate([u[:1], u[-1:], _lowest_hashes(u, sample_rows)]) for u, _ in local]
+        pad = np.full((max(map(len, sent), default=0), n_feat), np.nan, dtype=np.float32)
+        for j, s in enumerate(sent):
+            pad[: len(s), j] = s
+        union = [np.unique(c[~np.isnan(c)]) for c in comm.allgather_rows(pad).T]
+        candidates = [
+            np.unique(np.concatenate([u[:1], u[-1:], _lowest_hashes(u, sample_rows)]))
+            for u in union
+        ]
+        counts = np.zeros((n_feat, max(map(len, candidates), default=0)))
+        for j, ((u, rows), c) in enumerate(zip(local, candidates)):
+            counts[j, : len(c)] = np.bincount(np.searchsorted(c, u), weights=rows, minlength=len(c))
+        counts = comm.allreduce_sum(counts)
+        sketches = [
+            (_weighted_quantiles(c.astype(np.float64), counts[j, : len(c)], qs), c[0])
+            if len(c) else None
+            for j, c in enumerate(candidates)
+        ]
+    edges: list[np.ndarray] = []
+    for sketch in sketches:
+        if sketch is None:
             edges.append(np.empty(0, dtype=np.float64))
             continue
-        cuts = np.unique(np.quantile(col, qs, method="linear"))
-        # drop cuts at/below min: 'x < cut' must split something
-        cuts = cuts[cuts > col.min()]
-        edges.append(cuts.astype(np.float64))
+        quantiles, low = sketch
+        # drop cuts at/below min: 'x < cut' must split something; + 0.0
+        # makes a -0.0 cut 0.0, whichever zero the sort put there
+        cuts = np.unique(quantiles)
+        edges.append(cuts[cuts > low].astype(np.float64) + 0.0)
     return edges
 
 
@@ -411,24 +503,25 @@ def _walk(packed: _Packed, X: np.ndarray, missing: float, roots: np.ndarray) -> 
 # ---------------------------------------------------------------------------
 
 
-def _build_histograms(B, g, h, slot_of_row, out):
-    """Grad/hess sums of one tree's frontier into ``out``, a
-    ``(2, n_slots, n_features, max_bin+1)`` view, via bincount over
-    feature-major codes ``B``. A row whose slot is ``n_slots`` has
-    settled in a leaf: it lands in one extra slot that is dropped, so
-    live rows never need to be copied out."""
-    n_slots, f, n_bins_p1 = out.shape[1:]
-    base = slot_of_row * n_bins_p1
-    size = (n_slots + 1) * n_bins_p1
-    kept = n_slots * n_bins_p1
+def _build_histograms(B, g, h, pos, out):
+    """Grad/hess sums into ``out``, a ``(2, n_built, n_features,
+    n_bins_p1)`` view, of the rows whose ``pos`` (slot × n_bins_p1) is
+    below ``n_built × n_bins_p1``; every other row is skipped. The rows
+    are gathered with one ``flatnonzero`` and per-feature 1-D ``take``s,
+    then one ``bincount`` per feature and statistic sums them. ``pos``
+    None means every row, all in slot 0 (a root)."""
+    n_built, f, nbp1 = out.shape[1:]
+    size = n_built * nbp1
+    # every index below is in range by construction; take's "clip" mode
+    # skips the per-index bounds error path of the default "raise"
+    if pos is not None:
+        sel = np.flatnonzero(pos < size)
+        pos, g, h = (a.take(sel, mode="clip") for a in (pos, g, h))
+        idx = np.empty_like(pos)
     for j in range(f):
-        idx = base + B[j]
-        out[0, :, j, :] = np.bincount(idx, weights=g, minlength=size)[:kept].reshape(
-            n_slots, n_bins_p1
-        )
-        out[1, :, j, :] = np.bincount(idx, weights=h, minlength=size)[:kept].reshape(
-            n_slots, n_bins_p1
-        )
+        col = B[j] if pos is None else np.add(pos, B[j].take(sel, mode="clip"), out=idx)
+        out[0, :, j, :] = np.bincount(col, weights=g, minlength=size).reshape(n_built, nbp1)
+        out[1, :, j, :] = np.bincount(col, weights=h, minlength=size).reshape(n_built, nbp1)
 
 
 def _best_splits(hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=None):
@@ -688,16 +781,86 @@ def _spill_to_memmap(arr: np.ndarray, workdir: str, name: str) -> np.ndarray:
     return mm
 
 
+def invalid_rows(y: np.ndarray, w: np.ndarray | None = None) -> tuple[int, int]:
+    """(labels that are not finite, weights that are not finite and
+    non-negative). A null label or weight reads as NaN."""
+    y = np.asarray(y, dtype=np.float64)
+    w = None if w is None else np.asarray(w, dtype=np.float64)
+    bad_w = 0 if w is None else int(np.count_nonzero(~(np.isfinite(w) & (w >= 0))))
+    return int(np.count_nonzero(~np.isfinite(y))), bad_w
+
+
+def invalid_rows_error(bad_labels: int, bad_weights: int) -> str | None:
+    """The message training rejects these counts with, or None. A NaN
+    gradient would make every histogram, and the fixed-point step, NaN."""
+    found = [
+        f"{count} {what}"
+        for count, what in (
+            (bad_labels, "non-finite label(s)"),
+            (bad_weights, "non-finite or negative weight(s)"),
+        )
+        if count
+    ]
+    if not found:
+        return None
+    return "labels must be finite and weights finite and non-negative; found " + " and ".join(found)
+
+
+def _class_major(margin: np.ndarray, K: int) -> np.ndarray:
+    """Booster-layout margins (``(n,)`` or ``(n, K)``, or flat) as
+    training's class-major ``(K, n)``."""
+    return np.ascontiguousarray(margin.reshape(-1, K).T)
+
+
+def _grid_step(bound: float) -> int:
+    """Exponent e of the fixed-point step ``2**e`` for values whose sum
+    over any subset of rows is at most ``bound`` in magnitude: every
+    partial sum is then a multiple of the step below ``2**53`` steps,
+    so it is exact in floating point in any order."""
+    if not (bound > 0 and math.isfinite(bound)):
+        return 0
+    mant, exp = math.frexp(bound)  # bound = mant * 2**exp, 0.5 <= mant < 1
+    return (exp - 1 if mant == 0.5 else exp) - 52
+
+
+def _fixed_point(g: np.ndarray, h: np.ndarray, comm) -> None:
+    """Round ``g`` to the nearest, and ``h`` up to, in place, a multiple of a power
+    of two sized from the global ``max|g|``, ``max h`` and row count,
+    so that every histogram sum is exact: a model does not depend on the
+    order of the rows or on how they are split across workers, and a
+    sibling histogram is its parent minus the built child bit for bit.
+    Rounding ``h`` up keeps a positive hessian positive. The three
+    global values are exact under any layout (one allgather of one row
+    per rank); a bound from ``Σ|g|`` would not be, as its float value
+    depends on the summation order."""
+    g_max = max(g.max(initial=0.0), -g.min(initial=0.0))
+    stats = comm.allgather_rows(np.array([[g_max, h.max(initial=0.0), g.shape[1]]]))
+    n = stats[:, 2].sum()
+    for a, a_max, to_int in ((g, stats[:, 0].max(), np.rint), (h, stats[:, 1].max(), np.ceil)):
+        e = _grid_step(float(a_max * n))
+        np.ldexp(a, -e, out=a)
+        to_int(a, out=a)
+        np.ldexp(a, e, out=a)
+
+
 def _grow_trees(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, lr, comm):
     """A round's depth-wise trees, one per row of ``g``/``h`` (trees, n),
     grown level by level together over feature-major bin codes ``B``
     (f, n). The round's gradients are computed before any of its trees,
-    so the trees do not depend on each other: at each level every live
-    tree builds its own histograms
-    into one array, concatenated along the slot axis; ONE allreduce sums
-    it across the cluster and ONE ``_best_splits`` call searches it, and
-    all workers grow the identical trees. A tree that stops splitting
-    drops out of the later levels. Regression is the one-tree case.
+    so the trees do not depend on each other. ``g`` and ``h`` are fixed
+    point (``_fixed_point``): every histogram sum is exact, whatever the
+    row order or sharding, so all workers grow the identical trees and a
+    sibling's histogram is its parent's minus its built sibling's, bit
+    for bit.
+
+    Per level, each live tree builds from rows the histograms of its
+    whole frontier at the root, and below it only the smaller child (by
+    reduced hessian total, tie → left) of each split of the level above;
+    ONE allreduce sums every live tree's built histograms across the
+    cluster, each sibling is its parent minus the built child, and ONE
+    ``_best_splits`` call searches the whole level. A tree that stops
+    splitting drops out of the later levels. Regression is the one-tree
+    case.
 
     Returns ``(trees, delta)``: the trees in row order and each tree's
     margin update over this shard (leaf value of the node each local row
@@ -707,12 +870,16 @@ def _grow_trees(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, 
     is exactly the float predicate (``x < edges[f][b]``) because codes
     are searchsorted-right ranks.
 
-    Rows stay in place: ``slot[k]`` holds each row's frontier slot in
-    tree k, and a row whose node became a leaf moves to the extra slot
-    ``n_slots[k]``, which the histograms drop. Nodes are numbered level
-    by level, so a level's frontier is the contiguous id range after its
-    parents and the whole level is decided with array ops over its
-    slots.
+    Rows stay in place: ``pos[k]`` holds each row's frontier slot in
+    tree k times ``n_bins_p1``, so a row's histogram bin and its routing
+    entry are one add away. Below the root a level's slots are the
+    built children in split order, then their siblings in the same
+    order, and a row whose node became a leaf moves to the extra slot
+    after them, which no histogram reads. Nodes are numbered level by
+    level in slot order, so a level's frontier is the contiguous id
+    range after its parents and the whole level is decided with array
+    ops over its slots. One ``(slots + 1, n_bins_p1)`` table per level
+    gives each (slot, bin code) its child slot.
     """
     n_feat, n = B.shape
     K = len(g)
@@ -724,125 +891,148 @@ def _grow_trees(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, 
     codes = B.ravel()
     row = np.arange(n, dtype=np.int64)
     delta = np.zeros((K, n), dtype=np.float64)
-    # per tree: each row's slot, the frontier's first node id and size,
-    # and per level, in _Tree.__slots__ order, (feature, threshold,
-    # left, right, value, default_left) of the level's nodes
-    slot = [np.zeros(n, dtype=np.int64) for _ in range(K)]
+    # per tree: each row's slot × nbp1, the frontier's first node id, its
+    # slot count and how many of its slots are built from rows, the
+    # reduced histograms of the split nodes above the frontier, and per
+    # level, in _Tree.__slots__ order, (feature, threshold, left, right,
+    # value, default_left) of the level's nodes
+    pos = [np.zeros(n, dtype=np.int64) for _ in range(K)]
     first_id = [0] * K
     n_slots = [1] * K
+    n_built = [1] * K
+    parent = [np.empty((2, 0, n_feat, nbp1))] * K
     levels: list[list[tuple[np.ndarray, ...]]] = [[] for _ in range(K)]
-    # per tree: grad/hess totals of the last frontier, carried from its
-    # parents' histograms so max-depth leaves need no extra histogram
-    # pass (or allreduce)
-    node_GH: list[tuple[np.ndarray, np.ndarray]] = [None] * K  # type: ignore[list-item]
     live = list(range(K))
 
-    def reduced_histograms():
-        """Every live tree's histograms, summed across the cluster in
-        one allreduce — the ONLY cross-worker exchange in the training
-        loop — and the first slot of each tree."""
-        lo = [0]
-        for k in live:
-            lo.append(lo[-1] + n_slots[k])
-        hist = np.empty((2, lo[-1], n_feat, nbp1))
+    def level_histograms():
+        """Every live tree's frontier histograms, concatenated along the
+        slot axis, and the first slot of each tree. The built slots are
+        summed across the cluster in one allreduce — the ONLY cross-
+        worker exchange of a tree level."""
+        lo = np.cumsum([0] + [n_built[k] for k in live])
+        built = np.empty((2, lo[-1], n_feat, nbp1))
         for i, k in enumerate(live):
-            _build_histograms(B, g[k], h[k], slot[k], hist[:, lo[i] : lo[i + 1]])
-        hist = comm.allreduce_sum(hist)
-        return hist[0], hist[1], lo
+            root = first_id[k] == 0
+            _build_histograms(B, g[k], h[k], None if root else pos[k], built[:, lo[i] : lo[i + 1]])
+        built = comm.allreduce_sum(built)
+        full_lo = np.cumsum([0] + [n_slots[k] for k in live])
+        full = np.empty((2, full_lo[-1], n_feat, nbp1))
+        for i, k in enumerate(live):
+            own = built[:, lo[i] : lo[i + 1]]
+            mid = full_lo[i] + n_built[k]
+            full[:, full_lo[i] : mid] = own
+            sibling = full[:, mid : full_lo[i + 1]]
+            np.subtract(parent[k], own[:, : n_slots[k] - n_built[k]], out=sibling)
+        return full, full_lo
 
-    def advance(k, hist_g, hist_h, gain, feat, bins, dleft, last) -> bool:
-        """Decide tree k's frontier from its reduced histograms and split
-        search: record the level, give rows that landed in a new leaf
-        their margin update, and route the rest to child slots. False
-        once the tree stops splitting. (Its own frame, so the per-row
-        temporaries are freed before the next tree's.)"""
-        # node totals: sum any single feature's histogram over its bins
-        Gn = hist_g[:, 0, :].sum(axis=1)
-        Hn = hist_h[:, 0, :].sum(axis=1)
+    def advance(k, hist, Gn, Hn, gain, feat, bins, dleft, last) -> bool:
+        """Decide tree k's frontier from its reduced histograms ``hist``
+        (2, slots, f, nbp1), node totals and split search: record the
+        level, give rows that landed in a leaf their margin update, and
+        route the rest to child slots. False once the tree is done.
+        (Its own frame, so the per-row temporaries are freed before the
+        next tree's.)"""
+        S = n_slots[k]
         split = np.isfinite(gain) & (gain > 0) & (bins < edge_counts[feat])
-        n_split = int(split.sum())
-        rank = np.cumsum(split) - 1
-        left = np.where(split, first_id[k] + n_slots[k] + 2 * rank, -1)
+        sp = np.flatnonzero(split)
+        n_split = len(sp)
         # leaf: weight = -G/(H+λ) scaled by lr
         value = np.where(split, 0.0, -Gn / (Hn + reg_lambda) * lr)
+        # the chosen splits' left totals (missing bucket on the default
+        # side); the smaller child takes slot r of split r, its sibling
+        # slot n_split + r
+        f_sp, b_sp, dl_sp = feat[sp], bins[sp], dleft[sp]
+        chosen = hist[:, sp, f_sp]  # (2, n_split, nbp1)
+        GL, HL = np.cumsum(chosen[:, :, :-1], axis=2)[:, np.arange(n_split), b_sp] + np.where(
+            dl_sp, chosen[:, :, -1], 0.0
+        )
+        GR, HR = Gn[sp] - GL, Hn[sp] - HL
+        r = np.arange(n_split)
+        small_left = HL <= HR
+        left_slot = np.where(small_left, r, n_split + r)
+        right_slot = np.where(small_left, n_split + r, r)
+        left = np.full(S, -1)
+        right = np.full(S, -1)
+        left[sp] = first_id[k] + S + left_slot
+        right[sp] = first_id[k] + S + right_slot
         levels[k].append((
             np.where(split, feat, -1),
             np.where(split, cuts[feat, bins], 0.0),
             left,
-            np.where(split, left + 1, -1),
+            right,
             value,
             np.where(split, dleft, True),
         ))
-
-        # rows whose slot became a leaf this level get their margin now
-        s_k = slot[k]
-        leaf_now = np.append(~split, False)[s_k]
-        delta[k][leaf_now] = value[s_k[leaf_now]]
+        # the extra slot gets nothing; every take below is in range by
+        # construction, and "clip" mode skips "raise"'s bounds error path
+        leaf_value = np.repeat(np.append(value, 0.0), nbp1)
         if n_split == 0:
+            delta[k] += leaf_value.take(pos[k], mode="clip")
             return False
-        if last:
-            # chosen-split child totals (missing bucket goes default
-            # side) become the max-depth leaves below
-            node_G = np.empty(2 * n_split)
-            node_H = np.empty(2 * n_split)
-            for c, s in enumerate(np.flatnonzero(split)):
-                f, b = feat[s], bins[s]
-                GL = hist_g[s, f, : b + 1].sum() + (hist_g[s, f, -1] if dleft[s] else 0.0)
-                HL = hist_h[s, f, : b + 1].sum() + (hist_h[s, f, -1] if dleft[s] else 0.0)
-                node_G[2 * c : 2 * c + 2] = GL, Gn[s] - GL
-                node_H[2 * c : 2 * c + 2] = HL, Hn[s] - HL
-            node_GH[k] = node_G, node_H
 
-        # route rows to child slots. Per slot (the extra settled slot
-        # last): the feature to read, the first child slot (settled rows
-        # and new leaves go to the next level's extra slot), and a
-        # go-right table over bin codes. Missing is the single GLOBAL
-        # sentinel code (bin_matrix); len(edges[f]) itself is a real bin
-        # (values above the last cut).
-        read_feat = np.append(np.where(split, feat, 0), 0)
-        first_child = np.append(np.where(split, 2 * rank, 2 * n_split), 2 * n_split)
-        go_right = np.zeros((n_slots[k] + 1, nbp1), dtype=bool)
-        sp = np.flatnonzero(split)
-        go_right[sp, :-1] = np.arange(nbp1 - 1)[None, :] > bins[sp, None]
-        go_right[sp, -1] = ~dleft[sp]
-        code = codes[read_feat[s_k] * n + row]
-        slot[k] = first_child[s_k] + go_right.ravel()[s_k * nbp1 + code]
-        first_id[k] += n_slots[k]
+        # the child slot of every (slot, bin code); a row in a new leaf,
+        # or settled above, goes to the next level's extra slot. Missing
+        # is the single GLOBAL sentinel code (bin_matrix); len(edges[f])
+        # itself is a real bin (values above the last cut).
+        child = np.full((S + 1, nbp1), 2 * n_split, dtype=np.int64)
+        child[sp, :-1] = np.where(
+            np.arange(nbp1 - 1)[None, :] > b_sp[:, None], right_slot[:, None], left_slot[:, None]
+        )
+        child[sp, -1] = np.where(dl_sp, left_slot, right_slot)
+        # each row's code of its slot's split feature (feature 0 where
+        # the slot does not split: its table row is constant)
+        read_at = np.repeat(np.append(np.where(split, feat, 0), 0) * n, nbp1)
+        read = read_at.take(pos[k], mode="clip")
+        read += row
+        at = np.add(pos[k], codes.take(read, mode="clip"), out=read)
+        if last:
+            # the children are the max-depth leaves: one table gives
+            # every row its leaf value, whether its leaf is a child or a
+            # node of this level
+            vals = np.empty(2 * n_split + 1)
+            vals[left_slot] = -GL / (HL + reg_lambda) * lr
+            vals[right_slot] = -GR / (HR + reg_lambda) * lr
+            vals[-1] = 0.0
+            table = vals[child]
+            table[:S][~split] = value[~split, None]
+            delta[k] += table.ravel().take(at, mode="clip")
+            n_leaves = 2 * n_split
+            no = np.full(n_leaves, -1)
+            levels[k].append((no, np.zeros(n_leaves), no, no, vals[:-1], np.ones(n_leaves, bool)))
+            return False
+        if n_split < S:
+            delta[k] += leaf_value.take(pos[k], mode="clip")
+        np.take(child.ravel() * nbp1, at, out=pos[k], mode="clip")
+        parent[k] = hist[:, sp]
+        first_id[k] += S
         n_slots[k] = 2 * n_split
+        n_built[k] = n_split
         return True
 
     for depth in range(max_depth):
-        hist_g, hist_h, lo = reduced_histograms()
-        gain, feat, bins, dleft, _, _ = _best_splits(
-            hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=edge_counts
+        full, lo = level_histograms()
+        gain, feat, bins, dleft, G_tot, H_tot = _best_splits(
+            full[0], full[1], reg_lambda, gamma, min_child_weight, edge_counts=edge_counts
         )
         last = depth == max_depth - 1
         still = []
         for i, k in enumerate(live):
             span = slice(lo[i], lo[i + 1])
-            parts = (a[span] for a in (hist_g, hist_h, gain, feat, bins, dleft))
-            if advance(k, *parts, last):
+            parts = (a[span] for a in (G_tot[:, 0], H_tot[:, 0], gain, feat, bins, dleft))
+            if advance(k, full[:, span], *parts, last):
                 still.append(k)
         live = still
         if not live:
             break
 
-    if live and max_depth == 0:
-        # no split level ran; fall back to one histogram of the roots
-        hist_g, hist_h, lo = reduced_histograms()
+    if max_depth == 0:
+        # no split level: each tree is its root leaf
+        full, lo = level_histograms()
         for i, k in enumerate(live):
-            span = slice(lo[i], lo[i + 1])
-            node_GH[k] = hist_g[span, 0, :].sum(axis=1), hist_h[span, 0, :].sum(axis=1)
-    # any remaining frontier nodes at max depth become leaves
-    for k in live:
-        node_G, node_H = node_GH[k]
-        vals = -node_G / (node_H + reg_lambda) * lr
-        no_split = np.full(n_slots[k], -1)
-        levels[k].append(
-            (no_split, np.zeros(n_slots[k]), no_split, no_split, vals, np.ones(n_slots[k], bool))
-        )
-        settled = slot[k] < n_slots[k]
-        delta[k][settled] = vals[slot[k][settled]]
+            G, H = full[:, lo[i], 0].sum(axis=1)
+            value = -G / (H + reg_lambda) * lr
+            levels[k].append(([-1], [0.0], [-1], [-1], [value], [True]))
+            delta[k] = value
     return [_tree_of_levels(lv) for lv in levels], delta
 
 
@@ -884,11 +1074,24 @@ def train(
     X = np.ascontiguousarray(X, dtype=np.float32)
     y = np.asarray(y, dtype=np.float64)
     w = None if sample_weight is None else np.asarray(sample_weight, dtype=np.float64)
+    bad = invalid_rows(y, w)
+    if eval_set is not None:
+        bad = np.add(bad, invalid_rows(eval_set[1], eval_weight))
+    error = invalid_rows_error(*bad)
+    if error is not None:
+        raise ValueError(error)
 
     obj = _Objective(
         p["objective"], int(p["num_class"] or 0), float(p.get("quantile_alpha", 0.5))
     )
     K = obj.num_class if p["objective"] == "multi:softprob" else 1
+    if K > 1:
+        labels = y if eval_set is None else np.concatenate([y, np.asarray(eval_set[1], float)])
+        n_bad = np.count_nonzero((labels != np.floor(labels)) | (labels < 0) | (labels >= K))
+        if n_bad:
+            raise ValueError(
+                f"multi:softprob labels must be class indices 0..{K - 1}; found {n_bad} other(s)"
+            )
     missing = float(p["missing"])
 
     if bool(p.get("use_external_storage")):
@@ -930,15 +1133,11 @@ def train(
         # returned booster carries old + new trees over the same base
         p["base_score"] = float(xgb_model.base_score)
         init_trees = list(xgb_model.trees)
-        margin = xgb_model.raw_margin(X).reshape(
-            (len(X), K) if K > 1 else (len(X),)
-        )
-    elif K > 1:
-        margin = np.full((len(X), K), float(p["base_score"]), dtype=np.float64)
+        margin = _class_major(xgb_model.raw_margin(X), K)
     else:
-        margin = np.full(len(X), float(p["base_score"]), dtype=np.float64)
+        margin = np.full((K, len(X)), float(p["base_score"]), dtype=np.float64)
     if base_margin is not None:
-        margin = margin + np.asarray(base_margin, dtype=np.float64).reshape(margin.shape)
+        margin = margin + _class_major(np.asarray(base_margin, dtype=np.float64), K)
 
     has_eval = eval_set is not None
     if has_eval:
@@ -946,13 +1145,9 @@ def train(
         ey = np.asarray(eval_set[1], dtype=np.float64)
         ew = None if eval_weight is None else np.asarray(eval_weight, dtype=np.float64)
         if xgb_model is not None:
-            e_margin = xgb_model.raw_margin(eX).reshape(
-                (len(eX), K) if K > 1 else (len(eX),)
-            )
-        elif K > 1:
-            e_margin = np.full((len(eX), K), float(p["base_score"]), dtype=np.float64)
+            e_margin = _class_major(xgb_model.raw_margin(eX), K)
         else:
-            e_margin = np.full(len(eX), float(p["base_score"]), dtype=np.float64)
+            e_margin = np.full((K, len(eX)), float(p["base_score"]), dtype=np.float64)
     metric = p.get("eval_metric") or obj.default_metric()
 
     trees: list[_Tree] = []
@@ -967,16 +1162,17 @@ def train(
             new_lr = cb.before_iteration(rnd, lr_rnd)
             if new_lr is not None:
                 lr_rnd = float(new_lr)
+        # one row per class tree: (K, n)
         g, h = obj.grad_hess(margin, y)
         if w is not None:
-            g = g * (w[:, None] if g.ndim == 2 else w)
-            h = h * (w[:, None] if h.ndim == 2 else w)
+            g *= w
+            h *= w
+        _fixed_point(g, h, comm)
         round_trees, delta = _grow_trees(
             B,
             edges,
-            # one row per class tree: (K, n)
-            np.ascontiguousarray(g.reshape(len(g), K).T),
-            np.ascontiguousarray(h.reshape(len(h), K).T),
+            g,
+            h,
             int(p["max_depth"]),
             float(p["reg_lambda"]),
             float(p["gamma"]),
@@ -985,10 +1181,10 @@ def train(
             comm,
         )
         trees.extend(round_trees)
-        margin += delta.T.reshape(margin.shape)
+        margin += delta
         if has_eval and len(eX):
             packed = _pack(round_trees)
-            e_margin += _walk(packed, eX, missing, packed.root).T.reshape(e_margin.shape)
+            e_margin += _walk(packed, eX, missing, packed.root)
         # the eval metric feeds BOTH early stopping and user callbacks:
         # with an eval_set, after_iteration must see the score even when
         # early_stopping_rounds is 0 (TrainingCallback contract — score

@@ -25,19 +25,23 @@ length raises instead of being decoded. A G payload is raw bytes. Rank
 0 runs the hub in its own thread, with no handoff to another: per round
 it reads exactly one frame from each client in rank order, and answers
 each with one frame — the sum, a left fold in rank order (rank 0's
-array, then rank 1's, rank 2's, ...; float addition is not associative,
-so the order is fixed and every rank gets the same bits), or the
-length-prefixed concatenation of every worker's payload in rank order.
-Each client blocks on its response before its next round.
+array, then rank 1's, rank 2's, ...), or the length-prefixed
+concatenation of every worker's payload in rank order. The kernel's
+histograms are fixed point (``booster._fixed_point``), so their sum is
+exact in any order and the fold decides no bit of a model; the fixed
+order still gives every rank the same bits of a float sum such as an
+eval metric. Each client blocks on its response before its next round.
 
 One fit task, one star topology: rank 0 moves O(workers × payload) per
 round. Histogram payloads are O(nodes × features × bins), independent
 of data scale. A boosting round grows its class trees together, so each
-tree level is one allreduce for all of them: the traced ``gbt``
-benchmark moves the same 1.15 MB per benchmark operation in 47 calls
-(about 25 KB each) instead of 73, and the hub is nowhere near its limit
-at the gang sizes a fit runs. One-worker fits use ``booster.LocalComm``
-behind the same interface.
+tree level is one allreduce for all of them, and below the root a level
+sends only the smaller child of each split (the sibling is parent minus
+child): the traced ``gbt`` benchmark moves 0.60 MB per benchmark
+operation in 47 calls (about 13 KB each; 1.15 MB when every child was
+sent), and the hub is nowhere near its limit at the gang sizes a fit
+runs. One-worker fits use ``booster.LocalComm`` behind the same
+interface.
 """
 
 from __future__ import annotations
@@ -282,7 +286,7 @@ class _ReduceServer:
     def allreduce_sum(self, arr: np.ndarray) -> np.ndarray:
         # a left fold in rank order: rank 0's array, then rank 1, ... —
         # float addition is not associative, so one fixed order gives
-        # every rank the same bits
+        # every rank the same bits of a sum that is not exact
         try:
             total = arr
             for frame in self._read(b"S"):

@@ -35,11 +35,19 @@ Scheduling hazards mirrored from the reference:
 A classifier's ranks add their distinct labels to that same allgather
 and resolve the objective from the union (``data.label_objective``;
 the reference runs a driver-side countDistinct job instead, O4), and
-every rank adds its validation row count. Every rank sees the same
-union, so a label error, or an input without training rows, stops all
-of them before the first allreduce; rank 0 reports a label error in
+every rank adds its validation row count and its counts of
+non-finite labels and of non-finite or negative weights
+(``booster.invalid_rows``). Every rank sees the same union and counts,
+so a label or weight error, or an input without training rows, stops
+all of them before the first allreduce; rank 0 reports the error in
 place of the model and the driver raises it, so no task raises and the
 barrier stage is never retried for bad input.
+
+The kernel's sums are exact (``booster._fixed_point``), so the model
+does not depend on how the rows are partitioned or ordered: a fit at
+any ``num_workers`` returns the model of the one-worker fit, bit for
+bit, unless an eval set stops it early (the eval metric is a float
+sum, so its last bits follow the partitioning).
 """
 
 from __future__ import annotations
@@ -164,9 +172,11 @@ def fit(
     # the partition count must equal the gang size. Merely having
     # num_workers partitions by coincidence is NOT enough: arbitrary
     # partitionings (e.g. a filter over a partitioned scan) can be
-    # data-skewed or label-clustered, which degrades distributed
-    # training — the reference's comment calls its own check "not fully
-    # accurate" for exactly this reason, and requiring an explicit
+    # data-skewed, which makes one rank the straggler of every tree
+    # level. The model itself is the same under any partitioning (the
+    # kernel's sums are exact), so a skewed or label-clustered one costs
+    # only speed — the reference's comment calls its own check "not
+    # fully accurate" for this reason, and requiring an explicit
     # Repartition tail is the conservative reading.
     if force_repartition or not (
         _plan_tail_is_repartition(narrowed)
@@ -183,27 +193,31 @@ def fit(
         # agree on feature dimensionality so empty shards build
         # correctly-shaped (all-zero) histograms; a classifier's ranks
         # add their distinct labels, and every rank its validation row
-        # count, to the same round
+        # count and its counts of invalid labels and weights, to the
+        # same round
         f_local = int(train_b.X.shape[1]) if train_b.X.size else 0
         labels = []
         if infer_labels:
             labels = np.concatenate([b.labels for b in (train_b, val_b) if b is not None]).tolist()
         n_val = 0 if val_b is None else len(val_b.y)
+        invalid = np.sum(
+            [kernel.invalid_rows(b.y, b.w) for b in (train_b, val_b) if b is not None], axis=0
+        ).tolist()
         gathered = [
             json.loads(b)
-            for b in comm.allgather_bytes(json.dumps([f_local, labels, n_val]).encode())
+            for b in comm.allgather_bytes(json.dumps([f_local, labels, n_val, invalid]).encode())
         ]
-        f_global = max(f for f, _, _ in gathered)
+        f_global = max(f for f, _, _, _ in gathered)
         task_params = params
-        error = None
-        if infer_labels:
+        error = kernel.invalid_rows_error(*np.sum([bad for _, _, _, bad in gathered], axis=0))
+        if infer_labels and error is None:
             try:
-                task_params = label_objective([ls for _, ls, _ in gathered], params)
+                task_params = label_objective([ls for _, ls, _, _ in gathered], params)
             except ValueError as e:
                 error = str(e)
         if error is not None or f_global == 0:
-            # every rank resolved the same union: all stop here, and an
-            # input without training rows yields no model at all
+            # every rank resolved the same union and counts: all stop
+            # here, and an input without training rows yields no model
             comm.close()
             if comm.rank == 0 and error is not None:
                 yield fit_result(error)
@@ -218,7 +232,7 @@ def fit(
         val_s = shape(val_b)
         # evaluate only when some rank holds validation rows: an empty
         # eval set scores inf every round and would stop training early
-        has_eval = sum(n for _, _, n in gathered) > 0
+        has_eval = sum(n for _, _, n, _ in gathered) > 0
 
         bst = kernel.train(
             train_s.X,

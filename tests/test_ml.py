@@ -6,6 +6,7 @@ xgboost in this environment)."""
 from __future__ import annotations
 
 import hashlib
+import math
 
 import numpy as np
 import pytest
@@ -495,49 +496,56 @@ def test_max_bin_beyond_uint16_codes_rejected():
 
 
 # sha256 prefixes of ``save_json()`` and of ``predict(...).tobytes()`` (plus
-# best_iteration / iteration-range margins where a case has them), recorded
-# with the per-tree kernel that copied live rows at every level and walked
-# one tree at a time with ``nonzero`` masks. The in-place routing and the
-# packed all-trees walk must reproduce them bit for bit.
+# best_iteration, exact best_score / iteration-range margins where a case has
+# them), recorded with the fixed-point kernel that builds only the smaller
+# child of each split. Its sums are exact, so the same models come out of
+# 2 and 3 ranks (tests/test_distributed.py).
 _KERNEL_GOLDENS = {
     "regression_depth5": {
-        "model": "30e81b7cf1863682",
-        "predict": "7ceae34fb9bf816c",
+        "model": "35c55f3cee52e40c",
+        "predict": "cd89453892d4f1ab",
     },
     "multiclass": {
-        "model": "52571ae9bbae8042",
-        "predict": "d5e632258d55783f",
+        "model": "7b3b3fed6bc56812",
+        "predict": "a221b4b4fbd0aa82",
+    },
+    "multiclass_nan_eval_early_stop": {
+        "best_iteration": "33",
+        "best_score": "0x1.338ab0e50607bp-1",
+        "model": "1f2b100a68321673",
+        "predict": "6eeba000fc1b11f6",
     },
     "binary_nan": {
-        "model": "5b25dd8a9b3a40e6",
-        "predict": "705403be97288c4e",
+        "model": "e23d3cfd7f07063b",
+        "predict": "230358bb2c10377f",
     },
     "missing_zero": {
-        "model": "eaae4c22be8310f2",
-        "predict": "a41f889a552b640e",
+        "model": "cd90e8ee65abd704",
+        "predict": "23a7115af5c6b3ca",
     },
     "max_depth_0": {
-        "model": "8161e3091775da45",
-        "predict": "65e0040db558f35a",
+        "model": "cfb037d89872ce51",
+        "predict": "f261d81fd9d3a0ca",
     },
     "external_storage": {
-        "model": "18506e0ca2925078",
-        "predict": "7ceae34fb9bf816c",
+        "model": "f92c4d4566868110",
+        "predict": "cd89453892d4f1ab",
     },
     "eval_early_stop": {
         "best_iteration": "8",
-        "model": "878ecdda318a8774",
-        "predict": "6dbed0784523e306",
+        "best_score": "0x1.169f26a2865d0p+0",
+        "model": "6be8aa502e178ac6",
+        "predict": "042c1368d046fe36",
     },
     "continuation": {
-        "model": "406d8fbd40b42ac9",
-        "predict": "4bbaec3f1fa22760",
+        "model": "c45de2f1b2044067",
+        "predict": "10ed4b395b961534",
     },
     "iteration_range": {
-        "raw_margin_1_4": "b5f4ac697c7532db",
-        "reg_raw_margin_2_6": "2f795aa9bcd31002",
-        "model": "52571ae9bbae8042",
-        "predict": "d5e632258d55783f",
+        "raw_margin_1_4": "29ec858d88058312",
+        "reg_raw_margin_2_6": "1d735fe239bcf9ae",
+        "model": "7b3b3fed6bc56812",
+        "predict": "a221b4b4fbd0aa82",
     },
 }
 
@@ -555,7 +563,12 @@ def _kernel_golden_data(seed: int, n: int = 1500, f: int = 5):
     return X, score, rng
 
 
-def _kernel_golden_case(name: str) -> dict[str, str]:
+def _kernel_golden_case(name: str, train=None) -> dict[str, str]:
+    """The golden hashes of one case, with every model fitted by
+    ``train`` (``kernel.train`` by default; the multi-rank tests pass
+    one that fits on several ranks). ``best_score`` is recorded exactly
+    (``float.hex``) and is part of the model hash."""
+    train = train or kernel.train
     X, score, rng = _kernel_golden_data(17)
     reg = {"objective": "reg:squarederror", "n_estimators": 8, "max_depth": 5, "max_bin": 32}
     y3 = np.digitize(score, np.quantile(score, [1 / 3, 2 / 3])).astype(np.float64)
@@ -563,41 +576,57 @@ def _kernel_golden_case(name: str) -> dict[str, str]:
              "max_depth": 4, "max_bin": 16}
     out: dict[str, str] = {}
     if name == "regression_depth5":
-        b = kernel.train(X, score, reg)
+        b = train(X, score, reg)
     elif name == "multiclass":
-        b = kernel.train(X, y3, multi)
+        b = train(X, y3, multi)
+    elif name == "multiclass_nan_eval_early_stop":
+        X = X.copy()
+        X[rng.rand(*X.shape) < 0.05] = np.nan
+        b = train(X[:1000], y3[:1000], {**multi, "n_estimators": 40, "learning_rate": 0.8,
+                                        "gamma": 1.0, "early_stopping_rounds": 2},
+                  eval_set=(X[1000:], y3[1000:]))
+        out["best_iteration"] = str(b.best_iteration)
     elif name == "binary_nan":
         Xn = X.copy()
         Xn[rng.rand(*X.shape) < 0.05] = np.nan
         yb = (score > 0).astype(np.float64)
-        b = kernel.train(Xn, yb, {"objective": "binary:logistic", "n_estimators": 6,
+        b = train(Xn, yb, {"objective": "binary:logistic", "n_estimators": 6,
                            "max_depth": 6, "max_bin": 24})
         X = Xn
     elif name == "missing_zero":
-        b = kernel.train(X, score, {**reg, "missing": 0.0})
+        b = train(X, score, {**reg, "missing": 0.0})
     elif name == "max_depth_0":
-        b = kernel.train(X, score, {**reg, "max_depth": 0})
+        b = train(X, score, {**reg, "max_depth": 0})
     elif name == "external_storage":
-        b = kernel.train(X, score, {**reg, "use_external_storage": True})
+        b = train(X, score, {**reg, "use_external_storage": True})
     elif name == "eval_early_stop":
         # NaN and missing=0.0 both route through the eval-set margins
         yn = score + rng.randn(len(score)) * 0.8
         X = X.copy()
         X[rng.rand(*X.shape) < 0.05] = np.nan
-        b = kernel.train(X[:1000], yn[:1000], {**reg, "n_estimators": 60, "learning_rate": 0.5,
+        b = train(X[:1000], yn[:1000], {**reg, "n_estimators": 60, "learning_rate": 0.5,
                                         "early_stopping_rounds": 3, "missing": 0.0},
                   eval_set=(X[1000:], yn[1000:]))
         out["best_iteration"] = str(b.best_iteration)
     elif name == "continuation":
-        init = kernel.train(X, y3, {**multi, "n_estimators": 2})
-        b = kernel.train(X, y3, {**multi, "n_estimators": 3, "max_depth": 3}, xgb_model=init)
+        init = train(X, y3, {**multi, "n_estimators": 2})
+        b = train(X, y3, {**multi, "n_estimators": 3, "max_depth": 3}, xgb_model=init)
     elif name == "iteration_range":
-        b = kernel.train(X, y3, multi)
+        b = train(X, y3, multi)
         out["raw_margin_1_4"] = _sha(b.raw_margin(X, iteration_range=(1, 4)).tobytes())
-        r = kernel.train(X, score, reg)
+        r = train(X, score, reg)
         out["reg_raw_margin_2_6"] = _sha(r.raw_margin(X, iteration_range=(2, 6)).tobytes())
     else:
         raise KeyError(name)
+    if b.best_score is not None:
+        if train is not kernel.train:
+            # the eval metric is a float sum whose last bits follow the
+            # sharding: a multi-rank fit must match the one-rank score to
+            # 12 digits, and the rest of its model bit for bit
+            one_rank = float.fromhex(_KERNEL_GOLDENS[name]["best_score"])
+            assert math.isclose(b.best_score, one_rank, rel_tol=1e-12)
+            b.best_score = one_rank
+        out["best_score"] = b.best_score.hex()
     out["model"] = _sha(b.save_json().encode())
     out["predict"] = _sha(b.predict(X).tobytes())
     return out
@@ -736,6 +765,90 @@ def test_external_storage_leaves_no_temp_dir(tmp_path, monkeypatch):
     params = {"n_estimators": 3, "max_depth": 3, "use_external_storage": True}
     kernel.train(X, score, params).predict(X)
     assert not list(tmp_path.glob("gbt_ext_*"))
+
+
+def test_sibling_histogram_is_parent_minus_child_bit_for_bit():
+    """On fixed-point gradients a node's histogram minus one child's is
+    the other child's direct build, bit for bit, whatever the row order;
+    on the raw floats of the same rows it is not."""
+    rng = np.random.RandomState(5)
+    n, f, nbp1 = 5000, 3, 17
+    B = rng.randint(0, nbp1, size=(f, n)).astype(np.uint16)
+    g_raw = rng.randn(1, n) * 10.0 ** rng.uniform(-6, 6, n)
+    h_raw = rng.rand(1, n) * 10.0 ** rng.uniform(-6, 3, n)
+    g, h = g_raw.copy(), h_raw.copy()
+    kernel._fixed_point(g, h, kernel.LocalComm())
+    assert (h > 0).all()
+    left = rng.rand(n) < 0.3
+
+    def build(g, h, rows, order):
+        # rows of the node in slot 0, every other row past the built slot
+        out = np.empty((2, 1, f, nbp1))
+        pos = np.where(rows, 0, nbp1)[order]
+        kernel._build_histograms(B[:, order], g[0][order], h[0][order], pos, out)
+        return out
+
+    every = np.ones(n, dtype=bool)
+    for order in (np.arange(n), rng.permutation(n)):
+        sibling = build(g, h, every, order) - build(g, h, left, order)
+        assert np.array_equal(sibling, build(g, h, ~left, np.arange(n)))
+    raw = build(g_raw, h_raw, every, np.arange(n)) - build(g_raw, h_raw, left, np.arange(n))
+    assert not np.array_equal(raw, build(g_raw, h_raw, ~left, np.arange(n)))
+
+
+def test_fixed_point_grid():
+    """g rounds to the nearest and h up to a multiple of a power-of-two
+    step that leaves 2**52 steps for the largest possible sum."""
+    g = np.array([[3.0, -1.25, 1e-20, 0.0]])
+    h = np.array([[1.0, 1e-16, 0.25, 0.0]])
+    gq, hq = g.copy(), h.copy()
+    kernel._fixed_point(gq, hq, kernel.LocalComm())
+    g_step = 2.0 ** (math.ceil(math.log2(3.0 * 4)) - 52)
+    h_step = 2.0 ** (2 - 52)
+    np.testing.assert_array_equal(gq, np.rint(g / g_step) * g_step)
+    np.testing.assert_array_equal(hq, [[1.0, h_step, 0.25, 0.0]])
+    zero = np.zeros((2, 3))
+    kernel._fixed_point(zero, np.ones((2, 3)), kernel.LocalComm())
+    assert not zero.any()
+
+
+@pytest.mark.parametrize(
+    "objective", ["reg:squarederror", "binary:logistic", "multi:softprob"]
+)
+def test_train_rejects_non_finite_labels_and_bad_weights(objective):
+    """A NaN (a null label) or infinite label, a non-finite or negative
+    weight, or a ``multi:softprob`` label that is no class index, raises
+    instead of training single-leaf trees with NaN predictions (or
+    crashing in, or silently skipping, the softmax gradient's hot class)."""
+    X, score, _ = _kernel_golden_data(9, n=500)
+    y = (score > 0).astype(np.float64)
+    params = {"objective": objective, "n_estimators": 2, "max_depth": 2}
+    if objective == "multi:softprob":
+        params["num_class"] = 2
+    for bad in (np.nan, np.inf, -np.inf):
+        yb = y.copy()
+        yb[7] = bad
+        with pytest.raises(ValueError, match="found 1 non-finite label"):
+            kernel.train(X, yb, params)
+        with pytest.raises(ValueError, match="found 1 non-finite label"):
+            kernel.train(X[:400], y[:400], params, eval_set=(X[400:], yb[:100]))
+    for bad in (np.nan, np.inf, -1.0):
+        w = np.ones(len(y))
+        w[3] = bad
+        with pytest.raises(ValueError, match="found 1 non-finite or negative weight"):
+            kernel.train(X, y, params, sample_weight=w)
+    w = np.ones(len(y))
+    w[3] = 0.0
+    assert np.isfinite(kernel.train(X, y, params, sample_weight=w).predict(X)).all()
+    if objective == "multi:softprob":
+        # a finite label that is no class index has no hot class
+        for bad in (2.0, -1.0, 0.5):
+            yb = y.copy()
+            yb[7] = bad
+            with pytest.raises(ValueError, match="class indices 0..1; found 1 other"):
+                kernel.train(X, yb, params)
+            with pytest.raises(ValueError, match="class indices 0..1; found 1 other"):
+                kernel.train(X[:400], y[:400], params, eval_set=(X[400:], yb[:100]))
 
 
 def _chk_xgb_model_rejects_wrong_type(spark, reg_train):
