@@ -530,13 +530,19 @@ def _best_splits(hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_count
     Returns arrays over nodes: gain, feature, bin, default_left.
     Bin b means predicate 'x < edges[f][b]'; missing bucket is the last
     histogram slot and is assigned to whichever side scores better.
+    Bin -1 splits the missing bucket (left) from every present value
+    (right), as XGBoost's split below a feature's lowest value does: a
+    feature whose present cells hold one value has no cut, and this is
+    its only split. It is searched as the split after the feature's last
+    real bin (every present value left, missing right: the same
+    partition and gain) and returned as bin -1.
 
     ``edge_counts[f]`` = number of real cut points for feature f. The
-    histogram is padded to the widest feature, so slots b >=
+    histogram is padded to the widest feature, so slots b >
     edge_counts[f] are zero-filled; with min_child_weight=0 such a slot
     can tie/win the argmax (HR=0 passes the child-weight check), which
     would pick an unrealizable split. Those slots are masked to -inf
-    before the argmax so the chosen split is always a real cut.
+    before the argmax so the chosen split is always a real cut or bin -1.
     """
     n_nodes, n_feat, nbp1 = hist_g.shape
     G_real = hist_g[:, :, :-1]
@@ -546,8 +552,8 @@ def _best_splits(hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_count
     G_tot = G_real.sum(axis=2) + Gm
     H_tot = H_real.sum(axis=2) + Hm
 
-    GL = np.cumsum(G_real, axis=2)[:, :, :-1]  # split after bin b, b in [0, nb-2]
-    HL = np.cumsum(H_real, axis=2)[:, :, :-1]
+    GL = np.cumsum(G_real, axis=2)  # split after bin b, b in [0, nb-1]
+    HL = np.cumsum(H_real, axis=2)
     GR = G_tot[:, :, None] - Gm[:, :, None] - GL
     HR = H_tot[:, :, None] - Hm[:, :, None] - HL
 
@@ -565,23 +571,28 @@ def _best_splits(hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_count
     gain_ml = gain_of(GL + Gm[:, :, None], HL + Hm[:, :, None], GR, HR)  # missing→left
     gain_mr = gain_of(GL, HL, GR + Gm[:, :, None], HR + Hm[:, :, None])  # missing→right
     default_left = gain_ml >= gain_mr
-    gain = np.where(default_left, gain_ml, gain_mr)  # (node, feat, nb-1)
+    gain = np.where(default_left, gain_ml, gain_mr)  # (node, feat, nb)
 
-    if edge_counts is not None and gain.shape[2] > 0:
-        invalid = np.arange(gain.shape[2])[None, :] >= np.asarray(edge_counts)[:, None]
+    if edge_counts is not None:
+        last = np.asarray(edge_counts)
+        invalid = np.arange(gain.shape[2])[None, :] > last[:, None]
         gain = np.where(invalid[None, :, :], -np.inf, gain)
+        # the missing/present split needs hessian on both sides, so that
+        # an empty side never makes a 0/0 gain at reg_lambda=0
+        lone = (Hm <= 0) | (H_tot <= Hm)
+        feats = np.arange(n_feat)
+        gain[:, feats, last] = np.where(lone, -np.inf, gain[:, feats, last])
 
-    if gain.shape[2] == 0:
-        # no feature has any cut point (all-constant features): no splits
-        neg = np.full(n_nodes, -np.inf)
-        zero = np.zeros(n_nodes, dtype=np.int64)
-        return neg, zero, zero, np.ones(n_nodes, dtype=bool), G_tot, H_tot
     flat = gain.reshape(n_nodes, -1)
     best_flat = np.argmax(flat, axis=1)
     best_gain = flat[np.arange(n_nodes), best_flat]
     best_feat = best_flat // gain.shape[2]
     best_bin = best_flat % gain.shape[2]
     best_dl = default_left[np.arange(n_nodes), best_feat, best_bin]
+    if edge_counts is not None:
+        below = best_bin == last[best_feat]
+        best_bin[below] = -1
+        best_dl |= below
     return best_gain, best_feat, best_bin, best_dl, G_tot, H_tot
 
 
@@ -943,9 +954,10 @@ def _grow_trees(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, 
         # slot n_split + r
         f_sp, b_sp, dl_sp = feat[sp], bins[sp], dleft[sp]
         chosen = hist[:, sp, f_sp]  # (2, n_split, nbp1)
-        GL, HL = np.cumsum(chosen[:, :, :-1], axis=2)[:, np.arange(n_split), b_sp] + np.where(
-            dl_sp, chosen[:, :, -1], 0.0
-        )
+        # left real totals after bin b, at column b + 1 (bin -1: none)
+        cum = np.zeros_like(chosen)
+        np.cumsum(chosen[:, :, :-1], axis=2, out=cum[:, :, 1:])
+        GL, HL = cum[:, np.arange(n_split), b_sp + 1] + np.where(dl_sp, chosen[:, :, -1], 0.0)
         GR, HR = Gn[sp] - GL, Hn[sp] - HL
         r = np.arange(n_split)
         small_left = HL <= HR
@@ -957,7 +969,7 @@ def _grow_trees(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, 
         right[sp] = first_id[k] + S + right_slot
         levels[k].append((
             np.where(split, feat, -1),
-            np.where(split, cuts[feat, bins], 0.0),
+            np.where(split, np.where(bins < 0, -np.inf, cuts[feat, bins]), 0.0),
             left,
             right,
             value,
@@ -1093,6 +1105,12 @@ def train(
                 f"multi:softprob labels must be class indices 0..{K - 1}; found {n_bad} other(s)"
             )
     missing = float(p["missing"])
+    if not math.isnan(missing):
+        # a cell equal to ``missing`` is missing from here on: the sketch
+        # must not spend quantiles (or cuts) on it, nor the rounding below
+        # turn a real value into it. Compared in float64, as ``_walk``
+        # compares at prediction.
+        X = np.where(X.astype(np.float64) == missing, np.float32(np.nan), X)
 
     if bool(p.get("use_external_storage")):
         # out-of-core path (reference O10): lossy significant-digit

@@ -1161,34 +1161,39 @@ def scan_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     import json as _json
     import time as _time
 
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        p = q.lastProgress
-        if p and p.get("sources"):
-            eo = p["sources"][0].get("endOffset")
-            if eo is not None:
-                if isinstance(eo, str):
-                    # serialized as a Python-dict repr, not strict JSON
-                    try:
-                        off = _json.loads(eo)
-                    except ValueError:
-                        import ast as _ast
+    try:
+        deadline = _time.time() + 120
+        while _time.time() < deadline:
+            p = q.lastProgress
+            if p and p.get("sources"):
+                eo = p["sources"][0].get("endOffset")
+                if eo is not None:
+                    if isinstance(eo, str):
+                        # serialized as a Python-dict repr, not strict JSON
+                        try:
+                            off = _json.loads(eo)
+                        except ValueError:
+                            import ast as _ast
 
-                        off = _ast.literal_eval(eo)
-                else:
-                    off = eo
-                if int(off.get("file_idx", -1)) >= n_files:
-                    break
-        _time.sleep(0.02)
-    else:
+                            off = _ast.literal_eval(eo)
+                    else:
+                        off = eo
+                    if int(off.get("file_idx", -1)) >= n_files:
+                        break
+            _time.sleep(0.02)
+        else:
+            raise TimeoutError(
+                "scan_python_datasource_stream: stream did not reach "
+                f"file_idx={n_files} within the deadline — failing loudly "
+                "rather than aggregating a partial read"
+            )
         q.stop()
-        raise TimeoutError(
-            "scan_python_datasource_stream: stream did not reach "
-            f"file_idx={n_files} within the deadline — failing loudly "
-            "rather than aggregating a partial read"
-        )
-    q.stop()
-    q.awaitTermination()
+        q.awaitTermination()
+    finally:
+        # the memory sink outlives the query; its checkpoint need not
+        if q.isActive:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name).groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -1996,25 +2001,31 @@ def sink_python_datasource_stream_write(spark: SparkSession, sf_dir: str) -> Dat
         .trigger(processingTime="0 seconds")
         .start()
     )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        p = q.lastProgress
-        if p and p.get("sources"):
-            eo = p["sources"][0].get("endOffset")
-            if eo is not None:
-                off = _ast.literal_eval(eo) if isinstance(eo, str) else eo
-                if off and int(off.get("file_idx", -1)) >= n_files:
-                    break
-        _time.sleep(0.02)
-    else:
+    try:
+        deadline = _time.time() + 120
+        while _time.time() < deadline:
+            p = q.lastProgress
+            if p and p.get("sources"):
+                eo = p["sources"][0].get("endOffset")
+                if eo is not None:
+                    off = _ast.literal_eval(eo) if isinstance(eo, str) else eo
+                    if off and int(off.get("file_idx", -1)) >= n_files:
+                        break
+            _time.sleep(0.02)
+        else:
+            raise TimeoutError(
+                "sink_python_datasource_stream_write: stream did not reach "
+                f"file_idx={n_files} within the deadline — failing loudly "
+                "rather than attesting a partial sink"
+            )
         q.stop()
-        raise TimeoutError(
-            "sink_python_datasource_stream_write: stream did not reach "
-            f"file_idx={n_files} within the deadline — failing loudly "
-            "rather than attesting a partial sink"
-        )
-    q.stop()
-    q.awaitTermination()
+        q.awaitTermination()
+    finally:
+        # the sink dir stays (the returned frame reads it lazily); the
+        # checkpoint is done with once the query has stopped
+        if q.isActive:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     back = spark.read.format("docbin").option("path", out).load()
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),

@@ -499,7 +499,9 @@ def test_max_bin_beyond_uint16_codes_rejected():
 # best_iteration, exact best_score / iteration-range margins where a case has
 # them), recorded with the fixed-point kernel that builds only the smaller
 # child of each split. Its sums are exact, so the same models come out of
-# 2 and 3 ranks (tests/test_distributed.py).
+# 2 and 3 ranks (tests/test_distributed.py). The four cases with missing
+# cells were re-recorded when cells equal to a non-NaN ``missing`` left the
+# sketch and the split of missing from present values (bin -1) came in.
 _KERNEL_GOLDENS = {
     "regression_depth5": {
         "model": "35c55f3cee52e40c",
@@ -510,17 +512,17 @@ _KERNEL_GOLDENS = {
         "predict": "a221b4b4fbd0aa82",
     },
     "multiclass_nan_eval_early_stop": {
-        "best_iteration": "33",
-        "best_score": "0x1.338ab0e50607bp-1",
-        "model": "1f2b100a68321673",
-        "predict": "6eeba000fc1b11f6",
+        "best_iteration": "31",
+        "best_score": "0x1.3184ce4984204p-1",
+        "model": "744b8cf044ee146a",
+        "predict": "636707c3e0801d16",
     },
     "binary_nan": {
-        "model": "e23d3cfd7f07063b",
-        "predict": "230358bb2c10377f",
+        "model": "034aeb982e710667",
+        "predict": "464c08495e00ec10",
     },
     "missing_zero": {
-        "model": "cd90e8ee65abd704",
+        "model": "d51bb144c63e43b2",
         "predict": "23a7115af5c6b3ca",
     },
     "max_depth_0": {
@@ -532,10 +534,10 @@ _KERNEL_GOLDENS = {
         "predict": "cd89453892d4f1ab",
     },
     "eval_early_stop": {
-        "best_iteration": "8",
-        "best_score": "0x1.169f26a2865d0p+0",
-        "model": "6be8aa502e178ac6",
-        "predict": "042c1368d046fe36",
+        "best_iteration": "12",
+        "best_score": "0x1.1798401fd317bp+0",
+        "model": "39b5018fb03c23f4",
+        "predict": "62a1869c4ca12499",
     },
     "continuation": {
         "model": "c45de2f1b2044067",
@@ -635,6 +637,39 @@ def _kernel_golden_case(name: str, train=None) -> dict[str, str]:
 @pytest.mark.parametrize("case", sorted(_KERNEL_GOLDENS))
 def test_kernel_goldens(case):
     assert _kernel_golden_case(case) == _KERNEL_GOLDENS[case]
+
+
+def test_missing_cells_stay_out_of_the_sketch(monkeypatch):
+    """Cells equal to a non-NaN ``missing`` are missing before the
+    sketch: each column gets the cuts, and the model the predictions, it
+    gets with NaN in those cells (XGBoost's sketch skips missing cells)."""
+    X, score, _ = _kernel_golden_data(17)
+    Xn = X.copy()
+    Xn[Xn == 0.0] = np.nan
+    sketch, seen = kernel.compute_bin_edges, []
+    monkeypatch.setattr(
+        kernel, "compute_bin_edges", lambda *a, **k: seen.append(sketch(*a, **k)) or seen[-1]
+    )
+    reg = {"objective": "reg:squarederror", "n_estimators": 4, "max_depth": 4, "max_bin": 32}
+    zero = kernel.train(X, score, {**reg, "missing": 0.0})
+    nan = kernel.train(Xn, score, reg)
+    assert len(seen) == 2
+    for j, (e0, en) in enumerate(zip(*seen)):
+        np.testing.assert_array_equal(e0, en, err_msg=f"feature {j}")
+    np.testing.assert_array_equal(zero.predict(X), nan.predict(Xn))
+
+
+def test_missing_splits_from_a_single_present_value():
+    """A feature whose present cells hold one value has no cut, yet the
+    trees must tell its missing cells from its present ones (XGBoost's
+    split below the lowest value), whether missing is NaN or 0.0."""
+    X = np.array([[1.0, np.nan], [1.0, 2.0]] * 20, dtype=np.float32)
+    y = np.array([0.0, 1.0] * 20)
+    reg = {"objective": "reg:squarederror", "n_estimators": 10}
+    for Xm, params in ((X, reg), (np.nan_to_num(X), {**reg, "missing": 0.0})):
+        b = kernel.train(Xm, y, params)
+        np.testing.assert_allclose(b.predict(Xm[:2]), [0.0, 1.0], atol=0.05)
+        assert np.array_equal(kernel.Booster.load_json(b.save_json()).predict(Xm), b.predict(Xm))
 
 
 def _record_batches(values, labels, indicator=None):

@@ -450,12 +450,11 @@ def _chk_zorder_buckets_have_2d_locality(spark):
         assert (r.max_day - r.min_day) <= span // 4 + 2
 
 
-def _chk_python_datasource_stream_exactly_once_offsets(spark):
+def test_python_datasource_stream_exactly_once_offsets(spark, tmp_path):
     """Two+ staged micro-batches over the docbin stream reader must
     partition the shard range with no overlap and no gap: every record
     arrives exactly once and committed offsets advance monotonically."""
     import ast
-    import tempfile
 
     from pyspark_xgboost_spark.sources import load_table
     from pyspark_xgboost_spark.sources.formats import (
@@ -476,7 +475,7 @@ def _chk_python_datasource_stream_exactly_once_offsets(spark):
         .option("batchfiles", "3")  # 8 shards -> batches of 3,3,2
         .load()
     )
-    ckpt = tempfile.mkdtemp(prefix="docbin_ckpt_test_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         docs.writeStream.outputMode("append")
         .format("memory")
@@ -734,7 +733,7 @@ def test_parquet_reads_go_through_read_parquet_only():
 
 
 # Pooled contract sweep (smoke-sweep discipline; see test_plans_r11).
-_POOLED_CHECKS_SOURCES = [_chk_scan_text_profile_matches_batch, _chk_corrupt_records_are_audited_not_dropped, _chk_gzip_stage_writes_gz_files_and_reads_back, _chk_python_datasource_roundtrip_and_parallelism, _chk_compaction_shrinks_file_count_content_neutral, _chk_schema_evolution_nulls_only_in_legacy_files, _chk_metadata_hidden_column_counts_staged_files, _chk_zorder_buckets_have_2d_locality, _chk_python_datasource_stream_exactly_once_offsets]
+_POOLED_CHECKS_SOURCES = [_chk_scan_text_profile_matches_batch, _chk_corrupt_records_are_audited_not_dropped, _chk_gzip_stage_writes_gz_files_and_reads_back, _chk_python_datasource_roundtrip_and_parallelism, _chk_compaction_shrinks_file_count_content_neutral, _chk_schema_evolution_nulls_only_in_legacy_files, _chk_metadata_hidden_column_counts_staged_files, _chk_zorder_buckets_have_2d_locality]
 
 
 def test_sources_contracts_pooled(spark):

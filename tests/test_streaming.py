@@ -273,6 +273,67 @@ def _chk_stream_merge_upsert_incremental_chain(spark):
     ) == versions
 
 
+def test_micro_batch_fold_versions_and_checkpoint_lifetime(spark, tmp_path, monkeypatch):
+    """The incremental family's one runner and fold: one version per
+    non-empty staged batch, in batch order (an empty batch writes
+    none), the last version returned, and no checkpoint left behind
+    after a normal run or a run whose step raises — which also leaves
+    no ``_BUILT`` marker. Not pooled: it points the process-wide
+    ``tempfile.tempdir`` at ``tmp_path``."""
+    import os
+    import tempfile
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from pyspark_xgboost_spark.streaming.stream import _fold_versions
+
+    schema = "doc_id long, seq int"
+    arrow = pa.schema([("doc_id", pa.int64()), ("seq", pa.int32())])
+    root = tmp_path / "staged"
+    (root / "in").mkdir(parents=True)
+    now = time.time()
+    for i, ids in enumerate([range(0, 5), range(0), range(10, 13)]):
+        dst = str(root / "in" / f"batch-{i:03d}.parquet")
+        pq.write_table(pa.table({"doc_id": list(ids), "seq": [i] * len(ids)}, arrow), dst)
+        os.utime(dst, (now - 300 + i * 100, now - 300 + i * 100))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    seen, live = [], []
+
+    def step(batch, prev):
+        live.append(os.listdir(tmp))  # the run's checkpoint, while it runs
+        seen.append(None if prev is None else sorted(r.doc_id for r in prev.collect()))
+        ids = batch.select("doc_id")
+        return ids if prev is None else prev.unionByName(ids)
+
+    tbl = str(tmp_path / "tbl")
+    last = _fold_versions(spark, str(root), schema, tbl, step)
+    assert last == os.path.join(tbl, "v002")
+    assert sorted(d for d in os.listdir(tbl) if d.startswith("v")) == ["v000", "v002"]
+    assert seen == [None, [0, 1, 2, 3, 4]]
+    assert len(live) == 2 and all(len(d) == 1 for d in live) and live[0] == live[1]
+    assert sorted(r.doc_id for r in spark.read.parquet(last).collect()) == [
+        0, 1, 2, 3, 4, 10, 11, 12
+    ]
+    assert os.listdir(tmp) == []
+
+    def failing(batch, prev):
+        if prev is not None:
+            raise RuntimeError("step failed")
+        return batch.select("doc_id")
+
+    bad = str(tmp_path / "bad")
+    with pytest.raises(Exception, match="step failed"):
+        _fold_versions(spark, str(root), schema, bad, failing)
+    assert not os.path.exists(os.path.join(bad, "_BUILT"))
+    assert os.listdir(tmp) == []
+
+
 # Pooled contract sweep (smoke-sweep discipline; see test_plans_r11).
 _POOLED_CHECKS_STREAMING = [_chk_stream_tumbling_equals_batch, _chk_stream_session_equals_batch, _chk_stateful_user_stats_totals, _chk_stream_static_join_equals_batch, _chk_stream_static_join_is_stateless, _chk_kafka_shape_source_equals_parquet_source, _chk_stream_left_outer_join_contract, _chk_stream_merge_upsert_incremental_chain]
 
