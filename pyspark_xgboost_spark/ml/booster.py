@@ -32,8 +32,8 @@ child of each split and derives its sibling as parent minus child,
 which is exact too. The bin sketch (``compute_bin_edges``) is every row,
 or above a row budget each feature's distinct values picked by a hash
 of the value with their exact counts, so the edges do not depend on the
-layout either. An eval-set metric is still a float sum whose last bits
-follow the sharding, so early stopping is outside this guarantee.
+layout either. The eval-set metric rounds each row's loss and weight
+the same way (``_eval_metric``), so early stopping is inside it too.
 
 Data layout, chosen so that training and prediction are array passes
 rather than per-node or per-tree Python loops:
@@ -185,37 +185,41 @@ class _Objective:
         }[self.name]
 
 
-def _eval_metric_parts(metric, margin, y, w, quantile_alpha: float = 0.5) -> tuple[float, float]:
-    """(weighted loss sum, weight sum) — allreduce-able across workers.
-    ``margin`` is laid out as in training: ``(K, n)``."""
-    if len(y) == 0:
-        return 0.0, 0.0
-    w = np.ones(len(y)) if w is None else w
-    sw = float(w.sum())
+def _eval_losses(metric, margin, y, w, quantile_alpha: float = 0.5) -> tuple[np.ndarray, np.ndarray]:
+    """(weighted loss, weight) of every eval row. ``margin`` is laid
+    out as in training: ``(K, n)``."""
+    w = np.ones(len(y)) if w is None else np.array(w, dtype=np.float64)
     if metric == "rmse":
-        return float((w * (margin - y) ** 2).sum()), sw
+        return w * (margin - y) ** 2, w
     if metric == "mae":
-        return float((w * np.abs(margin - y)).sum()), sw
+        return w * np.abs(margin - y), w
     if metric == "quantile":
         a = quantile_alpha
         diff = y - margin
-        pin = np.where(diff >= 0, a * diff, (a - 1.0) * diff)
-        return float((w * pin).sum()), sw
+        return w * np.where(diff >= 0, a * diff, (a - 1.0) * diff), w
     if metric == "logloss":
         p = np.clip(_sigmoid(margin), 1e-15, 1 - 1e-15)
-        return float(-(w * (y * np.log(p) + (1 - y) * np.log(1 - p))).sum()), sw
+        return -w * (y * np.log(p) + (1 - y) * np.log(1 - p)), w
     if metric == "mlogloss":
         p = np.clip(_softmax(margin, axis=0), 1e-15, None)
-        return float(-(w * np.log(p[y.astype(np.int64), np.arange(len(y))])).sum()), sw
+        return -w * np.log(p[y.astype(np.int64), np.arange(len(y))]), w
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def _eval_metric(metric, obj, margin, y, w, comm=None) -> float:
-    num, den = _eval_metric_parts(
-        metric, margin, y, w, getattr(obj, "quantile_alpha", 0.5)
-    )
-    if comm is not None and getattr(comm, "n_workers", 1) > 1:
-        num, den = comm.allreduce_sum(np.array([num, den]))
+def _eval_metric(metric, obj, margin, y, w, comm) -> float:
+    """The eval-set metric over every worker's eval rows. Each row's
+    weighted loss and each weight are rounded to a multiple of a power
+    of two sized from their global maxima and the global row count (as
+    ``_fixed_point`` rounds gradients; one allgather of one row per
+    rank), so both sums are exact in any order: the score, and with it
+    every early-stopping decision, does not depend on how the eval rows
+    are split across workers."""
+    loss, w = _eval_losses(metric, margin, y, w, getattr(obj, "quantile_alpha", 0.5))
+    stats = comm.allgather_rows(np.array([[loss.max(initial=0.0), w.max(initial=0.0), len(y)]]))
+    n = stats[:, 2].sum()
+    for i, a in enumerate((loss, w)):
+        _round_to_grid(a, stats[:, i].max() * n, np.rint)
+    num, den = comm.allreduce_sum(np.array([loss.sum(), w.sum()]))
     if den == 0:
         return math.inf
     return math.sqrt(num / den) if metric == "rmse" else num / den
@@ -557,16 +561,20 @@ def _best_splits(hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_count
     GR = G_tot[:, :, None] - Gm[:, :, None] - GL
     HR = H_tot[:, :, None] - Hm[:, :, None] - HL
 
-    parent = (G_tot**2) / (H_tot + reg_lambda)  # (node, feat)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        parent = (G_tot**2) / (H_tot + reg_lambda)  # (node, feat)
 
     def gain_of(GLx, HLx, GRx, HRx):
         ok = (HLx >= min_child_weight) & (HRx >= min_child_weight)
-        gain = 0.5 * (
-            (GLx**2) / (HLx + reg_lambda)
-            + (GRx**2) / (HRx + reg_lambda)
-            - parent[:, :, None]
-        ) - gamma
-        return np.where(ok, gain, -np.inf)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            gain = 0.5 * (
+                (GLx**2) / (HLx + reg_lambda)
+                + (GRx**2) / (HRx + reg_lambda)
+                - parent[:, :, None]
+            ) - gamma
+        # at reg_lambda=0 an empty side passes min_child_weight=0 and
+        # makes 0/0: a NaN that the argmax would pick over every real gain
+        return np.where(ok & np.isfinite(gain), gain, -np.inf)
 
     gain_ml = gain_of(GL + Gm[:, :, None], HL + Hm[:, :, None], GR, HR)  # missing→left
     gain_mr = gain_of(GL, HL, GR + Gm[:, :, None], HR + Hm[:, :, None])  # missing→right
@@ -847,11 +855,17 @@ def _fixed_point(g: np.ndarray, h: np.ndarray, comm) -> None:
     g_max = max(g.max(initial=0.0), -g.min(initial=0.0))
     stats = comm.allgather_rows(np.array([[g_max, h.max(initial=0.0), g.shape[1]]]))
     n = stats[:, 2].sum()
-    for a, a_max, to_int in ((g, stats[:, 0].max(), np.rint), (h, stats[:, 1].max(), np.ceil)):
-        e = _grid_step(float(a_max * n))
-        np.ldexp(a, -e, out=a)
-        to_int(a, out=a)
-        np.ldexp(a, e, out=a)
+    _round_to_grid(g, stats[:, 0].max() * n, np.rint)
+    _round_to_grid(h, stats[:, 1].max() * n, np.ceil)
+
+
+def _round_to_grid(a: np.ndarray, bound: float, to_int) -> None:
+    """Round ``a`` in place with ``to_int`` to a multiple of the
+    fixed-point step of ``_grid_step(bound)``."""
+    e = _grid_step(float(bound))
+    np.ldexp(a, -e, out=a)
+    to_int(a, out=a)
+    np.ldexp(a, e, out=a)
 
 
 def _grow_trees(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, lr, comm):

@@ -26,6 +26,7 @@ downstream.
 
 from __future__ import annotations
 
+import ast
 import contextlib as _contextlib
 import fcntl as _fcntl
 import itertools
@@ -33,7 +34,9 @@ import os
 import re
 import shutil
 import stat as _stat
+import tempfile
 import threading as _threading
+import time
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1109,6 +1112,48 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _end_file_idx(progress) -> int:
+    """``file_idx`` of the docbin offset a progress report's micro-batch
+    committed, -1 before the first. Spark reports the Python source's
+    offset as a string holding a Python-dict literal."""
+    eo = progress["sources"][0].get("endOffset") if progress and progress.get("sources") else None
+    if isinstance(eo, str):
+        eo = ast.literal_eval(eo)
+    return int((eo or {}).get("file_idx", -1))
+
+
+def _drain_docbin(writer, src_path: str, what: str) -> None:
+    """Run the docbin stream query ``writer`` (a ``DataStreamWriter``
+    over the shards of ``src_path``) until a committed micro-batch's
+    offset covers the last shard, then stop it. availableNow snapshots
+    only the reader's ONE prefetched batch, so it would stop after the
+    first ``batchfiles`` shards; a 0s processing trigger keeps firing
+    micro-batches until this loop stops the query, or fails loudly at
+    the deadline rather than return a partial stream. The checkpoint
+    lives for this run only."""
+    n_files = sum(1 for f in os.listdir(src_path) if f.endswith(".docbin"))
+    with tempfile.TemporaryDirectory(prefix="docbin_stream_ckpt_") as ckpt:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + 120
+            while _end_file_idx(q.lastProgress) < n_files:
+                if time.time() > deadline:
+                    raise TimeoutError(
+                        f"{what}: stream did not reach file_idx={n_files} "
+                        "within the deadline"
+                    )
+                time.sleep(0.02)
+            q.stop()
+            q.awaitTermination()
+        finally:
+            if q.isActive:
+                q.stop()
+
+
 @register(
     "scan_python_datasource_stream",
     oracle="""
@@ -1129,12 +1174,10 @@ def scan_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     loss and duplication: any shard read twice or skipped across the
     micro-batch boundary shifts the counts. This is the exactly-once
     offset contract `events_stream_kafka_shape` pins for the file
-    source, now pinned for the custom-source API; a fresh checkpoint
-    per run keeps the query re-runnable."""
+    source, now pinned for the custom-source API; a checkpoint that
+    lives for one run (``_drain_docbin``) keeps the query re-runnable."""
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise NotImplementedError("requires Spark 4 Python DataSource API")
-    import tempfile
-
     path = _stage_docbin(sf_dir)
     _register_docbin(spark)
     docs = (
@@ -1144,57 +1187,13 @@ def scan_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         .load()
     )
     name = f"docbin_stream_sink_{next(_SINK_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="docbin_ckpt_")
-    n_files = sum(1 for f in os.listdir(path) if f.endswith(".docbin"))
-    # availableNow snapshots only the reader's ONE prefetched batch, so
-    # it would stop after the first 4 shards; a 0s processing trigger
-    # keeps firing micro-batches and the loop stops the query once a
-    # COMMITTED batch's endOffset covers the last shard.
-    q = (
-        docs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    import json as _json
-    import time as _time
-
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            p = q.lastProgress
-            if p and p.get("sources"):
-                eo = p["sources"][0].get("endOffset")
-                if eo is not None:
-                    if isinstance(eo, str):
-                        # serialized as a Python-dict repr, not strict JSON
-                        try:
-                            off = _json.loads(eo)
-                        except ValueError:
-                            import ast as _ast
-
-                            off = _ast.literal_eval(eo)
-                    else:
-                        off = eo
-                    if int(off.get("file_idx", -1)) >= n_files:
-                        break
-            _time.sleep(0.02)
-        else:
-            raise TimeoutError(
-                "scan_python_datasource_stream: stream did not reach "
-                f"file_idx={n_files} within the deadline — failing loudly "
-                "rather than aggregating a partial read"
-            )
-        q.stop()
-        q.awaitTermination()
-    finally:
-        # the memory sink outlives the query; its checkpoint need not
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name).groupBy("source").agg(
+    writer = docs.writeStream.outputMode("append").format("memory").queryName(name)
+    _drain_docbin(writer, path, "scan_python_datasource_stream")
+    # the frame holds the memory sink itself: drop its view so the rows
+    # live as long as the frame, not as long as the session
+    sink = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return sink.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
     )
@@ -1969,19 +1968,18 @@ def sink_python_datasource_stream_write(spark: SparkSession, sf_dir: str) -> Dat
     reader's offset contract make the copy exactly-once end-to-end;
     the copy is then read back with the batch reader and aggregated, so
     the oracle (the parquet source) catches any loss or duplication
-    across BOTH micro-batch boundaries and task retries. Fresh
-    checkpoint + sink dir per run keep the query rerunnable."""
+    across BOTH micro-batch boundaries and task retries. A checkpoint
+    that lives for one run (``_drain_docbin``) and a sink dir cleared at
+    the start of each run keep the query rerunnable."""
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise NotImplementedError("requires Spark 4 Python DataSource API")
-    import ast as _ast
-    import tempfile
-    import time as _time
-
     src_path = _stage_docbin(sf_dir)
     _register_docbin(spark)
-    n_files = sum(1 for f in os.listdir(src_path) if f.endswith(".docbin"))
-    out = tempfile.mkdtemp(prefix="docbin_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="docbin_stream_out_ckpt_")
+    # one sink directory per source fingerprint, cleared at the start of
+    # each run (the returned frame reads it lazily, so it must outlive
+    # the call; the next run or a new fingerprint replaces it)
+    out = staged_path(sf_dir, "documents", "docbin_stream_written")
+    shutil.rmtree(out, ignore_errors=True)
     docs = (
         spark.readStream.format("docbin")
         .option("path", src_path)
@@ -1993,39 +1991,8 @@ def sink_python_datasource_stream_write(spark: SparkSession, sf_dir: str) -> Dat
         .option("batchfiles", str(_DOCBIN_SHARDS))
         .load()
     )
-    q = (
-        docs.writeStream.format("docbin")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            p = q.lastProgress
-            if p and p.get("sources"):
-                eo = p["sources"][0].get("endOffset")
-                if eo is not None:
-                    off = _ast.literal_eval(eo) if isinstance(eo, str) else eo
-                    if off and int(off.get("file_idx", -1)) >= n_files:
-                        break
-            _time.sleep(0.02)
-        else:
-            raise TimeoutError(
-                "sink_python_datasource_stream_write: stream did not reach "
-                f"file_idx={n_files} within the deadline — failing loudly "
-                "rather than attesting a partial sink"
-            )
-        q.stop()
-        q.awaitTermination()
-    finally:
-        # the sink dir stays (the returned frame reads it lazily); the
-        # checkpoint is done with once the query has stopped
-        if q.isActive:
-            q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+    writer = docs.writeStream.format("docbin").option("path", out).outputMode("append")
+    _drain_docbin(writer, src_path, "sink_python_datasource_stream_write")
     back = spark.read.format("docbin").option("path", out).load()
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),

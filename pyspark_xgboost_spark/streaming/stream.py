@@ -13,6 +13,16 @@ the state store holds only ~2h of open windows per key regardless of
 corpus size. ``applyInPandasWithState`` is the custom-stateful-operator
 escape hatch (reference has no streaming at all — SURVEY.md §2.2).
 
+Run contract. Every query that runs a stateful stream to completion
+starts it inside ``_stream_scope(spark, source, ...)``: state stores
+are sized from the size of the ``source`` path passed in (no sizing
+travels through session conf), and ``spark.sql.shuffle.partitions``
+(plus, when asked, ``noDataMicroBatches``) is pinned only for that run
+and restored to its entry state after it — a conf that was unset stays
+unset. ``_run_to_memory`` drops its memory sink's temporary view before
+it returns the sink's frame, so no view, and no sink's rows, stay in
+the session after the frame is gone.
+
 The incremental family (``stream_*_incremental`` and friends) maintains
 an index or summary per micro-batch through one runner, ``_run_batches``:
 it streams the staged ``<root>/in`` files one per batch (or any given
@@ -28,6 +38,7 @@ and the fold returns the last version's path.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import shutil
@@ -53,6 +64,10 @@ from pyspark_xgboost_spark.streaming.windows import session_agg, tumbling_agg
 _counter = itertools.count()
 
 
+def _events_parquet(sf_dir: str) -> str:
+    return os.path.join(sf_dir, "events.parquet")
+
+
 def _events_stream_dir(sf_dir: str) -> str:
     """The file stream source requires a DIRECTORY of files (it models a
     landing zone receiving new files); stage one containing a symlink to
@@ -61,10 +76,7 @@ def _events_stream_dir(sf_dir: str) -> str:
         sf_dir,
         "events",
         "stream_src",
-        lambda d: os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(d, "events.parquet"),
-        ),
+        lambda d: os.symlink(_events_parquet(sf_dir), os.path.join(d, "events.parquet")),
     )
 
 
@@ -87,34 +99,46 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``from_json`` replaces the schema/read lines; everything after
     ``normalize_event_ts`` is source-agnostic.
     """
-    src = os.path.join(sf_dir, "events.parquet")
-    physical = read_parquet(spark, src).schema
-    _record_stream_input_bytes(spark, src)
+    physical = read_parquet(spark, _events_parquet(sf_dir)).schema
     raw = spark.readStream.schema(physical).parquet(_events_stream_dir(sf_dir))
     return normalize_event_ts(raw)
 
 
-_STREAM_INPUT_BYTES_CONF = "spark_graft.stream.input_bytes"
 _NO_DATA_BATCH_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 _STATE_PARTITION_TARGET_BYTES = 64 << 20  # ~64 MB of source per store
 
 
-def _state_partitions(spark: SparkSession) -> int:
+def _input_bytes(spark: SparkSession, path: str) -> int:
+    """On-disk size of the stream source ``path``, 0 when it cannot be
+    read. Sized through the HADOOP FILESYSTEM API (r15, verdict item
+    6), not os.path: the r14 shape silently no-op'd on object storage
+    (and undercounted nested layouts — non-recursive listdir), which is
+    exactly where input-derived state sizing matters.
+    ``getContentSummary`` recurses and works on any Hadoop-supported
+    scheme (file://, hdfs://, s3a://, ...)."""
+    try:
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        return int(fs.getContentSummary(hpath).getLength())
+    except Exception:  # pragma: no cover — sizing is advisory only
+        return 0
+
+
+def _state_partitions(spark: SparkSession, source: str | None) -> int:
     """Stateful streaming opens + commits one state store PER shuffle
     partition PER micro-batch — at 32 partitions that fixed cost is ~3s
     per pass locally vs ~0.2s of actual aggregation (re-measured r14:
     the stream-stream join runs 6.7s at 8 partitions vs 3.5s at 4 on
-    the same input). The partition count is DERIVED FROM THE SOURCE
-    INPUT SIZE (one store per ~64 MB of input, floor 4) when the
-    stream reader has recorded it on the session — the state-bytes /
-    store sizing a real deployment does, since the count is pinned in
-    the checkpoint for the life of the query — capped at 32x the
-    cluster's slots so a huge backfill cannot mint millions of tiny
-    stores. Without a recorded size it falls back to cores/4, floor
-    4 (the pre-r14 behavior).
+    the same input). The partition count is DERIVED FROM THE SIZE OF
+    THE SOURCE ``source`` (one store per ~64 MB of input) — the
+    state-bytes / store sizing a real deployment does, since the count
+    is pinned in the checkpoint for the life of the query — capped at
+    32x the cluster's slots so a huge backfill cannot mint millions of
+    tiny stores. Without a source (or a size) it falls back to
+    cores/4, floor 4 (the pre-r14 behavior).
 
-    Floor 2 since r15 (was 4): the floor only binds when the recorded
-    input is under ~128 MB, where per-store open/commit dominates any
+    Floor 2 since r15 (was 4): the floor only binds when the input is
+    under ~128 MB, where per-store open/commit dominates any
     parallelism gain — re-measured this round on the three
     stream-stream joins (4 state stores per partition each): 2.77 /
     2.51 / 2.40 s at 4 partitions vs 2.11 / 2.20 / 2.11 s at 2, and
@@ -123,101 +147,90 @@ def _state_partitions(spark: SparkSession) -> int:
     real input size the b-derived count dominates and the floor is
     inert."""
     par = spark.sparkContext.defaultParallelism
-    try:
-        b = int(spark.conf.get(_STREAM_INPUT_BYTES_CONF, "0"))
-    except Exception:  # pragma: no cover — conf access never fails
-        b = 0
+    b = _input_bytes(spark, source) if source else 0
     if b <= 0:
         return max(4, par // 4)
     return max(2, min(b // _STATE_PARTITION_TARGET_BYTES + 1, 32 * par))
 
 
-def _record_stream_input_bytes(spark: SparkSession, path: str) -> None:
-    """Record the stream source's on-disk input size on the session so
-    _state_partitions can size state stores from it; best-effort.
+@contextlib.contextmanager
+def _stream_scope(
+    spark: SparkSession,
+    source: str,
+    min_parts: int | None = None,
+    no_data_batch: bool = True,
+) -> Iterator[None]:
+    """The one scope every run-to-completion stream starts its query
+    in: ``spark.sql.shuffle.partitions`` is pinned to the state-store
+    count sized from ``source`` (``_state_partitions``), at least
+    ``min_parts``, and ``no_data_batch=False`` turns off
+    ``spark.sql.streaming.noDataMicroBatches.enabled``. A streaming
+    query reads both once at start (and stores the partition count in
+    its checkpoint), so pinning them around ``start()`` scopes them to
+    that query without touching the session's batch default. On exit
+    both are restored to their entry state — unset again if they were
+    unset.
 
-    Sizing goes through the HADOOP FILESYSTEM API (r15, verdict item
-    6), not os.path: the r14 shape silently no-op'd on object storage
-    (and undercounted nested layouts — non-recursive listdir), which is
-    exactly where input-derived state sizing matters.
-    ``getContentSummary`` recurses and works on any Hadoop-supported
-    scheme (file://, hdfs://, s3a://, ...)."""
+    ``min_parts``: compute-bound Python state kernels
+    (applyInPandasWithState) want one slot per store regardless of
+    input volume — their cost is the kernel, not the store commit (r14
+    A/B: user_stats 1.71s at cores/4=8 vs 2.0s at the input-derived 4;
+    the SQL-state ops measure the opposite).
+
+    ``no_data_batch=False`` (r15, guide §1.2: measured ~0.55 s per
+    query — the trailing watermark-only batch re-opens and re-commits
+    every state store to emit NOTHING) is only legal for sinks whose
+    rows are all emitted by data batches: the inner stream-stream join
+    (matches emit on arrival; the no-data batch purely evicts state)
+    and dropDuplicatesWithinWatermark (emits on first sight). It must
+    stay ON for outer joins (unmatched rows emit AT watermark advance)
+    and append-mode aggregations (windows emit at watermark advance) —
+    turning it off there would LOSE rows, which the stream oracles
+    catch."""
+    parts = max(_state_partitions(spark, source), min_parts or 0)
+    pins = {"spark.sql.shuffle.partitions": str(parts)}
+    if not no_data_batch:
+        pins[_NO_DATA_BATCH_CONF] = "false"
+    entry = {k: spark.conf.get(k, None) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
     try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        b = int(fs.getContentSummary(hpath).getLength())
-        spark.conf.set(_STREAM_INPUT_BYTES_CONF, str(b))
-    except Exception:  # pragma: no cover — sizing is advisory only
-        pass
+        yield
+    finally:
+        for k, v in entry.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _run_to_memory(
     out: DataFrame,
     mode: str,
+    source: str,
     min_parts: int | None = None,
     no_data_batch: bool = True,
 ) -> DataFrame:
-    """Execute a streaming DF to completion into a memory sink and
-    return the sink table (one availableNow pass = all input files).
-
-    The shuffle-partition conf is pinned query-local: a streaming query
-    reads it once at start (and stores it in the checkpoint), so setting
-    it around start() scopes it to this query without touching the
-    session's batch default.
-
-    ``no_data_batch=False`` turns off
-    ``spark.sql.streaming.noDataMicroBatches.enabled`` for this query
-    (r15, guide §1.2: measured ~0.55 s per query — the trailing
-    watermark-only batch re-opens and re-commits every state store to
-    emit NOTHING). Only legal for sinks whose rows are all emitted by
-    data batches: the inner stream-stream join (matches emit on
-    arrival; the no-data batch purely evicts state) and
-    dropDuplicatesWithinWatermark (emits on first sight). It must stay
-    ON for outer joins (unmatched rows emit AT watermark advance) and
-    append-mode aggregations (windows emit at watermark advance) —
-    turning it off there would LOSE rows, which the stream oracles
-    catch. On exit the conf is restored to its entry state — unset
-    again if it was unset."""
+    """Execute a streaming DF to completion into a memory sink, inside
+    ``_stream_scope(source, min_parts, no_data_batch)``, and return the
+    sink's rows (one availableNow pass = all input files). The sink's
+    temporary view is dropped before the frame is returned: the frame
+    holds the sink itself, so its rows live exactly as long as the
+    frame and not for the rest of the session."""
     name = f"stream_sink_{next(_counter)}"
     spark = out.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get(_NO_DATA_BATCH_CONF, None)
-    # min_parts: compute-bound Python state kernels
-    # (applyInPandasWithState) want one slot per store regardless of
-    # input volume — their cost is the kernel, not the store commit
-    # (r14 A/B: user_stats 1.71s at cores/4=8 vs 2.0s at the
-    # input-derived 4; the SQL-state ops measure the opposite)
-    parts = _state_partitions(spark)
-    if min_parts:
-        parts = max(parts, min_parts)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    if not no_data_batch:
-        spark.conf.set(_NO_DATA_BATCH_CONF, "false")
-    try:
-        q = (
+    with _stream_scope(spark, source, min_parts, no_data_batch):
+        (
             out.writeStream.outputMode(mode)
             .format("memory")
             .queryName(name)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_ndb is None:
-            spark.conf.unset(_NO_DATA_BATCH_CONF)
-        else:
-            spark.conf.set(_NO_DATA_BATCH_CONF, prev_ndb)
-        # clear the recorded source size: a later streaming op that
-        # runs without recording its own source must fall back to the
-        # cores/4 default, not inherit THIS query's input size
-        # (cross-query leak — r14 advice)
-        try:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        except Exception:  # pragma: no cover — advisory cleanup only
-            pass
-    return spark.table(name)
+    sink = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return sink
 
 
 def _run_batches(
@@ -305,7 +318,7 @@ def events_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame
     whole table reproduces the batch result exactly — which the shared
     DuckDB oracle verifies."""
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    return _run_to_memory(tumbling_agg(ev), "complete")
+    return _run_to_memory(tumbling_agg(ev), "complete", _events_parquet(sf_dir))
 
 
 @register(
@@ -338,7 +351,39 @@ def events_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands oracle (and the dedicated test additionally pins
     stream == batch row-for-row)."""
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    return _run_to_memory(session_agg(ev), "complete")
+    return _run_to_memory(session_agg(ev), "complete", _events_parquet(sf_dir))
+
+
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Clicks (``click_id, user_id, click_ts``) joined ``how`` to the
+    purchases (``purchase_id, p_user_id, purchase_ts``) they precede by
+    at most one hour, per user, over two watermarked event streams."""
+
+    def side(event_type: str, *cols) -> DataFrame:
+        return (
+            read_events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .withWatermark("ts", "2 hours")
+            .select(*cols)
+        )
+
+    clicks = side(
+        "click", F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")
+    )
+    purchases = side(
+        "purchase",
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    return clicks.join(
+        purchases,
+        F.expr(
+            "user_id = p_user_id AND purchase_ts >= click_ts "
+            "AND purchase_ts <= click_ts + INTERVAL 1 HOUR"
+        ),
+        how,
+    )
 
 
 @register(
@@ -364,36 +409,12 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes click_ts + 1h. Without the time-range predicate a
     stream-stream join must buffer both sides forever — the canonical
     unbounded-state mistake at 100 TB."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
+    joined = _click_purchase_join(spark, sf_dir, "inner").select(
+        "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts"
     )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "user_id = p_user_id AND purchase_ts >= click_ts "
-            "AND purchase_ts <= click_ts + INTERVAL 1 HOUR"
-        ),
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
     # inner-join matches emit on arrival; the trailing no-data batch
     # would only evict state (r15 A/B: 2.2 -> 1.65 s, rows identical)
-    return _run_to_memory(joined, "append", no_data_batch=False)
+    return _run_to_memory(joined, "append", _events_parquet(sf_dir), no_data_batch=False)
 
 
 def _user_stats_fn(
@@ -443,7 +464,7 @@ def events_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataF
     # slots on local[32]) — the cost is ~1500 per-group Python kernel
     # invocations, which parallelize until slot overhead wins
     return _run_to_memory(
-        out, "update",
+        out, "update", _events_parquet(sf_dir),
         min_parts=max(4, spark_.sparkContext.defaultParallelism // 2),
     )
 
@@ -488,10 +509,8 @@ def events_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(root, "sink")
     ckpt_dir = os.path.join(root, "ckpt")
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        q = (
+    with _stream_scope(spark, _events_parquet(sf_dir)):
+        (
             tumbling_agg(ev)
             .writeStream.outputMode("append")
             .format("parquet")
@@ -499,14 +518,8 @@ def events_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("checkpointLocation", ckpt_dir)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        except Exception:  # pragma: no cover — advisory cleanup only
-            pass
     return read_parquet(spark, out_dir)
 
 
@@ -526,8 +539,8 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type"
     )
     # first-seen rows emit in their data batch; the no-data batch only
-    # evicts expired dedup state (r15; see _run_to_memory)
-    return _run_to_memory(deduped, "append", no_data_batch=False)
+    # evicts expired dedup state (r15; see _stream_scope)
+    return _run_to_memory(deduped, "append", _events_parquet(sf_dir), no_data_batch=False)
 
 
 @register(
@@ -557,7 +570,7 @@ def events_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_xgboost_spark.streaming.windows import sliding_agg
 
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    return _run_to_memory(sliding_agg(ev), "complete")
+    return _run_to_memory(sliding_agg(ev), "complete", _events_parquet(sf_dir))
 
 
 @register(
@@ -593,17 +606,8 @@ def events_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    ev = read_events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        _run_batches(spark, ev, write_batch)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        except Exception:  # pragma: no cover — advisory cleanup only
-            pass
+    with _stream_scope(spark, _events_parquet(sf_dir)):
+        _run_batches(spark, read_events_stream(spark, sf_dir), write_batch)
     back = read_parquet(spark, out_dir)
     return back.groupBy("event_type").agg(
         F.sum("n").alias("n"), F.sum("sum_cents").alias("sum_cents")
@@ -647,7 +651,7 @@ def events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "weighted_cents"
         ),
     )
-    return _run_to_memory(joined, "append")
+    return _run_to_memory(joined, "append", _events_parquet(sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -696,9 +700,7 @@ def read_events_stream_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFram
     source lines — every downstream operator is source-agnostic, which
     is the claim SCALE.md makes and this function + its oracle-checked
     query keep honest without a broker in the test environment."""
-    jsonl_dir = _events_jsonl_dir(spark, sf_dir)
-    _record_stream_input_bytes(spark, jsonl_dir)
-    raw = spark.readStream.text(jsonl_dir)
+    raw = spark.readStream.text(_events_jsonl_dir(spark, sf_dir))
     parsed = raw.select(
         F.from_json("value", _KAFKA_VALUE_SCHEMA).alias("e")
     ).select("e.*")
@@ -724,7 +726,7 @@ def events_stream_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     source bit-for-bit (epoch-micro timestamps round-trip exactly;
     doubles survive shortest-round-trip JSON)."""
     ev = read_events_stream_kafka_shape(spark, sf_dir).withWatermark("ts", "2 hours")
-    return _run_to_memory(tumbling_agg(ev), "complete")
+    return _run_to_memory(tumbling_agg(ev), "complete", _events_jsonl_dir(spark, sf_dir))
 
 
 @register(
@@ -769,35 +771,10 @@ def events_stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> Da
     inside the horizon at end-of-input are correctly ABSENT). State
     eviction follows the same bound, so state size is watermark-bounded
     regardless of stream length."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
+    joined = _click_purchase_join(spark, sf_dir, "left_outer").select(
+        "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts"
     )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "user_id = p_user_id AND purchase_ts >= click_ts "
-            "AND purchase_ts <= click_ts + INTERVAL 1 HOUR"
-        ),
-        "left_outer",
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    return _run_to_memory(joined, "append")
+    return _run_to_memory(joined, "append", _events_parquet(sf_dir))
 
 
 
@@ -858,38 +835,10 @@ def events_stream_stream_full_outer_join(
     are correctly ABSENT. State on both sides is evicted by the same
     bounds, so state size stays watermark-bounded at any stream
     length."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
+    joined = _click_purchase_join(spark, sf_dir, "full_outer").select(
+        "click_id", "purchase_id", "user_id", "p_user_id", "click_ts", "purchase_ts"
     )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "user_id = p_user_id AND purchase_ts >= click_ts "
-            "AND purchase_ts <= click_ts + INTERVAL 1 HOUR"
-        ),
-        "full_outer",
-    ).select(
-        "click_id", "purchase_id", "user_id", "p_user_id",
-        "click_ts", "purchase_ts",
-    )
-    return _run_to_memory(joined, "append")
+    return _run_to_memory(joined, "append", _events_parquet(sf_dir))
 
 
 def _stage_late_batches(spark: SparkSession, sf_dir: str) -> str:
@@ -1000,27 +949,15 @@ def events_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit, batch 2's old rows are dropped. At scale this is the
     guarantee that a replayed/backfilled partition of stale events
     cannot corrupt already-published windows."""
-    root = _stage_late_batches(spark, sf_dir)
-    physical = read_parquet(spark, os.path.join(root, "in", "batch-000.parquet")).schema
-    _record_stream_input_bytes(spark, os.path.join(root, "in"))
-    raw = (
-        spark.readStream.schema(physical)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "in"))
-    )
+    src = os.path.join(_stage_late_batches(spark, sf_dir), "in")
+    physical = read_parquet(spark, os.path.join(src, "batch-000.parquet")).schema
+    raw = spark.readStream.schema(physical).option("maxFilesPerTrigger", "1").parquet(src)
     ev = normalize_event_ts(raw).withWatermark("ts", "2 hours")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        agg = ev.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        ).agg(F.count("*").alias("n"))
-        out = agg.select(
-            F.col("w.start").alias("w_start"), "event_type", "n"
-        )
-        return _run_to_memory(out, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
+        F.count("*").alias("n")
+    )
+    out = agg.select(F.col("w.start").alias("w_start"), "event_type", "n")
+    return _run_to_memory(out, "append", src)
 
 
 def _stage_seq_batches(
@@ -1334,7 +1271,7 @@ def events_stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
             "session_cents",
         )
     )
-    return _run_to_memory(out, "complete")
+    return _run_to_memory(out, "complete", _events_parquet(sf_dir))
 
 
 _CUSUM_TARGET_CENTS = 5000  # fixed monitored setpoint (not data-derived)
@@ -1436,7 +1373,7 @@ def events_stream_stateful_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cores/2 (r15 A/B: 1.96 s at 8 slots vs 1.59 s at 16 — same
     # per-group Python kernel cost profile as user_stats)
     return _run_to_memory(
-        out, "update",
+        out, "update", _events_parquet(sf_dir),
         min_parts=max(4, ev.sparkSession.sparkContext.defaultParallelism // 2),
     )
 
@@ -1492,6 +1429,7 @@ def events_stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("w.start").alias("w_start"), "event_type", "n", "sum_cents"
         ),
         "complete",
+        _events_parquet(sf_dir),
     )
     w = W.partitionBy("w_start").orderBy(
         F.col("n").desc(), F.col("event_type").asc()
@@ -1577,7 +1515,7 @@ def events_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("b"),
     ).agg(F.count("*").alias("cnt"))
     c = _run_to_memory(
-        agg.select(F.col("w.start").alias("w_start"), "b", "cnt"), "complete"
+        agg.select(F.col("w.start").alias("w_start"), "b", "cnt"), "complete", _events_parquet(sf_dir)
     ).localCheckpoint(eager=True)  # histogram feeds 4 consumers
     bins = c.groupBy("b").agg(F.sum("cnt").cast("long").alias("gcnt"))
     nb = bins.agg(F.count("*").cast("long").alias("k"))

@@ -523,10 +523,11 @@ def _ranked_train(n, cookie, split=lambda n_rows, n, r: slice(r, None, n)):
 
 
 # the one-rank goldens of tests/test_ml.py that the multi-rank fits must
-# reproduce; the early-stopping case holds because its eval-metric sums
-# happen not to differ in a way that moves a stopping decision (the
-# metric is a float sum, outside the layout-free guarantee)
-_MULTI_RANK_CASES = ["multiclass", "multiclass_nan_eval_early_stop", "regression_depth5"]
+# reproduce bit for bit, best_score of the two early-stopping cases
+# included (the eval metric is fixed point, so its sums are exact)
+_MULTI_RANK_CASES = [
+    "eval_early_stop", "multiclass", "multiclass_nan_eval_early_stop", "regression_depth5"
+]
 
 
 @pytest.mark.parametrize("case", _MULTI_RANK_CASES)

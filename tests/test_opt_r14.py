@@ -254,32 +254,3 @@ def test_hnsw_two_layer_knn_matches_per_layer_builders(spark):
         "dst",
     )
     assert l0 == ref0 and l1 == ref1 and len(l1) > 0
-
-
-def test_state_partitions_derive_from_recorded_input_bytes(spark):
-    """Streaming state-store sizing: with a recorded source size the
-    partition count is input-derived (one store per ~64 MB, floor 2
-    since r15 — re-measured on the stream-stream joins, see
-    _state_partitions — capped at 32x slots); without one it falls
-    back to cores/4."""
-    from pyspark_xgboost_spark.streaming.stream import (
-        _STREAM_INPUT_BYTES_CONF,
-        _state_partitions,
-    )
-
-    par = spark.sparkContext.defaultParallelism
-    prev = spark.conf.get(_STREAM_INPUT_BYTES_CONF, None)
-    try:
-        spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        assert _state_partitions(spark) == max(4, par // 4)
-        spark.conf.set(_STREAM_INPUT_BYTES_CONF, str(2 << 20))  # 2 MB
-        assert _state_partitions(spark) == 2
-        spark.conf.set(_STREAM_INPUT_BYTES_CONF, str(640 << 20))  # 640 MB
-        assert _state_partitions(spark) == min(11, 32 * par)
-        spark.conf.set(_STREAM_INPUT_BYTES_CONF, str(1 << 50))  # 1 PiB
-        assert _state_partitions(spark) == 32 * par
-    finally:
-        if prev is None:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        else:
-            spark.conf.set(_STREAM_INPUT_BYTES_CONF, prev)

@@ -1,8 +1,9 @@
 """Round-15 optimization-pass equivalence tests.
 
 Same discipline as tests/test_opt_r14.py: every structural rewrite this
-round (fused kNN+exact kernel, one-exchange RAKE, bounded vocab pull,
-no-data-batch elision, Hadoop-FS input sizing) is pinned directly
+round (fused kNN+exact kernel, one-exchange RAKE, bounded vocab pull;
+the no-data-batch and input-sizing tests live in tests/test_streaming.py)
+is pinned directly
 against the legacy formulation or the invariant it must preserve, so a
 future refactor cannot drift the fast path between oracle sweeps.
 """
@@ -170,68 +171,6 @@ def test_blocked_er_vocab_pull_is_bounded(spark):
     assert ".limit(_VOCAB_BUDGET + 1)" in src
     out = D.dedup_blocked_entity_resolution(spark, SF_DIR)
     assert out.count() > 0
-
-
-def test_stream_inner_join_identical_without_no_data_batch(spark, monkeypatch):
-    """The inner stream-stream join emits every match in its data
-    batch: eliding the trailing no-data batch (r15) must not change
-    the emitted row multiset, and the conf it flips must be left as it
-    was found (unset stays unset)."""
-    from pyspark_xgboost_spark.streaming import stream as S
-
-    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
-    real = S._run_to_memory
-    seen = {}
-
-    def spy(out, mode, **kw):
-        seen["out"], seen["mode"], seen["kw"] = out, mode, kw
-        return real(out, mode, **kw)
-
-    monkeypatch.setattr(S, "_run_to_memory", spy)
-    prev = spark.conf.get(conf, None)
-    spark.conf.unset(conf)
-    try:
-        fast = _rows(
-            S.events_stream_stream_join(spark, SF_DIR),
-            "click_id",
-            "purchase_id",
-            "user_id",
-        )
-        assert seen["kw"].get("no_data_batch") is False
-        assert spark.conf.get(conf, None) is None  # restored to unset
-        slow = _rows(
-            real(seen["out"], seen["mode"], no_data_batch=True),
-            "click_id",
-            "purchase_id",
-            "user_id",
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set(conf, prev)
-    assert fast == slow
-
-
-def test_stream_input_bytes_recursive_hadoop_fs(spark, tmp_path):
-    """_record_stream_input_bytes sizes through the Hadoop FS API:
-    nested directories are summed recursively (the os.listdir shape
-    undercounted them) and the recorded conf matches the real bytes."""
-    from pyspark_xgboost_spark.streaming.stream import (
-        _STREAM_INPUT_BYTES_CONF,
-        _record_stream_input_bytes,
-    )
-
-    (tmp_path / "a").mkdir()
-    (tmp_path / "a" / "inner.bin").write_bytes(b"x" * 1000)
-    (tmp_path / "top.bin").write_bytes(b"y" * 500)
-    prev = spark.conf.get(_STREAM_INPUT_BYTES_CONF, None)
-    try:
-        _record_stream_input_bytes(spark, str(tmp_path))
-        assert int(spark.conf.get(_STREAM_INPUT_BYTES_CONF)) == 1500
-    finally:
-        if prev is None:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        else:
-            spark.conf.set(_STREAM_INPUT_BYTES_CONF, prev)
 
 
 def test_events_stream_schema_follows_rewritten_file(spark, tmp_path):

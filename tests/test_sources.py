@@ -527,6 +527,32 @@ def test_python_datasource_stream_exactly_once_offsets(spark, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, src))  # exactly once
 
 
+def test_docbin_streams_rerun_and_leave_no_temp_dirs(spark, tmp_path, monkeypatch):
+    """The docbin stream write gives the same rows on a rerun, and
+    neither docbin stream leaves a ``docbin_stream_*`` directory in the
+    temp dir: the checkpoints live for one run, and the write's sink is
+    one staged directory per source fingerprint. Not pooled: it points
+    the process-wide ``tempfile.tempdir`` at ``tmp_path``."""
+    import os
+    import tempfile
+
+    from pyspark_xgboost_spark.sources.formats import (
+        scan_python_datasource_stream,
+        sink_python_datasource_stream_write,
+    )
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    first = rows(sink_python_datasource_stream_write(spark, SF_DIR))
+    assert first and rows(sink_python_datasource_stream_write(spark, SF_DIR)) == first
+    assert rows(scan_python_datasource_stream(spark, SF_DIR))
+    assert [e for e in os.listdir(tempfile.gettempdir()) if e.startswith("docbin_stream")] == []
+
+
 def test_python_datasource_writer_two_phase_commit(spark, tmp_path):
     """The docbin writer must leave ONLY committed .docbin shards (no
     .tmp residue), a _DONE marker with the exact row count, and a

@@ -179,7 +179,7 @@ def test_late_data_drop_really_drops(spark, tmp_path):
     from pyspark_xgboost_spark.sources import normalize_event_ts
     from pyspark_xgboost_spark.streaming.stream import (
         _stage_late_batches,
-        _state_partitions,
+        _stream_scope,
     )
 
     root = _stage_late_batches(spark, SF_DIR)
@@ -195,9 +195,7 @@ def test_late_data_drop_really_drops(spark, tmp_path):
     agg = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
+    with _stream_scope(spark, os.path.join(root, "in")):
         q = (
             agg.writeStream.format("memory")
             .queryName("late_drop_probe")
@@ -207,13 +205,11 @@ def test_late_data_drop_really_drops(spark, tmp_path):
             .start()
         )
         q.awaitTermination()
-        dropped = sum(
-            so.get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            for so in p["stateOperators"]
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    dropped = sum(
+        so.get("numRowsDroppedByWatermark", 0)
+        for p in q.recentProgress
+        for so in p["stateOperators"]
+    )
     # dropped = exactly the old odd rows whose WINDOW was already
     # emitted+evicted (end <= max(ts) - 2h); the handful landing in
     # still-open windows are absorbed into live state instead (and
@@ -232,8 +228,115 @@ def test_late_data_drop_really_drops(spark, tmp_path):
     sink = spark.sql(
         "SELECT window.start AS ws, event_type FROM late_drop_probe"
     ).collect()
+    spark.catalog.dropTempView("late_drop_probe")
     keys = [(r["ws"], r["event_type"]) for r in sink]
     assert len(keys) == len(set(keys))  # no window emitted twice
+
+
+def test_state_partitions_derive_from_source_bytes(spark, monkeypatch):
+    """Streaming state-store sizing: the partition count is derived from
+    the size of the source path passed in (one store per ~64 MB, floor 2
+    since r15 — re-measured on the stream-stream joins, see
+    _state_partitions — capped at 32x slots); without a source, or with
+    one of no size, it falls back to cores/4."""
+    from pyspark_xgboost_spark.streaming import stream as S
+
+    par = spark.sparkContext.defaultParallelism
+    assert S._state_partitions(spark, None) == max(4, par // 4)
+    sizes = {"2mb": 2 << 20, "640mb": 640 << 20, "1pib": 1 << 50, "none": 0}
+    monkeypatch.setattr(S, "_input_bytes", lambda _spark, path: sizes[path])
+    assert S._state_partitions(spark, "none") == max(4, par // 4)
+    assert S._state_partitions(spark, "2mb") == 2
+    assert S._state_partitions(spark, "640mb") == min(11, 32 * par)
+    assert S._state_partitions(spark, "1pib") == 32 * par
+
+
+def test_stream_input_bytes_recursive_hadoop_fs(spark, tmp_path):
+    """_input_bytes sizes through the Hadoop FS API: nested directories
+    are summed recursively (the os.listdir shape undercounted them), and
+    the state stores are sized from those real bytes."""
+    from pyspark_xgboost_spark.streaming.stream import _input_bytes, _state_partitions
+
+    (tmp_path / "a").mkdir()
+    (tmp_path / "a" / "inner.bin").write_bytes(b"x" * 1000)
+    (tmp_path / "top.bin").write_bytes(b"y" * 500)
+    assert _input_bytes(spark, str(tmp_path)) == 1500
+    assert _state_partitions(spark, str(tmp_path)) == 2
+
+
+def _rows(df, *cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_stream_inner_join_identical_without_no_data_batch(spark, monkeypatch):
+    """The inner stream-stream join emits every match in its data
+    batch: eliding the trailing no-data batch (r15) must not change
+    the emitted row multiset, and the conf it flips must be left as it
+    was found (unset stays unset)."""
+    from pyspark_xgboost_spark.streaming import stream as S
+
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    real = S._run_to_memory
+    seen = {}
+
+    def spy(out, mode, source, **kw):
+        seen["out"], seen["mode"], seen["source"], seen["kw"] = out, mode, source, kw
+        return real(out, mode, source, **kw)
+
+    monkeypatch.setattr(S, "_run_to_memory", spy)
+    prev = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+    try:
+        fast = _rows(
+            S.events_stream_stream_join(spark, SF_DIR),
+            "click_id",
+            "purchase_id",
+            "user_id",
+        )
+        assert seen["kw"].get("no_data_batch") is False
+        assert spark.conf.get(conf, None) is None  # restored to unset
+        slow = _rows(
+            real(seen["out"], seen["mode"], seen["source"], no_data_batch=True),
+            "click_id",
+            "purchase_id",
+            "user_id",
+        )
+    finally:
+        if prev is not None:
+            spark.conf.set(conf, prev)
+    assert fast == slow
+
+
+def test_stream_runs_leave_no_session_state(spark):
+    """Running streams to completion leaves the session as it found it:
+    no temporary view (a memory sink's rows live only as long as the
+    frame that reads them), the two confs a run pins back at their entry
+    values, and no ``spark_graft.*`` conf key."""
+    from pyspark_xgboost_spark.sources.formats import scan_python_datasource_stream
+    from pyspark_xgboost_spark.streaming import stream as S
+
+    sess = spark.newSession()
+    confs = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+
+    def views():
+        return {t.name for t in sess.catalog.listTables() if t.isTemporary}
+
+    def pinned():
+        return {k: sess.conf.get(k, None) for k in confs}
+
+    views_before, confs_before = views(), pinned()
+    for query in (
+        S.events_stream_dedup,
+        S.events_stream_stream_join,
+        S.events_stream_late_data_drop,
+        S.events_stream_foreach_batch,
+        S.events_stream_file_sink,
+        scan_python_datasource_stream,
+    ):
+        assert query(sess, SF_DIR).collect(), query.__name__
+    assert views() - views_before == set()
+    assert pinned() == confs_before
+    assert [k for k in sess.conf.getAll if k.startswith("spark_graft.")] == []
 
 
 def _chk_stream_merge_upsert_incremental_chain(spark):

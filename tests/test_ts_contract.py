@@ -47,7 +47,8 @@ def test_batch_and_stream_readers_agree(spark):
     # run the stream to completion into a memory sink
     from pyspark_xgboost_spark.streaming.stream import _run_to_memory
 
-    got = sorted((r.event_id, r.us) for r in _run_to_memory(stream, "append").collect())
+    src = os.path.join(SF_DIR, "events.parquet")
+    got = sorted((r.event_id, r.us) for r in _run_to_memory(stream, "append", src).collect())
     assert got == _batch_pairs(spark, SF_DIR)
 
 
